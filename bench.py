@@ -17,6 +17,7 @@ import shutil
 import sys
 import tempfile
 import time
+import traceback
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
@@ -474,23 +475,31 @@ def main() -> None:
     medians: dict[str, float] = {}
     maxes: dict[str, float] = {}
     structure: dict[str, list[int]] = {}
+    # one raising query is recorded here and skipped: the artifact must
+    # survive it (its name stays out of the timing maps and the total)
+    errors: dict[str, str] = {}
     for name in names:
         runs = []
         run_counts = []
-        for r in range(n_runs):
-            spark.catalog.clearCache()
-            if gc_between:
-                spark.sparkContext._jvm.System.gc()
-            group = f"bench_{name}_{r}"
-            spark.sparkContext.setJobGroup(group, name)
-            t0 = time.perf_counter()
-            df = QUERIES[name](spark, sf_dir)
-            df.count()
-            runs.append(time.perf_counter() - t0)
-            try:
-                run_counts.append(_job_group_counts(group))
-            except Exception:  # noqa: BLE001 - diagnostics must never kill the bench
-                run_counts.append([0, 0, 0])
+        try:
+            for r in range(n_runs):
+                spark.catalog.clearCache()
+                if gc_between:
+                    spark.sparkContext._jvm.System.gc()
+                group = f"bench_{name}_{r}"
+                spark.sparkContext.setJobGroup(group, name)
+                t0 = time.perf_counter()
+                df = QUERIES[name](spark, sf_dir)
+                df.count()
+                runs.append(time.perf_counter() - t0)
+                try:
+                    run_counts.append(_job_group_counts(group))
+                except Exception:  # noqa: BLE001 - diagnostics must never kill the bench
+                    run_counts.append([0, 0, 0])
+        except Exception as e:  # noqa: BLE001 - one query must never kill the bench
+            traceback.print_exc()
+            errors[name] = f"{type(e).__name__}: {e}"[:300]
+            continue
         timings[name] = round(min(runs), 3)
         medians[name] = round(sorted(runs)[len(runs) // 2], 3)
         maxes[name] = round(max(runs), 3)
@@ -507,6 +516,7 @@ def main() -> None:
                 "reader_protocol": f"{N_WARMUP_READS} warmup + {N_MEASURED_READS} measured row reads, hello_world-shaped dataset (BASELINE.md protocol, longer measurement window). reader_samples_per_sec = best of 5 windows with BOTH collectors (CPython gc + JVM System.gc) drained before each window so due collections land outside the timed region; reader_window_sps lists every window's rate and reader_spread_pct = (slowest-fastest)/fastest — the r8 +-25%% swing diagnosed as mid-window GC, now measured per run; a window slower than 2x the median is a stall, not a decode rate, and is rerun in place (<=3 reruns, count in reader_window_reruns; r11's spread_pct=184 was one such window). reader_samples_per_sec decodes REAL PNG byte streams via the pure-python codec (r3+ protocol; the BASELINE.md comparison row); reader_samples_per_sec_raw0 reads the np.save RAW0 container r1/r2 measured, for cross-round trend continuity. reader_rss_mb / reader_cpu_pct: process-tree (python + driver JVM + pool workers) RSS after / CPU%% over the measured window via procfs — the reference benchmark's psutil memory_info/cpu columns (BASELINE.md rows 2-3/5-6). reader_rss_main_mb is the benchmark process alone — the like-for-like column against the reference's 217 MB single-process psutil figure; reader_rss_iter_mb additionally includes Spark's resident pyspark.daemon workers (tree minus java), and reader_rss_jvm_mb is the local[32] driver JVM, a fixed harness cost",
                 "query_protocol": f"one untimed warmup run per query at sf0.001 (JIT/codegen), then {n_runs} timed runs at target sf with spark.catalog.clearCache() AND a forced JVM GC before each run (r12: GC only between queries left prior-session debris collecting inside checkpoint-heavy queries' timed runs — bitext read 8.98s in r11 vs 3.7s fresh); 'queries' is min-of-{n_runs} (continuity with r3), 'queries_median' the median, 'queries_max' the max. r1/r2 were single-run — cross-round comparison to them overstates speedups. r17 adds 'queries_structure' {{name: [jobs, stages, tasks]}} counted via the status tracker under a per-run job group on the min-wall run, OUTSIDE the timed region (timing protocol unchanged): walls swing 2-10x inside this box's stall windows while structural counts stay fixed, so max>>min with unchanged counts reads as machine noise, a count change as a plan change",
                 "queries_structure": structure,
+                "query_errors": errors,
                 "queries_max": maxes,
                 "queries_median": medians,
                 "queries": timings,
@@ -547,6 +557,7 @@ def main() -> None:
         "unit": "sec",
         "sf": sf,
         "n_queries": len(timings),
+        "n_query_errors": len(errors),
         "reader_samples_per_sec": reader_rate,
         "reader_spread_pct": png_stats.get("spread_pct"),
         "reader_median_sps": png_stats.get("median_sps"),

@@ -93,10 +93,10 @@ def partition_values(
     """{column: typed scalar} for requested hive-partition columns not
     stored in the file, recovered from the path with the schema's
     partition-value typing. Raises KeyError for a requested column that
-    is neither in the file nor on the path (load_raw's contract) —
-    unless ``missing_ok`` (the schema-evolution read path), where the
-    column becomes a NULL constant: files written before a nullable
-    column was added simply have no values for it."""
+    is neither in the file nor on the path — unless ``missing_ok`` (the
+    schema-evolution read path), where the column becomes a NULL
+    constant: files written before a nullable column was added simply
+    have no values for it."""
     parts: dict = {}
     present = set(present_columns)
     for c in read_columns:
@@ -204,21 +204,6 @@ def scalar_frame(table: pa.Table, parts: dict, names) -> pd.DataFrame:
         else:
             data[c] = table.column(c).to_pandas()
     return pd.DataFrame(data)
-
-
-def load_raw(
-    fs, path: str, rg: int, sl: int, drop_parts: int, read_columns, schema
-) -> pd.DataFrame:
-    """Read one row group (optionally one strided slice of it) into a
-    pandas frame, recovering hive-partition columns from the path with
-    the schema's partition-value typing. (Compat surface — the reader
-    hot path now uses :func:`load_table` + :func:`decode_col`.)"""
-    table = load_table(fs, path, rg, sl, drop_parts, read_columns)
-    pdf = table.to_pandas()
-    parts = partition_values(path, read_columns, pdf.columns, schema)
-    for c, val in parts.items():
-        pdf[c] = val
-    return pdf
 
 
 # ---------------------------------------------------------------------------

@@ -16,14 +16,23 @@ Differences by design:
     deterministic raw container (``RAW0`` magic + ``np.save`` payload).
     The Spark-side plumbing (BinaryType column, pandas-UDF batch
     decode) is identical either way.
+  - ``.npy`` payloads and the ``arr.npy`` npz member decode through
+    :func:`_npy_decode` / :func:`_npz_arr_decode` rather than
+    ``np.load`` (same results, same checks; see the comment there).
 """
 
 from __future__ import annotations
 
+import functools
 import io
+import math
+import struct
+import sys
+import zipfile
 import zlib
 
 import numpy as np
+from numpy.lib import format as npy_format
 from pyspark.sql.types import (
     BinaryType,
     BooleanType,
@@ -72,6 +81,153 @@ def _is_compliant_shape(arr: np.ndarray, shape: tuple) -> bool:
     if len(arr.shape) != len(shape):
         return False
     return all(e is None or e == a for e, a in zip(shape, arr.shape))
+
+
+# ---------------------------------------------------------------------------
+# .npy / npz decode. ``np.load`` re-parses the .npy header with
+# ``ast.literal_eval`` on every call, and for an npz it also builds a
+# ZipFile + NpzFile and reads the central directory: per row that is
+# ~15x the cost of copying a small tensor out. Rows of one field share a
+# handful of exact header byte strings, so the parsed header is cached
+# (bounded: variable-shape fields produce one header per shape). The
+# payload is always COPIED out: the input is usually a zero-copy slice of
+# an Arrow row-group buffer, and a view would pin that buffer for the
+# array's lifetime and be read-only for in-place transforms.
+# ---------------------------------------------------------------------------
+
+_NPY_MAGIC = b"\x93NUMPY"
+_NPY_HEADER_CACHE_SIZE = 256
+_ZIP_LOCAL_HEADER = struct.Struct("<4s5H3I2H")  # 30 bytes
+_ZIP_END_SIG = b"PK\x05\x06"  # end of central directory record ...
+_ZIP_END_SIZE = 22  # ... of this size, when the archive has no comment
+_ZIP32_MAX = 0xFFFFFFFF
+_ZIP_FLAG_ENCRYPTED = 0x01
+_ZIP_FLAG_DATA_DESCRIPTOR = 0x08
+
+
+@functools.lru_cache(maxsize=_NPY_HEADER_CACHE_SIZE)
+def _npy_header(header: bytes) -> tuple:
+    """(dtype, shape, fortran_order, count) of one exact .npy header
+    (magic through padding), parsed by numpy's own reader."""
+    fp = io.BytesIO(header)
+    if npy_format.read_magic(fp) == (1, 0):
+        shape, fortran_order, dtype = npy_format.read_array_header_1_0(fp)
+    else:
+        shape, fortran_order, dtype = npy_format.read_array_header_2_0(fp)
+    if dtype.hasobject:
+        raise ValueError("Object arrays cannot be loaded when allow_pickle=False")
+    if any(d < 0 for d in shape):
+        raise ValueError("negative dimensions are not allowed")
+    return dtype, shape, fortran_order, math.prod(shape)
+
+
+def _npy_decode(buf) -> np.ndarray:
+    """``np.load(io.BytesIO(buf), allow_pickle=False)`` for one ``.npy``
+    payload in ``buf`` (bytes, bytearray or an unsigned-byte memoryview):
+    a writable array that owns its data (for Fortran order, as np.load,
+    the transposed view of one)."""
+    if buf[:6] != _NPY_MAGIC:
+        raise ValueError("not a .npy payload (bad magic)")
+    version = buf[6:8]
+    if version == b"\x01\x00":
+        start = 10 + int.from_bytes(buf[8:10], "little")
+    elif version == b"\x02\x00":
+        start = 12 + int.from_bytes(buf[8:12], "little")
+    else:  # version 3.0 (utf-8 header) and anything numpy rejects
+        return npy_format.read_array(io.BytesIO(buf), allow_pickle=False)
+    if len(buf) < start:
+        raise ValueError("EOF: reading .npy array header")
+    dtype, shape, fortran_order, count = _npy_header(bytes(buf[:start]))
+    if count and dtype.itemsize:
+        size = count * dtype.itemsize
+        if len(buf) - start < size:
+            raise ValueError(
+                f"EOF: reading array data, expected {size} bytes "
+                f"got {len(buf) - start}"
+            )
+        arr = np.frombuffer(buf, dtype, count, start).copy()
+    else:
+        # np.ndarray, not np.empty: zero-width string dtypes (as np.load)
+        arr = np.ndarray(count, dtype=dtype)
+    if fortran_order:
+        arr.shape = shape[::-1]
+        return arr.transpose()
+    arr.shape = shape
+    return arr
+
+
+def _zip64_sizes(extra):
+    """(uncompressed, compressed) sizes from a local header's zip64 extra
+    field (id 0x0001, which in a local header holds both); None when the
+    field is missing or short."""
+    pos = 0
+    while pos + 4 <= len(extra):
+        tag, size = struct.unpack_from("<2H", extra, pos)
+        pos += 4
+        if tag == 1:
+            if size < 16 or pos + 16 > len(extra):
+                return None
+            return struct.unpack_from("<2Q", extra, pos)
+        pos += size
+    return None
+
+
+def _npz_arr_member(buf):
+    """(CRC-32, uncompressed size, deflated bytes) of an npz container's
+    first entry when it is a deflated ``arr.npy`` this parser takes; None
+    for any other container."""
+    head = _ZIP_LOCAL_HEADER.size
+    if len(buf) < head:
+        return None
+    sig, _, flags, method, _, _, crc, csize, usize, nlen, xlen = (
+        _ZIP_LOCAL_HEADER.unpack_from(buf)
+    )
+    start = head + nlen + xlen
+    if (
+        sig != b"PK\x03\x04"
+        or flags & (_ZIP_FLAG_ENCRYPTED | _ZIP_FLAG_DATA_DESCRIPTOR)
+        or method != zipfile.ZIP_DEFLATED
+        or buf[head : head + nlen] != b"arr.npy"
+        or buf[-_ZIP_END_SIZE : 4 - _ZIP_END_SIZE] != _ZIP_END_SIG
+    ):
+        return None
+    if _ZIP32_MAX in (usize, csize):
+        sizes = _zip64_sizes(buf[head + nlen : start])
+        if sizes is None:
+            return None
+        usize, csize = sizes
+    if len(buf) < start + csize:
+        raise zipfile.BadZipFile("truncated npz member 'arr.npy'")
+    return crc, usize, buf[start : start + csize]
+
+
+def _npz_arr_decode(buf) -> np.ndarray:
+    """``np.load(io.BytesIO(buf), allow_pickle=False)["arr"]`` for an npz
+    container whose first entry is a deflated ``arr.npy`` (what
+    ``np.savez_compressed`` and :class:`CompressedNdarrayCodec` write):
+    the member is read from its local file header, inflated, checked
+    against its size and CRC-32 as ``zipfile`` does, and decoded by
+    :func:`_npy_decode`. Other containers (data descriptor, another
+    compression method or first member, an archive comment, or no
+    end-of-central-directory record at the tail, i.e. truncated) go
+    through ``np.load``."""
+    member = _npz_arr_member(buf)
+    if member is None:
+        with np.load(io.BytesIO(buf), allow_pickle=False) as npz:
+            return npz["arr"]
+    crc, usize, deflated = member
+    # a decompressobj, as zipfile: the size and CRC-32 checks below
+    # decide, not whether the deflate stream is terminated; output is
+    # capped one byte past the declared size, so a cell that inflates
+    # far beyond it fails the size check without being expanded
+    inflate = zlib.decompressobj(-15)
+    try:
+        raw = inflate.decompress(deflated, min(usize + 1, sys.maxsize))
+    except zlib.error as e:
+        raise zipfile.BadZipFile(f"corrupt npz member 'arr.npy': {e}") from e
+    if len(raw) != usize or zlib.crc32(raw) != crc:
+        raise zipfile.BadZipFile("Bad CRC-32 for file 'arr.npy'")
+    return _npy_decode(raw)
 
 
 class DataframeColumnCodec:
@@ -149,7 +305,7 @@ class NdarrayCodec(DataframeColumnCodec):
         return bytearray(buf.getvalue())
 
     def decode(self, field, encoded):
-        return np.load(io.BytesIO(encoded), allow_pickle=False)
+        return _npy_decode(encoded)
 
 
 class CompressedNdarrayCodec(DataframeColumnCodec):
@@ -160,8 +316,8 @@ class CompressedNdarrayCodec(DataframeColumnCodec):
 
     The container is assembled with a FIXED zip entry date (1980-01-01,
     the DOS epoch) so encode stays deterministic — ``np.savez_compressed``
-    itself stamps wall-clock entry times; ``np.load`` accepts any valid
-    zip either way. Decode also accepts this library's pre-round-9
+    itself stamps wall-clock entry times; decode accepts any valid zip
+    either way. Decode also accepts this library's pre-round-9
     payloads (zlib-compressed ``np.save`` bytes, recognized by the zlib
     header) so existing datasets keep reading."""
 
@@ -189,9 +345,9 @@ class CompressedNdarrayCodec(DataframeColumnCodec):
         # buffer-protocol friendly, so no normalizing copy is made
         raw = encoded if isinstance(encoded, (bytes, memoryview)) else bytes(encoded)
         if raw[:2] == b"PK":  # npz container (reference format)
-            return np.load(io.BytesIO(raw), allow_pickle=False)["arr"]
+            return _npz_arr_decode(raw)
         # legacy pre-round-9 payload: zlib-wrapped np.save bytes
-        return np.load(io.BytesIO(zlib.decompress(raw)), allow_pickle=False)
+        return _npy_decode(zlib.decompress(raw))
 
 
 class CompressedImageCodec(DataframeColumnCodec):
@@ -271,7 +427,7 @@ class CompressedImageCodec(DataframeColumnCodec):
         # hot path makes no normalizing copy
         raw = encoded if isinstance(encoded, (bytes, memoryview)) else bytes(encoded)
         if raw[:4] == self._MAGIC:
-            return np.load(io.BytesIO(raw[4:]), allow_pickle=False)
+            return _npy_decode(memoryview(raw)[4:])
         Image = self._pil()
         if Image is not None:
             return np.asarray(Image.open(io.BytesIO(raw)))

@@ -46,6 +46,7 @@ from petastorm_spark.codecs import (
     DataframeColumnCodec,
     NdarrayCodec,
     ScalarCodec,
+    _npz_arr_decode,
 )
 from petastorm_spark.unischema import Unischema, UnischemaField
 
@@ -68,7 +69,7 @@ class PetastormNpzCodec(DataframeColumnCodec):
         return bytearray(buf.getvalue())
 
     def decode(self, field, encoded):
-        return np.load(io.BytesIO(bytes(encoded)), allow_pickle=False)["arr"]
+        return _npz_arr_decode(encoded)
 
 
 _CODEC_CLASSES[PetastormNpzCodec.name] = PetastormNpzCodec

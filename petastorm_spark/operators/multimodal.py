@@ -34,6 +34,8 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from petastorm_spark.codecs import _npy_decode
+
 RAW_MAGIC = b"RAW0"
 
 
@@ -52,7 +54,7 @@ def decode_image_bytes(raw: bytes) -> tuple[np.ndarray, str]:
     PNG byte streams, and real baseline JPEG byte streams all decode
     via the pure-python codecs (PIL is preferred when present)."""
     if raw[:4] == RAW_MAGIC:
-        return np.load(io.BytesIO(raw[4:]), allow_pickle=False), "raw0"
+        return _npy_decode(memoryview(raw)[4:]), "raw0"
     try:
         from PIL import Image  # noqa: F401 - optional, absent in container
     except ImportError:

@@ -72,7 +72,7 @@ def get_spark(app_name: str = "petastorm_spark", cpus: int | None = None) -> Spa
             "spark.python.sql.dataFrameDebugging.enabled",
             os.environ.get("SPARK_GRAFT_DF_DEBUG", "false"),
         )
-        # subset co-partitioning — see ensure_session_confs
+        # subset co-partitioning — see SESSION_CONFS
         .config("spark.sql.requireAllClusterKeysForCoPartition", "false")
     )
     # Long sessions accumulate resident pyspark.daemon workers: with
@@ -95,44 +95,45 @@ def get_spark(app_name: str = "petastorm_spark", cpus: int | None = None) -> Spa
     return spark
 
 
+# Runtime-settable confs this engine depends on; ensure_session_confs
+# applies them to sessions it did not build. Static confs (e.g.
+# spark.python.sql.dataFrameDebugging.enabled) belong in get_spark's
+# builder only: setting one on a live session raises
+# CANNOT_MODIFY_STATIC_CONFIG.
+SESSION_CONFS = {
+    "spark.sql.legacy.parquet.nanosAsLong": "true",
+    "spark.sql.session.timeZone": "UTC",
+    # Subset co-partitioning (the pre-3.3 behavior): a child already
+    # hashpartitioned on a SUBSET of the join keys joins in place.
+    # Several self-join operators are designed around this — e.g.
+    # embedding_near_dup_pairs partitions on `bucket` once (window
+    # + both join sides share the exchange) and joins on (bucket,
+    # refine-subkey); with the default `true`, the planner inserts
+    # a fresh (bucket, _sub) exchange per side and the shared-scan
+    # design degrades to two full corpus evaluations.
+    "spark.sql.requireAllClusterKeysForCoPartition": "false",
+}
+
+
 def ensure_session_confs(spark: SparkSession) -> SparkSession:
-    """Apply the runtime-settable confs this engine depends on to an
-    EXTERNALLY-created session (e.g. the verification driver's).
-    Without nanosAsLong, reading the TIMESTAMP(NANOS) events table
-    throws PARQUET_TYPE_ILLEGAL; non-UTC session time would shift
-    timestamp comparisons against the TZ-naive oracle.
+    """Apply :data:`SESSION_CONFS` to an EXTERNALLY-created session (e.g.
+    the verification driver's). Without nanosAsLong, reading the
+    TIMESTAMP(NANOS) events table throws PARQUET_TYPE_ILLEGAL; non-UTC
+    session time would shift timestamp comparisons against the
+    TZ-naive oracle.
 
     NB this intentionally MUTATES the caller's session (the settings
     must hold at execution time, which may be long after plan
     construction) — documented side effect, set only when differing to
-    avoid repeated JVM round trips.
+    avoid repeated JVM round trips, and never for a conf the session
+    reports as not modifiable.
     """
-    want = {
-        "spark.sql.legacy.parquet.nanosAsLong": "true",
-        "spark.sql.session.timeZone": "UTC",
-        # Subset co-partitioning (the pre-3.3 behavior): a child already
-        # hashpartitioned on a SUBSET of the join keys joins in place.
-        # Several self-join operators are designed around this — e.g.
-        # embedding_near_dup_pairs partitions on `bucket` once (window
-        # + both join sides share the exchange) and joins on (bucket,
-        # refine-subkey); with the default `true`, the planner inserts
-        # a fresh (bucket, _sub) exchange per side and the shared-scan
-        # design degrades to two full corpus evaluations.
-        "spark.sql.requireAllClusterKeysForCoPartition": "false",
-        # Construction-cost switch (see get_spark): only effective if
-        # set before the process's first wrapped pyspark call — for an
-        # external driver session that means this first _t() touch.
-        # Harmless later (the python-side cache is already frozen).
-        "spark.python.sql.dataFrameDebugging.enabled": os.environ.get(
-            "SPARK_GRAFT_DF_DEBUG", "false"
-        ),
-    }
-    for k, v in want.items():
+    for k, v in SESSION_CONFS.items():
         try:
             current = spark.conf.get(k)
         except Exception:  # noqa: BLE001 - unset conf
             current = None
-        if current != v:
+        if current != v and spark.conf.isModifiable(k):
             spark.conf.set(k, v)
     return spark
 

@@ -293,3 +293,224 @@ def test_wav_header_prefix_fuzz(data):
         decode_wav(b"RIFF" + data[:4] + b"WAVE" + data[4:])
     except (NotImplementedError, ValueError, struct.error, EOFError):
         pass
+
+
+# ---- .npy / npz decoder: differential against np.load ---------------------
+
+
+def _npy_bytes(arr, version=None):
+    import io
+
+    buf = io.BytesIO()
+    np.lib.format.write_array(buf, arr, version=version)
+    return buf.getvalue()
+
+
+def _savez_bytes(**arrays):
+    import io
+
+    buf = io.BytesIO()
+    np.savez_compressed(buf, **arrays)
+    return buf.getvalue()
+
+
+def _arrow_slice(payload: bytes) -> memoryview:
+    """The payload as the reader hands it to codecs: an unsigned-byte
+    memoryview slice of a pyarrow binary data buffer (not at offset 0)."""
+    import pyarrow as pa
+
+    data = memoryview(pa.array([b"lead", payload, b"tail"]).buffers()[2]).cast("B")
+    return data[4 : 4 + len(payload)]
+
+
+def _np_load(payload: bytes):
+    import io
+
+    out = np.load(io.BytesIO(payload), allow_pickle=False)
+    return out["arr"] if isinstance(out, np.lib.npyio.NpzFile) else out
+
+
+def _assert_same_array(out, ref):
+    assert type(out) is np.ndarray
+    assert out.dtype == ref.dtype and out.shape == ref.shape
+    assert out.flags.c_contiguous == ref.flags.c_contiguous
+    assert out.flags.f_contiguous == ref.flags.f_contiguous
+    np.testing.assert_array_equal(out, ref)
+    # writable and independent of the input buffer (owns its data, or is
+    # the transposed view of an array that does)
+    assert out.flags.writeable
+    owner = out if out.base is None else out.base
+    assert owner.flags.owndata
+
+
+_SPECIAL_ARRAYS = {
+    "float32_2d": np.arange(12, dtype=np.float32).reshape(3, 4),
+    "fortran": np.asfortranarray(np.arange(24, dtype=np.int16).reshape(2, 3, 4)),
+    "zero_d": np.array(2.5),
+    "empty": np.zeros((0, 3), dtype=np.float64),
+    "unicode": np.array([["ab", "cde"], ["", "fghi"]]),
+    "big_endian": np.arange(6, dtype=">i4"),
+    "bool": np.array([True, False, True]),
+}
+
+
+def _containers(arr):
+    """(name, codec, payload) for every wire format that decodes ``arr``."""
+    import zlib
+
+    field = UnischemaField("x", arr.dtype.type, None, None, False)
+    return [
+        ("npy", NdarrayCodec(), _npy_bytes(arr)),
+        ("npy_v2", NdarrayCodec(), _npy_bytes(arr, version=(2, 0))),
+        ("npz_codec", CompressedNdarrayCodec(), bytes(CompressedNdarrayCodec().encode(field, arr))),
+        ("npz_savez_zip64", CompressedNdarrayCodec(), _savez_bytes(arr=arr)),
+        ("legacy_zlib", CompressedNdarrayCodec(), zlib.compress(_npy_bytes(arr))),
+    ]
+
+
+@pytest.mark.parametrize("name", sorted(_SPECIAL_ARRAYS))
+def test_npy_npz_decode_matches_np_load(name, monkeypatch):
+    """Codec decode returns exactly what np.load returns on the same bytes,
+    for bytes and zero-copy Arrow-slice inputs, without going through
+    np.load for any recognised container."""
+    import zlib
+
+    from petastorm_spark.etl.petastorm_compat import PetastormNpzCodec
+
+    arr = _SPECIAL_ARRAYS[name]
+    field = UnischemaField("x", arr.dtype.type, None, None, False)
+    cases = []
+    for kind, codec, payload in _containers(arr):
+        ref = _np_load(zlib.decompress(payload) if kind == "legacy_zlib" else payload)
+        np.testing.assert_array_equal(ref, arr)
+        cases.append((codec, payload, ref))
+        if kind.startswith("npz"):
+            cases.append((PetastormNpzCodec(), payload, ref))
+
+    def _no_np_load(*a, **k):
+        raise AssertionError("np.load fallback taken for a recognised container")
+
+    monkeypatch.setattr(np, "load", _no_np_load)
+    for codec, payload, ref in cases:
+        for inp in (payload, _arrow_slice(payload)):
+            _assert_same_array(codec.decode(field, inp), ref)
+
+
+@settings(max_examples=40, deadline=None)
+@given(arr=arrays(), fortran=st.booleans())
+def test_npy_npz_decode_matches_np_load_any_shape(arr, fortran):
+    if fortran:
+        arr = np.asfortranarray(arr)
+    field = UnischemaField("x", arr.dtype.type, None, None, False)
+    for kind, codec, payload in _containers(arr):
+        if kind == "legacy_zlib":
+            continue
+        ref = _np_load(payload)
+        _assert_same_array(codec.decode(field, payload), ref)
+        _assert_same_array(codec.decode(field, _arrow_slice(payload)), ref)
+
+
+def test_image_raw0_container_decodes_through_npy_decoder():
+    from petastorm_spark.operators.multimodal import decode_image_bytes
+
+    img = np.arange(2 * 3 * 3, dtype=np.uint16).reshape(2, 3, 3)
+    payload = b"RAW0" + _npy_bytes(img)
+    field = UnischemaField("img", np.uint16, (None, None, 3), CompressedImageCodec("jpeg"), False)
+    for inp in (payload, _arrow_slice(payload)):
+        _assert_same_array(CompressedImageCodec("jpeg").decode(field, inp), img)
+    out, fmt = decode_image_bytes(payload)
+    assert fmt == "raw0"
+    _assert_same_array(out, img)
+
+
+def test_npy_decoder_rejects_object_dtype():
+    import io
+
+    buf = io.BytesIO()
+    np.save(buf, np.array([{"a": 1}, None], dtype=object), allow_pickle=True)
+    payload = buf.getvalue()
+    field = UnischemaField("x", np.object_, None, None, False)
+    with pytest.raises(ValueError, match="allow_pickle"):
+        NdarrayCodec().decode(field, payload)
+    with pytest.raises(ValueError, match="allow_pickle"):
+        CompressedNdarrayCodec().decode(
+            field, _savez_bytes(arr=np.array([{"a": 1}], dtype=object))
+        )
+
+
+def test_npy_npz_decoder_raises_on_truncation_and_bad_crc():
+    import zipfile
+
+    arr = np.arange(64, dtype=np.float64).reshape(8, 8)
+    field = UnischemaField("x", np.float64, None, None, False)
+    npy = _npy_bytes(arr)
+    for cut in (3, 9, len(npy) - 1):
+        with pytest.raises(ValueError):
+            NdarrayCodec().decode(field, npy[:cut])
+    for npz in (
+        bytes(CompressedNdarrayCodec().encode(field, arr)),
+        _savez_bytes(arr=arr),
+    ):
+        for cut in (60, len(npz) - 1):
+            with pytest.raises(zipfile.BadZipFile):
+                CompressedNdarrayCodec().decode(field, npz[:cut])
+        # local header sizes (offsets 18, 22) past the end of the buffer
+        if npz[18:26] != b"\xff" * 8:
+            overlong = bytearray(npz)
+            overlong[18:22] = (len(npz) + 1).to_bytes(4, "little")
+            with pytest.raises(zipfile.BadZipFile, match="truncated"):
+                CompressedNdarrayCodec().decode(field, bytes(overlong))
+        # zip64 uncompressed size (offset 41) far past what the member holds
+        if npz[18:26] == b"\xff" * 8:
+            huge = bytearray(npz)
+            huge[41:49] = b"\xff" * 8
+            with pytest.raises(zipfile.BadZipFile):
+                CompressedNdarrayCodec().decode(field, bytes(huge))
+        # CRC-32 field of the local file header (offset 14)
+        bad_crc = bytearray(npz)
+        bad_crc[14] ^= 0xFF
+        with pytest.raises(zipfile.BadZipFile, match="CRC"):
+            CompressedNdarrayCodec().decode(field, bytes(bad_crc))
+
+
+def test_npz_decoder_falls_back_for_unrecognised_containers(monkeypatch):
+    """Containers the local-header parser does not take (data descriptor,
+    stored member, first member not arr.npy) still decode via np.load."""
+    import io
+    import zipfile
+
+    arr = np.arange(10, dtype=np.int32).reshape(2, 5)
+    npy = _npy_bytes(arr)
+
+    class _Unseekable:  # zipfile writes data descriptors to streams
+        def __init__(self):
+            self.buf = io.BytesIO()
+
+        def write(self, b):
+            return self.buf.write(b)
+
+        def flush(self):
+            pass
+
+    stream = _Unseekable()
+    with zipfile.ZipFile(stream, "w", zipfile.ZIP_DEFLATED) as z:
+        z.writestr("arr.npy", npy)
+    descriptor = stream.buf.getvalue()
+    assert descriptor[6] & 0x08
+
+    stored = io.BytesIO()
+    np.savez(stored, arr=arr)
+    payloads = [descriptor, stored.getvalue(), _savez_bytes(other=arr * 2, arr=arr)]
+
+    real_load = np.load
+    calls = []
+
+    def _spy(*a, **k):
+        calls.append(1)
+        return real_load(*a, **k)
+
+    monkeypatch.setattr(np, "load", _spy)
+    field = UnischemaField("x", np.int32, None, None, False)
+    for payload in payloads:
+        _assert_same_array(CompressedNdarrayCodec().decode(field, payload), arr)
+    assert len(calls) == len(payloads)
