@@ -727,6 +727,12 @@ def _min_zero_window(xor_col, windows: list[tuple[int, int]]):
     return expr
 
 
+# the input fingerprint column plus every column the bucket tables build
+_CANDIDATE_COLS = frozenset(
+    {"simhash", "bk", "band", "val", "_n", "rest", "sb", "sub", "subval"}
+)
+
+
 def simhash_pair_candidates(
     sig: DataFrame,
     id_col: str,
@@ -779,6 +785,11 @@ def simhash_pair_candidates(
     hot may be suppressed rather than surfaced; callers always verify
     with bit_count, so only noise is dropped, earlier.)
     """
+    if id_col in _CANDIDATE_COLS:
+        raise ValueError(
+            f"id_col {id_col!r} collides with a column simhash_pair_candidates "
+            f"builds internally: {sorted(_CANDIDATE_COLS)}"
+        )
     width = bits // bands
     mask = (1 << width) - 1
     band_structs = []

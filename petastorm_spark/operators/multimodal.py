@@ -263,6 +263,8 @@ def fingerprint60_table(
     the function needs — in both directions). ``fp_from_bytes`` maps
     raw bytes -> int fingerprint or None; ``errors`` are the decode
     exceptions mapped to NULL."""
+    if id_col == "simhash":
+        raise ValueError("id_col may not be the output column name 'simhash'")
     out_schema = StructType(
         [df.schema[id_col], StructField("simhash", LongType(), True)]
     )

@@ -13,6 +13,7 @@ import os
 from pyspark.sql import SparkSession
 
 DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+_PACKAGE_PARENT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def _shuffle_partitions(cpus: int) -> int:
@@ -74,17 +75,28 @@ def get_spark(app_name: str = "petastorm_spark", cpus: int | None = None) -> Spa
         )
         # subset co-partitioning — see SESSION_CONFS
         .config("spark.sql.requireAllClusterKeysForCoPartition", "false")
+        # Python workers fork from _worker_daemon (pyspark.daemon without
+        # the per-task zip directory re-reads, ~240 ms of CPU per task),
+        # which `python -m` finds through the package's parent directory
+        # from any cwd; the same entry lets workers unpickle functions
+        # and objects of this package by reference.
+        .config("spark.python.daemon.module", "petastorm_spark._worker_daemon")
+        .config("spark.executorEnv.PYTHONPATH", _PACKAGE_PARENT)
     )
-    # Long sessions accumulate resident pyspark.daemon workers: with
-    # worker reuse every Arrow/Python-UDF stage can leave up to
-    # `cpus` idle forked workers (~50-80 MB each once pandas is
-    # loaded) pooled for the session's lifetime — ~2 GB at local[32]
-    # after a full bench sweep. Spark 4's idleWorkerMaxPoolSize caps
-    # that pool. Opt-in (env) rather than default: a cap makes every
-    # later UDF stage re-fork + re-import pandas for the workers it
-    # evicted, a wall-cost-per-stage vs resident-memory trade the
-    # user should choose (on a real cluster it's per-executor, where
-    # ~5 cores means ~5 workers and the default is fine).
+    # Long sessions accumulate resident Python workers: with worker
+    # reuse every Arrow/Python-UDF stage can leave up to `cpus` idle
+    # forked workers (~50-80 MB each once pandas is loaded) pooled for
+    # the session's lifetime — ~2 GB at local[32] after a full bench
+    # sweep. Spark 4's idleWorkerMaxPoolSize caps that pool. Opt-in
+    # (env) rather than default: a cap makes later UDF stages re-fork
+    # the workers it evicted, a wall-cost-per-stage vs resident-memory
+    # trade the user should choose (on a real cluster it's
+    # per-executor, where ~5 cores means ~5 workers and the default is
+    # fine). A re-forked worker no longer re-imports pandas: it
+    # inherits _worker_daemon's imports (this package, pandas,
+    # pyarrow). Measured at local[4], 4-task mapInPandas jobs: a cap of
+    # 1 cost 0.27-0.29 s of wall per job under plain pyspark.daemon, at
+    # most 0.02 s under _worker_daemon.
     idle_pool = os.environ.get("SPARK_GRAFT_PY_IDLE_POOL")
     if idle_pool:
         builder = builder.config(

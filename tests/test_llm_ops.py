@@ -357,6 +357,22 @@ def test_simhash_pairs_hot_bucket_not_quadratic(spark):
     assert got == expected
 
 
+def test_simhash_pair_candidates_rejects_reserved_id_col(spark):
+    """An id column named like one of the bucket tables' internal
+    columns would be ambiguous in the self-join: rejected up front."""
+    import pytest
+
+    from petastorm_spark.operators.dedup import simhash_pair_candidates
+
+    for name in ("simhash", "bk", "band", "val", "_n", "rest", "sb", "sub", "subval"):
+        cols = "simhash bigint" if name == "simhash" else f"{name} bigint, simhash bigint"
+        sig = spark.createDataFrame([tuple(range(1, cols.count(",") + 2))], cols)
+        with pytest.raises(ValueError, match="collides"):
+            simhash_pair_candidates(sig, name)
+    ok = spark.createDataFrame([(1, 5), (2, 5)], "doc_id bigint, simhash bigint")
+    assert simhash_pair_candidates(ok, "doc_id").count() == 1
+
+
 def test_simhash_pairs_hot_path_matches_cold_path(spark, sf_dir):
     """Forcing every bucket hot (threshold=0 ... 1) must not change the
     result set vs the plain banded join (threshold=inf)."""
@@ -1292,6 +1308,20 @@ def test_ivf_append_visible_to_queries_and_pruned(spark, sf_dir, tmp_path):
     # of its own vector at n_probe = all cells
     pid = probe.collect()[0]["vec_id"]
     assert all(r["query_id"] == pid for r in rows)
+
+
+def test_fingerprint60_table_rejects_reserved_id_col(spark):
+    """``simhash`` is the output fingerprint column: an id column of
+    that name would give the kernel's output two of it."""
+    import pytest
+
+    from petastorm_spark.operators.multimodal import fingerprint60_table
+
+    df = spark.createDataFrame([(1, b"x")], "simhash bigint, blob binary")
+    with pytest.raises(ValueError, match="simhash"):
+        fingerprint60_table(df, "blob", "simhash", len)
+    ok = spark.createDataFrame([(1, b"xyz")], "doc_id bigint, blob binary")
+    assert fingerprint60_table(ok, "blob", "doc_id", len).collect()[0].simhash == 3
 
 
 def test_image_dup_pairs_perceptual(spark):
