@@ -1,21 +1,18 @@
-"""Pure (JVM-free) row-group load + decode kernels, shared by the
-Reader's thread pool and the ``reader_pool_type='process'`` pool.
+"""Row-group load, partition-value, DNF-mask and decode helpers that
+the Reader's one piece kernel (``reader._read_piece``) composes, plus
+the DNF row-group pruning the Reader applies when it plans its pieces.
 
-Parity surface: petastorm/workers_pool/process_pool.py (process
-workers) and petastorm/py_dict_reader_worker.py:150-232 (row-group
-load, two-phase decode). Here the worker is a plain picklable function:
-multiprocessing 'spawn' children import only numpy/pandas/pyarrow and
-the pure-python schema module — no SparkSession is ever created in a
-worker.
-
-Schemas cross the process boundary as JSON strings (the sidecar
-format), never pickled objects, and are parsed once per worker via a
-keyed cache.
+Parity surface: petastorm/py_dict_reader_worker.py:150-232 (row-group
+load, two-phase decode) and petastorm/arrow_reader_worker.py (DNF
+filters). Every function here is JVM-free: the kernel runs unchanged
+in the parent (inline and thread pools) and in ``reader_pool_type=
+'process'`` workers, which never create a SparkSession. Importing this
+module still runs ``petastorm_spark/__init__.py`` (session, reader and
+every operator module, hence pyspark), so a spawned worker pays those
+imports once at start.
 """
 
 from __future__ import annotations
-
-import json
 
 import numpy as np
 import pandas as pd
@@ -314,50 +311,4 @@ def rg_may_match(rg_meta, col_names: list[str], filters) -> bool:
     return any(
         all(cond_possible(*cond) for cond in clause)
         for clause in dnf_clauses(filters)
-    )
-
-
-# ---------------------------------------------------------------------------
-# Process-pool entry point
-# ---------------------------------------------------------------------------
-
-_SCHEMA_CACHE: dict[str, object] = {}
-
-
-def _schema_from_json(js: str):
-    schema = _SCHEMA_CACHE.get(js)
-    if schema is None:
-        from petastorm_spark.unischema import Unischema
-
-        schema = Unischema.from_json(json.loads(js))
-        _SCHEMA_CACHE[js] = schema
-    return schema
-
-
-def process_piece(task: tuple) -> pd.DataFrame:
-    """Runs in a spawned worker process: load one row group and decode
-    ALL read columns (the GIL-bound codec work). Predicate, transform,
-    and row shuffle stay in the parent so closures never cross the
-    process boundary."""
-    (
-        fs, path, rg, sl, drop_parts, read_columns,
-        storage_js, full_js, dnf, missing_ok,
-    ) = task
-    storage = _schema_from_json(storage_js)
-    full = _schema_from_json(full_js)
-    table = load_table(fs, path, rg, sl, drop_parts, read_columns)
-    parts = partition_values(
-        path, read_columns, table.column_names, storage, missing_ok
-    )
-    sel = None
-    if dnf is not None:
-        mask = dnf_mask(
-            scalar_frame(table, parts, dnf_columns(dnf)), dnf
-        )
-        sel = np.nonzero(mask)[0]
-    names = list(table.column_names) + [
-        c for c in parts if c not in table.column_names
-    ]
-    return pd.DataFrame(
-        {c: decode_col(full.fields.get(c), table, parts, c, sel) for c in names}
     )

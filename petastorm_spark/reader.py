@@ -18,12 +18,30 @@ with Spark doing the heavy lifting):
      pyarrow FileSystem handle (local, s3://, gs://, hdfs:// — the
      reference's fs_utils.py model): seeded piece-order shuffle per
      epoch (D2), shard selection ``index % shard_count == cur_shard``
-     (D1), DNF-filter row-group pruning from parquet statistics,
-     in-row-group row shuffle (D3), codec decode (C5) — in threads or
-     spawned worker processes — row predicate on decoded values
-     (P2/P3), TransformSpec (U1), then rows or column-vector batches
-     are yielded as namedtuples. Row-group counts come from the
-     metadata sidecar when present, so no footer is opened up front.
+     (D1), DNF-filter row-group pruning from parquet statistics, then
+     per piece the one kernel :func:`_read_piece` and the one tail
+     ``Reader._finish_piece``, and rows or column-vector batches are
+     yielded as namedtuples. Row-group counts come from the metadata
+     sidecar when present, so no footer is opened up front.
+
+One URL is a list of one: ``Reader._open`` reads every URL list the
+same way — one Spark parquet read (a ``CANNOT_MERGE_SCHEMAS`` refusal
+under ``schema_evolution`` retries under the widened union schema), or,
+when the JVM has no filesystem for the scheme, a schema from pyarrow
+footers. The sidecar and petastorm-compat metadata belong to a single
+dataset root and are read only for one URL; the per-URL schema agreement
+check runs only for two or more.
+
+Every reader pool runs the same kernel (reference
+py_dict_reader_worker.py:124-232, one ``process`` for all pools): load
+the row group, recover hive partition values, apply the DNF row mask,
+evaluate the predicate on its decoded columns, decode the survivors
+(C5). The inline ('dummy', or one worker) and thread pools call it with
+the predicate; the process pool ships it to spawned workers with the
+predicate left to the parent, since closures do not cross the spawn
+boundary. The shared tail then applies that deferred predicate (P2/P3),
+the view projection, the TransformSpec (U1) and the in-piece row shuffle
+(D3). The thread and process pools share one bounded prefetch window.
 
 At cluster scale the iteration tier runs on each training worker with
 a distinct ``cur_shard`` streaming its shard straight from the store —
@@ -33,11 +51,14 @@ normal Spark job sized by the cluster.
 
 from __future__ import annotations
 
-import glob
+import dataclasses
+import functools
+import itertools
 import json
 import os
 import shutil
 import tempfile
+from collections import deque
 from urllib.parse import urlparse
 
 import numpy as np
@@ -49,6 +70,7 @@ from pyspark.sql import functions as F
 
 from petastorm_spark._piece_worker import (
     decode_col,
+    dnf_clauses,
     dnf_columns,
     dnf_mask,
     is_dnf_filters,
@@ -71,10 +93,6 @@ from petastorm_spark.unischema import Unischema
 def _strip_scheme(path: str) -> str:
     parsed = urlparse(path)
     return parsed.path if parsed.scheme else path
-
-
-def _is_null_scalar(v) -> bool:
-    return v is None or (isinstance(v, float) and np.isnan(v))
 
 
 def _resolve_fs(url: str) -> tuple[pafs.FileSystem, str] | None:
@@ -183,14 +201,9 @@ def _widened_union_schema(urls: list[str]):
             raise FileNotFoundError(f"cannot resolve a filesystem for {u!r}")
         pfs, root = pair
         leaves = _list_parquet_files_fs(pfs, root)
-        from concurrent.futures import ThreadPoolExecutor
-
-        def one(path, _pfs=pfs):
-            with _pfs.open_input_file(path) as fh:
-                return path, from_arrow_schema(pq.read_schema(fh))
-
-        with ThreadPoolExecutor(min(16, max(len(leaves), 1))) as ex:
-            footers = dict(ex.map(one, leaves))
+        footers = _parallel_footers(
+            pfs, leaves, lambda p, md: from_arrow_schema(md.schema.to_arrow_schema())
+        )
         for path in leaves:
             for f in footers[path].fields:
                 if f.name not in merged:
@@ -213,13 +226,25 @@ def _widened_union_schema(urls: list[str]):
     )
 
 
+def _require_same_schema(urls: list[str], structs: list) -> None:
+    """Multi-URL datasets without schema evolution: every URL's schema
+    (name -> type, order-insensitive) must equal the first one's."""
+    first = {f.name: f.dataType for f in structs[0].fields}
+    for u, st in zip(urls[1:], structs[1:]):
+        fields = {f.name: f.dataType for f in st.fields}
+        if fields != first:
+            raise ValueError(
+                f"dataset URL {u!r} schema {sorted(fields)} is "
+                f"incompatible with {urls[0]!r} ({sorted(first)}); "
+                "multi-URL datasets must share one schema"
+            )
+
+
 def _dnf_to_column(filters) -> Column:
     """Compile DNF tuple filters to a Spark Column so the plan tier
     gets the same semantics (and Catalyst pushdown) the iteration tier
     evaluates with pyarrow stats + pandas masks."""
     from functools import reduce
-
-    from petastorm_spark._piece_worker import dnf_clauses
 
     def cond(col: str, op: str, val) -> Column:
         c = F.col(col)
@@ -328,21 +353,89 @@ def _enforce_cache_limit(cache_dir: str, limit_bytes: int, keep: str) -> None:
         )
 
 
-def _list_parquet_files(path: str) -> list[str]:
-    if os.path.isfile(path):
-        return [path]
-    def visible(f: str) -> bool:
-        # skip _metadata/_ps_index/.crc etc. at any directory level
-        rel = os.path.relpath(f, path)
-        return not any(part.startswith(("_", ".")) for part in rel.split(os.sep))
+@functools.lru_cache(maxsize=16)
+def _schema_from_json(js: str) -> Unischema:
+    return Unischema.from_json(json.loads(js))
 
-    files = sorted(
-        f
-        for f in glob.glob(os.path.join(path, "**", "*.parquet"), recursive=True)
-        + glob.glob(os.path.join(path, "**", "part-*"), recursive=True)
-        if os.path.isfile(f) and visible(f)
+
+@dataclasses.dataclass
+class _PieceSpec:
+    """Everything :func:`_read_piece` needs besides the piece address.
+    Pickles its schema as the sidecar JSON (a Unischema holds
+    dynamically created namedtuple classes), so the process pool ships
+    it to spawned workers, which rebuild the schema once each."""
+
+    fs: pafs.FileSystem
+    drop_parts: int
+    read_columns: list[str]  # view + predicate + DNF columns
+    view_columns: list[str]
+    pred_columns: list[str]
+    dnf: list | None
+    missing_ok: bool  # schema evolution: absent columns read as NULL
+    schema: Unischema  # the full dataset schema
+
+    def __post_init__(self):
+        self.schema_json = json.dumps(self.schema.to_json(), sort_keys=True)
+
+    def __getstate__(self):
+        return {k: v for k, v in self.__dict__.items() if k != "schema"}
+
+    def __setstate__(self, state):
+        self.__dict__.update(state)
+        self.schema = _schema_from_json(self.schema_json)
+
+
+def _read_piece(
+    spec: _PieceSpec, path: str, rg: int, sl: int, predicate=None
+) -> pd.DataFrame | None:
+    """The piece kernel every reader pool runs: load one row group (or
+    one strided slice of it), recover hive partition values, apply the
+    DNF row mask, decode. The piece stays an ARROW table until each
+    column decodes, so codec payloads reach the codec as zero-copy
+    memoryview slices of the arrow data buffer.
+
+    With ``predicate``, decode is two-phase (reference
+    py_dict_reader_worker.py:222-232): the predicate's columns decode
+    and filter first, then the view's other columns decode for the
+    surviving rows only — the predicate always sees decoded values.
+    Without it (the process pool: closures stay in the parent), the
+    predicate's columns decode next to the view's, for the parent's
+    tail to evaluate. None when no row survives."""
+    table = load_table(
+        spec.fs, path, rg, sl, spec.drop_parts, spec.read_columns
     )
-    return sorted(set(files))
+    parts = partition_values(
+        path, spec.read_columns, table.column_names, spec.schema, spec.missing_ok
+    )
+    fields = spec.schema.fields
+    sel = None  # surviving row indices; None = all rows
+    if spec.dnf is not None:
+        m = dnf_mask(scalar_frame(table, parts, dnf_columns(spec.dnf)), spec.dnf)
+        if not m.any():
+            return None
+        sel = np.nonzero(m)[0]
+    names = spec.view_columns
+    done: dict[str, pd.Series] = {}
+    if predicate is not None:
+        for name in spec.pred_columns:
+            done[name] = decode_col(fields.get(name), table, parts, name, sel)
+        mask = np.asarray(
+            predicate.do_include_pandas(pd.DataFrame(done)), dtype=bool
+        )
+        if not mask.any():
+            return None
+        sel = (np.arange(len(table)) if sel is None else sel)[mask]
+        done = {
+            n: s[mask].reset_index(drop=True)
+            for n, s in done.items()
+            if n in names
+        }
+    else:
+        names = names + [c for c in spec.pred_columns if c not in names]
+    return pd.DataFrame({
+        n: done[n] if n in done else decode_col(fields.get(n), table, parts, n, sel)
+        for n in names
+    })
 
 
 class Reader:
@@ -415,23 +508,22 @@ class Reader:
         # Multi-URL datasets (reference petastorm/reader.py:51-57,209):
         # a list of file/dir URLs sharing one scheme reads as ONE
         # dataset — piece lists merge, sharding spans all of them.
+        # One URL is a list of one.
         urls: list[str] | None = None
-        if dataset_url is not None:
-            if isinstance(dataset_url, (list, tuple)):
-                if not dataset_url:
-                    raise ValueError("dataset url list must be non-empty")
-                urls = [str(u) for u in dataset_url]
-                schemes = {
-                    u.split("://", 1)[0] if "://" in u else "file" for u in urls
-                }
-                if len(schemes) > 1:
-                    raise ValueError(
-                        "all dataset URLs must share one scheme, got "
-                        f"{sorted(schemes)}"
-                    )
-                dataset_url = urls[0] if len(urls) == 1 else None
-            else:
-                urls = [dataset_url]
+        if isinstance(dataset_url, (list, tuple)):
+            if not dataset_url:
+                raise ValueError("dataset url list must be non-empty")
+            urls = [str(u) for u in dataset_url]
+            schemes = {
+                u.split("://", 1)[0] if "://" in u else "file" for u in urls
+            }
+            if len(schemes) > 1:
+                raise ValueError(
+                    "all dataset URLs must share one scheme, got "
+                    f"{sorted(schemes)}"
+                )
+        elif dataset_url is not None:
+            urls = [dataset_url]
         if (cur_shard is None) != (shard_count is None):
             raise ValueError("cur_shard and shard_count must be set together")
         if shard_count is not None and not 0 <= cur_shard < shard_count:
@@ -473,199 +565,22 @@ class Reader:
         self.last_row_consumed = False
 
         # ---- plan tier -----------------------------------------------------
-        self._sidecar_counts: dict | None = None
-        # schema evolution: later-written files may ADD nullable
-        # columns (mergeSchema unions footers JVM-side; the iteration
-        # tier null-fills columns absent from an old file via
-        # partition_values missing_ok) or WIDEN a column along the safe
-        # chains int32->int64 / float->double (r13): Spark's merge
-        # refuses type changes, so a CANNOT_MERGE_SCHEMAS read retries
-        # under the explicit widened union schema — the parquet scan
-        # promotes per file — and the iteration tier's decode_series
-        # cast to the unified Unischema dtype widens per piece.
-        # Cross-kind changes (int<->float, string<->numeric, array
-        # element changes) still raise.
+        # pyarrow (filesystem, root) per URL, None where pyarrow cannot
+        # reach the scheme: the footer fallback, the sidecar retry and
+        # the direct iteration tier all use it
+        fs_pairs = [_resolve_fs(u) for u in urls] if urls is not None else None
+        stored = struct = self._sidecar_counts = None
         if dataframe is not None:
             df = dataframe
-            stored = None
-        elif dataset_url is not None:
-            struct = None
-
-            def _jvm_read_single():
-                # scoped to the parquet read ONLY: a transient sidecar
-                # failure on a JVM-reachable dataset must not discard
-                # the working plan tier (round-11 advice)
-                try:
-                    return self._reader_with_merge().parquet(dataset_url)
-                except Exception as exc:
-                    # mergeSchema refuses type CHANGES outright; with
-                    # schema_evolution, safe widenings (int32->int64,
-                    # float->double) re-read under an explicit widened
-                    # union schema (Spark's scan promotes per file);
-                    # genuine conflicts raise ValueError from the union
-                    if self._schema_evolution and (
-                        "CANNOT_MERGE_SCHEMAS" in str(exc)
-                    ):
-                        st = _widened_union_schema([dataset_url])
-                        return self._spark.read.schema(st).parquet(
-                            dataset_url
-                        )
-                    raise
-
-            try:
-                df = _jvm_read_single()
-            except ValueError:
-                raise  # widening conflict — never a filesystem problem
-            except Exception:
-                # The JVM has no filesystem for this scheme (e.g. s3a://
-                # without hadoop-aws on the driver classpath). The DIRECT
-                # tier still reaches it through pyarrow's from_uri:
-                # derive the schema from a parquet footer, read the
-                # sidecar through the same pyarrow filesystem, and run
-                # plan-tier-less (self.dataframe stays None).
-                pair = _resolve_fs(dataset_url)
-                if pair is None:
-                    raise
-                pfs, root = pair
-                leaves = _list_parquet_files_fs(pfs, root)
-                if not leaves:
-                    raise
-                from pyspark.sql.pandas.types import from_arrow_schema
-
-                if self._schema_evolution:
-                    struct = _widened_union_schema([dataset_url])
-                else:
-                    with pfs.open_input_file(leaves[0]) as fh:
-                        struct = from_arrow_schema(pq.read_schema(fh))
-                df = None
-                payload = _sidecar_via_pyarrow(pfs, root)
-            else:
-                try:
-                    payload = read_sidecar(self._spark, dataset_url)
-                except Exception:
-                    # keep the JVM DataFrame; retry just the sidecar
-                    # through pyarrow (None = sidecar genuinely absent).
-                    # The retry itself may also fail (fs error after
-                    # resolution succeeds) — a doubly-failing sidecar
-                    # must degrade to payload=None, never abort a
-                    # dataset whose parquet read succeeded.
-                    try:
-                        pair = _resolve_fs(dataset_url)
-                        payload = (
-                            _sidecar_via_pyarrow(*pair)
-                            if pair is not None
-                            else None
-                        )
-                    except Exception:
-                        payload = None
-            if payload is not None:
-                stored = Unischema.from_json(payload["unischema"])
-                self._sidecar_counts = payload.get("row_groups")
-            else:
-                # interop: a dataset written by original petastorm keeps
-                # its pickled Unischema + rowgroup counts in
-                # _common_metadata — load them so tensor columns decode
-                from petastorm_spark.etl.petastorm_compat import (
-                    load_petastorm_metadata,
-                )
-
-                stored, self._sidecar_counts = load_petastorm_metadata(dataset_url)
         else:
-            # multi-URL: validate the shards agree on a schema (name ->
-            # type, order-insensitive) before merging; one footer-only
-            # read per URL, driver-side metadata cost only.
-            def _check(u, fields, first_fields):
-                if self._schema_evolution:
-                    # union of fields; same-name types may WIDEN along
-                    # the safe chains (int32->int64, float->double);
-                    # anything else conflicts and raises
-                    merged = dict(first_fields or {})
-                    for k, t in fields.items():
-                        if k in merged and merged[k] != t:
-                            w = _widen_types(merged[k], t)
-                            if w is None:
-                                raise ValueError(
-                                    f"dataset URL {u!r} column {k!r} type "
-                                    f"{t} conflicts with {merged[k]} from "
-                                    "an earlier URL; schema evolution "
-                                    "merges columns and widens "
-                                    "int->long / float->double, never "
-                                    "converts across kinds"
-                                )
-                            merged[k] = w
-                        else:
-                            merged[k] = t
-                    return merged
-                if first_fields is not None and fields != first_fields:
-                    raise ValueError(
-                        f"dataset URL {u!r} schema {sorted(fields)} is "
-                        f"incompatible with {urls[0]!r} "
-                        f"({sorted(first_fields)}); multi-URL datasets "
-                        "must share one schema"
-                    )
-                return fields
-
-            struct = None
-            try:
-                first_fields = None
-                for u in urls:
-                    first_fields = _check(u, {
-                        f.name: f.dataType
-                        for f in self._spark.read.parquet(u).schema.fields
-                    }, first_fields)
-                try:
-                    df = self._reader_with_merge().parquet(*urls)
-                except Exception as exc:
-                    # widened types across (or within) URLs: mergeSchema
-                    # refuses the type change; re-read under the
-                    # explicit widened union schema (see single-URL path)
-                    if self._schema_evolution and (
-                        "CANNOT_MERGE_SCHEMAS" in str(exc)
-                    ):
-                        st = _widened_union_schema(urls)
-                        df = self._spark.read.schema(st).parquet(*urls)
-                    else:
-                        raise
-            except ValueError:
-                raise
-            except Exception:
-                # The JVM has no filesystem for this scheme (e.g. s3a://
-                # without hadoop-aws on the driver classpath). The DIRECT
-                # tier still reaches it through pyarrow's from_uri, so
-                # derive + validate the schema from parquet footers and
-                # run plan-tier-less (self.dataframe stays None; a
-                # JVM-only Column filter then raises below).
-                from pyspark.sql.pandas.types import from_arrow_schema
-
-                pairs = [_resolve_fs(u) for u in urls]
-                if any(p is None for p in pairs):
-                    raise
-                first_fields = None
-                struct = None
-                from pyspark.sql.types import StructField, StructType
-
-                for (pfs, root), u in zip(pairs, urls):
-                    leaves = _list_parquet_files_fs(pfs, root)
-                    if not leaves:
-                        raise FileNotFoundError(f"no parquet files under {u}")
-                    with pfs.open_input_file(leaves[0]) as fh:
-                        st = from_arrow_schema(pq.read_schema(fh))
-                    struct = struct or st
-                    first_fields = _check(
-                        u, {f.name: f.dataType for f in st.fields}, first_fields
-                    )
-                if self._schema_evolution and first_fields is not None:
-                    # union schema across URLs, evolved columns nullable
-                    # and widened columns at their WIDEST type (the
-                    # _check merge already applied the widening chains)
-                    struct = StructType(
-                        [
-                            StructField(k, t, True)
-                            for k, t in first_fields.items()
-                        ]
-                    )
-                df = None
-            stored = None  # petastorm sidecars are per-dataset: plain-store path
+            df, struct = self._open(urls, fs_pairs)
+            if len(urls) == 1:
+                # the sidecar and the petastorm-compat metadata describe
+                # ONE dataset root: a merged multi-URL dataset never has
+                # them (plain-store path)
+                stored, self._sidecar_counts = self._dataset_metadata(
+                    urls[0], fs_pairs[0], df is not None
+                )
 
         full_schema = stored or Unischema.from_spark_schema(
             df.schema if df is not None else struct
@@ -700,12 +615,6 @@ class Reader:
             view = full_schema.create_schema_view(schema_fields)
         else:
             view = full_schema
-        self._storage_schema = view
-        self._full_schema = full_schema
-        # JSON forms cross the process-pool boundary (schemas hold
-        # dynamically-created namedtuple classes, so never pickled)
-        self._storage_json = json.dumps(view.to_json(), sort_keys=True)
-        self._full_json = json.dumps(full_schema.to_json(), sort_keys=True)
 
         # Final (post-transform) schema the consumer sees.
         self.schema = transform_schema(view, self._spec) if self._spec else view
@@ -735,30 +644,29 @@ class Reader:
             need += [f for f in predicate.get_fields() if f not in need]
         if self._dnf is not None:
             need += [c for c in dnf_columns(self._dnf) if c not in need]
-        self._read_columns = need
 
         # Index selection happens on the SOURCE dataset before any
         # materialization — the pruned file list feeds both the Spark
         # plan and the direct iteration path.
         selected_files: set[str] | None = None
         if rowgroup_selector is not None:
-            if dataset_url is None:
+            if urls is None or len(urls) > 1:
                 raise ValueError("rowgroup_selector requires a dataset_url reader")
             selected_files = {
                 _strip_scheme(f)
-                for f in rowgroup_selector.select_files(self._spark, dataset_url)
+                for f in rowgroup_selector.select_files(self._spark, urls[0])
             }
             if not selected_files:
                 raise ValueError("rowgroup_selector matched no files")
             # basePath keeps hive partition columns alive when reading
             # leaf files directly
             df = (
-                self._spark.read.option("basePath", dataset_url)
+                self._spark.read.option("basePath", urls[0])
                 .parquet(*sorted(selected_files))
             )
 
         if df is None:
-            # JVM-unreachable scheme (see the multi-URL footer fallback):
+            # JVM-unreachable scheme (see the footer fallback in _open):
             # the direct tier streams via pyarrow; there is no plan-tier
             # DataFrame to filter, so a JVM-only Column filter cannot run
             if col_filter is not None:
@@ -784,9 +692,6 @@ class Reader:
         # materialization.
         self._fs: pafs.FileSystem = pafs.LocalFileSystem()
         self._direct_root: str | None = None
-        fs_pairs = (
-            [_resolve_fs(u) for u in urls] if urls is not None else None
-        )
         if (
             fs_pairs is not None
             and all(p is not None for p in fs_pairs)
@@ -802,10 +707,6 @@ class Reader:
             if selected_files is not None:
                 files = [f for f in files if _strip_scheme(f) in selected_files]
             self._files = files
-            if len(fs_pairs) > 1:
-                # sidecar rowgroup counts are keyed relative to ONE
-                # root; a merged dataset always takes the footer scan
-                self._sidecar_counts = None
         elif df is None:
             # plan-tier-less remote reader (JVM-unreachable scheme) that
             # also failed direct-tier eligibility: nothing can serve it
@@ -835,12 +736,15 @@ class Reader:
             else:
                 key = f"sess{plan.semanticHash() & 0xFFFFFFFF:08x}"
             managed = os.path.join(cache_dir, f"_ps_materialized_{key}")
+            local = pafs.LocalFileSystem()
             existing = (
-                _list_parquet_files(managed) if os.path.isdir(managed) else []
+                _list_parquet_files_fs(local, managed)
+                if os.path.isdir(managed)
+                else []
             )
             if not existing:
                 plan.write.mode("overwrite").parquet(managed)
-                existing = _list_parquet_files(managed)
+                existing = _list_parquet_files_fs(local, managed)
             else:
                 os.utime(managed)  # refresh LRU rank on reuse
             # pin against concurrent eviction while this Reader is alive
@@ -874,7 +778,9 @@ class Reader:
             # source files to stream, so a materialization is inherent.
             self._owned_cache = tempfile.mkdtemp(prefix="pstorm_cache_")
             plan.write.mode("overwrite").parquet(self._owned_cache)
-            self._files = _list_parquet_files(self._owned_cache)
+            self._files = _list_parquet_files_fs(
+                pafs.LocalFileSystem(), self._owned_cache
+            )
         if not self._files:
             raise ValueError(
                 f"no parquet files found for {urls or 'dataframe'}"
@@ -931,6 +837,95 @@ class Reader:
                 "more/smaller row groups"
             )
         self._nt = self.schema.namedtuple_cls()
+        self._piece_spec = _PieceSpec(
+            self._fs,
+            self._drop_parts,
+            need,
+            list(view.fields),
+            sorted(predicate.get_fields()) if predicate is not None else [],
+            self._dnf,
+            self._schema_evolution,
+            full_schema,
+        )
+
+    # ---- open path ---------------------------------------------------------
+
+    def _open(self, urls: list[str], fs_pairs: list) -> tuple:
+        """(Spark DataFrame, None) over one or many same-scheme URLs, or
+        (None, Spark schema) from parquet footers when the JVM has no
+        filesystem for the scheme (e.g. s3a:// without hadoop-aws on the
+        driver classpath) — the direct tier still reaches it through
+        pyarrow's from_uri, and the reader runs plan-tier-less.
+
+        Schema evolution: later-written files may ADD nullable columns
+        (mergeSchema unions footers JVM-side; the kernel null-fills a
+        column absent from an old file via partition_values missing_ok)
+        or WIDEN a column along the safe chains int32->int64 /
+        float->double. mergeSchema refuses type changes, so a
+        CANNOT_MERGE_SCHEMAS read retries under the explicit widened
+        union schema (the parquet scan promotes per file) and the
+        kernel's decode cast to the unified Unischema dtype widens per
+        piece. Cross-kind changes (int<->float, string<->numeric, array
+        element changes) raise ValueError from the union."""
+        try:
+            if len(urls) > 1 and not self._schema_evolution:
+                _require_same_schema(
+                    urls, [self._spark.read.parquet(u).schema for u in urls]
+                )
+            read = self._spark.read
+            if self._schema_evolution:
+                read = read.option("mergeSchema", "true")
+            try:
+                return read.parquet(*urls), None
+            except Exception as exc:
+                if not (
+                    self._schema_evolution and "CANNOT_MERGE_SCHEMAS" in str(exc)
+                ):
+                    raise
+                st = _widened_union_schema(urls)
+                return self._spark.read.schema(st).parquet(*urls), None
+        except ValueError:
+            raise  # schema conflict — never a filesystem problem
+        except Exception:
+            if any(p is None for p in fs_pairs):
+                raise
+            leaves = [_list_parquet_files_fs(pfs, root) for pfs, root in fs_pairs]
+            if not all(leaves):
+                raise
+            if self._schema_evolution:
+                return None, _widened_union_schema(urls)
+            from pyspark.sql.pandas.types import from_arrow_schema
+
+            structs = []
+            for (pfs, _), files in zip(fs_pairs, leaves):
+                with pfs.open_input_file(files[0]) as fh:
+                    structs.append(from_arrow_schema(pq.read_schema(fh)))
+            _require_same_schema(urls, structs)
+            return None, structs[0]
+
+    def _dataset_metadata(self, url: str, fs_pair, jvm: bool) -> tuple:
+        """(stored Unischema, per-file row-group counts) of ONE dataset
+        root: the metadata sidecar, else a dataset written by original
+        petastorm (pickled Unischema + rowgroup counts in
+        _common_metadata, so tensor columns decode), else (None, None).
+        A sidecar read failing through the JVM is retried through
+        pyarrow, and a doubly-failing sidecar degrades to absent: it
+        never discards the working plan tier or aborts the reader."""
+        payload = None
+        try:
+            payload = read_sidecar(self._spark, url) if jvm else None
+        except Exception:
+            jvm = False
+        if not jvm:
+            try:
+                payload = _sidecar_via_pyarrow(*fs_pair) if fs_pair else None
+            except Exception:
+                payload = None
+        if payload is not None:
+            return Unischema.from_json(payload["unischema"]), payload.get("row_groups")
+        from petastorm_spark.etl.petastorm_compat import load_petastorm_metadata
+
+        return load_petastorm_metadata(url)
 
     # ---- iteration tier ----------------------------------------------------
 
@@ -959,72 +954,36 @@ class Reader:
         return None  # stale/partial sidecar: fall back to footer scan
 
     def _decode_piece(
-        self, path: str, rg: int, sl: int = 0, rng: np.random.Generator | None = None
+        self, path: str, rg: int, sl: int, rng: np.random.Generator
     ) -> pd.DataFrame | None:
-        # The piece stays an ARROW table until each column decodes:
-        # codec payloads reach the codec as zero-copy memoryview slices
-        # of the arrow data buffer instead of per-row python bytes via
-        # to_pandas (which was ~30% of per-piece wall on the PNG bench).
-        table = load_table(
-            self._fs, path, rg, sl, self._drop_parts, self._read_columns
+        """One piece on the inline and thread pools: the kernel with the
+        predicate, then the shared tail."""
+        return self._finish_piece(
+            _read_piece(self._piece_spec, path, rg, sl, self._predicate), rng
         )
-        parts = partition_values(
-            path,
-            self._read_columns,
-            table.column_names,
-            self._storage_schema,
-            self._schema_evolution,
-        )
-        sel = None  # surviving row indices; None = all rows
-        if self._dnf is not None:
-            m = dnf_mask(
-                scalar_frame(table, parts, dnf_columns(self._dnf)), self._dnf
-            )
-            if not m.any():
-                return None
-            sel = np.nonzero(m)[0]
 
-        # Two-phase decode (reference py_dict_reader_worker.py:222-232):
-        # 1. decode the PREDICATE columns, evaluate, filter;
-        # 2. decode the remaining view columns for surviving rows only.
-        # The predicate therefore always sees decoded values (ndarrays,
-        # numpy-dtyped scalars), never np.save/compressed bytes.
-        done: dict[str, pd.Series] = {}
-        if self._predicate is not None:
-            pred_cols = sorted(self._predicate.get_fields())
-            for name in pred_cols:
-                field = self._full_schema.fields.get(name)
-                done[name] = decode_col(field, table, parts, name, sel)
+    def _finish_piece(self, pdf, rng, predicate=None) -> pd.DataFrame | None:
+        """The tail every pool shares: a ``predicate`` the kernel left to
+        the parent (process pool), the view projection, the TransformSpec
+        and the in-piece row shuffle."""
+        if pdf is None:
+            return None
+        view = self._piece_spec.view_columns
+        if predicate is not None:
             mask = np.asarray(
-                self._predicate.do_include_pandas(pd.DataFrame(done)), dtype=bool
+                predicate.do_include_pandas(pdf[self._piece_spec.pred_columns]),
+                dtype=bool,
             )
             if not mask.any():
                 return None
-            sel = (np.arange(len(table)) if sel is None else sel)[mask]
-            done = {
-                n: s[mask].reset_index(drop=True)
-                for n, s in done.items()
-                if n in self._storage_schema.fields
-            }
-
-        # codec decode + dtype restore, view columns only
-        out = {}
-        for name, field in self._storage_schema.fields.items():
-            if name in done:
-                out[name] = done[name]
-            else:
-                out[name] = decode_col(field, table, parts, name, sel)
-        decoded = pd.DataFrame(out)
-
+            pdf = pdf[mask].reset_index(drop=True)
+        if len(pdf.columns) > len(view):
+            pdf = pdf[view]
         if self._spec is not None:
-            decoded = apply_transform_pandas(decoded, self._spec)
-
-        if self._shuffle_rows and len(decoded) > 1:
-            rng = rng if rng is not None else self._rng
-            decoded = decoded.iloc[rng.permutation(len(decoded))].reset_index(
-                drop=True
-            )
-        return decoded
+            pdf = apply_transform_pandas(pdf, self._spec)
+        if self._shuffle_rows and len(pdf) > 1:
+            pdf = pdf.iloc[rng.permutation(len(pdf))].reset_index(drop=True)
+        return pdf
 
     def _batch_to_vectors(self, pdf: pd.DataFrame):
         vals = {}
@@ -1070,34 +1029,22 @@ class Reader:
             cols = [pdf[n] for n in self._nt._fields]
             yield from (self._nt(*vals) for vals in zip(*cols))
 
-    def _post_process(self, pdf, rng) -> pd.DataFrame | None:
-        """Parent-side tail of a process-pool piece: the worker already
-        decoded every read column, so the predicate sees decoded values
-        here too; then view projection, transform, row shuffle."""
-        if pdf is None or not len(pdf):
-            return None
-        if self._predicate is not None:
-            mask = np.asarray(self._predicate.do_include_pandas(pdf), dtype=bool)
-            if not mask.any():
-                return None
-            pdf = pdf[mask].reset_index(drop=True)
-        pdf = pdf[[n for n in self._storage_schema.fields]]
-        if self._spec is not None:
-            pdf = apply_transform_pandas(pdf, self._spec)
-        if self._shuffle_rows and len(pdf) > 1:
-            pdf = pdf.iloc[rng.permutation(len(pdf))].reset_index(drop=True)
-        return pdf
-
-    def _reader_with_merge(self):
-        r = self._spark.read
-        return r.option("mergeSchema", "true") if self._schema_evolution else r
-
-    def _proc_task(self, path: str, rg: int, sl: int) -> tuple:
-        return (
-            self._fs, path, rg, sl, self._drop_parts, self._read_columns,
-            self._storage_json, self._full_json, self._dnf,
-            self._schema_evolution,
-        )
+    def _prefetched(self, pool, submit):
+        """The thread and process pools' bounded prefetch: up to 2x
+        workers pieces in flight, consumed in submission order
+        (round-robin determinism, like the reference's thread pool
+        result draining). ``submit(path, rg, sl, rng)`` returns a
+        zero-argument callable that waits for the finished piece."""
+        pieces = self._piece_stream()
+        with pool:
+            window = deque(
+                submit(*p) for p in itertools.islice(pieces, 2 * self._workers)
+            )
+            while window:
+                pdf = window.popleft()()
+                for p in itertools.islice(pieces, 1):
+                    window.append(submit(*p))
+                yield from self._emit(pdf)
 
     def __iter__(self):
         self.last_row_consumed = False
@@ -1112,46 +1059,31 @@ class Reader:
             except OSError:
                 pass
         if self._pool_type == "process":
-            # spawned workers do the GIL-bound IO + codec decode;
-            # closures (predicate/transform) never cross the boundary —
-            # they run parent-side on the decoded frames.
             import multiprocessing
-            from collections import deque
             from concurrent.futures import ProcessPoolExecutor
 
-            from petastorm_spark._piece_worker import process_piece
+            pool = ProcessPoolExecutor(
+                self._workers, mp_context=multiprocessing.get_context("spawn")
+            )
+            spec = self._piece_spec
 
-            ctx = multiprocessing.get_context("spawn")
-            with ProcessPoolExecutor(self._workers, mp_context=ctx) as pool:
-                window: deque = deque()
-                for path, rg, sl, rng in self._piece_stream():
-                    window.append(
-                        (pool.submit(process_piece, self._proc_task(path, rg, sl)), rng)
-                    )
-                    if len(window) >= self._workers * 2:
-                        fut, r = window.popleft()
-                        yield from self._emit(self._post_process(fut.result(), r))
-                while window:
-                    fut, r = window.popleft()
-                    yield from self._emit(self._post_process(fut.result(), r))
+            def submit(path, rg, sl, rng):
+                fut = pool.submit(_read_piece, spec, path, rg, sl)
+                return lambda: self._finish_piece(fut.result(), rng, self._predicate)
+
+            yield from self._prefetched(pool, submit)
         elif self._workers <= 1:
             for piece in self._piece_stream():
                 yield from self._emit(self._decode_piece(*piece))
         else:
-            # bounded prefetch: up to 2x workers row groups in flight,
-            # consumed in submission order (round-robin determinism,
-            # like the reference's thread pool result draining)
-            from collections import deque
             from concurrent.futures import ThreadPoolExecutor
 
-            with ThreadPoolExecutor(self._workers) as pool:
-                window: deque = deque()
-                for piece in self._piece_stream():
-                    window.append(pool.submit(self._decode_piece, *piece))
-                    if len(window) >= self._workers * 2:
-                        yield from self._emit(window.popleft().result())
-                while window:
-                    yield from self._emit(window.popleft().result())
+            pool = ThreadPoolExecutor(self._workers)
+
+            def submit(*piece):
+                return pool.submit(self._decode_piece, *piece).result
+
+            yield from self._prefetched(pool, submit)
         self.last_row_consumed = True
 
     # ---- lifecycle ---------------------------------------------------------

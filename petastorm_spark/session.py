@@ -33,6 +33,23 @@ def _shuffle_partitions(cpus: int) -> int:
     return int(os.environ.get("SPARK_GRAFT_SHUFFLE_PARTITIONS", str(cpus)))
 
 
+def _driver_memory(phys_bytes: int | None) -> str:
+    """Default driver heap: half of physical memory, capped at 48g (a
+    host with 96 GiB or more keeps the 48g it always had). A fixed 48g
+    on a 16 GB host let the JVM heap grow until the machine ran out of
+    memory. Unknown physical memory keeps the 48g cap."""
+    cap_mib = 48 << 10
+    mib = cap_mib if phys_bytes is None else min(cap_mib, (phys_bytes // 2) >> 20)
+    return f"{mib >> 10}g" if mib % 1024 == 0 else f"{mib}m"
+
+
+def _physical_memory() -> int | None:
+    try:
+        return os.sysconf("SC_PHYS_PAGES") * os.sysconf("SC_PAGE_SIZE")
+    except (ValueError, OSError, AttributeError):
+        return None
+
+
 def get_spark(app_name: str = "petastorm_spark", cpus: int | None = None) -> SparkSession:
     cpus = cpus or DEFAULT_CPUS
     builder = (
@@ -53,7 +70,11 @@ def get_spark(app_name: str = "petastorm_spark", cpus: int | None = None) -> Spa
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_GRAFT_DRIVER_MEM")
+            or _driver_memory(_physical_memory()),
+        )
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         # testdata events.parquet stores TIMESTAMP(NANOS); Spark has no

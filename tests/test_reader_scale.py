@@ -157,6 +157,38 @@ def test_reader_pool_matrix(spark, tmp_path_factory, pool):
     assert isinstance(rows[7], np.ndarray)
     np.testing.assert_array_equal(rows[7], np.full((4,), 7.0, dtype=np.float32))
 
+    # One piece kernel for every pool: with the row predicate (on a
+    # column outside the view), DNF filters, a TransformSpec, row
+    # shuffle and strided row-group slices all on, each pool delivers
+    # the dummy pool's exact row sequence.
+    from petastorm_spark.predicates import in_lambda
+    from petastorm_spark.transform import TransformSpec
+
+    def sequence(pool_type):
+        with make_reader(
+            url,
+            spark=spark,
+            reader_pool_type=pool_type,
+            workers_count=2,
+            schema_fields=["id"],
+            predicate=in_lambda(
+                ["vec"], lambda cols: np.array([v.sum() >= 20 for v in cols["vec"]])
+            ),
+            filters=[("id", "<", 25)],
+            transform_spec=TransformSpec(
+                lambda pdf: pdf.assign(twice=pdf["id"] * 2),
+                edit_fields=[("twice", np.int64, (), False)],
+            ),
+            shuffle_rows=True,
+            seed=3,
+            shuffle_row_drop_partitions=2,
+        ) as r:
+            return [(int(x.id), int(x.twice)) for x in r]
+
+    got = sequence(pool)
+    assert sorted(got) == [(i, 2 * i) for i in range(5, 25)]
+    assert got == sequence("dummy")
+
 
 def test_process_pool_with_predicate_and_shuffle(spark, tmp_path):
     from petastorm_spark.predicates import in_lambda

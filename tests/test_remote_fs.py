@@ -106,3 +106,53 @@ def test_pyarrow_remote_url_reads_end_to_end(spark, tmp_path, monkeypatch):
     ) as r:
         ids = np.sort(np.concatenate([b.id for b in r]))
     np.testing.assert_array_equal(ids, np.arange(90, 100))
+
+
+def test_remote_multi_url_evolution_keeps_added_columns(spark, tmp_path, monkeypatch):
+    """schema_evolution over several JVM-unreachable URLs unions the
+    footers of every file under every URL, as a single URL and a local
+    multi-URL read do: a column that only a later file of the first URL
+    carries stays in the schema and its values reach the rows."""
+    import pyarrow as pa
+    import pyarrow.fs as real_pafs
+    import pyarrow.parquet as pq
+
+    import petastorm_spark.reader as reader_mod
+
+    roots = {}
+    for name in ("a", "b"):
+        root = tmp_path / name
+        root.mkdir()
+        roots[f"s3a://bucket/{name}"] = str(root)
+    pq.write_table(
+        pa.table({"id": [1, 2], "v": [1.0, 2.0]}), str(tmp_path / "a" / "part-0.parquet")
+    )
+    pq.write_table(
+        pa.table({"id": [3], "v": [3.0], "extra": ["new"]}),
+        str(tmp_path / "a" / "part-1.parquet"),
+    )
+    pq.write_table(
+        pa.table({"id": [4], "v": [4.0]}), str(tmp_path / "b" / "part-0.parquet")
+    )
+    shim = types.SimpleNamespace(
+        LocalFileSystem=real_pafs.LocalFileSystem,
+        FileSelector=real_pafs.FileSelector,
+        FileType=real_pafs.FileType,
+        FileSystem=types.SimpleNamespace(
+            from_uri=lambda uri: (real_pafs.LocalFileSystem(), roots[uri])
+        ),
+    )
+    monkeypatch.setattr(reader_mod, "pafs", shim)
+
+    def extra_by_id(urls):
+        with make_batch_reader(urls, spark=spark, schema_evolution=True) as r:
+            assert r.dataframe is None  # served by the pyarrow fallback
+            assert sorted(r.schema.fields) == ["extra", "id", "v"], urls
+            return {
+                int(i): e for b in r for i, e in zip(b.id, b.extra)
+            }
+
+    assert extra_by_id("s3a://bucket/a") == {1: None, 2: None, 3: "new"}
+    assert extra_by_id(["s3a://bucket/a", "s3a://bucket/b"]) == {
+        1: None, 2: None, 3: "new", 4: None,
+    }

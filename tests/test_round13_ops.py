@@ -238,6 +238,19 @@ def test_reader_recovers_two_level_partition_values(spark, tmp_path):
     assert sorted(x.id for x in odd) == [i for i in range(60) if i % 2 == 1]
     assert all(x.source == x.id % 3 for x in odd)
 
+    # typed from the dataset schema even when the view leaves them out:
+    # a DNF filter and a predicate on partition columns outside
+    # schema_fields compare ints, not path strings
+    with make_reader(
+        url,
+        spark=spark,
+        schema_fields=["id"],
+        filters=[("source", "=", 2)],
+        predicate=in_set([1], "lang"),
+    ) as r:
+        ids = sorted(x.id for x in r)
+    assert ids == [i for i in range(60) if i % 3 == 2 and i % 2 == 1]
+
 
 def _edge_tuples(df):
     return sorted(

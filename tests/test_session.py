@@ -10,7 +10,11 @@ import subprocess
 import sys
 import textwrap
 
-from petastorm_spark.session import SESSION_CONFS, ensure_session_confs
+from petastorm_spark.session import (
+    SESSION_CONFS,
+    _driver_memory,
+    ensure_session_confs,
+)
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
@@ -19,6 +23,15 @@ def test_session_confs_are_runtime_modifiable(spark):
     assert SESSION_CONFS
     for k in SESSION_CONFS:
         assert spark.conf.isModifiable(k), k
+
+
+def test_driver_memory_is_half_of_physical_capped_at_48g():
+    gib = 1 << 30
+    assert _driver_memory(16 * gib) == "8g"
+    assert _driver_memory(15 * gib + 512 * (1 << 20)) == "7936m"
+    assert _driver_memory(96 * gib) == "48g"
+    assert _driver_memory(512 * gib) == "48g"
+    assert _driver_memory(None) == "48g"
 
 
 def test_ensure_session_confs_skips_unmodifiable_conf():
