@@ -545,6 +545,7 @@ class Reader:
         if reader_pool_type not in ("thread", "process", "dummy"):
             raise ValueError(f"unsupported reader_pool_type {reader_pool_type!r}")
         self._pool_type = reader_pool_type
+        self._process_pool = None  # started by the first iteration
         self._workers = 1 if reader_pool_type == "dummy" else max(1, workers_count)
         self._predicate = predicate
         self._schema_evolution = bool(schema_evolution)
@@ -1029,22 +1030,32 @@ class Reader:
             cols = [pdf[n] for n in self._nt._fields]
             yield from (self._nt(*vals) for vals in zip(*cols))
 
-    def _prefetched(self, pool, submit):
+    def _prefetched(self, submit):
         """The thread and process pools' bounded prefetch: up to 2x
         workers pieces in flight, consumed in submission order
         (round-robin determinism, like the reference's thread pool
-        result draining). ``submit(path, rg, sl, rng)`` returns a
-        zero-argument callable that waits for the finished piece."""
+        result draining). ``submit(path, rg, sl, rng)`` returns the
+        piece's future and a one-argument callable that finishes its
+        result. An iteration left half-way (break, close, error) cancels
+        the pieces not yet started and waits for the running ones, so
+        none of them runs into the next epoch."""
+        from concurrent.futures import wait
+
         pieces = self._piece_stream()
-        with pool:
-            window = deque(
-                submit(*p) for p in itertools.islice(pieces, 2 * self._workers)
-            )
+        window = deque(
+            submit(*p) for p in itertools.islice(pieces, 2 * self._workers)
+        )
+        try:
             while window:
-                pdf = window.popleft()()
+                fut, finish = window.popleft()
+                pdf = finish(fut.result())
                 for p in itertools.islice(pieces, 1):
                     window.append(submit(*p))
                 yield from self._emit(pdf)
+        finally:
+            for fut, _ in window:
+                fut.cancel()
+            wait([fut for fut, _ in window])
 
     def __iter__(self):
         self.last_row_consumed = False
@@ -1059,36 +1070,44 @@ class Reader:
             except OSError:
                 pass
         if self._pool_type == "process":
-            import multiprocessing
-            from concurrent.futures import ProcessPoolExecutor
+            # one spawn pool for the reader's life (petastorm starts its
+            # pool once per Reader): a new pool per epoch paid the spawn
+            # and the workers' package import, ~1 s, on every epoch
+            if self._process_pool is None:
+                import multiprocessing
+                from concurrent.futures import ProcessPoolExecutor
 
-            pool = ProcessPoolExecutor(
-                self._workers, mp_context=multiprocessing.get_context("spawn")
-            )
-            spec = self._piece_spec
+                self._process_pool = ProcessPoolExecutor(
+                    self._workers, mp_context=multiprocessing.get_context("spawn")
+                )
+            pool, spec = self._process_pool, self._piece_spec
 
             def submit(path, rg, sl, rng):
-                fut = pool.submit(_read_piece, spec, path, rg, sl)
-                return lambda: self._finish_piece(fut.result(), rng, self._predicate)
+                return pool.submit(_read_piece, spec, path, rg, sl), (
+                    lambda pdf: self._finish_piece(pdf, rng, self._predicate)
+                )
 
-            yield from self._prefetched(pool, submit)
+            yield from self._prefetched(submit)
         elif self._workers <= 1:
             for piece in self._piece_stream():
                 yield from self._emit(self._decode_piece(*piece))
         else:
             from concurrent.futures import ThreadPoolExecutor
 
-            pool = ThreadPoolExecutor(self._workers)
+            with ThreadPoolExecutor(self._workers) as pool:
 
-            def submit(*piece):
-                return pool.submit(self._decode_piece, *piece).result
+                def submit(*piece):
+                    return pool.submit(self._decode_piece, *piece), lambda pdf: pdf
 
-            yield from self._prefetched(pool, submit)
+                yield from self._prefetched(submit)
         self.last_row_consumed = True
 
     # ---- lifecycle ---------------------------------------------------------
 
     def close(self) -> None:
+        if self._process_pool is not None:
+            self._process_pool.shutdown(wait=True, cancel_futures=True)
+            self._process_pool = None
         if self._owned_cache and os.path.isdir(self._owned_cache):
             shutil.rmtree(self._owned_cache, ignore_errors=True)
             self._owned_cache = None

@@ -209,6 +209,40 @@ def test_process_pool_with_predicate_and_shuffle(spark, tmp_path):
     assert got == list(range(10, 30))
 
 
+def test_process_pool_lives_as_long_as_the_reader(spark, tmp_path):
+    """The spawn pool starts on the first iteration and serves every
+    later one (a pool per epoch paid ~1 s of spawn and import each
+    time), an iteration left half-way leaves no piece running, and
+    close() leaves no worker process behind."""
+    import multiprocessing
+    import time
+
+    url = str(tmp_path / "procds")
+    _write_simple(spark, url, n=30, parts=3)
+    r = make_reader(url, spark=spark, reader_pool_type="process", workers_count=2)
+    walls, pools = [], []
+    for _ in range(3):
+        t0 = time.perf_counter()
+        assert sorted(x.id for x in r) == list(range(30))
+        walls.append(time.perf_counter() - t0)
+        pools.append(r._process_pool)
+    workers = list(r._process_pool._processes.values())
+    assert len(workers) == 2 and pools[0] is pools[1] is pools[2]
+    assert walls[1] <= walls[2] + 0.25, walls
+
+    it = iter(r)
+    next(it)
+    it.close()  # abandoned mid-epoch: nothing left queued or running
+    pending = r._process_pool._pending_work_items.values()
+    assert all(item.future.done() for item in pending)
+    assert sorted(x.id for x in r) == list(range(30))
+
+    r.close()
+    assert r._process_pool is None
+    assert not any(p.is_alive() for p in workers)
+    assert not set(multiprocessing.active_children()) & set(workers)
+
+
 # ---------------------------------------------------------------------------
 # Cache size limit + eviction
 # ---------------------------------------------------------------------------

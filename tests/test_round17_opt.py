@@ -151,6 +151,26 @@ def _final_plan_sections(df) -> tuple[str, str]:
     return full.split("Initial Plan")[0], full
 
 
+def _map_in_pandas_outputs(full: str) -> list[str]:
+    """The output column list of every ``MapInPandas`` detail block of a
+    formatted plan. Fails, with the plan, when the plan has no such
+    block or one whose layout the parse does not recognise."""
+    import re
+
+    headers = re.findall(r"^\(\d+\) MapInPandas$", full, re.MULTILINE)
+    outs = re.findall(
+        r"^\(\d+\) MapInPandas\nInput.*\nArguments: kernel\([^)]*\)#\d+, \[([^\]]*)\]",
+        full,
+        re.MULTILINE,
+    )
+    if not headers or len(outs) != len(headers):
+        pytest.fail(
+            f"found {len(headers)} MapInPandas detail blocks, parsed "
+            f"{len(outs)}; the formatted plan layout changed:\n{full}"
+        )
+    return outs
+
+
 def test_multimodal_dup_pairs_decode_runs_once(spark):
     """The banded self-join's cold and hot union branches must share
     ONE bucket exchange (identical projections — `rest` is derived
@@ -189,13 +209,8 @@ def test_multimodal_dup_pairs_decode_runs_once(spark):
     )
     # the decode stage's output schema must not carry the blob back out:
     # every MapInPandas detail block emits exactly [id, simhash]
-    import re
-
-    outs = re.findall(
-        r"\(\d+\) MapInPandas\nInput.*\nArguments: kernel\([^)]*\)#\d+, \[([^\]]*)\]",
-        full,
-    )
-    assert outs and all(
+    outs = _map_in_pandas_outputs(full)
+    assert all(
         "simhash#" in o and "image#" not in o and o.count(",") == 1
         for o in outs
     ), (

@@ -1,18 +1,29 @@
 """Session conf handling: the engine applies only runtime-settable confs
 to sessions it did not build (a static conf set on a live session
 raises CANNOT_MODIFY_STATIC_CONFIG and failed every query of an
-externally-created session), and the sessions get_spark builds run
-their Python workers under the package's worker daemon."""
+externally-created session), the sessions get_spark builds run their
+Python workers under the package's worker daemon, and their driver JVM
+starts from a class-data-sharing archive when one applies."""
 
 import json
 import os
+import re
+import shutil
 import subprocess
 import sys
 import textwrap
+import time
+
+import pyspark
+import pytest
+from pyspark.find_spark_home import _find_spark_home
 
 from petastorm_spark.session import (
     SESSION_CONFS,
+    _cds_key,
+    _default_conf_is_empty,
     _driver_memory,
+    _java_home,
     ensure_session_confs,
 )
 
@@ -184,3 +195,277 @@ def test_workers_import_package_from_any_cwd(tmp_path):
     assert len(rdd_sizes) == len(pandas_sizes) == 4
     assert len(set(rdd_sizes)) == 1 and rdd_sizes[0] > 0
     assert pandas_sizes == rdd_sizes
+
+
+# ---- class-data-sharing archive of the driver JVM --------------------------
+
+
+def _touch(path, data=b"x"):
+    os.makedirs(os.path.dirname(path), exist_ok=True)
+    with open(path, "wb") as f:
+        f.write(data)
+
+
+def test_cds_key_tracks_jdk_and_jars(tmp_path):
+    jdk, jars = tmp_path / "jdk", tmp_path / "jars"
+    _touch(str(jdk / "lib" / "server" / "libjvm.so"), b"jvm")
+    _touch(str(jdk / "release"), b'IMPLEMENTOR="x"\nJAVA_VERSION="17.0.1"\n')
+    for name in ("a.jar", "b.jar"):
+        _touch(str(jars / name))
+    key = _cds_key(str(jdk), str(jars), "4.1.2")
+    assert key == _cds_key(str(jdk), str(jars), "4.1.2")
+    assert key != _cds_key(str(jdk), str(jars), "4.1.3")
+
+    st = os.stat(jars / "b.jar")
+    os.utime(jars / "b.jar", ns=(st.st_atime_ns, st.st_mtime_ns + 10**9))
+    moved = _cds_key(str(jdk), str(jars), "4.1.2")
+    assert moved != key
+    with open(jars / "b.jar", "ab") as f:  # size changes, mtime kept
+        f.write(b"y")
+    os.utime(jars / "b.jar", ns=(st.st_atime_ns, st.st_mtime_ns + 10**9))
+    assert _cds_key(str(jdk), str(jars), "4.1.2") not in (key, moved)
+
+    _touch(str(jdk / "release"), b'JAVA_VERSION="17.0.2"\n')
+    assert _cds_key(str(jdk), str(jars), "4.1.2") != key
+
+    other = tmp_path / "jdk2"
+    shutil.copytree(jdk, other, copy_function=shutil.copy2)
+    assert _cds_key(str(other), str(jars), "4.1.2") != _cds_key(
+        str(jdk), str(jars), "4.1.2"
+    )
+
+
+def test_cds_needs_the_default_conf_dir_without_real_files(tmp_path, monkeypatch):
+    monkeypatch.delenv("SPARK_CONF_DIR", raising=False)
+    home = tmp_path / "spark"
+    home.mkdir()
+    assert _default_conf_is_empty(str(home))  # no conf dir
+    _touch(str(home / "conf" / "spark-defaults.conf.template"))
+    assert _default_conf_is_empty(str(home))
+    _touch(str(home / "conf" / "spark-defaults.conf"))
+    assert not _default_conf_is_empty(str(home))
+    os.unlink(home / "conf" / "spark-defaults.conf")
+    monkeypatch.setenv("SPARK_CONF_DIR", str(home / "conf"))
+    assert not _default_conf_is_empty(str(home))
+
+
+def test_dumper_lock(tmp_path, monkeypatch):
+    """One dumper per key: a fresh lock blocks a second start, a stale
+    one does not, and an archive published while the session launched
+    (its dumper already gone with its lock) starts none."""
+    from petastorm_spark import session
+
+    spawned = []
+    monkeypatch.setattr(session.subprocess, "run", lambda argv, **kw: spawned.append(argv))
+    cds, lock = str(tmp_path), str(tmp_path / "k.lock")
+    session._start_dumper(cds, "k")
+    session._start_dumper(cds, "k")
+    assert len(spawned) == 1 and spawned[0][-2:] == [cds, "k"]
+    old = time.time() - session._CDS_LOCK_STALE_S - 1
+    os.utime(lock, (old, old))
+    session._start_dumper(cds, "k")
+    assert len(spawned) == 2 and os.path.exists(lock)
+    os.unlink(lock)
+    _touch(str(tmp_path / "k.jsa"))
+    session._start_dumper(cds, "k")
+    assert len(spawned) == 2 and not os.path.exists(lock)
+
+
+# a session whose report names the JVM's flags, one conf, whether the
+# variables get_spark touches came back unchanged, and a query's result
+_LAUNCH = textwrap.dedent(
+    """
+    import json, os, sys
+    sys.path.insert(0, {root!r})
+    from petastorm_spark.session import get_spark
+
+    before = dict(os.environ)
+    spark = get_spark("cds_probe", cpus=2)
+    args = list(
+        spark.sparkContext._jvm.java.lang.management.ManagementFactory
+        .getRuntimeMXBean().getInputArguments()
+    )
+    changed = sorted(k for k in set(before) | {{"SPARK_CONF_DIR", "SPARK_SUBMIT_OPTS"}}
+                     if os.environ.get(k) != before.get(k))
+    marker = spark.conf.get("spark.petastorm.test.marker", None)
+    rows = spark.range(100).selectExpr("id % 3 AS k").groupBy("k").count().count()
+    print("REPORT", json.dumps(dict(args=args, changed=changed, marker=marker, rows=rows)))
+    spark.stop()
+    """
+)
+
+
+def _launch(cache, **env_extra):
+    env = dict(os.environ, XDG_CACHE_HOME=str(cache), SPARK_GRAFT_DRIVER_MEM="1g")
+    for k in ("SPARK_CONF_DIR", "SPARK_SUBMIT_OPTS", "PYSPARK_SUBMIT_ARGS"):
+        env.pop(k, None)
+    env.update(env_extra)
+    proc = subprocess.run(
+        [sys.executable, "-c", _LAUNCH.format(root=ROOT)],
+        cwd=str(cache),
+        env=env,
+        capture_output=True,
+        text=True,
+        timeout=600,
+    )
+    assert proc.returncode == 0, proc.stderr[-3000:]
+    lines = [ln for ln in proc.stdout.splitlines() if ln.startswith("REPORT ")]
+    assert lines, proc.stdout[-2000:]
+    report = json.loads(lines[-1].split(" ", 1)[1])
+    assert report["rows"] == 3
+    return report, proc.stdout + proc.stderr
+
+
+def _cds_files(cache, spark_home=None):
+    """(cds dir, key) of this JDK and Spark, as get_spark computes them."""
+    jars = os.path.join(spark_home or _find_spark_home(), "jars")
+    cds = os.path.join(str(cache), "petastorm_spark", "cds")
+    os.makedirs(cds, exist_ok=True)
+    return cds, _cds_key(_java_home(), jars, pyspark.__version__)
+
+
+_CDS_TEXT = re.compile(r"\[cds|cds[,\]]|shared archive", re.IGNORECASE)
+
+
+def _archive_flag(args):
+    return [a for a in args if a.startswith("-XX:SharedArchiveFile=")]
+
+
+def test_corrupt_archive_starts_normally_and_silently(tmp_path):
+    cds, key = _cds_files(tmp_path)
+    _touch(os.path.join(cds, key + ".jsa"), b"not an archive" * 1000)
+    report, output = _launch(tmp_path)
+    assert _archive_flag(report["args"]) == [
+        "-XX:SharedArchiveFile=" + os.path.join(cds, key + ".jsa")
+    ]
+    assert not _CDS_TEXT.search(output), _CDS_TEXT.search(output)
+    assert not os.path.exists(os.path.join(cds, key + ".lock"))  # no dumper
+
+
+def test_user_submit_opts_kept_and_environ_restored(tmp_path):
+    cds, key = _cds_files(tmp_path)
+    _touch(os.path.join(cds, key + ".jsa"), b"not an archive")
+    report, _ = _launch(tmp_path, SPARK_SUBMIT_OPTS="-Dpetastorm.test.opt=kept")
+    args = report["args"]
+    assert "-Dpetastorm.test.opt=kept" in args
+    assert _archive_flag(args)
+    # the user's options come last, so they win over the CDS flags
+    assert args.index("-Dpetastorm.test.opt=kept") > args.index(_archive_flag(args)[0])
+    # pyspark itself sets SPARK_BUFFER_SIZE and SPARK_AUTH_SOCKET_TIMEOUT
+    assert not set(report["changed"]) & {"SPARK_CONF_DIR", "SPARK_SUBMIT_OPTS"}
+    assert set(report["changed"]) <= {"SPARK_BUFFER_SIZE", "SPARK_AUTH_SOCKET_TIMEOUT"}
+
+
+def test_user_conf_dir_gets_no_cds(tmp_path):
+    cds, key = _cds_files(tmp_path)
+    _touch(os.path.join(cds, key + ".jsa"), b"not an archive")
+    conf = tmp_path / "userconf"
+    _touch(str(conf / "spark-defaults.conf"), b"spark.petastorm.test.marker honoured\n")
+    report, _ = _launch(tmp_path, SPARK_CONF_DIR=str(conf))
+    assert report["marker"] == "honoured"
+    assert not _archive_flag(report["args"])
+    assert not os.path.exists(os.path.join(cds, key + ".lock"))
+
+
+def test_spark_home_with_real_conf_gets_no_cds(tmp_path):
+    """A ``$SPARK_HOME/conf`` holding a real ``spark-defaults.conf``:
+    no CDS, and the file is still read."""
+    real = _find_spark_home()
+    home = tmp_path / "spark"
+    home.mkdir()
+    for name in os.listdir(real):
+        if name != "conf":
+            os.symlink(os.path.join(real, name), home / name)
+    _touch(str(home / "conf" / "spark-defaults.conf"), b"spark.petastorm.test.marker honoured\n")
+    cds, key = _cds_files(tmp_path, str(home))
+    _touch(os.path.join(cds, key + ".jsa"), b"not an archive")
+    report, _ = _launch(tmp_path, SPARK_HOME=str(home))
+    assert report["marker"] == "honoured"
+    assert not _archive_flag(report["args"])
+    assert not os.path.exists(os.path.join(cds, key + ".lock"))
+
+
+def _dumpers(cds):
+    """Pids of live ``petastorm_spark._cds_dump`` processes for ``cds``."""
+    pids = set()
+    for entry in os.listdir("/proc"):
+        if not entry.isdigit():
+            continue
+        try:
+            with open(f"/proc/{entry}/cmdline", "rb") as f:
+                argv = f.read().decode(errors="replace").split("\0")
+        except OSError:
+            continue
+        if argv[1:4] == ["-m", "petastorm_spark._cds_dump", cds]:
+            pids.add(int(entry))
+    return pids
+
+
+@pytest.fixture(scope="module")
+def dumped_cache(tmp_path_factory):
+    """Two sessions launched at once with no archive; returns the cache,
+    the dumper pids seen and every (name, size) of a ``.jsa`` seen
+    while the dump ran."""
+    cache = tmp_path_factory.mktemp("cds_cache")
+    cds, key = _cds_files(cache)
+    env = dict(os.environ, XDG_CACHE_HOME=str(cache), SPARK_GRAFT_DRIVER_MEM="1g")
+    env.pop("SPARK_CONF_DIR", None)
+    script = (
+        f"import sys; sys.path.insert(0, {ROOT!r})\n"
+        "from petastorm_spark.session import get_spark\n"
+        "s = get_spark('cold', cpus=1); s.range(10).count(); s.stop()\n"
+    )
+    launches = [
+        subprocess.Popen([sys.executable, "-c", script], env=env, cwd=str(cache),
+                         stdout=subprocess.DEVNULL, stderr=subprocess.DEVNULL)
+        for _ in range(2)
+    ]
+    seen_pids, seen_jsa = set(), set()
+    deadline = time.monotonic() + 600
+    try:
+        while time.monotonic() < deadline:
+            alive = _dumpers(cds)
+            seen_pids |= alive
+            for name in os.listdir(cds):
+                if name.endswith(".jsa"):
+                    try:
+                        seen_jsa.add((name, os.path.getsize(os.path.join(cds, name))))
+                    except FileNotFoundError:
+                        pass
+            launched = all(p.poll() is not None for p in launches)
+            if launched and not alive and not os.path.exists(os.path.join(cds, key + ".lock")):
+                break
+            time.sleep(0.05)
+    finally:
+        for pid in _dumpers(cds):
+            os.kill(pid, 9)
+        for p in launches:
+            p.kill()
+            p.wait()
+    assert [p.returncode for p in launches] == [0, 0]
+    return cache, cds, key, seen_pids, seen_jsa
+
+
+@pytest.mark.slow
+def test_concurrent_cold_launches_start_one_dumper(dumped_cache):
+    cache, cds, key, seen_pids, seen_jsa = dumped_cache
+    assert len(seen_pids) == 1, seen_pids
+    archive = os.path.join(cds, key + ".jsa")
+    assert os.path.getsize(archive) > 10 << 20
+    # the archive appears only by rename: never seen with another size
+    assert seen_jsa == {(key + ".jsa", os.path.getsize(archive))}
+    assert set(os.listdir(cds)) == {"conf", key + ".jsa"}
+
+
+@pytest.mark.slow
+def test_spark_classes_load_from_the_archive(dumped_cache, tmp_path):
+    cache, cds, key, _, _ = dumped_cache
+    log = tmp_path / "class_load.txt"
+    report, output = _launch(cache, SPARK_SUBMIT_OPTS=f"-Xlog:class+load:file={log}")
+    assert _archive_flag(report["args"])
+    shared = re.findall(
+        r"\] (org\.apache\.spark\.\S+) source: shared objects file \(top\)",
+        log.read_text(),
+    )
+    assert shared, log.read_text()[-3000:]
+    assert not _CDS_TEXT.search(output)
