@@ -63,55 +63,7 @@ def _last_green_round() -> dict[str, int]:
 # Refresh this list each round; stale names cost nothing — once the
 # round's CORRECTNESS file is committed the staleness sort would have
 # rotated them forward anyway.
-CHANGED_THIS_ROUND = [
-    # r17 OPTIMIZATION plan changes (OPTIMIZATION_r17.md): the
-    # topk_per_query collapse to one WindowGroupLimit window reaches
-    # every cosine_topk/ivf/pq/lsh/prefix/knn_graph consumer; the
-    # ivfpq driver-side deterministic codebooks change both ivfpq
-    # queries; label_propagation shallow ladders run cut-free; the
-    # simhash overflow guard adds a per-doc fence expression; the
-    # banded self-join's union branches now share ONE bucket exchange
-    # (`rest` derived post-shuffle) and the multimodal fingerprint
-    # kernels return (id, simhash) without echoing the blob — that
-    # last pair changes dedup_simhash_pairs plus the three *_dup_pairs
-    # queries. List = the token-closure of registered queries reaching
-    # topk_per_query, simhash, simhash_pair_candidates,
-    # label_propagation or ivfpq_build (32 names, inside the ~50-query
-    # window; the r16-rotated-out TPC-H/analytics queries refill the
-    # remaining slots by staleness order).
-    "ann_cosine_ivfpq",
-    "ann_recall_ivfpq",
-    "label_propagation_parts",
-    "knn_graph_communities",
-    "dedup_simhash",
-    "dedup_simhash_pairs",
-    "image_dhash_pairs",
-    "audio_dup_pairs",
-    "video_dup_pairs",
-    "bitext_margin_mine",
-    "hybrid_search_rrf",
-    "knn_classify",
-    "ann_cosine_topk",
-    "ann_cosine_lsh",
-    "ann_cosine_multiprobe",
-    "ann_cosine_pq",
-    "ann_cosine_prefix",
-    "ann_cosine_prefix_indexed",
-    "ann_cosine_sq8",
-    "ann_cosine_ivf",
-    "ann_cosine_ivf_auto",
-    "ann_mrr_prefix",
-    "ann_rbo_prefix",
-    "ann_recall_ivf",
-    "ann_recall_lsh",
-    "ann_recall_pq",
-    "ann_recall_prefix",
-    "embedding_intrinsic_dim",
-    "hard_negatives_labeled",
-    "knn_graph_ivf",
-    "knn_graph_hier",
-    "knn_graph_incremental",
-]
+CHANGED_THIS_ROUND: list[str] = []
 
 
 def _ordered(mapping: dict) -> dict:

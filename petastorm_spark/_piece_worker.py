@@ -1,15 +1,17 @@
 """Row-group load, partition-value, DNF-mask and decode helpers that
-the Reader's one piece kernel (``reader._read_piece``) composes, plus
+the Reader's one piece function (``reader._read_piece``) composes, plus
 the DNF row-group pruning the Reader applies when it plans its pieces.
 
 Parity surface: petastorm/py_dict_reader_worker.py:150-232 (row-group
 load, two-phase decode) and petastorm/arrow_reader_worker.py (DNF
-filters). Every function here is JVM-free: the kernel runs unchanged
-in the parent (inline and thread pools) and in ``reader_pool_type=
-'process'`` workers, which never create a SparkSession. Importing this
-module still runs ``petastorm_spark/__init__.py`` (session, reader and
-every operator module, hence pyspark), so a spawned worker pays those
-imports once at start.
+filters). The functions here use only numpy, pandas and pyarrow and
+never reach a SparkSession, so the piece function runs unchanged in the
+parent (inline and thread pools) and in ``reader_pool_type='process'``
+workers. The module is not free of pyspark, though: importing it runs
+``petastorm_spark/__init__.py`` (session, reader and every operator
+module), and a spawned worker unpickles the piece spec in
+``petastorm_spark.reader``, so each worker imports pyspark once at
+start (it never launches a JVM).
 """
 
 from __future__ import annotations

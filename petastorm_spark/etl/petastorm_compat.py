@@ -32,7 +32,6 @@ import io
 import json
 import pickle
 from typing import NamedTuple
-from urllib.parse import urlparse
 
 import numpy as np
 import pyarrow.fs as pafs
@@ -243,22 +242,14 @@ def unischema_from_pickle(payload: bytes) -> Unischema:
     return Unischema(name, fields)
 
 
-def _fs_for(url: str) -> tuple[pafs.FileSystem, str] | None:
-    try:
-        parsed = urlparse(url)
-        if parsed.scheme in ("", "file"):
-            return pafs.LocalFileSystem(), (parsed.path or url)
-        return pafs.FileSystem.from_uri(url)
-    except Exception:
-        return None
-
-
 def load_petastorm_metadata(
     dataset_url: str,
 ) -> tuple[Unischema | None, dict | None]:
     """(Unischema, rowgroup-count map) from a reference dataset's
     ``_common_metadata``, or (None, None) when absent/foreign."""
-    pair = _fs_for(dataset_url)
+    from petastorm_spark.reader import _resolve_fs
+
+    pair = _resolve_fs(dataset_url)
     if pair is None:
         return None, None
     fs, root = pair
@@ -429,9 +420,9 @@ def write_petastorm_compat_metadata(
     """Write a ``_common_metadata`` footer carrying the reference's
     pickled-Unischema and rowgroup-count keys. Returns False (with a
     warning) when a codec has no byte-compatible reference equivalent."""
-    from petastorm_spark.reader import _list_parquet_files_fs
+    from petastorm_spark.reader import _list_parquet_files_fs, _resolve_fs
 
-    pair = _fs_for(dataset_url)
+    pair = _resolve_fs(dataset_url)
     if pair is None:
         return False
     fs, root = pair

@@ -2499,12 +2499,12 @@ def cosine_topk_pq(
 def _index_fs(index_url: str):
     """Resolve ``index_url`` to ``(pyarrow FileSystem, local path)`` for
     the sidecar read/write half of the persistent-index codecs, raising
-    a usable error when resolution fails (``_fs_for`` returns None for
+    a usable error when resolution fails (``_resolve_fs`` returns None for
     unknown schemes, which would otherwise surface as an opaque
     'cannot unpack non-iterable NoneType')."""
-    from petastorm_spark.etl.petastorm_compat import _fs_for
+    from petastorm_spark.reader import _resolve_fs
 
-    pair = _fs_for(index_url)
+    pair = _resolve_fs(index_url)
     if pair is None:
         raise ValueError(
             f"cannot resolve a filesystem for index URL {index_url!r}: "

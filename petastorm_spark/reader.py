@@ -19,10 +19,10 @@ with Spark doing the heavy lifting):
      reference's fs_utils.py model): seeded piece-order shuffle per
      epoch (D2), shard selection ``index % shard_count == cur_shard``
      (D1), DNF-filter row-group pruning from parquet statistics, then
-     per piece the one kernel :func:`_read_piece` and the one tail
-     ``Reader._finish_piece``, and rows or column-vector batches are
-     yielded as namedtuples. Row-group counts come from the metadata
-     sidecar when present, so no footer is opened up front.
+     per piece the one piece function :func:`_read_piece`, and rows or
+     column-vector batches are yielded as namedtuples. Row-group counts
+     come from the metadata sidecar when present, so no footer is opened
+     up front.
 
 One URL is a list of one: ``Reader._open`` reads every URL list the
 same way — one Spark parquet read (a ``CANNOT_MERGE_SCHEMAS`` refusal
@@ -32,16 +32,18 @@ footers. The sidecar and petastorm-compat metadata belong to a single
 dataset root and are read only for one URL; the per-URL schema agreement
 check runs only for two or more.
 
-Every reader pool runs the same kernel (reference
-py_dict_reader_worker.py:124-232, one ``process`` for all pools): load
-the row group, recover hive partition values, apply the DNF row mask,
-evaluate the predicate on its decoded columns, decode the survivors
-(C5). The inline ('dummy', or one worker) and thread pools call it with
-the predicate; the process pool ships it to spawned workers with the
-predicate left to the parent, since closures do not cross the spawn
-boundary. The shared tail then applies that deferred predicate (P2/P3),
-the view projection, the TransformSpec (U1) and the in-piece row shuffle
-(D3). The thread and process pools share one bounded prefetch window.
+Every reader pool runs the same piece function (reference
+py_dict_reader_worker.py:124-232, one ``process`` for all pools), which
+returns the finished piece: load the row group, recover hive partition
+values, apply the DNF row mask, evaluate the predicate on its decoded
+columns (P2/P3), decode the survivors (C5), apply the TransformSpec (U1)
+and shuffle the rows (D3). The pools differ only in where it runs: the
+inline pool ('dummy', or one worker) calls it in the iterating thread,
+the thread pool in threads, and the process pool in spawned workers,
+which receive the piece spec with its predicate and TransformSpec once,
+cloudpickled. Each Reader keeps one executor from its first pooled
+iteration to ``close()``, and the thread and process pools share one
+bounded prefetch window.
 
 At cluster scale the iteration tier runs on each training worker with
 a distinct ``cur_shard`` streaming its shard straight from the store —
@@ -52,19 +54,22 @@ normal Spark job sized by the cluster.
 from __future__ import annotations
 
 import dataclasses
-import functools
 import itertools
 import json
+import multiprocessing
 import os
+import pickle
 import shutil
 import tempfile
 from collections import deque
+from concurrent.futures import ProcessPoolExecutor, ThreadPoolExecutor, wait
 from urllib.parse import urlparse
 
 import numpy as np
 import pandas as pd
 import pyarrow.fs as pafs
 import pyarrow.parquet as pq
+from pyspark import cloudpickle
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -148,8 +153,6 @@ def _parallel_footers(fs: pafs.FileSystem, files: list[str], fn, workers: int = 
     (the reference stores rowgroup counts to avoid this scan entirely;
     we do the same via the sidecar, and parallelize the fallback
     instead of petastorm's serial driver loop)."""
-    from concurrent.futures import ThreadPoolExecutor
-
     def one(path: str):
         with fs.open_input_file(path) as f:
             return path, fn(path, pq.ParquetFile(f).metadata)
@@ -353,54 +356,41 @@ def _enforce_cache_limit(cache_dir: str, limit_bytes: int, keep: str) -> None:
         )
 
 
-@functools.lru_cache(maxsize=16)
-def _schema_from_json(js: str) -> Unischema:
-    return Unischema.from_json(json.loads(js))
-
-
 @dataclasses.dataclass
 class _PieceSpec:
-    """Everything :func:`_read_piece` needs besides the piece address.
-    Pickles its schema as the sidecar JSON (a Unischema holds
-    dynamically created namedtuple classes), so the process pool ships
-    it to spawned workers, which rebuild the schema once each."""
+    """Everything :func:`_read_piece` needs besides the piece address
+    and its RNG. The process pool sends it to each worker once,
+    cloudpickled, so predicate and transform closures cross the spawn
+    boundary."""
 
     fs: pafs.FileSystem
     drop_parts: int
     read_columns: list[str]  # view + predicate + DNF columns
     view_columns: list[str]
-    pred_columns: list[str]
     dnf: list | None
     missing_ok: bool  # schema evolution: absent columns read as NULL
     schema: Unischema  # the full dataset schema
-
-    def __post_init__(self):
-        self.schema_json = json.dumps(self.schema.to_json(), sort_keys=True)
-
-    def __getstate__(self):
-        return {k: v for k, v in self.__dict__.items() if k != "schema"}
-
-    def __setstate__(self, state):
-        self.__dict__.update(state)
-        self.schema = _schema_from_json(self.schema_json)
+    predicate: PredicateBase | None
+    transform: TransformSpec | None
+    shuffle_rows: bool
 
 
 def _read_piece(
-    spec: _PieceSpec, path: str, rg: int, sl: int, predicate=None
+    spec: _PieceSpec, path: str, rg: int, sl: int, rng: np.random.Generator
 ) -> pd.DataFrame | None:
-    """The piece kernel every reader pool runs: load one row group (or
-    one strided slice of it), recover hive partition values, apply the
-    DNF row mask, decode. The piece stays an ARROW table until each
-    column decodes, so codec payloads reach the codec as zero-copy
+    """The piece function every reader pool runs (reference
+    py_dict_reader_worker.py:124-232, one ``process`` for all pools):
+    load one row group (or one strided slice of it), recover hive
+    partition values, apply the DNF row mask, evaluate the predicate,
+    decode the view columns, apply the TransformSpec (U1) and shuffle
+    the rows with ``rng`` (D3). The piece stays an ARROW table until
+    each column decodes, so codec payloads reach the codec as zero-copy
     memoryview slices of the arrow data buffer.
 
-    With ``predicate``, decode is two-phase (reference
-    py_dict_reader_worker.py:222-232): the predicate's columns decode
-    and filter first, then the view's other columns decode for the
-    surviving rows only — the predicate always sees decoded values.
-    Without it (the process pool: closures stay in the parent), the
-    predicate's columns decode next to the view's, for the parent's
-    tail to evaluate. None when no row survives."""
+    Decode is two-phase (reference py_dict_reader_worker.py:222-232):
+    the predicate's columns decode and filter first, then the view's
+    other columns decode for the surviving rows only — the predicate
+    always sees decoded values. None when no row survives."""
     table = load_table(
         spec.fs, path, rg, sl, spec.drop_parts, spec.read_columns
     )
@@ -416,11 +406,11 @@ def _read_piece(
         sel = np.nonzero(m)[0]
     names = spec.view_columns
     done: dict[str, pd.Series] = {}
-    if predicate is not None:
-        for name in spec.pred_columns:
+    if spec.predicate is not None:
+        for name in sorted(spec.predicate.get_fields()):
             done[name] = decode_col(fields.get(name), table, parts, name, sel)
         mask = np.asarray(
-            predicate.do_include_pandas(pd.DataFrame(done)), dtype=bool
+            spec.predicate.do_include_pandas(pd.DataFrame(done)), dtype=bool
         )
         if not mask.any():
             return None
@@ -430,12 +420,31 @@ def _read_piece(
             for n, s in done.items()
             if n in names
         }
-    else:
-        names = names + [c for c in spec.pred_columns if c not in names]
-    return pd.DataFrame({
+    pdf = pd.DataFrame({
         n: done[n] if n in done else decode_col(fields.get(n), table, parts, n, sel)
         for n in names
     })
+    if spec.transform is not None:
+        pdf = apply_transform_pandas(pdf, spec.transform)
+    if spec.shuffle_rows and len(pdf) > 1:
+        pdf = pdf.iloc[rng.permutation(len(pdf))].reset_index(drop=True)
+    return pdf
+
+
+# A process-pool worker's piece spec, set once by the pool's initializer:
+# each worker is a spawned process serving exactly one Reader.
+_worker_spec: _PieceSpec | None = None
+
+
+def _start_worker(blob: bytes) -> None:
+    global _worker_spec
+    _worker_spec = cloudpickle.loads(blob)
+
+
+def _worker_read_piece(
+    path: str, rg: int, sl: int, rng: np.random.Generator
+) -> pd.DataFrame | None:
+    return _read_piece(_worker_spec, path, rg, sl, rng)
 
 
 class Reader:
@@ -538,20 +547,17 @@ class Reader:
         self._seed = seed
         self._rng = np.random.default_rng(seed)
         # pool parity (petastorm reader_pool_type thread|process|dummy):
-        # 'thread' prefetches row-group decodes in threads; 'process'
-        # moves the GIL-bound codec decode into spawned worker
-        # processes (reference workers_pool/process_pool.py); 'dummy'
-        # is synchronous.
+        # 'thread' prefetches pieces in threads; 'process' moves the
+        # GIL-bound codec decode into spawned worker processes
+        # (reference workers_pool/process_pool.py); 'dummy' is
+        # synchronous.
         if reader_pool_type not in ("thread", "process", "dummy"):
             raise ValueError(f"unsupported reader_pool_type {reader_pool_type!r}")
         self._pool_type = reader_pool_type
-        self._process_pool = None  # started by the first iteration
+        self._pool = None  # the executor, started by the first pooled iteration
         self._workers = 1 if reader_pool_type == "dummy" else max(1, workers_count)
-        self._predicate = predicate
         self._schema_evolution = bool(schema_evolution)
-        self._spec = transform_spec
         self._shuffle_row_groups = shuffle_row_groups
-        self._shuffle_rows = shuffle_rows
         self._cur_shard = cur_shard
         self._shard_count = shard_count
         self._num_epochs = num_epochs
@@ -618,7 +624,7 @@ class Reader:
             view = full_schema
 
         # Final (post-transform) schema the consumer sees.
-        self.schema = transform_schema(view, self._spec) if self._spec else view
+        self.schema = transform_schema(view, transform_spec) if transform_spec else view
 
         # Columns needed from storage: view + predicate + DNF filter
         # columns. ``filters`` accepts either a Spark Column (plan-tier
@@ -843,10 +849,12 @@ class Reader:
             self._drop_parts,
             need,
             list(view.fields),
-            sorted(predicate.get_fields()) if predicate is not None else [],
             self._dnf,
             self._schema_evolution,
             full_schema,
+            predicate,
+            transform_spec,
+            shuffle_rows,
         )
 
     # ---- open path ---------------------------------------------------------
@@ -957,34 +965,8 @@ class Reader:
     def _decode_piece(
         self, path: str, rg: int, sl: int, rng: np.random.Generator
     ) -> pd.DataFrame | None:
-        """One piece on the inline and thread pools: the kernel with the
-        predicate, then the shared tail."""
-        return self._finish_piece(
-            _read_piece(self._piece_spec, path, rg, sl, self._predicate), rng
-        )
-
-    def _finish_piece(self, pdf, rng, predicate=None) -> pd.DataFrame | None:
-        """The tail every pool shares: a ``predicate`` the kernel left to
-        the parent (process pool), the view projection, the TransformSpec
-        and the in-piece row shuffle."""
-        if pdf is None:
-            return None
-        view = self._piece_spec.view_columns
-        if predicate is not None:
-            mask = np.asarray(
-                predicate.do_include_pandas(pdf[self._piece_spec.pred_columns]),
-                dtype=bool,
-            )
-            if not mask.any():
-                return None
-            pdf = pdf[mask].reset_index(drop=True)
-        if len(pdf.columns) > len(view):
-            pdf = pdf[view]
-        if self._spec is not None:
-            pdf = apply_transform_pandas(pdf, self._spec)
-        if self._shuffle_rows and len(pdf) > 1:
-            pdf = pdf.iloc[rng.permutation(len(pdf))].reset_index(drop=True)
-        return pdf
+        """One piece on the inline and thread pools."""
+        return _read_piece(self._piece_spec, path, rg, sl, rng)
 
     def _batch_to_vectors(self, pdf: pd.DataFrame):
         vals = {}
@@ -1030,32 +1012,57 @@ class Reader:
             cols = [pdf[n] for n in self._nt._fields]
             yield from (self._nt(*vals) for vals in zip(*cols))
 
-    def _prefetched(self, submit):
+    def _executor(self):
+        """The reader's one executor, started by its first pooled
+        iteration and kept until :meth:`close`, as petastorm starts its
+        pool once per Reader (a spawned worker pays ~1 s of spawn and
+        package import). Process workers receive the piece spec once,
+        through the pool initializer."""
+        if self._pool is None:
+            if self._pool_type == "process":
+                try:
+                    blob = cloudpickle.dumps(self._piece_spec)
+                except (pickle.PicklingError, TypeError, AttributeError) as exc:
+                    spec = self._piece_spec
+                    raise TypeError(
+                        "reader_pool_type='process' sends the predicate "
+                        f"{spec.predicate!r} and the transform_spec "
+                        f"{spec.transform!r} to its worker processes, and "
+                        f"cloudpickle cannot serialize them: {exc}"
+                    ) from exc
+                self._pool = ProcessPoolExecutor(
+                    self._workers,
+                    mp_context=multiprocessing.get_context("spawn"),
+                    initializer=_start_worker,
+                    initargs=(blob,),
+                )
+            else:
+                self._pool = ThreadPoolExecutor(self._workers)
+        return self._pool
+
+    def _prefetched(self):
         """The thread and process pools' bounded prefetch: up to 2x
         workers pieces in flight, consumed in submission order
         (round-robin determinism, like the reference's thread pool
-        result draining). ``submit(path, rg, sl, rng)`` returns the
-        piece's future and a one-argument callable that finishes its
-        result. An iteration left half-way (break, close, error) cancels
-        the pieces not yet started and waits for the running ones, so
-        none of them runs into the next epoch."""
-        from concurrent.futures import wait
-
+        result draining). An iteration left half-way (break, close,
+        error) cancels the pieces not yet started and waits for the
+        running ones, so none of them runs into the next epoch."""
+        pool = self._executor()
+        run = _worker_read_piece if self._pool_type == "process" else self._decode_piece
         pieces = self._piece_stream()
         window = deque(
-            submit(*p) for p in itertools.islice(pieces, 2 * self._workers)
+            pool.submit(run, *p) for p in itertools.islice(pieces, 2 * self._workers)
         )
         try:
             while window:
-                fut, finish = window.popleft()
-                pdf = finish(fut.result())
+                pdf = window.popleft().result()
                 for p in itertools.islice(pieces, 1):
-                    window.append(submit(*p))
+                    window.append(pool.submit(run, *p))
                 yield from self._emit(pdf)
         finally:
-            for fut, _ in window:
+            for fut in window:
                 fut.cancel()
-            wait([fut for fut, _ in window])
+            wait(window)
 
     def __iter__(self):
         self.last_row_consumed = False
@@ -1069,45 +1076,19 @@ class Reader:
                 os.utime(self._sentinel)
             except OSError:
                 pass
-        if self._pool_type == "process":
-            # one spawn pool for the reader's life (petastorm starts its
-            # pool once per Reader): a new pool per epoch paid the spawn
-            # and the workers' package import, ~1 s, on every epoch
-            if self._process_pool is None:
-                import multiprocessing
-                from concurrent.futures import ProcessPoolExecutor
-
-                self._process_pool = ProcessPoolExecutor(
-                    self._workers, mp_context=multiprocessing.get_context("spawn")
-                )
-            pool, spec = self._process_pool, self._piece_spec
-
-            def submit(path, rg, sl, rng):
-                return pool.submit(_read_piece, spec, path, rg, sl), (
-                    lambda pdf: self._finish_piece(pdf, rng, self._predicate)
-                )
-
-            yield from self._prefetched(submit)
-        elif self._workers <= 1:
+        if self._pool_type == "process" or self._workers > 1:
+            yield from self._prefetched()
+        else:
             for piece in self._piece_stream():
                 yield from self._emit(self._decode_piece(*piece))
-        else:
-            from concurrent.futures import ThreadPoolExecutor
-
-            with ThreadPoolExecutor(self._workers) as pool:
-
-                def submit(*piece):
-                    return pool.submit(self._decode_piece, *piece), lambda pdf: pdf
-
-                yield from self._prefetched(submit)
         self.last_row_consumed = True
 
     # ---- lifecycle ---------------------------------------------------------
 
     def close(self) -> None:
-        if self._process_pool is not None:
-            self._process_pool.shutdown(wait=True, cancel_futures=True)
-            self._process_pool = None
+        if self._pool is not None:
+            self._pool.shutdown(wait=True, cancel_futures=True)
+            self._pool = None
         if self._owned_cache and os.path.isdir(self._owned_cache):
             shutil.rmtree(self._owned_cache, ignore_errors=True)
             self._owned_cache = None

@@ -85,7 +85,6 @@ def get_spark(app_name: str = "petastorm_spark", cpus: int | None = None) -> Spa
         # dwarf any floor.
         .config("spark.sql.adaptive.coalescePartitions.minPartitionSize", "256k")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config(
             "spark.driver.memory",
@@ -94,10 +93,6 @@ def get_spark(app_name: str = "petastorm_spark", cpus: int | None = None) -> Spa
         )
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
-        # testdata events.parquet stores TIMESTAMP(NANOS); Spark has no
-        # nanosecond timestamp type — read as bigint ns-since-epoch and
-        # convert with ns_to_timestamp() where needed.
-        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         # PySpark 4 wraps every Column/functions API call with a
         # call-site capture (traceback walk + 2 extra JVM round trips
         # to set/clear PySparkCurrentOrigin) so error messages can
@@ -111,8 +106,7 @@ def get_spark(app_name: str = "petastorm_spark", cpus: int | None = None) -> Spa
             "spark.python.sql.dataFrameDebugging.enabled",
             os.environ.get("SPARK_GRAFT_DF_DEBUG", "false"),
         )
-        # subset co-partitioning — see SESSION_CONFS
-        .config("spark.sql.requireAllClusterKeysForCoPartition", "false")
+        .config(map=SESSION_CONFS)
         # Python workers fork from _worker_daemon (pyspark.daemon without
         # the per-task zip directory re-reads, ~240 ms of CPU per task),
         # which `python -m` finds through the package's parent directory
@@ -121,25 +115,6 @@ def get_spark(app_name: str = "petastorm_spark", cpus: int | None = None) -> Spa
         .config("spark.python.daemon.module", "petastorm_spark._worker_daemon")
         .config("spark.executorEnv.PYTHONPATH", _PACKAGE_PARENT)
     )
-    # Long sessions accumulate resident Python workers: with worker
-    # reuse every Arrow/Python-UDF stage can leave up to `cpus` idle
-    # forked workers (~50-80 MB each once pandas is loaded) pooled for
-    # the session's lifetime — ~2 GB at local[32] after a full bench
-    # sweep. Spark 4's idleWorkerMaxPoolSize caps that pool. Opt-in
-    # (env) rather than default: a cap makes later UDF stages re-fork
-    # the workers it evicted, a wall-cost-per-stage vs resident-memory
-    # trade the user should choose (on a real cluster it's
-    # per-executor, where ~5 cores means ~5 workers and the default is
-    # fine). A re-forked worker no longer re-imports pandas: it
-    # inherits _worker_daemon's imports (this package, pandas,
-    # pyarrow). Measured at local[4], 4-task mapInPandas jobs: a cap of
-    # 1 cost 0.27-0.29 s of wall per job under plain pyspark.daemon, at
-    # most 0.02 s under _worker_daemon.
-    idle_pool = os.environ.get("SPARK_GRAFT_PY_IDLE_POOL")
-    if idle_pool:
-        builder = builder.config(
-            "spark.python.factory.idleWorkerMaxPoolSize", idle_pool
-        )
     with _driver_jvm_env():
         spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
@@ -320,12 +295,16 @@ def _driver_jvm_env():
             pass
 
 
-# Runtime-settable confs this engine depends on; ensure_session_confs
-# applies them to sessions it did not build. Static confs (e.g.
+# Runtime-settable confs this engine depends on; get_spark's builder
+# sets them and ensure_session_confs applies them to sessions it did
+# not build. Static confs (e.g.
 # spark.python.sql.dataFrameDebugging.enabled) belong in get_spark's
 # builder only: setting one on a live session raises
 # CANNOT_MODIFY_STATIC_CONFIG.
 SESSION_CONFS = {
+    # testdata events.parquet stores TIMESTAMP(NANOS); Spark has no
+    # nanosecond timestamp type — read as bigint ns-since-epoch and
+    # convert with ns_to_timestamp() where needed.
     "spark.sql.legacy.parquet.nanosAsLong": "true",
     "spark.sql.session.timeZone": "UTC",
     # Subset co-partitioning (the pre-3.3 behavior): a child already

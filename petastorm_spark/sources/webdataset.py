@@ -19,8 +19,8 @@ function of its rows — re-runs produce identical tars (byte-stable
 artifacts diff cleanly across pipeline versions).
 
 Filesystem contract: both ends resolve paths through pyarrow
-filesystems (``_fs_for`` — the same routing the persistent-index
-writers use), so ``out_dir``/``in_dir`` may be a local path, ``s3://``,
+filesystems (``reader._resolve_fs`` — the same routing the reader and
+the persistent-index writers use), so ``out_dir``/``in_dir`` may be a local path, ``s3://``,
 or anything pyarrow can mount. A PLAIN LOCAL PATH on a multi-node
 cluster must be a SHARED mount (NFS/FUSE): each executor writes the
 shards it owns, and a non-shared local path would scatter tars across
@@ -65,9 +65,9 @@ def _wds_fs(url: str):
     with a named error instead of an unpackable None. Hadoop-only
     scheme names pyarrow knows the store by another name (s3a -> s3)
     are translated first."""
-    from petastorm_spark.etl.petastorm_compat import _fs_for
+    from petastorm_spark.reader import _resolve_fs
 
-    pair = _fs_for(_translate_scheme(url))
+    pair = _resolve_fs(_translate_scheme(url))
     if pair is None:
         raise ValueError(
             f"cannot resolve a filesystem for WebDataset URL {url!r}: "
@@ -213,13 +213,13 @@ def read_webdataset(
     are translated to pyarrow's s3 and stay on the streaming path).
     Regroup with :func:`webdataset_to_frame` when a wide frame is
     wanted; the long shape is the streaming-friendly one."""
-    from petastorm_spark.etl.petastorm_compat import _fs_for
+    from petastorm_spark.reader import _resolve_fs
 
     tars = spark.read.format("binaryFile").load(
         os.path.join(in_dir, f"{prefix}-*.tar")
     )
     out_schema = "key string, column string, payload binary"
-    if _fs_for(_translate_scheme(in_dir)) is None:
+    if _resolve_fs(_translate_scheme(in_dir)) is None:
 
         def explode_content(rows):
             for pdf in rows:

@@ -225,22 +225,98 @@ def test_process_pool_lives_as_long_as_the_reader(spark, tmp_path):
         t0 = time.perf_counter()
         assert sorted(x.id for x in r) == list(range(30))
         walls.append(time.perf_counter() - t0)
-        pools.append(r._process_pool)
-    workers = list(r._process_pool._processes.values())
+        pools.append(r._pool)
+    workers = list(r._pool._processes.values())
     assert len(workers) == 2 and pools[0] is pools[1] is pools[2]
     assert walls[1] <= walls[2] + 0.25, walls
 
     it = iter(r)
     next(it)
     it.close()  # abandoned mid-epoch: nothing left queued or running
-    pending = r._process_pool._pending_work_items.values()
+    pending = r._pool._pending_work_items.values()
     assert all(item.future.done() for item in pending)
     assert sorted(x.id for x in r) == list(range(30))
 
     r.close()
-    assert r._process_pool is None
+    assert r._pool is None
     assert not any(p.is_alive() for p in workers)
     assert not set(multiprocessing.active_children()) & set(workers)
+
+
+def test_process_pool_runs_the_transform_in_workers(spark, tmp_path):
+    """The process pool's workers run the whole piece function, the
+    TransformSpec included: the pids the transform records are the
+    workers', not the parent's."""
+    from petastorm_spark.transform import TransformSpec
+
+    url = str(tmp_path / "procds")
+    _write_simple(spark, url, n=30, parts=3)
+    with make_reader(
+        url,
+        spark=spark,
+        reader_pool_type="process",
+        workers_count=2,
+        transform_spec=TransformSpec(
+            lambda pdf: pdf.assign(pid=os.getpid()),
+            edit_fields=[("pid", np.int64, (), False)],
+        ),
+    ) as r:
+        rows = list(r)
+    assert sorted(x.id for x in rows) == list(range(30))
+    pids = {int(x.pid) for x in rows}
+    assert pids and os.getpid() not in pids
+
+
+def test_thread_pool_lives_as_long_as_the_reader(spark, tmp_path):
+    """The thread pool is one executor for every epoch of a reader, and
+    close() leaves no worker thread behind."""
+    url = str(tmp_path / "thrds")
+    _write_simple(spark, url, n=30, parts=3)
+    r = make_reader(url, spark=spark, reader_pool_type="thread", workers_count=2)
+    pools = []
+    for _ in range(3):
+        assert sorted(x.id for x in r) == list(range(30))
+        pools.append(r._pool)
+    assert pools[0] is not None and pools[0] is pools[1] is pools[2]
+    threads = list(pools[0]._threads)
+    assert threads
+    r.close()
+    assert r._pool is None
+    for t in threads:
+        t.join(timeout=10)
+    assert not any(t.is_alive() for t in threads)
+
+
+def test_process_pool_names_an_unpicklable_predicate(spark, tmp_path):
+    """A predicate cloudpickle cannot serialize fails on the process
+    pool at the first iteration, with a TypeError naming it."""
+    import threading
+
+    from petastorm_spark.predicates import in_lambda
+
+    url = str(tmp_path / "procds")
+    _write_simple(spark, url, n=30, parts=3)
+    lock = threading.Lock()
+
+    def keep(cols):
+        with lock:
+            return np.array([True] * len(cols["id"]))
+
+    pred = in_lambda(["id"], keep)
+    with make_reader(
+        url, spark=spark, reader_pool_type="process", workers_count=2,
+        predicate=pred,
+    ) as r:
+        with pytest.raises(TypeError, match="predicate") as info:
+            next(iter(r))
+        assert repr(pred) in str(info.value)
+        assert r._pool is None
+    # the same predicate runs on the thread pool, which pickles nothing
+    with make_reader(
+        url, spark=spark, reader_pool_type="thread", workers_count=2,
+        predicate=pred,
+    ) as r:
+        assert sorted(x.id for x in r) == list(range(30))
 
 
 # ---------------------------------------------------------------------------
@@ -579,6 +655,38 @@ def test_materialize_writes_petastorm_readable_metadata(spark, tmp_path):
     with make_reader(url, spark=spark) as r:
         got = {x.id: x.vec for x in r}
     np.testing.assert_array_almost_equal(got[3], rows[3]["vec"])
+
+
+def test_compat_metadata_in_a_directory_named_with_hash(tmp_path):
+    """A bare local path is a path, not a URL: a ``#`` in a directory
+    name must not cut it short, so the compat footer is written into
+    the dataset root and read back from there."""
+    from petastorm_spark.etl.petastorm_compat import (
+        load_petastorm_metadata,
+        write_petastorm_compat_metadata,
+    )
+
+    schema = Unischema(
+        "HashSchema",
+        [
+            UnischemaField("id", np.int32, (), ScalarCodec(IntegerType()), False),
+            UnischemaField("vec", np.float32, (4,), NdarrayCodec(), False),
+        ],
+    )
+    root = tmp_path / "run#3" / "ds"
+    root.mkdir(parents=True)
+    pq.write_table(
+        pa.table({"id": pa.array([1, 2], pa.int32()),
+                  "vec": pa.array([b"x", b"y"], pa.binary())}),
+        str(root / "part-0.parquet"),
+    )
+    assert write_petastorm_compat_metadata(
+        str(root), schema, {"part-0.parquet": 1}
+    )
+    assert sorted(os.listdir(root)) == ["_common_metadata", "part-0.parquet"]
+    back, counts = load_petastorm_metadata(str(root))
+    assert set(back.fields) == {"id", "vec"}
+    assert counts == {"part-0.parquet": 1}
 
 
 def test_materialize_compat_skips_incompatible_codec(spark, tmp_path):

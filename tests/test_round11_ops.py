@@ -265,9 +265,9 @@ def test_webdataset_scheme_translation_and_content_fallback(
     assert len(want) == 16
     # simulate a Hadoop-only scheme: pyarrow resolution fails for the
     # directory, so the reader must take the content-column path
-    from petastorm_spark.etl import petastorm_compat
+    from petastorm_spark import reader
 
-    monkeypatch.setattr(petastorm_compat, "_fs_for", lambda url: None)
+    monkeypatch.setattr(reader, "_resolve_fs", lambda url: None)
     fallback = wds.read_webdataset(spark, out)
     plan = fallback._jdf.queryExecution().toString()
     scans = [ln for ln in plan.splitlines() if "ReadSchema" in ln]

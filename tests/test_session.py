@@ -32,8 +32,9 @@ ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 def test_session_confs_are_runtime_modifiable(spark):
     assert SESSION_CONFS
-    for k in SESSION_CONFS:
+    for k, v in SESSION_CONFS.items():
         assert spark.conf.isModifiable(k), k
+        assert spark.conf.get(k) == v, k
 
 
 def test_driver_memory_is_half_of_physical_capped_at_48g():
