@@ -23,6 +23,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import ArrayType, DoubleType, FloatType
 
+from petastorm_spark.etl.dataset_metadata import row_group_size_scope
+
 _CACHE: list["SparkDatasetConverter"] = []
 
 
@@ -195,16 +197,8 @@ def make_spark_converter(
     path = os.path.join(parent, f"conv_{uuid.uuid4().hex[:12]}")
 
     spark = df.sparkSession
-    hconf = spark.sparkContext._jsc.hadoopConfiguration()
-    old = hconf.get("parquet.block.size")
-    hconf.setInt("parquet.block.size", row_group_size_mb * 1024 * 1024)
-    try:
+    with row_group_size_scope(spark, row_group_size_mb):
         prepared.write.option("compression", compression_codec).parquet(path)
-    finally:
-        if old is None:
-            hconf.unset("parquet.block.size")
-        else:
-            hconf.set("parquet.block.size", old)
 
     num_rows = spark.read.parquet(path).count()
     conv = SparkDatasetConverter(path, num_rows, prepared)

@@ -1,5 +1,5 @@
-"""Retrofit the petastorm_spark JSON sidecar onto an existing parquet
-store (parity: petastorm/etl/petastorm_generate_metadata.py:47-111, S10).
+"""Retrofit dataset metadata onto an existing parquet store (parity:
+petastorm/etl/petastorm_generate_metadata.py:47-111, S10).
 
     python -m petastorm_spark.etl.generate_metadata DATASET_URL
 """
@@ -10,35 +10,25 @@ import argparse
 
 from pyspark.sql import SparkSession
 
-from petastorm_spark.etl.dataset_metadata import read_sidecar, write_sidecar
+from petastorm_spark.etl.dataset_metadata import load_unischema, write_dataset_metadata
 from petastorm_spark.unischema import Unischema
 
 
 def generate_metadata(
     spark: SparkSession, dataset_url: str, unischema: Unischema | None = None
 ) -> Unischema:
-    """Write (or refresh) the sidecar. Without an explicit Unischema the
-    schema is inferred from the store (keeping any tensor fields from a
-    pre-existing sidecar, mirroring the reference's use_schema_from_dataset
-    path)."""
+    """Write (or refresh) the dataset's metadata with the same writer as
+    ``materialize_dataset``: fresh row-group counts, the JSON sidecar and
+    the petastorm-compat ``_common_metadata`` footer. Without an
+    explicit Unischema the stored one is kept (sidecar, else a reference
+    ``_common_metadata``, so tensor codecs survive), else one is
+    inferred from the store — the reference's use_schema_from_dataset
+    path."""
     if unischema is None:
-        existing = read_sidecar(spark, dataset_url)
-        if existing is not None:
-            unischema = Unischema.from_json(existing["unischema"])
-        else:
-            df = spark.read.parquet(dataset_url)
-            unischema = Unischema.from_spark_schema(df.schema)
-    from petastorm_spark.etl.dataset_metadata import collect_rowgroup_counts
-
-    write_sidecar(
-        spark,
-        dataset_url,
-        {
-            "unischema": unischema.to_json(),
-            "row_group_size_mb": None,
-            "row_groups": collect_rowgroup_counts(spark, dataset_url),
-        },
-    )
+        unischema = load_unischema(spark, dataset_url) or Unischema.from_spark_schema(
+            spark.read.parquet(dataset_url).schema
+        )
+    write_dataset_metadata(spark, dataset_url, unischema)
     return unischema
 
 

@@ -74,7 +74,13 @@ class PetastormNpzCodec(DataframeColumnCodec):
 _CODEC_CLASSES[PetastormNpzCodec.name] = PetastormNpzCodec
 
 
-# ---- shim classes the restricted unpickler maps reference names to ----------
+# ---- the reference's schema and codec classes, as local shims --------------
+#
+# One set serves both directions. The restricted unpickler maps the
+# reference names to them; the writer pickles instances of them, and
+# because each carries its reference __module__/__qualname__, the real
+# petastorm on the reading side resolves the same names to its own
+# classes. No reference code is imported or executed here.
 
 
 class _RefUnischemaField(NamedTuple):
@@ -113,6 +119,9 @@ _SHIMS = {
     ("petastorm.codecs", "CompressedNdarrayCodec"): _RefCompressedNdarrayCodec,
     ("petastorm.codecs", "CompressedImageCodec"): _RefCompressedImageCodec,
 }
+for (_mod, _qual), _cls in _SHIMS.items():
+    _cls.__module__ = _mod
+    _cls.__qualname__ = _cls.__name__ = _qual
 
 # Datasets written before the reference's package rename pickle the same
 # classes under two historical package roots (reference etl/legacy.py:
@@ -277,15 +286,12 @@ def load_petastorm_metadata(
 # ---------------------------------------------------------------------------
 # Write-side interop: store the reference's pickled-Unischema key so that
 # ORIGINAL petastorm readers can consume datasets this engine writes
-# (format: /root/reference/petastorm/etl/dataset_metadata.py:194-241).
+# (format: petastorm/etl/dataset_metadata.py:194-241).
 #
-# The pickle must reference class paths petastorm.unischema.Unischema /
-# petastorm.codecs.* that do not exist in this environment. Writer shim
-# classes carry those __module__/__qualname__ identities, and matching
-# fake modules are injected into sys.modules only for the duration of
-# the dump (pickle verifies global identity at save time); the real
-# petastorm on the READING side resolves the same names to its own
-# classes. No reference code is imported or executed here.
+# The pickle names petastorm.unischema.Unischema / petastorm.codecs.*,
+# modules that do not exist in this environment: matching fake modules
+# holding the shims above are injected into sys.modules only for the
+# duration of the dump (pickle verifies global identity at save time).
 # ---------------------------------------------------------------------------
 
 import sys
@@ -295,54 +301,12 @@ from collections import OrderedDict
 from contextlib import contextmanager
 
 
-class _WUnischemaField(NamedTuple):
-    name: str
-    numpy_dtype: object
-    shape: object
-    codec: object = None
-    nullable: object = False
-
-
-class _WUnischema:
-    pass
-
-
-class _WScalarCodec:
-    pass
-
-
-class _WNdarrayCodec:
-    pass
-
-
-class _WCompressedNdarrayCodec:
-    pass
-
-
-class _WCompressedImageCodec:
-    pass
-
-
-_WRITER_NAMES: dict[type, tuple[str, str]] = {
-    _WUnischema: ("petastorm.unischema", "Unischema"),
-    _WUnischemaField: ("petastorm.unischema", "UnischemaField"),
-    _WScalarCodec: ("petastorm.codecs", "ScalarCodec"),
-    _WNdarrayCodec: ("petastorm.codecs", "NdarrayCodec"),
-    _WCompressedNdarrayCodec: ("petastorm.codecs", "CompressedNdarrayCodec"),
-    _WCompressedImageCodec: ("petastorm.codecs", "CompressedImageCodec"),
-}
-for _cls, (_mod, _qual) in _WRITER_NAMES.items():
-    _cls.__module__ = _mod
-    _cls.__qualname__ = _qual
-    _cls.__name__ = _qual
-
-
 @contextmanager
 def _fake_petastorm_modules():
     mods: dict[str, types.ModuleType] = {}
-    for cls, (mod_name, qual) in _WRITER_NAMES.items():
-        mod = mods.setdefault(mod_name, types.ModuleType(mod_name))
-        setattr(mod, qual, cls)
+    for cls in set(_SHIMS.values()):
+        mod = mods.setdefault(cls.__module__, types.ModuleType(cls.__module__))
+        setattr(mod, cls.__qualname__, cls)
     pkg = types.ModuleType("petastorm")
     pkg.unischema = mods["petastorm.unischema"]
     pkg.codecs = mods["petastorm.codecs"]
@@ -367,15 +331,15 @@ def _codec_to_ref(codec):
     if codec is None:
         return None
     if type(codec) is ScalarCodec:
-        c = _WScalarCodec()
+        c = _RefScalarCodec()
         c.__dict__["_spark_type"] = codec.spark_dtype()
         return c
     if type(codec) is NdarrayCodec:
-        return _WNdarrayCodec()  # both sides: plain np.save bytes
+        return _RefNdarrayCodec()  # both sides: plain np.save bytes
     if type(codec) in (PetastormNpzCodec, CompressedNdarrayCodec):
-        return _WCompressedNdarrayCodec()  # npz container, byte-compatible
+        return _RefCompressedNdarrayCodec()  # npz container, byte-compatible
     if type(codec) is CompressedImageCodec:
-        c = _WCompressedImageCodec()
+        c = _RefCompressedImageCodec()
         c.__dict__["_image_codec"] = "." + codec.to_json()["format"]
         c.__dict__["_quality"] = codec.to_json()["quality"]
         return c
@@ -394,14 +358,14 @@ def unischema_to_pickle(schema: Unischema) -> bytes:
     dataset-toolkit.unischema.v1 value)."""
     fields = OrderedDict()
     for name, f in schema.fields.items():
-        fields[name] = _WUnischemaField(
+        fields[name] = _RefUnischemaField(
             f.name,
             f.numpy_dtype,
             tuple(f.shape) if f.shape is not None else None,
             _codec_to_ref(f.codec),
             bool(f.nullable),
         )
-    ref = _WUnischema()
+    ref = _RefUnischema()
     ref.__dict__["_name"] = schema._name
     ref.__dict__["_fields"] = fields
     # the reference also exposes each field as an instance attribute

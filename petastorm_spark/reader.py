@@ -21,16 +21,18 @@ with Spark doing the heavy lifting):
      (D1), DNF-filter row-group pruning from parquet statistics, then
      per piece the one piece function :func:`_read_piece`, and rows or
      column-vector batches are yielded as namedtuples. Row-group counts
-     come from the metadata sidecar when present, so no footer is opened
-     up front.
+     come from the stored dataset metadata when present, so no footer is
+     opened up front.
 
 One URL is a list of one: ``Reader._open`` reads every URL list the
 same way — one Spark parquet read (a ``CANNOT_MERGE_SCHEMAS`` refusal
 under ``schema_evolution`` retries under the widened union schema), or,
 when the JVM has no filesystem for the scheme, a schema from pyarrow
-footers. The sidecar and petastorm-compat metadata belong to a single
-dataset root and are read only for one URL; the per-URL schema agreement
-check runs only for two or more.
+footers. The stored Unischema and row-group counts belong to a single
+dataset root and are read only for one URL, through the one metadata
+chain of ``etl/dataset_metadata.py`` (sidecar, else the reference's
+``_common_metadata``) that every ETL tool shares; the per-URL schema
+agreement check runs only for two or more.
 
 Every reader pool runs the same piece function (reference
 py_dict_reader_worker.py:124-232, one ``process`` for all pools), which
@@ -55,7 +57,6 @@ from __future__ import annotations
 
 import dataclasses
 import itertools
-import json
 import multiprocessing
 import os
 import pickle
@@ -84,7 +85,7 @@ from petastorm_spark._piece_worker import (
     rg_may_match,
     scalar_frame,
 )
-from petastorm_spark.etl.dataset_metadata import SIDECAR_NAME, read_sidecar
+from petastorm_spark.etl.dataset_metadata import load_dataset_metadata
 from petastorm_spark.predicates import PredicateBase
 from petastorm_spark.session import get_spark
 from petastorm_spark.transform import (
@@ -112,18 +113,6 @@ def _resolve_fs(url: str) -> tuple[pafs.FileSystem, str] | None:
         return pafs.FileSystem.from_uri(url)
     except Exception:
         return None
-
-
-def _sidecar_via_pyarrow(pfs: pafs.FileSystem, root: str) -> dict | None:
-    """The JSON sidecar payload read through a pyarrow filesystem, or
-    None when absent — the retry path that keeps a working JVM plan
-    tier when only the sidecar read hiccups, and the primary path for
-    JVM-unreachable schemes."""
-    side = root.rstrip("/") + "/" + SIDECAR_NAME
-    if pfs.get_file_info([side])[0].type != pafs.FileType.File:
-        return None
-    with pfs.open_input_file(side) as fh:
-        return json.loads(fh.read().decode())
 
 
 def _list_parquet_files_fs(fs: pafs.FileSystem, root: str) -> list[str]:
@@ -573,8 +562,8 @@ class Reader:
 
         # ---- plan tier -----------------------------------------------------
         # pyarrow (filesystem, root) per URL, None where pyarrow cannot
-        # reach the scheme: the footer fallback, the sidecar retry and
-        # the direct iteration tier all use it
+        # reach the scheme: the footer fallback and the direct iteration
+        # tier use it
         fs_pairs = [_resolve_fs(u) for u in urls] if urls is not None else None
         stored = struct = self._sidecar_counts = None
         if dataframe is not None:
@@ -585,8 +574,8 @@ class Reader:
                 # the sidecar and the petastorm-compat metadata describe
                 # ONE dataset root: a merged multi-URL dataset never has
                 # them (plain-store path)
-                stored, self._sidecar_counts = self._dataset_metadata(
-                    urls[0], fs_pairs[0], df is not None
+                stored, self._sidecar_counts = load_dataset_metadata(
+                    self._spark, urls[0]
                 )
 
         full_schema = stored or Unischema.from_spark_schema(
@@ -911,30 +900,6 @@ class Reader:
                     structs.append(from_arrow_schema(pq.read_schema(fh)))
             _require_same_schema(urls, structs)
             return None, structs[0]
-
-    def _dataset_metadata(self, url: str, fs_pair, jvm: bool) -> tuple:
-        """(stored Unischema, per-file row-group counts) of ONE dataset
-        root: the metadata sidecar, else a dataset written by original
-        petastorm (pickled Unischema + rowgroup counts in
-        _common_metadata, so tensor columns decode), else (None, None).
-        A sidecar read failing through the JVM is retried through
-        pyarrow, and a doubly-failing sidecar degrades to absent: it
-        never discards the working plan tier or aborts the reader."""
-        payload = None
-        try:
-            payload = read_sidecar(self._spark, url) if jvm else None
-        except Exception:
-            jvm = False
-        if not jvm:
-            try:
-                payload = _sidecar_via_pyarrow(*fs_pair) if fs_pair else None
-            except Exception:
-                payload = None
-        if payload is not None:
-            return Unischema.from_json(payload["unischema"]), payload.get("row_groups")
-        from petastorm_spark.etl.petastorm_compat import load_petastorm_metadata
-
-        return load_petastorm_metadata(url)
 
     # ---- iteration tier ----------------------------------------------------
 

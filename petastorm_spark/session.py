@@ -19,13 +19,16 @@ falls back, silently, to a normal start.
 
 from __future__ import annotations
 
+import atexit
 import contextlib
 import hashlib
 import os
 import shutil
 import subprocess
 import sys
+import tempfile
 import time
+import zipfile
 
 from pyspark.sql import SparkSession
 
@@ -330,7 +333,8 @@ def ensure_session_confs(spark: SparkSession) -> SparkSession:
     must hold at execution time, which may be long after plan
     construction) — documented side effect, set only when differing to
     avoid repeated JVM round trips, and never for a conf the session
-    reports as not modifiable.
+    reports as not modifiable. A session whose Python workers cannot
+    import the package also gets it shipped (:func:`_ship_package`).
     """
     for k, v in SESSION_CONFS.items():
         try:
@@ -339,7 +343,38 @@ def ensure_session_confs(spark: SparkSession) -> SparkSession:
             current = None
         if current != v and spark.conf.isModifiable(k):
             spark.conf.set(k, v)
+    _ship_package(spark)
     return spark
+
+
+_PACKAGE_ZIP = "petastorm_spark.zip"
+
+
+def _ship_package(spark: SparkSession) -> None:
+    """Make the package importable by the Python workers of a session
+    get_spark did not build. Its ``spark.executorEnv.PYTHONPATH`` is a
+    static conf, so a bare session's workers find the package only from
+    the driver's working directory; this ships a zip of it with
+    ``addPyFile`` instead, which the workers put on ``sys.path``. Once
+    per SparkContext: both checks read Python-side state of the
+    context, so later calls make no JVM round trip."""
+    sc = getattr(spark, "sparkContext", None)
+    if (
+        sc is None
+        or _PACKAGE_ZIP in sc._python_includes
+        or _PACKAGE_PARENT in sc.environment.get("PYTHONPATH", "").split(os.pathsep)
+    ):
+        return
+    out = tempfile.mkdtemp(prefix="petastorm_spark_py_")
+    atexit.register(shutil.rmtree, out, True)
+    path = os.path.join(out, _PACKAGE_ZIP)
+    with zipfile.ZipFile(path, "w", zipfile.ZIP_DEFLATED) as zf:
+        for root, dirs, files in os.walk(os.path.join(_PACKAGE_PARENT, "petastorm_spark")):
+            dirs[:] = [d for d in dirs if d != "__pycache__"]
+            for name in files:
+                full = os.path.join(root, name)
+                zf.write(full, os.path.relpath(full, _PACKAGE_PARENT))
+    sc.addPyFile(path)
 
 
 # Plans persist()ed on behalf of a LAZILY returned result (the operator

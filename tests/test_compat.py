@@ -319,3 +319,99 @@ def test_npz_codec_is_reference_byte_compatible(spark, tmp_path):
     for i, payload in zip(ids, table.column("vec").to_pylist()):
         arr = np.load(io.BytesIO(payload), allow_pickle=False)["arr"]
         np.testing.assert_array_equal(arr, np.arange(3, dtype=np.float32) * i)
+
+
+# ---- one metadata chain for the Reader and every ETL tool ------------------
+
+
+def test_reference_footer_only_dataset_keeps_codecs_through_etl_tools(spark, tmp_path):
+    """A dataset whose only metadata is the reference ``_common_metadata``
+    footer (a ``materialize_dataset`` write with the JSON sidecar
+    deleted): ``load_unischema``, ``dataset_as_rdd``, and ``make_reader``
+    over the outputs of ``copy_dataset``, ``compact_dataset`` and an
+    in-place ``generate_metadata`` keep the ``NdarrayCodec`` and return
+    arrays. The retrofit also rewrites the footer's row-group counts,
+    which a later append left stale."""
+    import json
+    import os
+
+    import numpy as np
+    import pyarrow.parquet as pq
+    from pyspark.sql.types import LongType
+
+    from petastorm_spark.codecs import NdarrayCodec, ScalarCodec
+    from petastorm_spark.etl.compact import compact_dataset
+    from petastorm_spark.etl.dataset_metadata import (
+        SIDECAR_NAME,
+        load_unischema,
+        materialize_dataset,
+    )
+    from petastorm_spark.etl.generate_metadata import generate_metadata
+    from petastorm_spark.etl.petastorm_compat import (
+        ROW_GROUPS_KEY,
+        load_petastorm_metadata,
+    )
+    from petastorm_spark.spark_utils import dataset_as_rdd
+    from petastorm_spark.tools.copy_dataset import copy_dataset
+    from petastorm_spark.unischema import Unischema, UnischemaField, dict_to_spark_row
+
+    schema = Unischema(
+        "FooterOnly",
+        [
+            UnischemaField("id", np.int64, (), ScalarCodec(LongType()), False),
+            UnischemaField("vec", np.float32, (2, 3), NdarrayCodec(), False),
+        ],
+    )
+
+    def vec(i):
+        return np.arange(6, dtype=np.float32).reshape(2, 3) + i
+
+    def frame(ids):
+        return spark.createDataFrame(
+            [dict_to_spark_row(schema, {"id": i, "vec": vec(i)}) for i in ids],
+            schema.as_spark_schema(),
+        ).coalesce(1)
+
+    def assert_arrays(url, n):
+        with make_reader(url, spark=spark) as r:
+            rows = sorted(r, key=lambda x: x.id)
+        assert [row.id for row in rows] == list(range(n))
+        for row in rows:
+            assert isinstance(row.vec, np.ndarray), (url, type(row.vec))
+            np.testing.assert_array_equal(row.vec, vec(row.id))
+
+    src = str(tmp_path / "src")
+    with materialize_dataset(spark, src, schema):
+        frame(range(10)).write.mode("overwrite").parquet(src)
+    os.remove(os.path.join(src, SIDECAR_NAME))
+    assert_arrays(src, 10)
+
+    assert isinstance(load_unischema(spark, src).fields["vec"].codec, NdarrayCodec)
+    got = sorted(dataset_as_rdd(src, spark).collect(), key=lambda t: t.id)
+    assert [type(t.vec) for t in got] == [np.ndarray] * 10
+    np.testing.assert_array_equal(got[3].vec, vec(3))
+
+    copied = str(tmp_path / "copied")
+    copy_dataset(spark, src, copied)
+    assert_arrays(copied, 10)
+    compacted = str(tmp_path / "compacted")
+    compact_dataset(spark, src, compacted)
+    assert_arrays(compacted, 10)
+
+    # an append the footer does not know of, then the retrofit in place
+    frame(range(10, 14)).write.mode("append").parquet(src)
+    generate_metadata(spark, src)
+    assert_arrays(src, 14)
+    footers = {
+        f: pq.ParquetFile(os.path.join(src, f)).num_row_groups
+        for f in os.listdir(src)
+        if f.endswith(".parquet") and not f.startswith(("_", "."))
+    }
+    assert len(footers) == 2
+    meta = pq.read_schema(os.path.join(src, "_common_metadata")).metadata
+    assert json.loads(meta[ROW_GROUPS_KEY]) == footers
+    with open(os.path.join(src, SIDECAR_NAME)) as f:
+        assert json.load(f)["row_groups"] == footers
+    stored, counts = load_petastorm_metadata(src)
+    assert isinstance(stored.fields["vec"].codec, NdarrayCodec)
+    assert counts == footers

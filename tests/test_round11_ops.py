@@ -286,6 +286,7 @@ def test_transient_sidecar_failure_keeps_plan_tier(
     around both reads dropped df to None, and a later Column filter
     failed with a misleading no-filesystem message). The sidecar is
     retried through pyarrow, so sidecar metadata still loads."""
+    import petastorm_spark.etl.dataset_metadata as metadata_mod
     import petastorm_spark.reader as reader_mod
 
     url = f"{sf_dir}/lineitem.parquet"
@@ -293,7 +294,7 @@ def test_transient_sidecar_failure_keeps_plan_tier(
     def boom(*a, **k):
         raise OSError("transient sidecar read failure")
 
-    monkeypatch.setattr(reader_mod, "read_sidecar", boom)
+    monkeypatch.setattr(metadata_mod, "read_sidecar", boom)
     with reader_mod.make_batch_reader(url, spark=spark) as r:
         assert r.dataframe is not None  # plan tier survived
         batch = next(iter(r))
@@ -305,6 +306,7 @@ def test_doubly_failing_sidecar_degrades_to_none(spark, sf_dir, monkeypatch):
     itself raises (fs error after resolution succeeds), Reader
     construction must still succeed with payload=None — a dataset
     whose parquet read works is never aborted by sidecar trouble."""
+    import petastorm_spark.etl.dataset_metadata as metadata_mod
     import petastorm_spark.reader as reader_mod
 
     url = f"{sf_dir}/lineitem.parquet"
@@ -312,8 +314,8 @@ def test_doubly_failing_sidecar_degrades_to_none(spark, sf_dir, monkeypatch):
     def boom(*a, **k):
         raise OSError("sidecar read failure")
 
-    monkeypatch.setattr(reader_mod, "read_sidecar", boom)
-    monkeypatch.setattr(reader_mod, "_sidecar_via_pyarrow", boom)
+    monkeypatch.setattr(metadata_mod, "read_sidecar", boom)
+    monkeypatch.setattr(metadata_mod, "_sidecar_via_pyarrow", boom)
     with reader_mod.make_batch_reader(url, spark=spark) as r:
         assert r.dataframe is not None  # plan tier survived
         batch = next(iter(r))

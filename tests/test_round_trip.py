@@ -200,3 +200,43 @@ def test_reader_dataframe_plan_exposed(spark, dataset):
     url, _ = dataset
     with make_reader(url, spark=spark, schema_fields=["id"]) as reader:
         assert reader.dataframe.columns == ["id"]
+
+
+@pytest.mark.parametrize("before", [None, "1048576"])
+def test_materialize_dataset_restores_row_group_size(spark, tmp_path, before):
+    """``materialize_dataset`` sets ``parquet.block.size`` for its block
+    only: after a normal exit and after an exception inside it, the
+    session's Hadoop conf holds the value from before (an unset value
+    stays unset)."""
+    from pyspark.sql.types import LongType
+
+    key = "parquet.block.size"
+    hconf = spark.sparkContext._jsc.hadoopConfiguration()
+    saved = hconf.get(key)
+    schema = Unischema(
+        "Ids", [UnischemaField("id", np.int64, (), ScalarCodec(LongType()), False)]
+    )
+    try:
+        if before is None:
+            hconf.unset(key)
+        else:
+            hconf.set(key, before)
+        url = str(tmp_path / "ok")
+        with materialize_dataset(spark, url, schema, row_group_size_mb=2):
+            assert hconf.get(key) == str(2 * 1024 * 1024)
+            spark.range(10).write.parquet(url)
+        assert hconf.get(key) == before
+        assert load_unischema(spark, url).field_names() == ["id"]
+
+        with pytest.raises(RuntimeError, match="inside the write"):
+            with materialize_dataset(
+                spark, str(tmp_path / "failed"), schema, row_group_size_mb=3
+            ):
+                assert hconf.get(key) == str(3 * 1024 * 1024)
+                raise RuntimeError("inside the write")
+        assert hconf.get(key) == before
+    finally:
+        if saved is None:
+            hconf.unset(key)
+        else:
+            hconf.set(key, saved)

@@ -198,6 +198,54 @@ def test_workers_import_package_from_any_cwd(tmp_path):
     assert pandas_sizes == rdd_sizes
 
 
+def test_bare_session_workers_import_package_from_any_cwd(tmp_path):
+    """A bare ``SparkSession.builder`` session (no get_spark confs)
+    started outside the repository with ``PYTHONPATH`` unset: after
+    ``ensure_session_confs``, a ``mapInPandas`` whose function imports
+    the package runs, because the package is shipped to the session's
+    workers. A second call ships nothing more."""
+    script = textwrap.dedent(
+        f"""
+        import sys
+
+        sys.path.insert(0, {ROOT!r})
+        import pandas as pd
+        from pyspark.sql import SparkSession
+
+        from petastorm_spark.session import ensure_session_confs
+
+        spark = SparkSession.builder.master("local[2]").appName("bare").getOrCreate()
+        ensure_session_confs(spark)
+        ensure_session_confs(spark)
+        print("INCLUDES", len(spark.sparkContext._python_includes))
+
+        def kernel(batches):
+            import petastorm_spark.codecs as codecs
+
+            for pdf in batches:
+                yield pd.DataFrame({{"n": [len(codecs.__name__)] * len(pdf)}})
+
+        rows = spark.range(4).repartition(2).mapInPandas(kernel, "n long").collect()
+        print("ROWS", sorted(r.n for r in rows))
+        spark.stop()
+        """
+    )
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    proc = subprocess.run(
+        [sys.executable, "-c", script],
+        cwd=str(tmp_path),
+        env=env,
+        capture_output=True,
+        text=True,
+        timeout=600,
+    )
+    assert "No module named 'petastorm_spark'" not in proc.stderr, proc.stderr[-3000:]
+    assert proc.returncode == 0, proc.stderr[-3000:]
+    assert "INCLUDES 1" in proc.stdout.splitlines(), proc.stdout[-2000:]
+    want = [len("petastorm_spark.codecs")] * 4
+    assert f"ROWS {want}" in proc.stdout.splitlines(), proc.stdout[-2000:]
+
+
 # ---- class-data-sharing archive of the driver JVM --------------------------
 
 
