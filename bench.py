@@ -22,7 +22,7 @@ import traceback
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from petastorm_spark.queries import QUERIES  # noqa: E402
-from petastorm_spark.session import get_spark  # noqa: E402
+from petastorm_spark.session import get_spark, release_persisted  # noqa: E402
 
 # Diverse headline set: scan+agg, join-heavy, windowing, distribution,
 # dedup/text/similarity. Driver compares the total against BASELINE.
@@ -426,10 +426,14 @@ def main() -> None:
     # flagged ±20-36% swings on queries whose code never changed.
     # Median is reported alongside min (r3 ADVICE): min is the
     # continuity metric vs r3, median shows what a typical run costs.
-    # The cache is cleared before EVERY timed run: operators that
-    # persist intermediates (near_dup_pairs' shingle sets) would
-    # otherwise hand runs 2..N a warm cache and min-of-N would report
-    # the zero-scan rerun, not the operator's real single-pass cost.
+    # Materializations are freed before EVERY timed run:
+    # release_persisted() frees every persist and local checkpoint the
+    # package made (near_dup_pairs' shingle sets, kcore's round
+    # tables), and clearCache() drops any other cached plan. Without it
+    # runs 2..N would get a warm cache, so min-of-N would report the
+    # zero-scan rerun rather than the operator's real single-pass
+    # cost, and checkpoint blocks of earlier queries would stay
+    # resident through later ones.
     n_runs = int(os.environ.get("SPARK_GRAFT_BENCH_RUNS", "3"))
     # With ~95 queries in ONE JVM session, garbage from earlier queries
     # (broadcast blocks, codegen classes, shuffle state) piles up and
@@ -483,6 +487,7 @@ def main() -> None:
         run_counts = []
         try:
             for r in range(n_runs):
+                release_persisted()
                 spark.catalog.clearCache()
                 if gc_between:
                     spark.sparkContext._jvm.System.gc()
@@ -514,7 +519,7 @@ def main() -> None:
         json.dumps(
             {
                 "reader_protocol": f"{N_WARMUP_READS} warmup + {N_MEASURED_READS} measured row reads, hello_world-shaped dataset (BASELINE.md protocol, longer measurement window). reader_samples_per_sec = best of 5 windows with BOTH collectors (CPython gc + JVM System.gc) drained before each window so due collections land outside the timed region; reader_window_sps lists every window's rate and reader_spread_pct = (slowest-fastest)/fastest — the r8 +-25%% swing diagnosed as mid-window GC, now measured per run; a window slower than 2x the median is a stall, not a decode rate, and is rerun in place (<=3 reruns, count in reader_window_reruns; r11's spread_pct=184 was one such window). reader_samples_per_sec decodes REAL PNG byte streams via the pure-python codec (r3+ protocol; the BASELINE.md comparison row); reader_samples_per_sec_raw0 reads the np.save RAW0 container r1/r2 measured, for cross-round trend continuity. reader_rss_mb / reader_cpu_pct: process-tree (python + driver JVM + pool workers) RSS after / CPU%% over the measured window via procfs — the reference benchmark's psutil memory_info/cpu columns (BASELINE.md rows 2-3/5-6). reader_rss_main_mb is the benchmark process alone — the like-for-like column against the reference's 217 MB single-process psutil figure; reader_rss_iter_mb additionally includes Spark's resident pyspark.daemon workers (tree minus java), and reader_rss_jvm_mb is the local[32] driver JVM, a fixed harness cost",
-                "query_protocol": f"one untimed warmup run per query at sf0.001 (JIT/codegen), then {n_runs} timed runs at target sf with spark.catalog.clearCache() AND a forced JVM GC before each run (r12: GC only between queries left prior-session debris collecting inside checkpoint-heavy queries' timed runs — bitext read 8.98s in r11 vs 3.7s fresh); 'queries' is min-of-{n_runs} (continuity with r3), 'queries_median' the median, 'queries_max' the max. r1/r2 were single-run — cross-round comparison to them overstates speedups. r17 adds 'queries_structure' {{name: [jobs, stages, tasks]}} counted via the status tracker under a per-run job group on the min-wall run, OUTSIDE the timed region (timing protocol unchanged): walls swing 2-10x inside this box's stall windows while structural counts stay fixed, so max>>min with unchanged counts reads as machine noise, a count change as a plan change",
+                "query_protocol": f"one untimed warmup run per query at sf0.001 (JIT/codegen), then {n_runs} timed runs at target sf with session.release_persisted() (every persist and local checkpoint the package made), spark.catalog.clearCache() AND a forced JVM GC before each run (r12: GC only between queries left prior-session debris collecting inside checkpoint-heavy queries' timed runs — bitext read 8.98s in r11 vs 3.7s fresh); 'queries' is min-of-{n_runs} (continuity with r3), 'queries_median' the median, 'queries_max' the max. r1/r2 were single-run — cross-round comparison to them overstates speedups. r17 adds 'queries_structure' {{name: [jobs, stages, tasks]}} counted via the status tracker under a per-run job group on the min-wall run, OUTSIDE the timed region (timing protocol unchanged): walls swing 2-10x inside this box's stall windows while structural counts stay fixed, so max>>min with unchanged counts reads as machine noise, a count change as a plan change",
                 "queries_structure": structure,
                 "query_errors": errors,
                 "queries_max": maxes,

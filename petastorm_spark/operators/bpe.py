@@ -21,8 +21,10 @@ Each round is:
 
 Learning M merges therefore costs O(M / merges_per_round) Spark job
 rounds, not M sequential driver round-trips (the round-6 scale
-ceiling). Driver state is O(num_merges); per-round lineage is cut by
-persist/unpersist so the plan never deepens past one round's folds.
+ceiling). Driver state is O(num_merges); each round's vocabulary is
+persisted through ``session.materialize`` and the previous one
+released, so the plan never deepens past one round's folds. The
+returned vocabulary stays registered until ``release_persisted()``.
 """
 
 from __future__ import annotations
@@ -31,6 +33,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from petastorm_spark.operators.text import tokens
+from petastorm_spark.session import arrow_local_df, materialize, release
 
 
 def merge_pair_expr(syms, a: str, b: str) -> Column:
@@ -193,18 +196,14 @@ def bpe_learn(
     difference between 100k merges being 3 days of job latency and an
     afternoon — at the cost of the batched-greedy order above.
     """
-    from pyspark import StorageLevel
-
-    vocab = word_vocab(df, text_col).persist(StorageLevel.MEMORY_AND_DISK)
+    vocab = materialize(word_vocab(df, text_col))
     n_vocab = vocab.count()  # materialize the collapsed word table once
     if n_vocab <= local_threshold:
         pdf = vocab.select("word", "count").toPandas()
-        vocab.unpersist()
+        release(vocab)
         words = dict(zip(pdf["word"].tolist(), (int(c) for c in pdf["count"])))
         merges, syms = _bpe_local(words, num_merges, min_freq)
         spark = df.sparkSession
-        from petastorm_spark.session import arrow_local_df
-
         ws = list(syms)
         out = arrow_local_df(
             spark,
@@ -245,15 +244,13 @@ def bpe_learn(
             syms_col: Column = F.col("syms")
             for a, b, _ in batch:
                 syms_col = merge_pair_expr(syms_col, a, b)
-            new_vocab = vocab.withColumn("syms", syms_col).persist(
-                StorageLevel.MEMORY_AND_DISK
-            )
+            new_vocab = materialize(vocab.withColumn("syms", syms_col))
             new_vocab.count()  # cut lineage before dropping the old cache
-            vocab.unpersist()
+            release(vocab)
             vocab = new_vocab
         return merges, vocab
     except Exception:
-        vocab.unpersist()
+        release(vocab)
         raise
 
 

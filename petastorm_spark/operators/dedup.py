@@ -27,6 +27,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from petastorm_spark.operators.text import tokens
+from petastorm_spark.session import arrow_local_df, materialize, release
 
 # 60-bit integer from an md5 prefix, seedable. Matches the oracle SQL
 # fragment hash60_sql() below.
@@ -543,10 +544,6 @@ def incremental_near_dup(
     corpus buckets). Candidate multiplicity is bounded by ``bands``,
     and the estimate is two id-keyed joins against the signature
     tables — no text is touched."""
-    from pyspark import StorageLevel
-
-    from petastorm_spark.session import register_persisted
-
     new_buckets, new_sigs = lsh_index_build(
         new_df, text_col, id_col, num_hashes, bands, shingle_n, n_shards
     )
@@ -556,14 +553,12 @@ def incremental_near_dup(
     # est_jaccard join reads them directly. Without the cut the batch
     # was tokenized + shingled + min-aggregated once per consumer
     # (batch-sized, but the tokenize pass is the expensive part of the
-    # probe). Registered for release by the caller/bench.
-    new_sigs = register_persisted(
-        new_sigs.persist(StorageLevel.MEMORY_AND_DISK)
-    )
+    # probe). Both caches back the lazy result.
+    new_sigs = materialize(new_sigs)
     if prune_shards:
         # the shard collect below materializes this batch-sized cache,
         # so the candidate join does not re-sign the batch
-        new_buckets = new_buckets.persist(StorageLevel.MEMORY_AND_DISK)
+        new_buckets = materialize(new_buckets)
         shards = sorted(
             r.bh_shard
             for r in new_buckets.select("bh_shard").distinct().collect()
@@ -989,11 +984,7 @@ def near_dup_pairs(
     previous double scan; at corpus scale a second full text pass
     costs more than materializing the shingle sets.
     """
-    from pyspark import StorageLevel
-
-    sets_df = shingle_sets(df, text_col, id_col, shingle_n).persist(
-        StorageLevel.MEMORY_AND_DISK
-    )
+    sets_df = materialize(shingle_sets(df, text_col, id_col, shingle_n))
     sig = minhash_from_sets(sets_df, id_col, num_hashes)
     cand = lsh_candidate_pairs(sig, id_col, num_hashes, bands)
     a = sets_df.select(F.col(id_col).alias("id_a"), F.col("sh_set").alias("sa"))
@@ -1032,11 +1023,7 @@ def containment_pairs(
     persisted once, signatures derived from them, verify joined by id
     over candidate pairs only.
     """
-    from pyspark import StorageLevel
-
-    sets_df = shingle_sets(df, text_col, id_col, shingle_n).persist(
-        StorageLevel.MEMORY_AND_DISK
-    )
+    sets_df = materialize(shingle_sets(df, text_col, id_col, shingle_n))
     sig = minhash_from_sets(sets_df, id_col, num_hashes)
     cand = lsh_candidate_pairs(sig, id_col, num_hashes, bands)
     a = sets_df.select(F.col(id_col).alias("id_a"), F.col("sh_set").alias("sa"))
@@ -1154,7 +1141,6 @@ def jaccard_pairs(
       would shorten the prefix and silently DROP true pairs.
 
     Set ``postings_budget_per_core=0`` to force the prefix plan."""
-    from pyspark import StorageLevel
     from pyspark.sql.window import Window
 
     out_cols = ["id_a", "id_b", F.round("_j", 4).alias("jaccard")]
@@ -1201,9 +1187,7 @@ def jaccard_pairs(
                 .where(F.col("_j") >= threshold)
                 .select(*out_cols)
             )
-    sets_df = shingle_sets(df, text_col, id_col, shingle_n).persist(
-        StorageLevel.MEMORY_AND_DISK
-    )
+    sets_df = materialize(shingle_sets(df, text_col, id_col, shingle_n))
     sh = sets_df.select(
         F.col(id_col),
         F.size("sh_set").alias("_n"),
@@ -1271,15 +1255,15 @@ def edit_distance_pairs(
     """
     if max_dist < 0:
         raise ValueError(f"max_dist must be >= 0, got {max_dist}")
-    from pyspark import StorageLevel
-
     # persist the signature input: lsh_candidate_pairs self-joins the
     # band table, and without a materialization point Spark evaluates
     # the whole tokenize->shingle->minhash subtree once PER JOIN SIDE
     # (same double-scan near_dup_pairs was flagged for in round 3)
-    sigs = minhash_from_sets(
-        shingle_sets(df, text_col, id_col, shingle_n), id_col, num_hashes
-    ).persist(StorageLevel.MEMORY_AND_DISK)
+    sigs = materialize(
+        minhash_from_sets(
+            shingle_sets(df, text_col, id_col, shingle_n), id_col, num_hashes
+        )
+    )
     cand = lsh_candidate_pairs(sigs, id_col, num_hashes, bands)
     txt = df.select(F.col(id_col), F.col(text_col).alias("_txt"))
     a = txt.select(F.col(id_col).alias("id_a"), F.col("_txt").alias("_ta"))
@@ -1382,8 +1366,6 @@ def _cc_local(spark, rows, id_a: str, id_b: str, id_type: str = "bigint") -> Dat
     sizes: dict = {}
     for lbl in label.values():
         sizes[lbl] = sizes.get(lbl, 0) + 1
-    from petastorm_spark.session import arrow_local_df
-
     nodes = list(label)
     return arrow_local_df(
         spark,
@@ -1456,15 +1438,13 @@ def connected_components(
     Components in MapReduce and Beyond") — the reference engine has no
     clustering step at all.
     """
-    from pyspark import StorageLevel
-
     # Persist the (typically expensive: LSH + verify) upstream pair
     # pipeline ONCE: edges below reference the pair list four times
     # (both union branches, plus both again under nodes' distinct) —
     # without this cache the upstream plan executes four times inside
     # the edge materialization.
-    sym = pairs.select(F.col(id_a).alias("a"), F.col(id_b).alias("b")).persist(
-        StorageLevel.MEMORY_AND_DISK
+    sym = materialize(
+        pairs.select(F.col(id_a).alias("a"), F.col(id_b).alias("b"))
     )
     if local_threshold > 0:
         n_edges = sym.count()  # materializes the upstream cache either way
@@ -1477,7 +1457,7 @@ def connected_components(
                 1,
                 id_type=sym.schema["a"].dataType.simpleString(),
             )
-            sym.unpersist()
+            release(sym)
             return out
     edges = sym.unionByName(
         sym.select(F.col("b").alias("a"), F.col("a").alias("b"))
@@ -1487,14 +1467,11 @@ def connected_components(
     # pre-partitioning on the loop's join key (b) lets every round's
     # edges-side join read the cache partition-aligned instead of
     # re-shuffling |E| rows per round
-    edges = (
+    edges = materialize(
         edges.unionByName(nodes.select("a", F.col("a").alias("b")))
         .repartition("b")
-        .persist(StorageLevel.MEMORY_AND_DISK)
     )
-    labels = edges.groupBy("a").agg(F.min("b").alias("label")).persist(
-        StorageLevel.MEMORY_AND_DISK
-    )
+    labels = materialize(edges.groupBy("a").agg(F.min("b").alias("label")))
     from pyspark.sql.types import NumericType
 
     numeric_ids = isinstance(
@@ -1516,7 +1493,7 @@ def connected_components(
     else:
         labels.count()
         prev_sum = None
-    sym.unpersist()  # folded into the edge cache by the action above
+    release(sym)  # folded into the edge cache by the action above
     for _ in range(max_iter):
         nb = (
             edges.join(
@@ -1536,7 +1513,7 @@ def connected_components(
         # plan of dedup_keep_best at sf1 carried 22,902
         # InMemoryTableScans and took 74s of pure planning; with the
         # checkpoint cut it is flat). Same lesson as graph.py:239.
-        jumped = (
+        jumped = materialize(
             nb.alias("x")
             .join(
                 nb.select(
@@ -1544,8 +1521,8 @@ def connected_components(
                 ).alias("m"),
                 F.col("x.label") == F.col("_ln"),
             )
-            .select(F.col("x.a").alias("a"), F.col("_l2").alias("label"))
-            .localCheckpoint(eager=True)
+            .select(F.col("x.a").alias("a"), F.col("_l2").alias("label")),
+            cut=True,
         )
         if numeric_ids:
             cur_sum = _label_sum(jumped)
@@ -1560,11 +1537,11 @@ def connected_components(
                 .count()
             )
             converged = changed == 0
-        labels.unpersist()
+        release(labels)
         labels = jumped
         if converged:
             break
-    edges.unpersist()
+    release(edges)
     from pyspark.sql import Window
 
     size_w = Window.partitionBy("cluster_id")

@@ -26,6 +26,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from petastorm_spark.session import materialize, release
+
 
 def pagerank(
     edges: DataFrame,
@@ -54,25 +56,22 @@ def pagerank(
     keep the set broadcast-small (thousands, not millions).
 
     Edge/node caches are dropped on error; after a normal return they
-    back the (lazy) result — unpersist via
-    ``spark.catalog.clearCache()`` once the result is consumed.
+    back the (lazy) result — call ``session.release_persisted()`` once
+    the result is consumed.
     """
-    from pyspark import StorageLevel
-
     e = (
         edges.select(F.col(src_col).alias("src"), F.col(dst_col).alias("dst"))
         .distinct()
     )
     deg = e.groupBy("src").agg(F.count(F.lit(1)).alias("deg"))
-    ed = e.join(deg, "src").persist(StorageLevel.MEMORY_AND_DISK)
-    nodes_cached = (
+    ed = materialize(e.join(deg, "src"))
+    nodes_cached = materialize(
         ed.select(F.col("src").alias("node"))
         .unionByName(ed.select(F.col("dst").alias("node")))
         .distinct()
-        .persist(StorageLevel.MEMORY_AND_DISK)
     )
     nodes = nodes_cached
-    interim: list[DataFrame] = []
+    interim = None
     try:
         n = nodes.count()  # the only driver-side action before the result
         if n == 0:
@@ -123,17 +122,16 @@ def pagerank(
                 )
             )
             # the chain is linear (each round read once), so rounds need
-            # no cache — only cut plan DEPTH for deep iteration counts
+            # no cache — only cut plan DEPTH for deep iteration counts;
+            # the previous interim is freed once the new one is filled
             if (i + 1) % checkpoint_interval == 0 and (i + 1) < iters:
-                ranks = ranks.persist(StorageLevel.MEMORY_AND_DISK)
-                interim.append(ranks)
+                ranks = materialize(ranks)
                 ranks.count()
+                release(interim)
+                interim = ranks
         return ranks.select("node", F.round("rank", 6).alias("rank"))
     except Exception:
-        ed.unpersist()
-        nodes_cached.unpersist()
-        for t in interim:
-            t.unpersist()
+        release(ed, nodes_cached, interim)
         raise
 
 
@@ -161,25 +159,25 @@ def triangle_census(
     self-join on the pivot, closure equi-join on (v1, v2) — no
     nested loops anywhere. The rank tie-break on node id makes the
     orientation (and the count) deterministic for any id type."""
-    e = (
+    # eager cut (the label_propagation precedent): e feeds the degree
+    # count AND the orientation join; without the cut each consumer
+    # replans and re-runs the dedup shuffle
+    e = materialize(
         edges.select(
             F.least(F.col(src), F.col(dst)).alias("a"),
             F.greatest(F.col(src), F.col(dst)).alias("b"),
         )
         .where(F.col("a") != F.col("b"))
-        .distinct()
-        # eager cut (the label_propagation precedent): e feeds the
-        # degree count AND the orientation join; without the cut each
-        # consumer replans and re-runs the dedup shuffle
-        .localCheckpoint(eager=True)
+        .distinct(),
+        cut=True,
     )
-    deg = (
+    # node-sized; feeds wedges + both sides of the rank join — one cut
+    # saves three recomputes of the explode + aggregate
+    deg = materialize(
         e.select(F.explode(F.array("a", "b")).alias("node"))
         .groupBy("node")
-        .agg(F.count(F.lit(1)).alias("deg"))
-        # node-sized; feeds wedges + both sides of the rank join —
-        # one cut saves three recomputes of the explode + aggregate
-        .localCheckpoint(eager=True)
+        .agg(F.count(F.lit(1)).alias("deg")),
+        cut=True,
     )
     # wedges (open two-paths, closed or not) need only the degree
     # table; sum the (even) product in bigint and halve with integer
@@ -198,15 +196,19 @@ def triangle_census(
     lower_first = (F.col("_da") < F.col("_db")) | (
         (F.col("_da") == F.col("_db")) & (F.col("a") < F.col("b"))
     )
-    oriented = ranked.select(
-        F.when(lower_first, F.col("a")).otherwise(F.col("b")).alias("u"),
-        F.when(lower_first, F.col("b")).otherwise(F.col("a")).alias("v"),
-        F.when(lower_first, F.col("_db")).otherwise(F.col("_da")).alias("_rv"),
-        # eager cut: oriented feeds BOTH wedge sides and the closing
-        # semi-join — three consumers, one materialization (this was
-        # the dominant fixed stage cost at bench scale: ~40 stages
-        # from replanning the two-join orientation per consumer)
-    ).localCheckpoint(eager=True)
+    # eager cut: oriented feeds BOTH wedge sides and the closing
+    # semi-join — three consumers, one materialization (this was the
+    # dominant fixed stage cost at bench scale: ~40 stages from
+    # replanning the two-join orientation per consumer)
+    oriented = materialize(
+        ranked.select(
+            F.when(lower_first, F.col("a")).otherwise(F.col("b")).alias("u"),
+            F.when(lower_first, F.col("b")).otherwise(F.col("a")).alias("v"),
+            F.when(lower_first, F.col("_db")).otherwise(F.col("_da")).alias("_rv"),
+        ),
+        cut=True,
+    )
+    release(e)  # the result reads only deg and oriented
     o1 = oriented.select(
         F.col("u"), F.col("v").alias("v1"), F.col("_rv").alias("_r1")
     )
@@ -273,21 +275,21 @@ def kcore_decompose(
     table is cut with an EAGER ``localCheckpoint`` — persist+count
     alone leaves the logical plan nesting round-over-round and
     re-analysis cost compounds (measured: round 5 took 6x round 2
-    under persist; flat under checkpoint). Intermediate checkpoint
-    blocks are MEMORY_AND_DISK and shrink monotonically (peeling only
-    removes edges); they are evicted LRU under pressure, the standard
-    iterative-graph trade for flat lineage."""
+    under persist; flat under checkpoint). A round's edge and node
+    tables are released as soon as the next edge table is cut, so one
+    checkpoint (the final edge table, read by the lazy result) stays
+    registered whatever ``max_rounds`` is."""
     if k < 1:
         raise ValueError(f"k must be >= 1, got {k}")
     node_broadcast_limit = 4_000_000
-    prev = (
+    prev = materialize(
         edges.select(
             F.least(F.col(src), F.col(dst)).alias("a"),
             F.greatest(F.col(src), F.col(dst)).alias("b"),
         )
         .where(F.col("a") != F.col("b"))
-        .distinct()
-        .localCheckpoint(eager=True)
+        .distinct(),
+        cut=True,
     )
     for _ in range(max_rounds):
         deg = (
@@ -295,21 +297,21 @@ def kcore_decompose(
             .groupBy("node")
             .agg(F.count(F.lit(1)).alias("deg"))
         )
-        keep = (
-            deg.where(F.col("deg") >= k)
-            .select("node")
-            .localCheckpoint(eager=True)
+        keep = materialize(
+            deg.where(F.col("deg") >= k).select("node"), cut=True
         )
-        if keep.count() <= node_broadcast_limit:
-            keep = F.broadcast(keep)
-        prev = (
+        small = keep.count() <= node_broadcast_limit
+        side = F.broadcast(keep) if small else keep
+        cur = materialize(
             prev.join(
-                keep.select(F.col("node").alias("a")), "a", "left_semi"
+                side.select(F.col("node").alias("a")), "a", "left_semi"
             )
-            .join(keep.select(F.col("node").alias("b")), "b", "left_semi")
-            .select("a", "b")
-            .localCheckpoint(eager=True)
+            .join(side.select(F.col("node").alias("b")), "b", "left_semi")
+            .select("a", "b"),
+            cut=True,
         )
+        release(prev, keep)
+        prev = cur
     # degrees over the surviving edge set, NO final >= k filter: that
     # would be an extra half-peel beyond max_rounds, breaking the
     # "exactly max_rounds rounds" contract the unrolled oracle mirrors
@@ -457,16 +459,11 @@ def label_propagation(
     # edge-side join reads the cache partition-aligned (the original
     # design intent); sym is static across rounds (no compounding
     # re-analysis — the kcore lesson applies to the ITERATED tables,
-    # which keep their per-round checkpoint below). Registered for
-    # release since the returned labels are lazy.
-    from pyspark import StorageLevel
-
-    from petastorm_spark.session import register_persisted
-
-    sym = register_persisted(
+    # which keep their per-round checkpoint below). It stays
+    # registered: the returned labels are lazy and read it.
+    sym = materialize(
         e.unionAll(e.select(F.col("b").alias("a"), F.col("a").alias("b")))
         .repartition("b")
-        .persist(StorageLevel.MEMORY_AND_DISK)
     )
     labels = sym.select(F.col("a").alias("node")).distinct().select(
         "node", F.col("node").alias("label")
@@ -476,6 +473,7 @@ def label_propagation(
     numeric_labels = isinstance(
         labels.schema["label"].dataType, NumericType
     )
+    cut = None
     for i in range(rounds):
         neigh = sym.join(
             labels.select(F.col("node").alias("b"), "label"), "b"
@@ -505,7 +503,10 @@ def label_propagation(
                 .groupBy("node")
                 .agg(F.min("label").alias("label"))
             )
-        # depth cut for deep ladders only — see docstring
+        # depth cut for deep ladders only — see docstring; the previous
+        # cut is freed once the new one is filled
         if (i + 1) % _LPA_CUT_INTERVAL == 0 and (i + 1) < rounds:
-            labels = labels.localCheckpoint(eager=True)
+            labels = materialize(labels, cut=True)
+            release(cut)
+            cut = labels
     return labels

@@ -20,6 +20,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from petastorm_spark.session import arrow_local_df, materialize
+
 
 def zorder_value(cols: list[Column | str], bits: int = 10) -> Column:
     """Morton/Z-value of ``cols``: interleaves the low ``bits`` bits of
@@ -119,19 +121,17 @@ def shard_plan(
     join the plan back by id for the write. Weights must be
     non-negative (a negative weight breaks prefix-sum monotonicity
     and the contiguity guarantee; enforce upstream)."""
-    from pyspark import StorageLevel
     from pyspark.sql import Window
 
     if budget < 1:
         raise ValueError(f"budget must be >= 1, got {budget}")
     cols = [F.col(c) if isinstance(c, str) else c for c in order_cols]
     parts = num_partitions or df.sparkSession.sparkContext.defaultParallelism
-    ranged = (
+    ranged = materialize(
         df.repartitionByRange(parts, *cols)
         .sortWithinPartitions(*cols)
         .withColumn("_mid", F.monotonically_increasing_id())
         .withColumn("_pid", F.shiftright("_mid", 33).cast("bigint"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
     )
     offsets = (
         ranged.groupBy("_pid")
@@ -257,8 +257,6 @@ def file_layout_report(
             "recommended_files": int(rec),
         }
     )
-    from petastorm_spark.session import arrow_local_df
-
     return arrow_local_df(
         spark,
         {

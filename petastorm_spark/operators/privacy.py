@@ -22,6 +22,8 @@ from collections.abc import Sequence
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from petastorm_spark.session import arrow_local_df, materialize
+
 
 def k_anonymity_report(
     df: DataFrame, qi_cols: Sequence[str], k: int = 5
@@ -265,8 +267,6 @@ def t_closeness_report(
     and domain ride the plan as a broadcast literal frame."""
     from pyspark.sql import Window
 
-    from petastorm_spark.session import arrow_local_df
-
     s = F.col(sensitive_col)
     base = df.where(s.isNotNull())
     # NaN would misalign the two CDF orderings: Python's sorted() has
@@ -276,10 +276,9 @@ def t_closeness_report(
         base = base.where(~F.isnan(s))
     qi = [F.col(c) for c in qi_cols]
 
-    cv = (
-        base.groupBy(*qi, s.alias("_v"))
-        .agg(F.count(F.lit(1)).alias("_c"))
-        .localCheckpoint(eager=True)
+    cv = materialize(
+        base.groupBy(*qi, s.alias("_v")).agg(F.count(F.lit(1)).alias("_c")),
+        cut=True,
     )
     # global CDF, domain size, corpus size: all from the (value)
     # rollup of cv — value-domain-bounded driver state, no extra

@@ -23,6 +23,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from petastorm_spark.session import materialize
+
 
 def global_rank(
     df: DataFrame,
@@ -40,14 +42,12 @@ def global_rank(
     (partition_id << 33 | consecutive offset), valid per-partition for
     up to 8.5 B rows each.
     """
-    from pyspark import StorageLevel
-
     cols = [F.col(c) if isinstance(c, str) else c for c in order_cols]
     parts = num_partitions or df.sparkSession.sparkContext.defaultParallelism
     # persisted: both the offset aggregate and the output derive from
     # it — without the persist the range exchange (and everything
     # upstream) runs twice (same rationale as dedup.near_dup_pairs)
-    ranged = (
+    ranged = materialize(
         df.repartitionByRange(parts, *cols)
         .sortWithinPartitions(*cols)
         .withColumn("_mid", F.monotonically_increasing_id())
@@ -56,7 +56,6 @@ def global_rank(
             "_local",
             F.col("_mid") - F.shiftleft(F.col("_pid"), 33),
         )
-        .persist(StorageLevel.MEMORY_AND_DISK)
     )
     offsets = (
         ranged.groupBy("_pid")
@@ -173,17 +172,14 @@ def grouped_rank(
     is already fully parallel and is the right tool; this operator
     exists for the opposite regime, where group count < task count.
     """
-    from pyspark import StorageLevel
-
     ocols = [F.col(c) if isinstance(c, str) else c for c in order_cols]
     parts = num_partitions or df.sparkSession.sparkContext.defaultParallelism
     # persisted for the same two-consumer reason as global_rank
-    ranged = (
+    ranged = materialize(
         df.repartitionByRange(parts, *group_cols, *ocols)
         .sortWithinPartitions(*group_cols, *ocols)
         .withColumn("_mid", F.monotonically_increasing_id())
         .withColumn("_pid", F.shiftright("_mid", 33).cast("bigint"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
     )
     pg = ranged.groupBy("_pid", *group_cols).agg(
         F.min("_mid").alias("_start"), F.count(F.lit(1)).alias("_n")

@@ -15,6 +15,8 @@ import numpy as np
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from petastorm_spark.session import arrow_local_df, materialize, release
+
 
 def const_vector(values) -> Column:
     """A double-array literal built as ONE parsed SQL expression.
@@ -894,10 +896,6 @@ def knn_graph(
     see the SCALING_OUT tuning curve)."""
     from pyspark.sql import Window
 
-    from pyspark import StorageLevel
-
-    from petastorm_spark.session import register_persisted
-
     cent = _knn_quantizer(corpus, id_col, vec_col, n_cells, centroids)
     crows = cent.select("cell", "cent_vec").collect()  # bounded quantizer
     if hierarchical and len(crows) > 0:
@@ -905,12 +903,12 @@ def knn_graph(
         # and exploded probes) — without it the Arrow/BLAS probe pass
         # over the whole corpus executes once per side (the
         # knn_graph_write sibling already persists for the same
-        # reason; here the result is lazy, so register for release)
-        probed = register_persisted(
+        # reason; here the lazy result reads it)
+        probed = materialize(
             probe_cells_hierarchical(
                 corpus, crows, id_col, vec_col, n_probe,
                 l1_probe=l1_probe, keep_order=True, l1_rounds=l1_rounds,
-            ).persist(StorageLevel.MEMORY_AND_DISK)
+            )
         )
         cand = probed.select(
             F.col(id_col).alias("neighbor_id"),
@@ -924,10 +922,10 @@ def knn_graph(
         )
     elif 0 < len(crows) <= _MAX_LOCAL_CELLS:
         # persist: same two-consumer shape as the hierarchical branch
-        probed = register_persisted(
+        probed = materialize(
             _probe_cells_numpy(
                 corpus, crows, id_col, vec_col, n_probe, keep_order=True
-            ).persist(StorageLevel.MEMORY_AND_DISK)
+            )
         )
         cand = probed.select(
             F.col(id_col).alias("neighbor_id"),
@@ -960,9 +958,7 @@ def knn_graph(
         # persist: ranked feeds both the home-cell filter and the
         # probe list — without it the corpus x quantizer rank window
         # executes once per consumer
-        ranked = register_persisted(
-            ranked.persist(StorageLevel.MEMORY_AND_DISK)
-        )
+        ranked = materialize(ranked)
         cand = ranked.where(F.col("_r") == 1).select(
             F.col(id_col).alias("neighbor_id"),
             F.col(vec_col).alias("c_vec"),
@@ -1079,8 +1075,6 @@ def knn_graph_write(
     the in-memory graph row for row."""
     import json as _json
 
-    from pyspark import StorageLevel
-
     root = index_url.rstrip("/")
     cent = _knn_quantizer(corpus, id_col, vec_col, n_cells, centroids)
     crows = cent.select("cell", "cent_vec").collect()
@@ -1099,7 +1093,7 @@ def knn_graph_write(
         probed = _probe_cells_numpy(
             corpus, crows, id_col, vec_col, n_probe, keep_order=True
         )
-    probed = probed.persist(StorageLevel.MEMORY_AND_DISK)
+    probed = materialize(probed)
     try:
         repl = _knn_replicated_cells(probed, id_col, vec_col)
         repl.write.mode("overwrite").partitionBy("cell").parquet(
@@ -1115,7 +1109,7 @@ def knn_graph_write(
             "qcell"
         ).parquet(root + "/edges")
     finally:
-        probed.unpersist()
+        release(probed)
     fs, local_root = _index_fs(index_url)
     payload = {
         "k": int(k),
@@ -1240,7 +1234,6 @@ def knn_graph_append(
     qcell)."""
     import json as _json
 
-    from pyspark import StorageLevel
     from pyspark.sql import Window
 
     root = index_url.rstrip("/")
@@ -1283,7 +1276,8 @@ def knn_graph_append(
         probed = _probe_cells_numpy(
             new_vectors, crows, id_col, vec_col, n_probe, keep_order=True
         )
-    probed = probed.persist(StorageLevel.MEMORY_AND_DISK)
+    probed = materialize(probed)
+    affected = None
     try:
         # bounded driver lists: |B|*n_probe probe cells, |B| home cells
         cell_rows = probed.select(
@@ -1333,7 +1327,7 @@ def knn_graph_append(
         # exactly the members of the batch home-cell PARTITIONS; every
         # replicated row carries u's home cell, so qcell needs no
         # index-wide lookup
-        affected = (
+        affected = materialize(
             spark.read.parquet(root + "/cells")
             .where(F.col("cell").isin(home_cells))
             .join(
@@ -1346,7 +1340,6 @@ def knn_graph_append(
                 F.col("home").alias("qcell"),
             )
             .dropDuplicates(["query_id", "cell"])
-            .persist(StorageLevel.MEMORY_AND_DISK)
         )
         new_cand = probed.select(
             F.col(id_col).alias("neighbor_id"),
@@ -1403,16 +1396,16 @@ def knn_graph_append(
         ).where(
             F.col("_on").isNull() | (F.col("_on") != F.col("neighbor_id"))
         ).drop("_on")
-        # localCheckpoint (eager) CUTS the lineage: ``changed`` reads
-        # the pre-overwrite edges parquet, which the dynamic overwrite
-        # below replaces — a lazily recomputed plan would silently read
-        # the NEW files. The checkpoint is batch-scaled.
-        changed = (
+        # the eager cut CUTS the lineage: ``changed`` reads the
+        # pre-overwrite edges parquet, which the dynamic overwrite below
+        # replaces — a lazily recomputed plan would silently read the
+        # NEW files. The checkpoint is batch-scaled and backs the lazy
+        # result.
+        changed = materialize(
             batch_edges.select(
                 "query_id", "neighbor_id", "rank", "cos_sim", "qcell"
-            )
-            .unionByName(changed_updates)
-            .localCheckpoint(eager=True)
+            ).unionByName(changed_updates),
+            cut=True,
         )
 
         # ---- persist ------------------------------------------------------
@@ -1421,22 +1414,22 @@ def knn_graph_append(
             root + "/cells"
         )
         # rewrite READS the edges parquet it is about to overwrite —
-        # eager localCheckpoint materializes it first (scaled to the
-        # affected partitions, not the graph), so the overwrite can
-        # never consume its own half-deleted input
-        rewrite = (
-            merged.unionByName(untouched)
-            .unionByName(
+        # an eager cut materializes it first (scaled to the affected
+        # partitions, not the graph), so the overwrite can never
+        # consume its own half-deleted input
+        rewrite = materialize(
+            merged.unionByName(untouched).unionByName(
                 batch_edges.select(
                     "query_id", "neighbor_id", "rank", "cos_sim", "qcell"
                 )
-            )
-            .localCheckpoint(eager=True)
+            ),
+            cut=True,
         )
         with _dynamic_partition_overwrite(spark):
             rewrite.write.mode("overwrite").partitionBy("qcell").parquet(
                 root + "/edges"
             )
+        release(rewrite)
         return changed.select(
             "query_id",
             "neighbor_id",
@@ -1445,11 +1438,7 @@ def knn_graph_append(
             "qcell",
         )
     finally:
-        probed.unpersist()
-        try:
-            affected.unpersist()
-        except (NameError, UnboundLocalError):
-            pass
+        release(probed, affected)
 
 
 class _dynamic_partition_overwrite:
@@ -1509,8 +1498,6 @@ def train_kmeans_centroids(
     model = KMeans(k=n_cells, seed=seed, maxIter=max_iter).fit(feats)
     spark = corpus.sparkSession
     elem_type = corpus.schema[vec_col].dataType.elementType.simpleString()
-    from petastorm_spark.session import arrow_local_df
-
     cents = [[float(v) for v in c] for c in model.clusterCenters()]
     return arrow_local_df(
         spark,
@@ -1899,16 +1886,14 @@ def ivf_append(
     # persist across the two actions: count + write would otherwise
     # each execute the full assignment (scan + broadcast cross join +
     # argmax) — doubled cost on the ingest hot path
-    from pyspark import StorageLevel
-
-    assigned = assigned.persist(StorageLevel.MEMORY_AND_DISK)
+    assigned = materialize(assigned)
     try:
         n = assigned.count()
         assigned.write.mode("append").partitionBy("cell").parquet(
             root + "/cells"
         )
     finally:
-        assigned.unpersist()
+        release(assigned)
     return n
 
 
@@ -2206,14 +2191,9 @@ def semantic_dedup(
     # runs through mapInPandas — a Python stage Spark cannot dedupe
     # via ReusedExchange — so materialize it once. O(corpus) rows of
     # (id, cells, unit-vec); MEMORY_AND_DISK spills rather than OOMs.
-    # The result is returned lazily, so the cache is registered with
-    # session.release_persisted() for the caller to free after
-    # consumption (clearCache() between bench runs also frees it).
-    from pyspark import StorageLevel
-
-    from petastorm_spark.session import register_persisted
-
-    unit = register_persisted(unit.persist(StorageLevel.MEMORY_AND_DISK))
+    # The lazy result reads the cache: call session.release_persisted()
+    # once it is consumed.
+    unit = materialize(unit)
     if n_probe > 1:
         ue = unit.withColumn("cell", F.explode("_cells"))
         a = ue.select(
@@ -2786,11 +2766,7 @@ def ivfpq_build(
         # Catalyst broadcast-join path, which local numpy cannot
         # replicate bit-for-bit) — keep the r16 shape: persist the
         # residual table across the codebook collect and the encode
-        from pyspark import StorageLevel
-
-        from petastorm_spark.session import register_persisted
-
-        res = register_persisted(res.persist(StorageLevel.MEMORY_AND_DISK))
+        res = materialize(res)
         rows = sorted(
             res.orderBy(id_col).limit(k_codes).collect(), key=lambda r: r[id_col]
         )
@@ -2904,8 +2880,6 @@ def ivfpq_append(
     compact small appended files periodically with
     ``compact_dataset(..., partition_by=['cell'])``; re-train and
     rebuild when recall drifts, like any IVF deployment."""
-    from pyspark import StorageLevel
-
     root = index_url.rstrip("/")
     cent, codebooks, codes = ivfpq_index_read(spark, index_url)
     if check_ids:
@@ -2941,12 +2915,12 @@ def ivfpq_append(
         id_col, "cell", "pq_codes"
     )
     # persist across count + write (same rationale as ivf_append)
-    coded = coded.persist(StorageLevel.MEMORY_AND_DISK)
+    coded = materialize(coded)
     try:
         n = coded.count()
         coded.write.mode("append").partitionBy("cell").parquet(root + "/codes")
     finally:
-        coded.unpersist()
+        release(coded)
     return n
 
 
@@ -3165,9 +3139,7 @@ def bitext_margin_mine(
     # 10x data before, 'tiny result, flat lineage' after (the same
     # persist-vs-recompute trap as connected_components). The result is
     # only |queries| x k rows, so the checkpoint is O(queries).
-    fwd = micro(fn(tgt_corpus, q, id_col, vec_col, k)).localCheckpoint(
-        eager=True
-    )
+    fwd = materialize(micro(fn(tgt_corpus, q, id_col, vec_col, k)), cut=True)
     fwd_sum = fwd.groupBy("query_id").agg(F.sum("c4").alias("fs"))
 
     cand_ids = fwd.select(F.col("neighbor_id").alias(id_col)).distinct()

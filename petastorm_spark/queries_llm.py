@@ -1025,11 +1025,9 @@ def incremental_near_dup_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     # signature table — the shared ancestor of both — is the
     # in-memory stand-in for the parquet index the production path
     # reads (r16 optimization; result set unchanged)
-    from pyspark import StorageLevel
+    from petastorm_spark.session import materialize
 
-    from petastorm_spark.session import register_persisted
-
-    sigs = register_persisted(sigs.persist(StorageLevel.MEMORY_AND_DISK))
+    sigs = materialize(sigs)
     return incremental_near_dup(
         new, buckets, sigs, "text", "doc_id", min_est=0.5
     )
@@ -1072,11 +1070,9 @@ def incremental_dedup_tombstoned(
     buckets, sigs = lsh_index_build(d, "text", "doc_id")
     # persist the shared signature ancestor — same rationale as
     # incremental_near_dup above (lazy index, no file write here)
-    from pyspark import StorageLevel
+    from petastorm_spark.session import materialize
 
-    from petastorm_spark.session import register_persisted
-
-    sigs = register_persisted(sigs.persist(StorageLevel.MEMORY_AND_DISK))
+    sigs = materialize(sigs)
     tomb = d.where(F.col("doc_id") % 7 == 0).select("doc_id")
     live_b, live_s = lsh_live_view(buckets, sigs, tomb)
     return incremental_near_dup(
@@ -4094,8 +4090,9 @@ def bpe_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     d = _t_wide(spark, sf_dir, "documents").select("text")
     merges, vocab = bpe_learn(d, "text", num_merges=8)
-    vocab.unpersist()
-    from petastorm_spark.session import arrow_local_df
+    from petastorm_spark.session import arrow_local_df, release
+
+    release(vocab)
 
     return arrow_local_df(
         spark,
@@ -5392,13 +5389,17 @@ def knn_graph_communities(spark: SparkSession, sf_dir: str) -> DataFrame:
     join + partial-agg argmax, localCheckpoint-cut."""
     from petastorm_spark.operators.graph import label_propagation
     from petastorm_spark.operators.similarity import knn_graph
+    from petastorm_spark.session import materialize
 
     # eager-checkpoint the k*N-row edge list BEFORE LPA: the
     # symmetrize step references its input twice (e union reverse(e)),
     # which would re-run the candidate scoring join per reference
-    edges = knn_graph(
-        _t_wide(spark, sf_dir, "embeddings"), k=3, n_cells=16, n_probe=2
-    ).select("query_id", "neighbor_id").localCheckpoint(eager=True)
+    edges = materialize(
+        knn_graph(
+            _t_wide(spark, sf_dir, "embeddings"), k=3, n_cells=16, n_probe=2
+        ).select("query_id", "neighbor_id"),
+        cut=True,
+    )
     return label_propagation(
         edges, rounds=3, src="query_id", dst="neighbor_id"
     )

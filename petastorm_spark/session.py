@@ -27,10 +27,12 @@ import shutil
 import subprocess
 import sys
 import tempfile
+import threading
 import time
 import zipfile
 
-from pyspark.sql import SparkSession
+from pyspark import StorageLevel
+from pyspark.sql import DataFrame, SparkSession
 
 DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 _PACKAGE_PARENT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
@@ -377,29 +379,65 @@ def _ship_package(spark: SparkSession) -> None:
     sc.addPyFile(path)
 
 
-# Plans persist()ed on behalf of a LAZILY returned result (the operator
-# cannot unpersist before the caller consumes it). Operators append here;
-# callers release after consumption. `spark.catalog.clearCache()` (which
-# bench.py runs between queries) also frees these — but a long-lived
-# session that neither calls release_persisted() nor clearCache() would
-# accumulate cached partitions until the ContextCleaner GCs the plans.
-_PERSISTED: list = []
+# Every intermediate the package materializes goes through
+# materialize() and is registered here until release() or
+# release_persisted() frees it. A lazily returned result may be backed
+# by such materializations (an operator cannot free what the caller has
+# not yet read), so call release_persisted() once the result is
+# consumed. spark.catalog.clearCache() is no substitute: it drops
+# persisted plans but never frees local-checkpoint blocks.
+_MATERIALIZED: list[tuple[DataFrame, bool]] = []
+_MATERIALIZED_LOCK = threading.Lock()
 
 
-def register_persisted(df):
-    """Track a DataFrame persist()ed for a lazily-returned result."""
-    _PERSISTED.append(df)
+def materialize(df: DataFrame, *, cut: bool = False) -> DataFrame:
+    """Materialize ``df`` and register it for release.
+
+    ``cut=False`` persists lazily at MEMORY_AND_DISK: the plan is kept,
+    so the cached relation keeps its output partitioning. ``cut=True``
+    runs an eager ``localCheckpoint``, which cuts lineage; use it for
+    iterated tables and for frames read before their source is
+    overwritten."""
+    df = df.localCheckpoint(eager=True) if cut else df.persist(
+        StorageLevel.MEMORY_AND_DISK
+    )
+    with _MATERIALIZED_LOCK:
+        _MATERIALIZED.append((df, cut))
     return df
 
 
+def _free(df: DataFrame, cut: bool) -> None:
+    if cut:
+        # DataFrame.unpersist() is a no-op on a checkpointed frame: its
+        # blocks belong to the RDD under the LogicalRDD leaf
+        df._jdf.queryExecution().analyzed().rdd().unpersist(False)
+    else:
+        df.unpersist()
+
+
+def release(*dfs) -> None:
+    """Free frames returned by materialize(). Anything else (None, an
+    unregistered or already released frame) is ignored. Reading a
+    released checkpoint afterwards fails with
+    CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND."""
+    for df in dfs:
+        with _MATERIALIZED_LOCK:
+            found = [i for i, (held, _) in enumerate(_MATERIALIZED) if held is df]
+            entry = _MATERIALIZED.pop(found[0]) if found else None
+        if entry is not None:
+            _free(*entry)
+
+
 def release_persisted() -> int:
-    """Unpersist every intermediate an operator cached on behalf of a
-    lazily-returned result; call once the results are consumed."""
+    """Free every materialization still registered; call once the
+    lazily returned results are consumed. Returns how many were freed."""
+    with _MATERIALIZED_LOCK:
+        held = _MATERIALIZED[::-1]
+        _MATERIALIZED.clear()
     n = 0
-    while _PERSISTED:
-        df = _PERSISTED.pop()
+    for df, cut in held:
         try:
-            df.unpersist()
+            _free(df, cut)
             n += 1
         except Exception:  # noqa: BLE001 - session may be gone
             pass

@@ -26,6 +26,7 @@ from pyspark.sql import functions as F
 
 from petastorm_spark.etl.dataset_metadata import materialize_dataset
 from petastorm_spark.operators.pipeline import curate_corpus, curation_report
+from petastorm_spark.session import materialize, release
 from petastorm_spark.unischema import Unischema
 
 
@@ -151,8 +152,6 @@ def curate(
         print("suggested contract: " + format_contract(contract))
     contract_report = None
     if contract is not None:
-        from pyspark import StorageLevel
-
         from petastorm_spark.operators.profiling import (
             enforce_contract,
             parse_contract,
@@ -161,7 +160,7 @@ def curate(
         checks = (
             parse_contract(contract) if isinstance(contract, str) else contract
         )
-        out = out.persist(StorageLevel.MEMORY_AND_DISK)
+        out = materialize(out)
     # the finally starts at the persist, not at the write: a contract
     # gate that raises must not leak the full curated corpus into the
     # session's cache when curate() is called programmatically
@@ -174,8 +173,7 @@ def curate(
         ):
             out.write.mode("errorifexists").parquet(target_url)
     finally:
-        if contract is not None:
-            out.unpersist()
+        release(out)  # a no-op without a contract: nothing was cached
     if contract_report is not None:
         for r in contract_report:
             print(
@@ -412,9 +410,11 @@ def curate_incremental(
         prev = spark.read.parquet(
             target_url.rstrip("/") + "/" + SOURCE_MANIFEST_DIRNAME
         )
-        diff = manifest_diff(
-            prev.drop("_manifest_key"), cur.drop("_manifest_key"), part_cols
-        ).persist()
+        diff = materialize(
+            manifest_diff(
+                prev.drop("_manifest_key"), cur.drop("_manifest_key"), part_cols
+            )
+        )
         moved = (
             diff.where(F.col("status").isin("added", "changed"))
             .select(*part_cols, "status")
@@ -426,7 +426,7 @@ def curate_incremental(
             .select(*part_cols)
             .collect()
         ]
-        diff.unpersist()
+        release(diff)
         n_added = sum(1 for r in moved if r["status"] == "added")
         n_changed = len(moved) - n_added
         if not moved and not removed:
@@ -446,8 +446,6 @@ def curate_incremental(
         n_changed = 0
         removed = []
         moved_keys = None  # whole source
-
-    from pyspark import StorageLevel
 
     use_index = dedup_index_url is not None
     index_exists = False
@@ -522,9 +520,9 @@ def curate_incremental(
             # live index (shard-pruned, batch-bounded) and drop slice
             # docs that duplicate an indexed doc (keep-first policy —
             # the already-accepted copy wins)
-            out_sid = _with_sid(
-                stages["output"], id_col, text_col
-            ).persist(StorageLevel.MEMORY_AND_DISK)
+            out_sid = materialize(
+                _with_sid(stages["output"], id_col, text_col)
+            )
             live_b, live_s = _dd.lsh_index_read_live(spark, dedup_index_url)
             if old_sids is not None:
                 # surrogates that existed in the changed/removed
@@ -537,7 +535,7 @@ def curate_incremental(
                 )
                 live_b = live_b.join(F.broadcast(gone), SID_COL, "left_anti")
                 live_s = live_s.join(F.broadcast(gone), SID_COL, "left_anti")
-            # localCheckpoint, NOT persist: the probe's lineage reads
+            # an eager cut, NOT a persist: the probe's lineage reads
             # the index's bucket/signature/tombstone files, and every
             # later index APPEND triggers Spark's refreshByPath recache
             # — which would re-execute a merely-persisted plan against
@@ -545,7 +543,7 @@ def curate_incremental(
             # truncates the lineage so downstream consumers (the
             # output write, report counts, the append batch) never
             # re-touch index files.
-            dup_sids = (
+            dup_sids = materialize(
                 _dd.incremental_near_dup(
                     out_sid,
                     live_b,
@@ -559,8 +557,8 @@ def curate_incremental(
                     n_shards=dedup_n_shards,
                 )
                 .select(F.col("new_id").alias(SID_COL))
-                .distinct()
-                .localCheckpoint(eager=True)
+                .distinct(),
+                cut=True,
             )
             final_sid = out_sid.join(dup_sids, SID_COL, "left_anti")
             final = final_sid.drop(SID_COL)
@@ -569,7 +567,7 @@ def curate_incremental(
             stages["global_near_dup"] = final
             stages["output"] = final
 
-        out = stages["output"].persist(StorageLevel.MEMORY_AND_DISK)
+        out = materialize(stages["output"])
         try:
             schema = Unischema.from_spark_schema(out.schema)
             prev_mode = spark.conf.get(
@@ -680,9 +678,7 @@ def curate_incremental(
                         _dd.lsh_index_tombstone(dedup_index_url, dead)
                     counts["index_tombstoned"] = n_dead
         finally:
-            out.unpersist()
-            if out_sid is not None:
-                out_sid.unpersist()
+            release(out, out_sid, dup_sids)
     elif use_index and index_exists and old_sids is not None:
         # removal-only run: no slice was curated, but the removed
         # partitions' docs are leaving the corpus — their index rows

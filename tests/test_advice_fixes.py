@@ -456,7 +456,6 @@ def test_semantic_dedup_registers_releasable_cache(spark):
     """ADVICE r9: semantic_dedup persisted its unit-vector table and
     never unpersisted — the cache is now registered for
     session.release_persisted(), which frees it after consumption."""
-    from petastorm_spark import session as sess
     from petastorm_spark.operators.similarity import semantic_dedup
     from petastorm_spark.session import arrow_local_df, release_persisted
 
@@ -467,16 +466,22 @@ def test_semantic_dedup_registers_releasable_cache(spark):
         {"vec_id": list(range(40)), "embedding": vecs},
         "vec_id bigint, embedding array<double>",
     )
+    jsc = spark.sparkContext._jsc  # JavaSparkContext: java.util.Map
+
+    def rdd_ids():
+        return {int(k) for k in jsc.getPersistentRDDs().keySet().toArray()}
+
     release_persisted()  # drain any leftovers from other tests
-    before = len(sess._PERSISTED)
+    spark.catalog.clearCache()  # other tests cache frames of their own
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    before = rdd_ids()
     out = semantic_dedup(corpus, n_cells=4, threshold=0.99)
     out.count()  # consume
-    assert len(sess._PERSISTED) == before + 1
-    cached = sess._PERSISTED[-1]
-    assert cached.storageLevel.useMemory  # actually persisted
+    assert not cache.isEmpty()  # the unit table is cached ...
+    assert rdd_ids() - before  # ... and its blocks are resident
     assert release_persisted() >= 1
-    assert not sess._PERSISTED
-    assert not cached.storageLevel.useMemory or not cached.is_cached
+    assert cache.isEmpty()
+    assert rdd_ids() - before == set()
 
 
 def test_dp_group_release_stability_threshold(spark):

@@ -114,3 +114,29 @@ def test_readme_test_count_matches_collection(request):
         f"README test count {nt} != collected {collected} — run "
         "python tools/gen_readme_counts.py"
     )
+
+
+def test_materialization_goes_through_session_only():
+    """Every persist and local checkpoint in the package goes through
+    session.materialize, so session.release_persisted() can free it. A
+    raw call elsewhere would hold blocks no release path knows of
+    (clearCache() never frees checkpoint blocks)."""
+    import os
+    import re
+
+    pkg = os.path.join(
+        os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+        "petastorm_spark",
+    )
+    raw = re.compile(r"\.persist\(|localCheckpoint\(|\.unpersist\(|StorageLevel")
+    hits = []
+    for root, _, files in os.walk(pkg):
+        for name in sorted(files):
+            path = os.path.join(root, name)
+            if not name.endswith(".py") or path == os.path.join(pkg, "session.py"):
+                continue
+            with open(path) as f:
+                for i, line in enumerate(f, 1):
+                    if raw.search(line):
+                        hits.append(f"{os.path.relpath(path, pkg)}:{i}: {line.strip()}")
+    assert not hits, "materialize outside session.py:\n" + "\n".join(hits)

@@ -24,7 +24,9 @@ from petastorm_spark.session import (
     _default_conf_is_empty,
     _driver_memory,
     _java_home,
+    arrow_local_df,
     ensure_session_confs,
+    release_persisted,
 )
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
@@ -137,6 +139,90 @@ def test_python_tasks_run_under_worker_daemon(spark):
     for k in ("spark.python.daemon.module", "spark.executorEnv.PYTHONPATH"):
         assert k not in SESSION_CONFS
         assert not spark.conf.isModifiable(k), k
+
+
+def _persistent_rdd_ids(spark):
+    rdds = spark.sparkContext._jsc.getPersistentRDDs()  # java.util.Map
+    return {int(k) for k in rdds.keySet().toArray()}
+
+
+def _small_graph(spark):
+    """60 nodes: a ring, a stride-7 chord set and a stride-3 chord set,
+    so there are triangles, a non-trivial 3-core and one component."""
+    pairs = sorted(
+        {(i, (i + d) % 60) for i in range(60) for d in (1, 3, 7)}
+    )
+    return arrow_local_df(
+        spark,
+        {"src": [a for a, _ in pairs], "dst": [b for _, b in pairs]},
+        "src bigint, dst bigint",
+    )
+
+
+def test_release_persisted_frees_every_operator_materialization(spark):
+    """Persists and local checkpoints made by the iterative operators
+    all go through session.materialize: once the lazy results are
+    consumed, release_persisted() leaves no block and no cache entry
+    behind (clearCache() alone cannot free checkpoint blocks)."""
+    import numpy as np
+    from pyspark.sql import functions as F
+
+    from petastorm_spark.operators.dedup import connected_components
+    from petastorm_spark.operators.graph import (
+        kcore_decompose,
+        label_propagation,
+        pagerank,
+        triangle_census,
+    )
+    from petastorm_spark.operators.similarity import semantic_dedup
+
+    release_persisted()
+    spark.catalog.clearCache()  # a clean baseline: other tests cache frames
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    before = _persistent_rdd_ids(spark)
+    edges = _small_graph(spark)
+    vecs = [[float(x) for x in v] for v in np.random.default_rng(5).standard_normal((20, 8))]
+    corpus = arrow_local_df(  # 20 vectors, each twice: 20 duplicates
+        spark,
+        {"vec_id": list(range(40)), "embedding": vecs + vecs},
+        "vec_id bigint, embedding array<double>",
+    )
+    results = [
+        pagerank(edges, iters=12, checkpoint_interval=5),
+        label_propagation(edges, rounds=10),
+        kcore_decompose(edges, k=3, max_rounds=10),
+        triangle_census(edges),
+        connected_components(
+            edges.select(F.col("src").alias("id_a"), F.col("dst").alias("id_b")),
+            local_threshold=0,
+        ),
+        semantic_dedup(corpus, n_cells=4, threshold=0.99),
+    ]
+    for r in results:
+        assert r.collect()
+    assert _persistent_rdd_ids(spark) - before, "nothing was materialized"
+    assert release_persisted() > 0
+    assert _persistent_rdd_ids(spark) - before == set()
+    assert cache.isEmpty()
+
+
+def test_kcore_holds_one_checkpoint_whatever_max_rounds(spark):
+    """Each peeling round frees the previous round's edge and node
+    tables once the next edge table is cut: the lazy result is backed
+    by the final edge table alone."""
+    from petastorm_spark.operators.graph import kcore_decompose
+
+    edges = _small_graph(spark)
+    held, freed = [], []
+    for rounds in (2, 10):
+        release_persisted()
+        before = _persistent_rdd_ids(spark)
+        assert kcore_decompose(edges, k=3, max_rounds=rounds).collect()
+        held.append(len(_persistent_rdd_ids(spark) - before))
+        freed.append(release_persisted())
+        assert _persistent_rdd_ids(spark) - before == set()
+    assert held == [1, 1], held
+    assert freed == [1, 1], freed
 
 
 def test_workers_import_package_from_any_cwd(tmp_path):

@@ -71,7 +71,7 @@ def stale_queries(entrymod, qs, min_age: int) -> list[str]:
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
 
-    from petastorm_spark.session import get_spark
+    from petastorm_spark.session import get_spark, release_persisted
     import __spark_entry__ as entrymod
 
     spark = get_spark("correctness_check")
@@ -112,6 +112,8 @@ def main() -> None:
             results[name] = f"FAIL spark error: {e}"
             n_fail += 1
             continue
+        finally:
+            release_persisted()  # the result is consumed (or failed)
         if name not in oracles:
             print(f"WEAK {name}: rows={len(sdf)} (no oracle, rows-only check)")
             results[name] = f"WEAK rows={len(sdf)}"
