@@ -26,6 +26,7 @@ from functools import reduce
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from petastorm_spark.operators import index_store
 from petastorm_spark.operators.text import tokens
 from petastorm_spark.session import arrow_local_df, materialize, release
 
@@ -325,17 +326,16 @@ def lsh_index_build(
 def lsh_index_write(
     index_url: str, buckets: DataFrame, signatures: DataFrame
 ) -> None:
-    """Persist the index: buckets parquet PARTITIONED BY bh_shard (an
-    incremental batch's probe prunes to the shards its band hashes land
-    in), signatures id-keyed alongside. Compact append-heavy bucket
+    """Persist the index (layout: README "Persisted indexes"). Buckets
+    are partitioned by bh_shard, so an incremental batch's probe prunes
+    to the shards its band hashes land in. Compact append-heavy bucket
     directories with etl.compact.compact_dataset(...,
     partition_by=["bh_shard"]) — omitting partition_by flattens the
     shard layout and destroys probe pruning."""
-    root = index_url.rstrip("/")
-    buckets.write.mode("overwrite").partitionBy("bh_shard").parquet(
-        root + "/buckets"
+    index_store.write(
+        index_url,
+        [("buckets", buckets, "bh_shard"), ("signatures", signatures, None)],
     )
-    signatures.write.mode("overwrite").parquet(root + "/signatures")
 
 
 def lsh_index_append(
@@ -355,10 +355,9 @@ def lsh_index_append(
     names the id column explicitly (default: the batch's first column,
     validated against the persisted index's schema so a reordered
     signatures frame cannot silently semi-join on a minhash column)."""
-    root = index_url.rstrip("/")
     if check_ids:
-        existing = signatures.sparkSession.read.parquet(
-            root + "/signatures"
+        existing = index_store.read_table(
+            signatures.sparkSession, index_url, "signatures"
         )
         if id_col is None:
             # The persisted index's first column IS the id (written by
@@ -372,31 +371,22 @@ def lsh_index_append(
                 f"both the batch ({signatures.columns[:3]}…) and the "
                 f"persisted index ({existing.columns[:3]}…); pass id_col="
             )
-        existing = existing.select(id_col)
-        n_dup = (
-            signatures.select(id_col)
-            .join(existing, id_col, "left_semi")
-            .count()
+        index_store.refuse_stored_ids(
+            "lsh_index_append",
+            existing,
+            signatures,
+            id_col,
+            index_store.table_url(index_url, "signatures"),
         )
-        if n_dup:
-            raise ValueError(
-                f"lsh_index_append: {n_dup} batch id(s) already exist in "
-                f"{root}/signatures — appending would corrupt the index "
-                "with duplicate-id rows (pass check_ids=False only if "
-                "ids are guaranteed fresh)"
-            )
-    buckets.write.mode("append").partitionBy("bh_shard").parquet(
-        root + "/buckets"
-    )
-    signatures.write.mode("append").parquet(root + "/signatures")
+    index_store.write_table(index_url, "buckets", buckets, "bh_shard", mode="append")
+    index_store.write_table(index_url, "signatures", signatures, mode="append")
 
 
 def lsh_index_read(spark, index_url: str) -> tuple[DataFrame, DataFrame]:
     """Load a persisted index: ``(buckets, signatures)``."""
-    root = index_url.rstrip("/")
     return (
-        spark.read.parquet(root + "/buckets"),
-        spark.read.parquet(root + "/signatures"),
+        index_store.read_table(spark, index_url, "buckets"),
+        index_store.read_table(spark, index_url, "signatures"),
     )
 
 
@@ -410,13 +400,12 @@ def lsh_index_tombstone(index_url: str, ids: DataFrame) -> None:
     Dead ids stop matching immediately: :func:`lsh_index_read_live`
     anti-joins them out, so probes never emit a tombstoned ``old_id``.
     Cost: one batch-sized append — nothing corpus-sized moves."""
-    root = index_url.rstrip("/")
     if len(ids.columns) != 1:
         raise ValueError(
             f"tombstone frame must have exactly the id column, got "
             f"{ids.columns}"
         )
-    ids.distinct().write.mode("append").parquet(root + "/tombstones")
+    index_store.write_table(index_url, "tombstones", ids.distinct(), mode="append")
 
 
 def lsh_live_view(
@@ -443,22 +432,11 @@ def lsh_index_read_live(
 ) -> tuple[DataFrame, DataFrame]:
     """Load the LIVE view of a persisted index: ``(buckets,
     signatures)`` with tombstoned ids anti-joined out
-    (:func:`lsh_live_view`)."""
-    root = index_url.rstrip("/")
+    (:func:`lsh_live_view`). An unreadable ``tombstones/`` raises."""
     return lsh_live_view(
-        spark.read.parquet(root + "/buckets"),
-        spark.read.parquet(root + "/signatures"),
-        _lsh_read_tombstones(spark, root),
+        *lsh_index_read(spark, index_url),
+        index_store.read_optional_table(spark, index_url, "tombstones"),
     )
-
-
-def _lsh_read_tombstones(spark, root: str) -> DataFrame | None:
-    """The index's tombstone table, or None when none exist."""
-    try:
-        tomb = spark.read.parquet(root.rstrip("/") + "/tombstones")
-    except Exception:
-        return None
-    return tomb
 
 
 def lsh_index_compact(spark, index_url: str) -> dict:
@@ -474,37 +452,15 @@ def lsh_index_compact(spark, index_url: str) -> dict:
     Returns ``{"dropped_ids": n, "live_ids": m}``. Not atomic on a
     plain filesystem (rewrite happens via a sibling temp dir + rename);
     schedule it like any table-maintenance job."""
-    root = index_url.rstrip("/")
-    tomb = _lsh_read_tombstones(spark, root)
-    if tomb is None:
-        n_live = spark.read.parquet(root + "/signatures").count()
-        return {"dropped_ids": 0, "live_ids": n_live}
-    id_col = tomb.columns[0]
-    tomb = tomb.distinct()
-    n_dead = tomb.count()
-    buckets, sigs = lsh_index_read_live(spark, index_url)
-    jvm = spark.sparkContext._jvm
-    jconf = spark.sparkContext._jsc.hadoopConfiguration()
-
-    def _swap(sub: str, df: DataFrame, part_cols: list[str]) -> None:
-        tmp = f"{root}/_{sub}_compact_tmp"
-        w = df.write.mode("overwrite")
-        if part_cols:
-            w = w.partitionBy(*part_cols)
-        w.parquet(tmp)
-        old = jvm.org.apache.hadoop.fs.Path(f"{root}/{sub}")
-        new = jvm.org.apache.hadoop.fs.Path(tmp)
-        fs = old.getFileSystem(jconf)
-        if not fs.delete(old, True):
-            raise IOError(f"compact: failed to delete {root}/{sub}")
-        if not fs.rename(new, old):
-            raise IOError(f"compact: failed to rename {tmp}")
-
-    _swap("buckets", buckets, ["bh_shard"])
-    _swap("signatures", sigs, [])
-    tpath = jvm.org.apache.hadoop.fs.Path(f"{root}/tombstones")
-    tpath.getFileSystem(jconf).delete(tpath, True)
-    n_live = spark.read.parquet(root + "/signatures").count()
+    tomb = index_store.read_optional_table(spark, index_url, "tombstones")
+    n_dead = 0
+    if tomb is not None:
+        n_dead = tomb.distinct().count()
+        buckets, sigs = lsh_live_view(*lsh_index_read(spark, index_url), tomb)
+        index_store.replace_table(spark, index_url, "buckets", buckets, "bh_shard")
+        index_store.replace_table(spark, index_url, "signatures", sigs)
+        index_store.drop_table(spark, index_url, "tombstones")
+    n_live = index_store.read_table(spark, index_url, "signatures").count()
     return {"dropped_ids": n_dead, "live_ids": n_live}
 
 

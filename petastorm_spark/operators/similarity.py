@@ -15,6 +15,7 @@ import numpy as np
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from petastorm_spark.operators import index_store
 from petastorm_spark.session import arrow_local_df, materialize, release
 
 
@@ -711,18 +712,16 @@ def ivf_write(
     """Persist the index: assignments parquet PARTITIONED BY cell (so a
     probe's scan prunes to its cells' directories), centroids as a tiny
     side table."""
-    assignments.write.mode("overwrite").partitionBy(cell_col).parquet(
-        index_url.rstrip("/") + "/cells"
+    index_store.write(
+        index_url, [("cells", assignments, cell_col), ("centroids", centroids, None)]
     )
-    centroids.write.mode("overwrite").parquet(index_url.rstrip("/") + "/centroids")
 
 
 def ivf_read(spark, index_url: str) -> tuple[DataFrame, DataFrame]:
     """Load a persisted index: ``(centroids, assignments)``."""
-    root = index_url.rstrip("/")
     return (
-        spark.read.parquet(root + "/centroids"),
-        spark.read.parquet(root + "/cells"),
+        index_store.read_table(spark, index_url, "centroids"),
+        index_store.read_table(spark, index_url, "cells"),
     )
 
 
@@ -1051,31 +1050,18 @@ def knn_graph_write(
     l1_rounds: int = 4,
 ) -> None:
     """Persist the all-pairs kNN graph as an INCREMENTAL index — the
-    graph member of the persistent-index family (LSH / IVF / PQ /
-    IVF-PQ / prefix all have write/read/append; the graph was
-    build-only until r13). Layout under ``index_url``:
-
-    - ``cells/``      (id, vec, cell, is_home) PARTITIONED BY cell:
-      every vector replicated into each of its ``n_probe`` probe
-      cells (``is_home`` marks the rank-1 home cell). The replication
-      is what makes APPEND batch-scaled: "which existing vectors
-      probe into cell c" is a partition-pruned read of cells/cell=c,
-      never an index scan.
-    - ``centroids/``  the bounded quantizer (cell, cent_vec).
-    - ``edges/``      (query_id, neighbor_id, rank, cos_sim)
-      PARTITIONED BY qcell (the query's home cell), so an append
-      rewrites only the affected home-cell partitions (dynamic
-      partition overwrite).
-    - ``knn_graph.json`` (written LAST — the completion marker):
-      k / n_probe / n_cells / id and vector column names.
+    graph member of the persistent-index family. README "Persisted
+    indexes" gives the layout (``cells/``, ``centroids/``, ``edges/``,
+    ``knn_graph.json``). Every vector is replicated into each of its
+    ``n_probe`` probe cells, so "which existing vectors probe into
+    cell c" is a partition-pruned read and an append stays
+    batch-scaled; edges are partitioned by the query's home cell, so
+    an append rewrites only the affected partitions.
 
     Edges are scored with the oracle-exact Catalyst fold
     (:func:`_safe_cosine`), identical to ``knn_graph(...,
     score_kernel="fold")`` — a write-then-read round trip reproduces
     the in-memory graph row for row."""
-    import json as _json
-
-    root = index_url.rstrip("/")
     cent = _knn_quantizer(corpus, id_col, vec_col, n_cells, centroids)
     crows = cent.select("cell", "cent_vec").collect()
     if not hierarchical and not 0 < len(crows) <= _MAX_LOCAL_CELLS:
@@ -1093,25 +1079,7 @@ def knn_graph_write(
         probed = _probe_cells_numpy(
             corpus, crows, id_col, vec_col, n_probe, keep_order=True
         )
-    probed = materialize(probed)
-    try:
-        repl = _knn_replicated_cells(probed, id_col, vec_col)
-        repl.write.mode("overwrite").partitionBy("cell").parquet(
-            root + "/cells"
-        )
-        cent.write.mode("overwrite").parquet(root + "/centroids")
-        edges = _knn_edges_from_probed(probed, id_col, vec_col, k)
-        home = probed.select(
-            F.col(id_col).alias("query_id"),
-            F.get("_cells", 0).alias("qcell"),
-        )
-        edges.join(home, "query_id").write.mode("overwrite").partitionBy(
-            "qcell"
-        ).parquet(root + "/edges")
-    finally:
-        release(probed)
-    fs, local_root = _index_fs(index_url)
-    payload = {
+    params = {
         "k": int(k),
         "n_probe": int(n_probe),
         "n_cells": len(crows),
@@ -1126,10 +1094,24 @@ def knn_graph_write(
         "l1_probe": int(l1_probe),
         "l1_rounds": int(l1_rounds),
     }
-    with fs.open_output_stream(
-        local_root.rstrip("/") + "/knn_graph.json"
-    ) as f:
-        f.write(_json.dumps(payload).encode())
+    probed = materialize(probed)
+    home = probed.select(
+        F.col(id_col).alias("query_id"), F.get("_cells", 0).alias("qcell")
+    )
+    edges = _knn_edges_from_probed(probed, id_col, vec_col, k).join(home, "query_id")
+    try:
+        index_store.write(
+            index_url,
+            [
+                ("cells", _knn_replicated_cells(probed, id_col, vec_col), "cell"),
+                ("centroids", cent, None),
+                ("edges", edges, "qcell"),
+            ],
+            "knn_graph.json",
+            params,
+        )
+    finally:
+        release(probed)
 
 
 def _knn_replicated_cells(
@@ -1183,15 +1165,8 @@ def knn_graph_read(spark, index_url: str) -> tuple[dict, DataFrame]:
     (query_id, neighbor_id, rank, cos_sim) with cos_sim rounded to the
     :func:`knn_graph` output convention (storage keeps full
     precision), params the marker JSON."""
-    import json as _json
-
-    root = index_url.rstrip("/")
-    fs, local_root = _index_fs(index_url)
-    with fs.open_input_file(
-        local_root.rstrip("/") + "/knn_graph.json"
-    ) as f:
-        params = _json.loads(f.read().decode())
-    edges = spark.read.parquet(root + "/edges").select(
+    params = index_store.read_params(index_url, "knn_graph.json")
+    edges = index_store.read_table(spark, index_url, "edges").select(
         "query_id",
         "neighbor_id",
         "rank",
@@ -1227,40 +1202,31 @@ def knn_graph_append(
        the affected + batch home-cell partitions of ``edges/`` are
        rewritten with dynamic partition overwrite.
 
+    README "Persisted indexes" gives the layout and the duplicate-id
+    rule this append enforces when ``check_ids`` is on.
+
     Cost scales with the BATCH: |B|·n_probe pruned cell partitions
     for candidates, |B| home-cell partitions for the affected set —
     never an index-wide scan (pinned by a plan test). Returns the
     changed edge rows (query_id, neighbor_id, rank, cos_sim,
     qcell)."""
-    import json as _json
-
     from pyspark.sql import Window
 
-    root = index_url.rstrip("/")
-    fs, local_root = _index_fs(index_url)
-    with fs.open_input_file(
-        local_root.rstrip("/") + "/knn_graph.json"
-    ) as f:
-        params = _json.loads(f.read().decode())
+    params = index_store.read_params(index_url, "knn_graph.json")
     id_col, vec_col = params["id_col"], params["vec_col"]
     k, n_probe = int(params["k"]), int(params["n_probe"])
-
     if check_ids:
-        dup = (
-            spark.read.parquet(root + "/cells")
-            .where(F.col("is_home"))
-            .select(id_col)
-            .join(F.broadcast(new_vectors.select(id_col)), id_col, "semi")
-            .limit(1)
-            .collect()
+        index_store.refuse_stored_ids(
+            "knn_graph_append",
+            index_store.read_table(spark, index_url, "cells").where(
+                F.col("is_home")
+            ),
+            new_vectors,
+            id_col,
+            index_store.table_url(index_url, "cells"),
         )
-        if dup:
-            raise ValueError(
-                f"knn_graph_append: id {dup[0][0]!r} already indexed - "
-                "appending it again would corrupt the graph"
-            )
 
-    crows = spark.read.parquet(root + "/centroids").collect()
+    crows = index_store.read_table(spark, index_url, "centroids").collect()
     # probe with the configuration the index was BUILT with (stored in
     # knn_graph.json; absent = legacy flat index): a flat probe of a
     # hierarchical index assigns different cells than the build did —
@@ -1287,8 +1253,10 @@ def knn_graph_append(
         probe_cells = sorted({c for r in cell_rows for c in r["p"]})
 
         # ---- batch edges -------------------------------------------------
+        # each use reads cells/ afresh: the append below refreshes the
+        # file index of every cached plan that reads it
         stored_home = (
-            spark.read.parquet(root + "/cells")
+            index_store.read_table(spark, index_url, "cells")
             .where(F.col("cell").isin(probe_cells) & F.col("is_home"))
             .select(F.col(id_col), F.col(vec_col), "cell")
         )
@@ -1328,7 +1296,7 @@ def knn_graph_append(
         # replicated row carries u's home cell, so qcell needs no
         # index-wide lookup
         affected = materialize(
-            spark.read.parquet(root + "/cells")
+            index_store.read_table(spark, index_url, "cells")
             .where(F.col("cell").isin(home_cells))
             .join(
                 F.broadcast(probed.select(id_col)), id_col, "anti"
@@ -1359,9 +1327,8 @@ def knn_graph_append(
         qcells = sorted(
             {r["qcell"] for r in affected.select("qcell").distinct().collect()}
         )
-        old_edges = (
-            spark.read.parquet(root + "/edges")
-            .where(F.col("qcell").isin(qcells) if qcells else F.lit(False))
+        old_edges = index_store.read_table(spark, index_url, "edges").where(
+            F.col("qcell").isin(qcells) if qcells else F.lit(False)
         )
         affected_ids = affected.select("query_id").distinct()
         merged_src = (
@@ -1409,9 +1376,12 @@ def knn_graph_append(
         )
 
         # ---- persist ------------------------------------------------------
-        repl = _knn_replicated_cells(probed, id_col, vec_col)
-        repl.write.mode("append").partitionBy("cell").parquet(
-            root + "/cells"
+        index_store.write_table(
+            index_url,
+            "cells",
+            _knn_replicated_cells(probed, id_col, vec_col),
+            "cell",
+            mode="append",
         )
         # rewrite READS the edges parquet it is about to overwrite —
         # an eager cut materializes it first (scaled to the affected
@@ -1425,10 +1395,9 @@ def knn_graph_append(
             ),
             cut=True,
         )
-        with _dynamic_partition_overwrite(spark):
-            rewrite.write.mode("overwrite").partitionBy("qcell").parquet(
-                root + "/edges"
-            )
+        index_store.write_table(
+            index_url, "edges", rewrite, "qcell", dynamic=True
+        )
         release(rewrite)
         return changed.select(
             "query_id",
@@ -1439,30 +1408,6 @@ def knn_graph_append(
         )
     finally:
         release(probed, affected)
-
-
-class _dynamic_partition_overwrite:
-    """Scope spark.sql.sources.partitionOverwriteMode=dynamic to one
-    write: overwrite ONLY the partitions present in the written frame
-    (the affected + batch home cells), leaving every other edge
-    partition untouched."""
-
-    def __init__(self, spark):
-        self._spark = spark
-
-    def __enter__(self):
-        self._old = self._spark.conf.get(
-            "spark.sql.sources.partitionOverwriteMode", "static"
-        )
-        self._spark.conf.set(
-            "spark.sql.sources.partitionOverwriteMode", "dynamic"
-        )
-
-    def __exit__(self, *exc):
-        self._spark.conf.set(
-            "spark.sql.sources.partitionOverwriteMode", self._old
-        )
-        return False
 
 
 def train_kmeans_centroids(
@@ -1832,13 +1777,15 @@ def ivf_append(
     """Incrementally add vectors to a persisted IVF index: assign the
     new batch against the INDEX'S OWN centroids (never re-quantize —
     existing assignments stay valid, queries see a consistent cell
-    space) and append the rows into the cell-partitioned parquet
-    layout. Returns the number of vectors appended.
+    space) with the assignment :func:`ivf_build` used, and append the
+    rows into ``cells/``. Returns the number of vectors appended.
+    README "Persisted indexes" gives the layout and the duplicate-id
+    rule.
 
     The index-maintenance path every production vector store needs:
-    ingest cost scales with the BATCH (one broadcast-centroid scan +
-    one partitioned append), not the index size; dynamic partition
-    append only touches the cells the batch lands in. Cells drift as
+    ingest cost scales with the BATCH (one quantizer-broadcast scan +
+    one partitioned append), not the index size; the append only
+    touches the cells the batch lands in. Cells drift as
     the data distribution moves — rebuild centroids (train_kmeans_
     centroids + ivf_build) when recall degrades, exactly like any IVF
     deployment. Compact small appended files periodically with
@@ -1846,55 +1793,17 @@ def ivf_append(
     partition_by is load-bearing: without it compaction flattens the
     cell directories and destroys probe pruning.
     """
-    root = index_url.rstrip("/")
     if check_ids:
-        # refuse duplicate-id appends: an id indexed twice plants
-        # duplicate vectors every later probe re-emits (same contract
-        # as dedup.lsh_index_append). One column-pruned id scan
-        # semi-joined to the batch-sized side.
-        dup = (
-            spark.read.parquet(root + "/cells")
-            .select(id_col)
-            .join(F.broadcast(new_vectors.select(id_col)), id_col, "semi")
-            .limit(1)
-            .collect()
+        index_store.refuse_stored_ids(
+            "ivf_append",
+            index_store.read_table(spark, index_url, "cells"),
+            new_vectors,
+            id_col,
+            index_store.table_url(index_url, "cells"),
         )
-        if dup:
-            raise ValueError(
-                f"ivf_append: id {dup[0][0]!r} already indexed - "
-                "appending it again would corrupt every later probe"
-            )
-    centroids = spark.read.parquet(root + "/centroids")
-    cent = centroids.select("cell", "cent_vec")
-    scored = (
-        new_vectors.select(F.col(id_col), F.col(vec_col))
-        .crossJoin(F.broadcast(cent))
-        .withColumn("_cos", cosine(F.col(vec_col), F.col("cent_vec")))
-    )
-    assigned = (
-        scored.groupBy(id_col, vec_col)
-        .agg(
-            F.max(
-                F.struct(F.col("_cos"), (-F.col("cell")).alias("_nc"))
-            ).alias("_b")
-        )
-        # un-negate without a narrowing cast: int centroid ids stay int,
-        # 60-bit hash-derived bigint ids stay bigint (no silent wrap)
-        .withColumn("cell", -F.col("_b").getField("_nc"))
-        .drop("_b")
-    )
-    # persist across the two actions: count + write would otherwise
-    # each execute the full assignment (scan + broadcast cross join +
-    # argmax) — doubled cost on the ingest hot path
-    assigned = materialize(assigned)
-    try:
-        n = assigned.count()
-        assigned.write.mode("append").partitionBy("cell").parquet(
-            root + "/cells"
-        )
-    finally:
-        release(assigned)
-    return n
+    centroids = index_store.read_table(spark, index_url, "centroids")
+    _, assigned = ivf_build(new_vectors, id_col, vec_col, centroids=centroids)
+    return index_store.append(index_url, "cells", assigned, "cell")
 
 
 def hard_negative_mining(
@@ -2476,22 +2385,20 @@ def cosine_topk_pq(
     )
 
 
-def _index_fs(index_url: str):
-    """Resolve ``index_url`` to ``(pyarrow FileSystem, local path)`` for
-    the sidecar read/write half of the persistent-index codecs, raising
-    a usable error when resolution fails (``_resolve_fs`` returns None for
-    unknown schemes, which would otherwise surface as an opaque
-    'cannot unpack non-iterable NoneType')."""
-    from petastorm_spark.reader import _resolve_fs
+def _codebooks_params(codebooks) -> dict:
+    """``codebooks.json`` of the PQ and IVF-PQ indexes."""
+    return {
+        "m": int(codebooks.shape[0]),
+        "k_codes": int(codebooks.shape[1]),
+        "dsub": int(codebooks.shape[2]),
+        "codebooks": [[[float(x) for x in c] for c in sub] for sub in codebooks],
+    }
 
-    pair = _resolve_fs(index_url)
-    if pair is None:
-        raise ValueError(
-            f"cannot resolve a filesystem for index URL {index_url!r}: "
-            "pyarrow FileSystem.from_uri failed (unknown scheme or "
-            "missing filesystem driver)"
-        )
-    return pair
+
+def _codebooks_from_params(payload: dict):
+    cb = np.asarray(payload["codebooks"], dtype=np.float64)
+    assert cb.shape == (payload["m"], payload["k_codes"], payload["dsub"])
+    return cb
 
 
 def pq_index_write(
@@ -2502,39 +2409,23 @@ def pq_index_write(
     codebooks as a JSON sidecar (tiny by construction). The vector
     column, if present in ``coded``, is dropped — full vectors stay
     with the source dataset; the rescore joins them back by id."""
-    import json as _json
-
-    root = index_url.rstrip("/")
     keep = [c for c in coded.columns if c == code_col or not c.startswith("_")]
     drop_vecs = [
         c for c in keep
         if c != code_col and coded.schema[c].dataType.simpleString().startswith("array")
     ]
-    coded.select(*[c for c in keep if c not in drop_vecs]).write.mode(
-        "overwrite"
-    ).parquet(root + "/codes")
-    fs, local_root = _index_fs(index_url)
-    payload = {
-        "m": int(codebooks.shape[0]),
-        "k_codes": int(codebooks.shape[1]),
-        "dsub": int(codebooks.shape[2]),
-        "codebooks": [[[float(x) for x in c] for c in sub] for sub in codebooks],
-    }
-    with fs.open_output_stream(local_root.rstrip("/") + "/codebooks.json") as f:
-        f.write(_json.dumps(payload).encode())
+    index_store.write(
+        index_url,
+        [("codes", coded.select(*[c for c in keep if c not in drop_vecs]), None)],
+        "codebooks.json",
+        _codebooks_params(codebooks),
+    )
 
 
 def pq_index_read(spark, index_url: str):
     """Load a persisted PQ index: ``(codebooks ndarray, codes DataFrame)``."""
-    import json as _json
-
-    root = index_url.rstrip("/")
-    fs, local_root = _index_fs(index_url)
-    with fs.open_input_file(local_root.rstrip("/") + "/codebooks.json") as f:
-        payload = _json.loads(f.read().decode())
-    cb = np.asarray(payload["codebooks"], dtype=np.float64)
-    assert cb.shape == (payload["m"], payload["k_codes"], payload["dsub"])
-    return cb, spark.read.parquet(root + "/codes")
+    cb = _codebooks_from_params(index_store.read_params(index_url, "codebooks.json"))
+    return cb, index_store.read_table(spark, index_url, "codes")
 
 
 def _adc_score(tbl_col: str, code_col: str, m: int, k_codes: int) -> Column:
@@ -2785,35 +2676,21 @@ def ivfpq_index_write(
     cell (a probe reads only its cells' directories), centroids as a
     tiny side table, codebooks as a JSON sidecar — the deployable
     billion-vector artifact: pruning by cell, m bytes per vector."""
-    import json as _json
-
-    root = index_url.rstrip("/")
-    coded.write.mode("overwrite").partitionBy("cell").parquet(root + "/codes")
-    centroids.write.mode("overwrite").parquet(root + "/centroids")
-    fs, local_root = _index_fs(index_url)
-    payload = {
-        "m": int(codebooks.shape[0]),
-        "k_codes": int(codebooks.shape[1]),
-        "dsub": int(codebooks.shape[2]),
-        "codebooks": [[[float(x) for x in c] for c in sub] for sub in codebooks],
-    }
-    with fs.open_output_stream(local_root.rstrip("/") + "/codebooks.json") as f:
-        f.write(_json.dumps(payload).encode())
+    index_store.write(
+        index_url,
+        [("codes", coded, "cell"), ("centroids", centroids, None)],
+        "codebooks.json",
+        _codebooks_params(codebooks),
+    )
 
 
 def ivfpq_index_read(spark, index_url: str):
     """Load a persisted IVF-PQ index: ``(centroids, codebooks, coded)``."""
-    import json as _json
-
-    root = index_url.rstrip("/")
-    fs, local_root = _index_fs(index_url)
-    with fs.open_input_file(local_root.rstrip("/") + "/codebooks.json") as f:
-        payload = _json.loads(f.read().decode())
-    cb = np.asarray(payload["codebooks"], dtype=np.float64)
+    cb = _codebooks_from_params(index_store.read_params(index_url, "codebooks.json"))
     return (
-        spark.read.parquet(root + "/centroids"),
+        index_store.read_table(spark, index_url, "centroids"),
         cb,
-        spark.read.parquet(root + "/codes"),
+        index_store.read_table(spark, index_url, "codes"),
     )
 
 
@@ -2880,20 +2757,15 @@ def ivfpq_append(
     compact small appended files periodically with
     ``compact_dataset(..., partition_by=['cell'])``; re-train and
     rebuild when recall drifts, like any IVF deployment."""
-    root = index_url.rstrip("/")
     cent, codebooks, codes = ivfpq_index_read(spark, index_url)
     if check_ids:
-        dup = (
-            codes.select(id_col)
-            .join(F.broadcast(new_vectors.select(id_col)), id_col, "semi")
-            .limit(1)
-            .collect()
+        index_store.refuse_stored_ids(
+            "ivfpq_append",
+            codes,
+            new_vectors,
+            id_col,
+            index_store.table_url(index_url, "codes"),
         )
-        if dup:
-            raise ValueError(
-                f"ivfpq_append: id {dup[0][0]!r} already indexed - "
-                "appending it again would corrupt every later probe"
-            )
     # ivf_build with centroids= reuses the exact assignment path (and
     # tie-breaks) the index was built with
     _, assigned = ivf_build(new_vectors, id_col, vec_col, centroids=cent)
@@ -2914,14 +2786,7 @@ def ivfpq_append(
     coded = pq_encode(res, codebooks, id_col, "_res").select(
         id_col, "cell", "pq_codes"
     )
-    # persist across count + write (same rationale as ivf_append)
-    coded = materialize(coded)
-    try:
-        n = coded.count()
-        coded.write.mode("append").partitionBy("cell").parquet(root + "/codes")
-    finally:
-        release(coded)
-    return n
+    return index_store.append(index_url, "codes", coded, "cell")
 
 
 def ivfpq_query(
@@ -3740,27 +3605,23 @@ def prefix_index_write(
     computed in the scan still reads the full vector column off disk;
     this index stores only the leading block). The dimensionality is
     recorded in a JSON sidecar."""
-    import json as _json
-
-    root = index_url.rstrip("/")
-    corpus.select(
-        F.col(id_col),
-        F.slice(F.col(vec_col), 1, prefix_dim).alias("prefix"),
-    ).write.mode("overwrite").parquet(root + "/prefix")
-    fs, local_root = _index_fs(index_url)
-    with fs.open_output_stream(local_root.rstrip("/") + "/prefix.json") as f:
-        f.write(_json.dumps({"prefix_dim": int(prefix_dim)}).encode())
+    prefix = corpus.select(
+        F.col(id_col), F.slice(F.col(vec_col), 1, prefix_dim).alias("prefix")
+    )
+    index_store.write(
+        index_url,
+        [("prefix", prefix, None)],
+        "prefix.json",
+        {"prefix_dim": int(prefix_dim)},
+    )
 
 
 def prefix_index_read(spark, index_url: str):
     """Load a persisted prefix index: ``(prefix_dim, prefix DataFrame)``."""
-    import json as _json
-
-    root = index_url.rstrip("/")
-    fs, local_root = _index_fs(index_url)
-    with fs.open_input_file(local_root.rstrip("/") + "/prefix.json") as f:
-        payload = _json.loads(f.read().decode())
-    return int(payload["prefix_dim"]), spark.read.parquet(root + "/prefix")
+    payload = index_store.read_params(index_url, "prefix.json")
+    return int(payload["prefix_dim"]), index_store.read_table(
+        spark, index_url, "prefix"
+    )
 
 
 def prefix_index_append(
@@ -3781,31 +3642,19 @@ def prefix_index_append(
     semi-joins batch ids against the stored ids and refuses overlaps.
     Returns the number of rows appended. Scale: one column-pruned
     id semi-join + one batch-sized append write."""
-    root = index_url.rstrip("/")
     prefix_dim, existing = prefix_index_read(spark, index_url)
-    batch = new_vectors.select(
-        F.col(id_col),
-        F.slice(F.col(vec_col), 1, prefix_dim).alias("prefix"),
-    )
     if check_ids:
-        n_dup = (
-            batch.select(id_col)
-            .join(
-                existing.select(F.col(existing.columns[0]).alias(id_col)),
-                id_col,
-                "left_semi",
-            )
-            .count()
+        index_store.refuse_stored_ids(
+            "prefix_index_append",
+            existing.select(F.col(existing.columns[0]).alias(id_col)),
+            new_vectors,
+            id_col,
+            index_store.table_url(index_url, "prefix"),
         )
-        if n_dup:
-            raise ValueError(
-                f"prefix_index_append: {n_dup} batch id(s) already exist "
-                f"in {root}/prefix — appending would duplicate index rows "
-                "(pass check_ids=False only if ids are guaranteed fresh)"
-            )
-    n = batch.count()
-    batch.write.mode("append").parquet(root + "/prefix")
-    return n
+    batch = new_vectors.select(
+        F.col(id_col), F.slice(F.col(vec_col), 1, prefix_dim).alias("prefix")
+    )
+    return index_store.append(index_url, "prefix", batch)
 
 
 def prefix_query(

@@ -5423,6 +5423,44 @@ def knn_graph_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _cached_index(sf_dir: str, stem: str, params_file: str, build) -> str:
+    """Build an index over ``sf_dir``'s embeddings once and return its
+    URL: ``<tmp>/<stem><sf_dir token>_<fingerprint>``. The fingerprint
+    hashes the source parquet's file names, mtimes and sizes, so a
+    dataset regenerated at the same path gets a new index rather than
+    stale neighbors. ``build(url)`` writes into a process-private dir
+    that is renamed into place; the params file, written last, marks
+    the index complete, and a concurrent process that wins the rename
+    is kept."""
+    import hashlib
+    import os
+    import shutil
+    import tempfile
+
+    src = os.path.join(sf_dir, "embeddings.parquet")
+    h = hashlib.md5()
+    if os.path.isdir(src):
+        for name in sorted(os.listdir(src)):
+            st = os.stat(os.path.join(src, name))
+            h.update(f"{name}:{st.st_mtime_ns}:{st.st_size};".encode())
+    elif os.path.exists(src):
+        st = os.stat(src)
+        h.update(f"{src}:{st.st_mtime_ns}:{st.st_size}".encode())
+    token = sf_dir.rstrip("/").replace("/", "_")
+    url = os.path.join(tempfile.gettempdir(), f"{stem}{token}_{h.hexdigest()[:12]}")
+    marker = os.path.join(url, params_file)
+    if not os.path.exists(marker):
+        tmp = f"{url}.build{os.getpid()}"
+        build(tmp)
+        try:
+            os.rename(tmp, url)
+        except OSError:
+            shutil.rmtree(tmp, ignore_errors=True)
+            if not os.path.exists(marker):
+                raise
+    return url
+
+
 @register("knn_graph_incremental", oracle=_knn_graph_oracle())
 def knn_graph_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The PERSISTED incremental kNN graph (r13): build the index on
@@ -5435,15 +5473,8 @@ def knn_graph_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     incremental path must land on exactly the edges a from-scratch
     rebuild produces (same quantizer, same candidate rule, fold-exact
     cosines), which is the strongest possible check of the merge
-    logic. Index cached per dataset fingerprint (mtime+size), built in
-    a process-private dir and atomically renamed (the
-    ann_cosine_prefix_indexed caching contract), so repeat runs price
-    the READ — the production steady state."""
-    import hashlib as _hashlib
-    import os as _os
-    import shutil as _shutil
-    import tempfile as _tempfile
-
+    logic. Index built once per dataset (:func:`_cached_index`), so
+    repeat runs price the READ — the production steady state."""
     from petastorm_spark.operators.similarity import (
         knn_graph_append,
         knn_graph_read,
@@ -5451,34 +5482,13 @@ def knn_graph_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     emb = _t_wide(spark, sf_dir, "embeddings")
-    src = _os.path.join(sf_dir, "embeddings.parquet")
-    h = _hashlib.md5()
-    if _os.path.isdir(src):
-        for name in sorted(_os.listdir(src)):
-            st = _os.stat(_os.path.join(src, name))
-            h.update(f"{name}:{st.st_mtime_ns}:{st.st_size};".encode())
-    elif _os.path.exists(src):
-        st = _os.stat(src)
-        h.update(f"{src}:{st.st_mtime_ns}:{st.st_size}".encode())
-    token = sf_dir.rstrip("/").replace("/", "_")
-    url = _os.path.join(
-        _tempfile.gettempdir(),
-        f"ps_knn_graph_idx{token}_{h.hexdigest()[:12]}",
-    )
-    marker = _os.path.join(url, "knn_graph.json")
-    if not _os.path.exists(marker):
-        tmp = f"{url}.build{_os.getpid()}"
-        batch_cond = (F.col("vec_id") % 10 == 7) & (F.col("vec_id") >= 16)
-        knn_graph_write(
-            tmp, emb.where(~batch_cond), k=3, n_cells=16, n_probe=2
-        )
-        knn_graph_append(spark, tmp, emb.where(batch_cond))
-        try:
-            _os.rename(tmp, url)
-        except OSError:
-            _shutil.rmtree(tmp, ignore_errors=True)
-            if not _os.path.exists(marker):
-                raise
+    batch_cond = (F.col("vec_id") % 10 == 7) & (F.col("vec_id") >= 16)
+
+    def build(url):
+        knn_graph_write(url, emb.where(~batch_cond), k=3, n_cells=16, n_probe=2)
+        knn_graph_append(spark, url, emb.where(batch_cond))
+
+    url = _cached_index(sf_dir, "ps_knn_graph_idx", "knn_graph.json", build)
     _, edges = knn_graph_read(spark, url)
     return edges
 
@@ -6090,19 +6100,9 @@ def ann_cosine_prefix_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
     not an in-plan slice of the full vector column (ReadSchema pinned
     in tests/test_plans.py) — and the 4x-k shortlist joins the full
     vectors for the exact-cosine rescore. Same output, same oracle as
-    the index-free variant; the index is built once per DATASET so
-    repeat runs price the SEARCH, the production steady state. The
-    cache key is a fingerprint of the source parquet (file names +
-    mtimes + sizes), not just the path — regenerating the dataset at
-    the same path invalidates the index instead of silently serving
-    stale neighbors — and the build lands in a process-private temp
-    dir atomically renamed into place, so two concurrent first runs
-    cannot interleave a half-written index (r12 ADVICE)."""
-    import hashlib as _hashlib
-    import os as _os
-    import shutil as _shutil
-    import tempfile as _tempfile
-
+    the index-free variant; the index is built once per DATASET
+    (:func:`_cached_index`) so repeat runs price the SEARCH, the
+    production steady state."""
     from petastorm_spark.operators.similarity import (
         prefix_index_read,
         prefix_index_write,
@@ -6110,30 +6110,12 @@ def ann_cosine_prefix_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     emb = _t_wide(spark, sf_dir, "embeddings")
-    src = _os.path.join(sf_dir, "embeddings.parquet")
-    h = _hashlib.md5()
-    if _os.path.isdir(src):
-        for name in sorted(_os.listdir(src)):
-            st = _os.stat(_os.path.join(src, name))
-            h.update(f"{name}:{st.st_mtime_ns}:{st.st_size};".encode())
-    elif _os.path.exists(src):
-        st = _os.stat(src)
-        h.update(f"{src}:{st.st_mtime_ns}:{st.st_size}".encode())
-    token = sf_dir.rstrip("/").replace("/", "_")
-    url = _os.path.join(
-        _tempfile.gettempdir(), f"ps_prefix_idx{token}_{h.hexdigest()[:12]}"
+    url = _cached_index(
+        sf_dir,
+        "ps_prefix_idx",
+        "prefix.json",
+        lambda url: prefix_index_write(url, emb, prefix_dim=16),
     )
-    marker = _os.path.join(url, "prefix.json")
-    if not _os.path.exists(marker):
-        tmp = f"{url}.build{_os.getpid()}"
-        prefix_index_write(tmp, emb, prefix_dim=16)
-        try:
-            _os.rename(tmp, url)
-        except OSError:
-            # a concurrent builder won the rename; keep theirs
-            _shutil.rmtree(tmp, ignore_errors=True)
-            if not _os.path.exists(marker):
-                raise
     pdim, pdf = prefix_index_read(spark, url)
     return prefix_query(
         pdf, emb, emb.where(F.col("vec_id") < 10),

@@ -409,8 +409,11 @@ def materialize(df: DataFrame, *, cut: bool = False) -> DataFrame:
 def _free(df: DataFrame, cut: bool) -> None:
     if cut:
         # DataFrame.unpersist() is a no-op on a checkpointed frame: its
-        # blocks belong to the RDD under the LogicalRDD leaf
-        df._jdf.queryExecution().analyzed().rdd().unpersist(False)
+        # blocks belong to the RDD under the LogicalRDD leaf. Freed
+        # through the SparkContext: RDD.unpersist() would also log a
+        # "lineage has been truncated" WARN for every release.
+        rdd = df._jdf.queryExecution().analyzed().rdd()
+        rdd.context().unpersistRDD(rdd.id(), False)
     else:
         df.unpersist()
 

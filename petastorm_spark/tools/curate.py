@@ -25,6 +25,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from petastorm_spark.etl.dataset_metadata import materialize_dataset
+from petastorm_spark.operators import index_store
 from petastorm_spark.operators.pipeline import curate_corpus, curation_report
 from petastorm_spark.session import materialize, release
 from petastorm_spark.unischema import Unischema
@@ -450,13 +451,10 @@ def curate_incremental(
     use_index = dedup_index_url is not None
     index_exists = False
     old_sids = None
-    idx_root = tmp_sids_url = None
     if use_index:
         from petastorm_spark.operators import dedup as _dd
 
-        idx_root = dedup_index_url.rstrip("/")
-        ifs, ipath = _fs_and_path(spark, idx_root + "/signatures")
-        index_exists = ifs.exists(ipath)
+        index_exists = index_store.table_exists(spark, dedup_index_url, "signatures")
         if not index_exists and moved_keys is not None:
             raise ValueError(
                 f"no LSH index at {dedup_index_url} but the target "
@@ -473,7 +471,9 @@ def curate_incremental(
         }
         if index_exists:
             stored = (
-                spark.read.parquet(idx_root + "/config").first().asDict()
+                index_store.read_table(spark, dedup_index_url, "config")
+                .first()
+                .asDict()
             )
             mism = {
                 k: (stored.get(k), v)
@@ -495,8 +495,9 @@ def curate_incremental(
                 if r["status"] == "changed"
             ] + removed
             if old_keys:
-                tmp_sids_url = idx_root + "/_run_old_sids"
-                (
+                index_store.write_table(
+                    dedup_index_url,
+                    "_run_old_sids",
                     _with_sid(
                         spark.read.parquet(target_url)
                         .where(_keys_pred(part_cols, old_keys))
@@ -505,11 +506,11 @@ def curate_incremental(
                         text_col,
                     )
                     .select(SID_COL)
-                    .distinct()
-                    .write.mode("overwrite")
-                    .parquet(tmp_sids_url)
+                    .distinct(),
                 )
-                old_sids = spark.read.parquet(tmp_sids_url)
+                old_sids = index_store.read_table(
+                    spark, dedup_index_url, "_run_old_sids"
+                )
 
     counts: dict[str, int] = {}
     if moved_keys is None or moved_keys:
@@ -570,23 +571,10 @@ def curate_incremental(
         out = materialize(stages["output"])
         try:
             schema = Unischema.from_spark_schema(out.schema)
-            prev_mode = spark.conf.get(
-                "spark.sql.sources.partitionOverwriteMode", "static"
-            )
-            spark.conf.set(
-                "spark.sql.sources.partitionOverwriteMode", "dynamic"
-            )
-            try:
-                with materialize_dataset(
-                    spark, target_url, schema, row_group_size_mb
-                ):
-                    out.write.mode("overwrite").partitionBy(
-                        *part_cols
-                    ).parquet(target_url)
-            finally:
-                spark.conf.set(
-                    "spark.sql.sources.partitionOverwriteMode", prev_mode
-                )
+            with materialize_dataset(spark, target_url, schema, row_group_size_mb):
+                out.write.mode("overwrite").option(
+                    "partitionOverwriteMode", "dynamic"
+                ).partitionBy(*part_cols).parquet(target_url)
             if moved_keys is not None:
                 # a changed partition whose every row was curated away
                 # writes nothing under dynamic overwrite — drop it like
@@ -624,11 +612,13 @@ def curate_incremental(
                     dedup_n_shards,
                 )
                 _dd.lsh_index_write(dedup_index_url, b, s)
-                spark.createDataFrame(
-                    [tuple(cfg.values())],
-                    ", ".join(f"{k} int" for k in cfg),
-                ).coalesce(1).write.mode("overwrite").parquet(
-                    idx_root + "/config"
+                index_store.write_table(
+                    dedup_index_url,
+                    "config",
+                    spark.createDataFrame(
+                        [tuple(cfg.values())],
+                        ", ".join(f"{k} int" for k in cfg),
+                    ).coalesce(1),
                 )
                 counts["index_appended"] = counts.get("output", 0)
             elif use_index:
@@ -636,7 +626,9 @@ def curate_incremental(
                 # must compact first: a tombstone kills EVERY row of
                 # the id, so appending over dead rows would bury the
                 # resurrected doc with them
-                tomb = _dd._lsh_read_tombstones(spark, idx_root)
+                tomb = index_store.read_optional_table(
+                    spark, dedup_index_url, "tombstones"
+                )
                 if (
                     tomb is not None
                     and final_sid.select(SID_COL)
@@ -646,8 +638,8 @@ def curate_incremental(
                     > 0
                 ):
                     _dd.lsh_index_compact(spark, dedup_index_url)
-                raw_ids = spark.read.parquet(
-                    idx_root + "/signatures"
+                raw_ids = index_store.read_table(
+                    spark, dedup_index_url, "signatures"
                 ).select(SID_COL)
                 batch = final_sid.join(raw_ids, SID_COL, "left_anti")
                 n_app = batch.count()
@@ -729,9 +721,8 @@ def curate_incremental(
     cur.write.mode("overwrite").parquet(
         target_url.rstrip("/") + "/" + SOURCE_MANIFEST_DIRNAME
     )
-    if tmp_sids_url is not None:
-        sfs, spath = _fs_and_path(spark, tmp_sids_url)
-        sfs.delete(spath, True)
+    if old_sids is not None:
+        index_store.drop_table(spark, dedup_index_url, "_run_old_sids")
     counts.update(
         partitions_added=n_added,
         partitions_changed=n_changed,

@@ -140,3 +140,32 @@ def test_materialization_goes_through_session_only():
                     if raw.search(line):
                         hits.append(f"{os.path.relpath(path, pkg)}:{i}: {line.strip()}")
     assert not hits, "materialize outside session.py:\n" + "\n".join(hits)
+
+
+def test_no_session_wide_partition_overwrite_mode():
+    """Dynamic partition overwrite is a per-write option
+    (``.option("partitionOverwriteMode", "dynamic")``). Setting it
+    through ``spark.conf`` flips it for every concurrent write on the
+    session."""
+    import os
+    import re
+
+    pkg = os.path.join(
+        os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+        "petastorm_spark",
+    )
+    conf_set = re.compile(r"\.conf\.set\(")
+    hits = []
+    for root, _, files in os.walk(pkg):
+        for name in sorted(files):
+            if not name.endswith(".py"):
+                continue
+            path = os.path.join(root, name)
+            with open(path) as f:
+                text = f.read()
+            # the key may sit on the line after the call's parenthesis
+            for m in conf_set.finditer(text):
+                if "partitionOverwriteMode" in text[m.end():text.find(")", m.end())]:
+                    line = text.count("\n", 0, m.start()) + 1
+                    hits.append(f"{os.path.relpath(path, pkg)}:{line}")
+    assert not hits, "partitionOverwriteMode set through spark.conf:\n" + "\n".join(hits)

@@ -225,6 +225,33 @@ def test_kcore_holds_one_checkpoint_whatever_max_rounds(spark):
     assert freed == [1, 1], freed
 
 
+def test_releasing_a_checkpoint_logs_no_warning():
+    """A released checkpoint is freed through the SparkContext:
+    ``RDD.unpersist()`` logs "was locally checkpointed, its lineage has
+    been truncated" for every release."""
+    script = textwrap.dedent(
+        f"""
+        import sys
+
+        sys.path.insert(0, {ROOT!r})
+        from petastorm_spark.session import get_spark, materialize, release
+
+        spark = get_spark("release_warn", cpus=1)
+        df = materialize(spark.range(100), cut=True)
+        assert df.count() == 100
+        release(df)
+        print("PERSISTENT", len(spark.sparkContext._jsc.getPersistentRDDs()))
+        spark.stop()
+        """
+    )
+    proc = subprocess.run(
+        [sys.executable, "-c", script], capture_output=True, text=True, timeout=600
+    )
+    assert proc.returncode == 0, proc.stderr[-3000:]
+    assert "PERSISTENT 0" in proc.stdout, proc.stdout[-2000:]
+    assert "locally checkpointed" not in proc.stderr, proc.stderr[-3000:]
+
+
 def test_workers_import_package_from_any_cwd(tmp_path):
     """Driver outside the repository, ``PYTHONPATH`` unset, the package on
     the driver's ``sys.path`` only: an RDD map and a ``mapInPandas`` that
@@ -521,19 +548,25 @@ def test_spark_home_with_real_conf_gets_no_cds(tmp_path):
 
 
 def _dumpers(cds):
-    """Pids of live ``petastorm_spark._cds_dump`` processes for ``cds``."""
-    pids = set()
+    """Pids of live ``petastorm_spark._cds_dump`` processes for ``cds``.
+    A child the dumper forks keeps the dumper's argv until it execs, so
+    a matched pid whose parent is also matched is not a dumper (real
+    dumpers are double-forked and never parent each other)."""
+    parents = {}
     for entry in os.listdir("/proc"):
         if not entry.isdigit():
             continue
         try:
             with open(f"/proc/{entry}/cmdline", "rb") as f:
                 argv = f.read().decode(errors="replace").split("\0")
-        except OSError:
+            if argv[1:4] != ["-m", "petastorm_spark._cds_dump", cds]:
+                continue
+            with open(f"/proc/{entry}/status") as f:
+                ppid = next(int(ln.split()[1]) for ln in f if ln.startswith("PPid:"))
+        except (OSError, StopIteration):
             continue
-        if argv[1:4] == ["-m", "petastorm_spark._cds_dump", cds]:
-            pids.add(int(entry))
-    return pids
+        parents[int(entry)] = ppid
+    return {pid for pid, ppid in parents.items() if ppid not in parents}
 
 
 @pytest.fixture(scope="module")
