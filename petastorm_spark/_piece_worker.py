@@ -1,10 +1,11 @@
-"""Row-group load, partition-value, DNF-mask and decode helpers that
-the Reader's one piece function (``reader._read_piece``) composes, plus
-the DNF row-group pruning the Reader applies when it plans its pieces.
+"""Row-group load, partition-value and decode helpers that the
+Reader's one piece function (``reader._read_piece``) composes, and the
+owner of the reader's filter language: its parser, its op table, the
+row mask and row-group pruning.
 
 Parity surface: petastorm/py_dict_reader_worker.py:150-232 (row-group
 load, two-phase decode) and petastorm/arrow_reader_worker.py (DNF
-filters). The functions here use only numpy, pandas and pyarrow and
+filters). The piece helpers use only numpy, pandas and pyarrow and
 never reach a SparkSession, so the piece function runs unchanged in the
 parent (inline and thread pools) and in ``reader_pool_type='process'``
 workers. The module is not free of pyspark, though: importing it runs
@@ -16,9 +17,15 @@ start (it never launches a JVM).
 
 from __future__ import annotations
 
+import contextlib
+import datetime
+import operator
+from typing import Callable, NamedTuple
+
 import numpy as np
 import pandas as pd
 import pyarrow as pa
+import pyarrow.compute as pc
 import pyarrow.parquet as pq
 
 
@@ -193,124 +200,198 @@ def decode_col(
     return decode_series(field, s)
 
 
-def scalar_frame(table: pa.Table, parts: dict, names) -> pd.DataFrame:
-    """Undecode d pandas frame of the given (scalar) columns — the DNF
-    mask input. Partition columns come from ``parts`` as constants."""
-    data = {}
-    for c in names:
-        if c in parts:
-            data[c] = pd.Series([parts[c]] * len(table))
-        else:
-            data[c] = table.column(c).to_pandas()
-    return pd.DataFrame(data)
-
-
 # ---------------------------------------------------------------------------
-# DNF (pyarrow-style) filters: [('col', op, val), ...] conjunction, or a
-# list of such lists (disjunction of conjunctions). Reference surface:
-# petastorm make_batch_reader(filters=...) passes these to pyarrow.
+# The reader's filter language: pyarrow/petastorm-style DNF filters, a
+# list of OR-ed clauses, each a list of AND-ed ('column', op, value)
+# tuples (reference: make_batch_reader(filters=...) hands them to
+# pyarrow). The one op table below drives the Spark plan filter
+# (reader._dnf_to_column), the row mask (dnf_mask) and row-group pruning
+# (rg_may_match), with Spark SQL semantics: a null never matches, and NaN
+# equals NaN and sorts above every other value.
 # ---------------------------------------------------------------------------
 
 
-def is_dnf_filters(filters) -> bool:
-    if not isinstance(filters, (list, tuple)) or not filters:
-        return False
-    first = filters[0]
-    if isinstance(first, tuple) and len(first) == 3:
-        return all(isinstance(f, tuple) and len(f) == 3 for f in filters)
-    if isinstance(first, (list, tuple)):
-        return all(
-            isinstance(cl, (list, tuple))
-            and cl
-            and all(isinstance(f, tuple) and len(f) == 3 for f in cl)
-            for cl in filters
+def _isin(x, values):
+    # a Spark Column brings its own isin; numpy arrays use np.isin
+    return x.isin(list(values)) if hasattr(x, "isin") else np.isin(x, values)
+
+
+class _Op(NamedTuple):
+    test: Callable  # row test over (column, literal): Spark Column or numpy
+    may: Callable  # (min, max, literal) -> may a row in [min, max] pass?
+    negation: str  # passes exactly the non-null rows this op rejects
+    mirror: str | None  # the op with its operands swapped; None: list op
+
+
+OPS = {
+    "=": _Op(operator.eq, lambda lo, hi, v: lo <= v <= hi, "!=", "="),
+    "!=": _Op(operator.ne, lambda lo, hi, v: not lo == hi == v, "=", "!="),
+    "<": _Op(operator.lt, lambda lo, hi, v: lo < v, ">=", ">"),
+    "<=": _Op(operator.le, lambda lo, hi, v: lo <= v, ">", ">="),
+    ">": _Op(operator.gt, lambda lo, hi, v: hi > v, "<=", "<"),
+    ">=": _Op(operator.ge, lambda lo, hi, v: hi >= v, "<", "<="),
+    "in": _Op(_isin, lambda lo, hi, vs: any(lo <= v <= hi for v in vs), "not in", None),
+    "not in": _Op(lambda x, vs: ~_isin(x, vs),
+                  lambda lo, hi, vs: not (lo == hi and lo in vs), "in", None),
+}
+
+
+class Cond(NamedTuple):
+    column: str
+    op: str  # a key of OPS
+    value: object  # the literal in the column's type; a tuple for list ops
+    as_float: bool  # compared as doubles: a float column or a float literal
+
+
+def _float_key(x) -> np.ndarray:
+    # doubles as int64 keys in Spark's order: -0.0 equals 0.0, and NaN
+    # equals NaN and sorts above +inf
+    a = np.asarray(x, dtype=np.float64) + 0.0  # -0.0 + 0.0 is +0.0
+    bits = np.where(np.isnan(a), np.nan, a).view(np.int64)  # one NaN
+    return np.where(bits < 0, bits ^ np.int64(0x7FFFFFFFFFFFFFFF), bits)
+
+
+_NAN_KEY = _float_key(np.nan)
+
+
+def _domain(x, as_float: bool):
+    # column values, statistics bounds or literal as a condition compares them
+    return _float_key(x) if as_float else x
+
+
+# Spark numeric column types, with the cast Spark applies to a string
+# literal compared with them
+_NUMERIC = {"byte": int, "short": int, "integer": int, "long": int,
+            "float": float, "double": float}
+# the literal types every other column type compares with unconverted
+_PLAIN = {"string": str, "binary": bytes, "boolean": bool, "date": datetime.date,
+          None: (bool, int, float, str, bytes, datetime.date)}  # type unknown
+
+
+def _literal(dtype, v, clause):
+    # v in its column's type, as Spark's implicit cast converts it (a float
+    # compares as a double), else ValueError naming the clause
+    v = v.item() if isinstance(v, np.generic) else v
+    kind = dtype.typeName() if dtype is not None else None
+    cast = _NUMERIC.get(kind)
+    if cast and isinstance(v, str) and "_" not in v:
+        with contextlib.suppress(ValueError):
+            v = cast(v)
+    if cast and isinstance(v, (int, float)) and not isinstance(v, bool):
+        if cast is float or isinstance(v, float):
+            return float(v)
+        if -(2**63) <= v < 2**63:
+            return v
+    elif not cast and isinstance(v, _PLAIN.get(kind, ())):
+        return v
+    raise ValueError(
+        f"filter {clause!r}: literal {v!r} cannot be compared with column "
+        f"{clause[0]!r} of type {dtype.simpleString() if dtype else 'unknown'}"
+    )
+
+
+def _cond(clause, dtype) -> Cond | None:
+    # one parsed condition; None when it passes every row
+    col, op, value = clause
+    op = "=" if op == "==" else op
+    if op not in OPS:
+        raise ValueError(f"filter {clause!r}: unsupported op {op!r}; ops "
+                         f"are {sorted(OPS)} and '=='")
+    listy = OPS[op].mirror is None
+    if listy and (isinstance(value, (str, bytes)) or not hasattr(value, "__iter__")):
+        raise ValueError(f"filter {clause!r}: {op!r} takes a list of values")
+    values = tuple(value) if listy else (value,)
+    if op == "not in" and not values:
+        return None  # Spark: NULL IN () is false, so NOT IN () passes nulls
+    if op != "in" and any(v is None for v in values):
+        return Cond(col, "in", (), False)  # x = NULL, x NOT IN (NULL): no row
+    lits = tuple(_literal(dtype, v, clause) for v in values if v is not None)
+    as_float = any(isinstance(v, float) for v in lits)
+    return Cond(col, op, lits if listy else lits[0], as_float)
+
+
+def parse_filters(filters, types: dict) -> tuple:
+    """OR-ed clauses of AND-ed :class:`Cond` from one clause (a list of
+    ``(column, op, value)`` tuples) or a list of clauses; ``types`` maps
+    columns to Spark data types. Raises ValueError on a malformed filter,
+    an unknown op or a literal its column cannot be compared with."""
+
+    def is_cond(c) -> bool:
+        return isinstance(c, tuple) and len(c) == 3 and isinstance(c[0], str)
+
+    flat = isinstance(filters, (list, tuple)) and filters and is_cond(filters[0])
+    clauses = [filters] if flat else filters
+    if not isinstance(clauses, (list, tuple)) or not clauses or not all(
+        isinstance(cl, (list, tuple)) and cl and all(map(is_cond, cl))
+        for cl in clauses
+    ):
+        raise ValueError(
+            "filters must be a Spark Column, or a non-empty list of (column, "
+            f"op, value) tuples or of such lists; got {filters!r}"
         )
-    return False
+    return tuple(
+        tuple(filter(None, (_cond(c, types.get(c[0])) for c in clause)))
+        for clause in clauses
+    )
 
 
-def dnf_clauses(filters) -> list:
-    return list(filters) if isinstance(filters[0], (list, tuple)) and not (
-        isinstance(filters[0], tuple) and len(filters[0]) == 3
-    ) else [list(filters)]
+def _column_values(table: pa.Table, parts: dict, name: str, as_float: bool):
+    # (validity, values in the condition's domain) as numpy arrays; True
+    # validity: no nulls; values None: all null. Null slots of values
+    # hold a stand-in of the column's type.
+    col = pa.array([parts[name]] * len(table)) if name in parts else table.column(name)
+    if col.null_count == len(col):
+        return False, None
+    valid = col.is_valid().to_numpy(zero_copy_only=False) if col.null_count else True
+    if col.null_count:
+        col = col.fill_null(pc.min(col))
+    return valid, _domain(col.to_numpy(zero_copy_only=False), as_float)
 
 
-def dnf_columns(filters) -> list[str]:
-    return sorted({c for clause in dnf_clauses(filters) for c, _, _ in clause})
-
-
-def _cond_mask(pdf: pd.DataFrame, col: str, op: str, val) -> np.ndarray:
-    s = pdf[col]
-    if op in ("=", "=="):
-        m = s == val
-    elif op == "!=":
-        # SQL/pyarrow null semantics: NULL != x is NULL (dropped).  Plain
-        # pandas `s != val` evaluates True for float NaN, which would make
-        # the direct-stream tier keep rows the plan tier drops.
-        m = (s != val) & s.notna()
-    elif op == "<":
-        m = s < val
-    elif op == "<=":
-        m = s <= val
-    elif op == ">":
-        m = s > val
-    elif op == ">=":
-        m = s >= val
-    elif op == "in":
-        m = s.isin(list(val))
-    elif op == "not in":
-        m = ~s.isin(list(val)) & s.notna()
-    else:
-        raise ValueError(f"unsupported DNF filter op {op!r}")
-    return np.asarray(m.fillna(False), dtype=bool)
-
-
-def dnf_mask(pdf: pd.DataFrame, filters) -> np.ndarray:
-    out = np.zeros(len(pdf), dtype=bool)
-    for clause in dnf_clauses(filters):
-        m = np.ones(len(pdf), dtype=bool)
-        for col, op, val in clause:
-            m &= _cond_mask(pdf, col, op, val)
+def dnf_mask(table: pa.Table, parts: dict, clauses) -> np.ndarray:
+    """The rows of one piece that pass the parsed filter, as a numpy bool
+    array. Nulls come from arrow validity, so a null (never a match)
+    stays distinct from a NaN."""
+    cols: dict = {}
+    out = np.zeros(len(table), dtype=bool)
+    for clause in clauses:
+        m = np.ones(len(table), dtype=bool)
+        for c in clause:
+            key = (c.column, c.as_float)
+            if key not in cols:
+                cols[key] = _column_values(table, parts, *key)
+            valid, values = cols[key]
+            lit = _domain(c.value, c.as_float)
+            m &= valid if values is None else valid & OPS[c.op].test(values, lit)
         out |= m
     return out
 
 
-def rg_may_match(rg_meta, col_names: list[str], filters) -> bool:
-    """Row-group pruning from parquet min/max statistics: False only if
-    NO disjunct can possibly match (conservative — missing stats, or
-    columns not in the file such as hive-partition keys, keep the
-    group)."""
+def rg_may_match(md, rg: int, clauses) -> bool:
+    """May row group ``rg`` of a file (parquet metadata ``md``) hold a row
+    that passes the parsed filter, judging from min/max statistics? Kept
+    when a column has no statistics or is not in the file (hive partition
+    keys), or a bound is NaN or incomparable with the literal; a float
+    column's max reads as NaN, as writers may leave NaN out of it."""
+    names = md.schema.names
+    row_group = md.row_group(rg)
 
-    def cond_possible(col, op, val) -> bool:
-        try:
-            idx = col_names.index(col)
-        except ValueError:
+    def may(c: Cond) -> bool:
+        if c.column not in names:
             return True
-        stats = rg_meta.column(idx).statistics
+        chunk = row_group.column(names.index(c.column))
+        stats = chunk.statistics
         if stats is None or not stats.has_min_max:
             return True
-        mn, mx = stats.min, stats.max
+        lo, hi = stats.min, stats.max
+        if c.as_float:
+            if lo != lo:
+                return True
+            floating = chunk.physical_type in ("FLOAT", "DOUBLE")
+            lo, hi = _float_key(lo), _NAN_KEY if floating else _float_key(hi)
         try:
-            if op in ("=", "=="):
-                return mn <= val <= mx
-            if op == "!=":
-                return not (mn == mx == val)
-            if op == "<":
-                return mn < val
-            if op == "<=":
-                return mn <= val
-            if op == ">":
-                return mx > val
-            if op == ">=":
-                return mx >= val
-            if op == "in":
-                return any(mn <= v <= mx for v in val)
-            if op == "not in":
-                return not (mn == mx and mn in list(val))
+            return bool(OPS[c.op].may(lo, hi, _domain(c.value, c.as_float)))
         except TypeError:
             return True  # incomparable types: never prune on a guess
-        return True
 
-    return any(
-        all(cond_possible(*cond) for cond in clause)
-        for clause in dnf_clauses(filters)
-    )
+    return any(all(map(may, clause)) for clause in clauses)

@@ -14,6 +14,8 @@ from decimal import Decimal
 
 import numpy as np
 
+from petastorm_spark.bridges import rechunk
+
 try:  # gated: container has no tensorflow
     import tensorflow as tf
 
@@ -47,26 +49,14 @@ def _sanitize(arr: np.ndarray) -> np.ndarray:
 def batch_generator(reader, batch_size: int | None = None):
     """Yield dicts of sanitized numpy column vectors; ``batch_size``
     re-chunks row-group batches (None = one dict per row group)."""
-    pend: dict[str, list[np.ndarray]] = {}
-    count = 0
-    for batch in reader:
-        d = {k: _sanitize(np.asarray(v)) for k, v in batch._asdict().items()}
-        if batch_size is None:
-            yield d
-            continue
-        for k, v in d.items():
-            pend.setdefault(k, []).append(v)
-        count += len(next(iter(d.values())))
-        while count >= batch_size:
-            out, rest = {}, {}
-            for k, chunks in pend.items():
-                merged = np.concatenate(chunks)
-                out[k] = merged[:batch_size]
-                rest[k] = [merged[batch_size:]]
-            pend, count = rest, count - batch_size
-            yield out
-    if batch_size is not None and count:
-        yield {k: np.concatenate(chunks) for k, chunks in pend.items()}
+    batches = (
+        {k: _sanitize(np.asarray(v)) for k, v in b._asdict().items()}
+        for b in reader
+    )
+    if batch_size is None:
+        yield from batches
+    else:
+        yield from rechunk(batches, batch_size)
 
 
 def make_petastorm_dataset(reader, batch_size: int | None = None):

@@ -11,6 +11,8 @@ from __future__ import annotations
 
 import numpy as np
 
+from petastorm_spark.bridges import rechunk
+
 try:  # gated: container has no torch
     import torch
 
@@ -98,30 +100,13 @@ class DataLoader:
         return self.reader
 
     def __iter__(self):
-        pend: dict[str, list[np.ndarray]] = {}
-        count = 0
         keys = self._keys
-        for batch in self._source():
-            d = batch._asdict()
-            keys = keys or list(d)
-            for k in keys:
-                pend.setdefault(k, []).append(np.asarray(d[k]))
-            count += len(next(iter(d.values())))
-            while count >= self.batch_size:
-                out = {}
-                rest = {}
-                for k, chunks in pend.items():
-                    merged = np.concatenate(chunks)
-                    out[k] = merged[: self.batch_size]
-                    rest[k] = [merged[self.batch_size :]]
-                pend = rest
-                count -= self.batch_size
-                yield {k: _to_tensor(_sanitize(v)) for k, v in out.items()}
-        if count:
-            yield {
-                k: _to_tensor(_sanitize(np.concatenate(chunks)))
-                for k, chunks in pend.items()
-            }
+        batches = (
+            {k: np.asarray(d[k]) for k in keys or d}
+            for d in (b._asdict() for b in self._source())
+        )
+        for out in rechunk(batches, self.batch_size):
+            yield {k: _to_tensor(_sanitize(v)) for k, v in out.items()}
 
     def __enter__(self):
         return self

@@ -15,15 +15,17 @@ The conversion distributes AND over OR into full disjunctive normal
 form — worst-case exponential in expression depth, so the clause count
 is capped (a filter that explodes past the cap is left JVM-side).
 
-Null semantics are identical on both tiers: a comparison with NULL is
-NULL (row dropped), ``!(x = v)`` / ``!(x in ...)`` drop NULL rows both
-in Spark and in the DNF mask evaluation (_piece_worker._cond_mask).
+Op names, negations (``!(x < v)`` is ``x >= v``) and mirrors (``v < x``
+is ``x > v``) come from the reader's op table, ``_piece_worker.OPS``.
+Its semantics are Spark's (a comparison with NULL drops the row; NaN
+equals NaN and sorts above every other value), so a negation passes
+exactly the non-null rows its operand rejects.
 """
 
 from __future__ import annotations
 
-_COMPARE_OPS = {">": ">", ">=": ">=", "<": "<", "<=": "<=", "=": "="}
-_NEGATED = {"=": "!=", "in": "not in"}
+from petastorm_spark._piece_worker import OPS
+
 _MAX_CLAUSES = 64
 
 
@@ -66,58 +68,40 @@ def _leaf(node) -> tuple:
         raise _NotCompilable
     fn = node.functionName()
     args = _args(node)
-    if fn == "!":
-        if len(args) != 1 or _cls(args[0]) != "UnresolvedFunction":
-            raise _NotCompilable
-        inner = args[0]
-        neg = _NEGATED.get(inner.functionName())
-        if neg is None:
-            raise _NotCompilable
-        iargs = _args(inner)
-        if neg == "not in":
-            return (_attr_name(iargs[0]), neg, [_lit_value(a) for a in iargs[1:]])
-        return (_attr_name(iargs[0]), neg, _lit_value(iargs[1]))
-    if fn == "in":
-        return (_attr_name(args[0]), "in", [_lit_value(a) for a in args[1:]])
-    op = _COMPARE_OPS.get(fn)
-    if op is None or len(args) != 2:
+    if fn == "!" and len(args) == 1:
+        col, op, val = _leaf(args[0])
+        return (col, OPS[op].negation, val)
+    op = OPS.get(fn)
+    if op is None:
         raise _NotCompilable
-    # attr on either side; flip the comparison when the literal leads
+    if op.mirror is None:  # a list op: x IN (v, ...)
+        return (_attr_name(args[0]), fn, [_lit_value(a) for a in args[1:]])
+    if len(args) != 2:
+        raise _NotCompilable
+    # attr on either side; mirror the comparison when the literal leads
     if _cls(args[0]) == "UnresolvedAttribute":
-        return (_attr_name(args[0]), op, _lit_value(args[1]))
-    flipped = {">": "<", ">=": "<=", "<": ">", "<=": ">=", "=": "="}[op]
-    return (_attr_name(args[1]), flipped, _lit_value(args[0]))
+        return (_attr_name(args[0]), fn, _lit_value(args[1]))
+    return (_attr_name(args[1]), op.mirror, _lit_value(args[0]))
 
 
 def _dnf(node) -> list[list[tuple]]:
     """Disjunction-of-conjunctions clause list for a boolean node."""
-    if _cls(node) == "UnresolvedFunction":
-        fn = node.functionName()
-        if fn == "or":
-            left, right = _args(node)
-            clauses = _dnf(left) + _dnf(right)
-            if len(clauses) > _MAX_CLAUSES:
-                raise _NotCompilable
-            return clauses
-        if fn == "and":
-            left, right = _args(node)
-            out = [lc + rc for lc in _dnf(left) for rc in _dnf(right)]
-            if len(out) > _MAX_CLAUSES:
-                raise _NotCompilable
-            return out
-    return [[_leaf(node)]]
+    fn = node.functionName() if _cls(node) == "UnresolvedFunction" else None
+    if fn not in ("or", "and"):
+        return [[_leaf(node)]]
+    left, right = map(_dnf, _args(node))
+    out = left + right if fn == "or" else [lc + rc for lc in left for rc in right]
+    if len(out) > _MAX_CLAUSES:
+        raise _NotCompilable
+    return out
 
 
 def column_to_dnf(col) -> list[list[tuple]] | None:
     """DNF tuple clauses equivalent to a Column filter, or None when the
     expression is not expressible (caller keeps the JVM filter)."""
     try:
-        node = col._jc.node()
-    except AttributeError:
-        return None  # Spark Connect column or non-classic session
-    try:
-        return _dnf(node)
-    except _NotCompilable:
-        return None
-    except Exception:  # py4j surprises on exotic nodes: never fail the reader
+        return _dnf(col._jc.node())
+    # not compilable, a Spark Connect column (no _jc), or a py4j surprise
+    # on an exotic node: never fail the reader
+    except Exception:
         return None

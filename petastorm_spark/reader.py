@@ -55,15 +55,18 @@ normal Spark job sized by the cluster.
 
 from __future__ import annotations
 
+import contextlib
 import dataclasses
 import itertools
 import multiprocessing
+import operator
 import os
 import pickle
 import shutil
 import tempfile
 from collections import deque
 from concurrent.futures import ProcessPoolExecutor, ThreadPoolExecutor, wait
+from functools import reduce
 from urllib.parse import urlparse
 
 import numpy as np
@@ -75,15 +78,13 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from petastorm_spark._piece_worker import (
+    OPS,
     decode_col,
-    dnf_clauses,
-    dnf_columns,
     dnf_mask,
-    is_dnf_filters,
     load_table,
+    parse_filters,
     partition_values,
     rg_may_match,
-    scalar_frame,
 )
 from petastorm_spark.etl.dataset_metadata import load_dataset_metadata
 from petastorm_spark.predicates import PredicateBase
@@ -232,37 +233,16 @@ def _require_same_schema(urls: list[str], structs: list) -> None:
             )
 
 
-def _dnf_to_column(filters) -> Column:
-    """Compile DNF tuple filters to a Spark Column so the plan tier
-    gets the same semantics (and Catalyst pushdown) the iteration tier
-    evaluates with pyarrow stats + pandas masks."""
-    from functools import reduce
-
-    def cond(col: str, op: str, val) -> Column:
-        c = F.col(col)
-        if op in ("=", "=="):
-            return c == F.lit(val)
-        if op == "!=":
-            return c != F.lit(val)
-        if op == "<":
-            return c < F.lit(val)
-        if op == "<=":
-            return c <= F.lit(val)
-        if op == ">":
-            return c > F.lit(val)
-        if op == ">=":
-            return c >= F.lit(val)
-        if op == "in":
-            return c.isin(list(val))
-        if op == "not in":
-            return ~c.isin(list(val))
-        raise ValueError(f"unsupported DNF filter op {op!r}")
-
-    clause_cols = [
-        reduce(lambda a, b: a & b, [cond(*t) for t in clause])
-        for clause in dnf_clauses(filters)
-    ]
-    return reduce(lambda a, b: a | b, clause_cols)
+def _dnf_to_column(clauses) -> Column:
+    """The parsed filter as a Spark Column for the plan tier (and
+    Catalyst pushdown), built from the op table the iteration tier's row
+    mask and row-group pruning use."""
+    return reduce(operator.or_, [
+        reduce(operator.and_, [
+            OPS[c.op].test(F.col(c.column), c.value) for c in clause
+        ], F.lit(True))
+        for clause in clauses
+    ])
 
 
 # A sentinel is a lease: __iter__ refreshes its mtime, so a sentinel
@@ -356,7 +336,7 @@ class _PieceSpec:
     drop_parts: int
     read_columns: list[str]  # view + predicate + DNF columns
     view_columns: list[str]
-    dnf: list | None
+    dnf: tuple | None  # parse_filters clauses
     missing_ok: bool  # schema evolution: absent columns read as NULL
     schema: Unischema  # the full dataset schema
     predicate: PredicateBase | None
@@ -389,7 +369,7 @@ def _read_piece(
     fields = spec.schema.fields
     sel = None  # surviving row indices; None = all rows
     if spec.dnf is not None:
-        m = dnf_mask(scalar_frame(table, parts, dnf_columns(spec.dnf)), spec.dnf)
+        m = dnf_mask(table, parts, spec.dnf)
         if not m.any():
             return None
         sel = np.nonzero(m)[0]
@@ -619,27 +599,30 @@ class Reader:
         # columns. ``filters`` accepts either a Spark Column (plan-tier
         # only) or petastorm/pyarrow-style DNF tuples, which the
         # iteration tier can evaluate itself (stats pruning + row mask)
-        # on ANY filesystem without materializing.
-        self._dnf = filters if (filters is not None and is_dnf_filters(filters)) else None
-        col_filter: Column | None = (
-            filters if (filters is not None and self._dnf is None) else None
-        )
-        if col_filter is not None:
+        # on ANY filesystem without materializing. The filter is parsed
+        # here, once: a malformed one fails at construction.
+        schema = struct if df is None else df.schema
+        types = {f.name: f.dataType for f in schema.fields}
+        self._dnf = col_filter = None
+        if isinstance(filters, Column):
             # Compile simple comparison Columns to DNF tuples so the
             # direct streaming tier (and rowgroup stats pruning) applies
             # to them too — a filters=Column reader over a 100 TB store
             # must not materialize a filtered copy to driver-local disk.
+            # A Column that does not compile, or holds a literal the
+            # tiers cannot compare alike, stays JVM-side.
             from petastorm_spark.plans.filter_compile import column_to_dnf
 
-            compiled = column_to_dnf(col_filter)
-            if compiled is not None:
-                self._dnf = compiled
-                col_filter = None
+            with contextlib.suppress(ValueError):
+                self._dnf = parse_filters(column_to_dnf(filters), types)
+            col_filter = filters if self._dnf is None else None
+        elif filters is not None:
+            self._dnf = parse_filters(filters, types)
         need = list(view.fields)
         if predicate is not None:
             need += [f for f in predicate.get_fields() if f not in need]
         if self._dnf is not None:
-            need += [c for c in dnf_columns(self._dnf) if c not in need]
+            need += sorted({c.column for cl in self._dnf for c in cl} - set(need))
 
         # Index selection happens on the SOURCE dataset before any
         # materialization — the pruned file list feeds both the Spark
@@ -788,40 +771,25 @@ class Reader:
         # num_row_groups_per_file map, same idea); otherwise a PARALLEL
         # footer scan, never a serial per-file driver loop. With DNF
         # filters the footer scan also prunes row groups whose min/max
-        # statistics cannot match.
-        self._pieces: list[tuple[str, int, int]] = []
-        if self._dnf is not None and self._direct_root is not None:
-            dnf = self._dnf
-            keep = _parallel_footers(
-                self._fs,
-                self._files,
-                lambda p, md: (
-                    md.num_row_groups,
-                    [
-                        rg
-                        for rg in range(md.num_row_groups)
-                        if rg_may_match(
-                            md.row_group(rg),
-                            [md.schema.column(i).name for i in range(md.num_columns)],
-                            dnf,
-                        )
-                    ],
-                ),
-            )
-            unpruned_rgs = sum(keep[f][0] for f in self._files)
-            rgs_per_file = {f: keep[f][1] for f in self._files}
+        # statistics cannot match (a materialized cache holds filtered
+        # rows already and is not pruned).
+        dnf = self._dnf if self._direct_root is not None else None
+        counts = None if dnf else self._rowgroup_counts_from_sidecar()
+        if counts is not None:
+            kept = {f: (n, range(n)) for f, n in counts.items()}
         else:
-            counts = self._rowgroup_counts_from_sidecar()
-            if counts is None:
-                counts = _parallel_footers(
-                    self._fs, self._files, lambda p, md: md.num_row_groups
-                )
-            unpruned_rgs = sum(counts[f] for f in self._files)
-            rgs_per_file = {f: range(counts[f]) for f in self._files}
-        for f in self._files:
-            for rg in rgs_per_file[f]:
-                for sl in range(self._drop_parts):
-                    self._pieces.append((f, rg, sl))
+            kept = _parallel_footers(self._fs, self._files, lambda p, md: (
+                md.num_row_groups,
+                [r for r in range(md.num_row_groups)
+                 if dnf is None or rg_may_match(md, r, dnf)],
+            ))
+        unpruned_rgs = sum(kept[f][0] for f in self._files)
+        self._pieces: list[tuple[str, int, int]] = [
+            (f, rg, sl)
+            for f in self._files
+            for rg in kept[f][1]
+            for sl in range(self._drop_parts)
+        ]
         # Validate shard_count against the UNPRUNED piece count: a
         # selective DNF filter (or absent parquet stats) must not turn a
         # working sharded read into a hard error — shards emptied by

@@ -509,16 +509,7 @@ def ns_to_timestamp(col):
 
 def load_tables(spark: SparkSession, sf_dir: str, names: tuple[str, ...] | None = None):
     """Load the testdata star schema as a dict of DataFrames."""
-    names = names or (
-        "region",
-        "nation",
-        "customer",
-        "supplier",
-        "part",
-        "orders",
-        "lineitem",
-        "events",
-        "documents",
-        "embeddings",
-    )
+    from petastorm_spark.sql import TESTDATA_TABLES
+
+    names = names or TESTDATA_TABLES
     return {n: spark.read.parquet(f"{sf_dir}/{n}.parquet") for n in names}

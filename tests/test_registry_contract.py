@@ -142,6 +142,36 @@ def test_materialization_goes_through_session_only():
     assert not hits, "materialize outside session.py:\n" + "\n".join(hits)
 
 
+def test_filter_ops_are_evaluated_only_by_their_owner():
+    """The reader's filter ops are named once, in the op table of
+    ``_piece_worker.py``, which the Spark plan filter, the row mask,
+    row-group pruning and the Column compiler all read. An op string
+    compared or looked up anywhere else is a second copy of the filter
+    language, free to drift from the first."""
+    import os
+    import re
+
+    pkg = os.path.join(
+        os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+        "petastorm_spark",
+    )
+    op = r"""["'](?:=|==|!=|<|<=|>|>=|in|not in)["']"""
+    evaluated = re.compile(
+        rf"""["'](?:not in|>=|<=|!=)["']|(?:==|!=|\bin)\s*\(?\s*{op}"""
+    )
+    hits = []
+    for root, _, files in os.walk(pkg):
+        for name in sorted(files):
+            path = os.path.join(root, name)
+            if not name.endswith(".py") or path == os.path.join(pkg, "_piece_worker.py"):
+                continue
+            with open(path) as f:
+                for i, line in enumerate(f, 1):
+                    if evaluated.search(line):
+                        hits.append(f"{os.path.relpath(path, pkg)}:{i}: {line.strip()}")
+    assert not hits, "filter ops outside _piece_worker.py:\n" + "\n".join(hits)
+
+
 def test_no_session_wide_partition_overwrite_mode():
     """Dynamic partition overwrite is a per-write option
     (``.option("partitionOverwriteMode", "dynamic")``). Setting it

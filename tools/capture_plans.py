@@ -11,14 +11,9 @@ import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from petastorm_spark.plans.checks import formatted_plan  # noqa: E402
 from petastorm_spark.queries import QUERIES  # noqa: E402
 from petastorm_spark.session import get_spark  # noqa: E402
-
-
-def plan_str(df, mode: str = "formatted") -> str:
-    return df._sc._jvm.PythonSQLUtils.explainString(
-        df._jdf.queryExecution(), mode
-    )
 
 
 def main() -> None:
@@ -54,7 +49,7 @@ def main() -> None:
             df = QUERIES[n](spark, sf_dir)
             if execute:
                 df.collect()  # executes THIS queryExecution (count() plans its own)
-            p = plan_str(df)
+            p = formatted_plan(df)
         except Exception as e:  # noqa: BLE001
             print(f"FAIL {n}: {e}", file=sys.stderr)
             continue

@@ -24,11 +24,6 @@ import pandas as pd
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-TABLES = (
-    "region nation customer supplier part orders lineitem events documents embeddings"
-).split()
-
-
 def canon(df: pd.DataFrame) -> pd.DataFrame:
     df = df[sorted(df.columns)].copy()
     for c in df.columns:
@@ -72,6 +67,7 @@ def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
 
     from petastorm_spark.session import get_spark, release_persisted
+    from petastorm_spark.sql import TESTDATA_TABLES
     import __spark_entry__ as entrymod
 
     spark = get_spark("correctness_check")
@@ -96,7 +92,7 @@ def main() -> None:
         print(f"unknown queries: {unknown}; available: {sorted(qs)}")
         sys.exit(2)
     con = duckdb.connect()
-    for t in TABLES:
+    for t in TESTDATA_TABLES:
         con.execute(
             f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'"
         )
