@@ -22,7 +22,8 @@ import traceback
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from petastorm_spark.queries import QUERIES  # noqa: E402
-from petastorm_spark.session import get_spark, release_persisted  # noqa: E402
+from petastorm_spark.profile import profile_query  # noqa: E402
+from petastorm_spark.session import get_spark  # noqa: E402
 
 # Diverse headline set: scan+agg, join-heavy, windowing, distribution,
 # dedup/text/similarity. Driver compares the total against BASELINE.
@@ -292,8 +293,8 @@ def measure_reader_throughput(spark, image_codec: str = "png") -> dict:
         del pdf
 
         from petastorm_spark.benchmark.procstats import (
-            cpu_percent,
             process_tree_sample,
+            window_summary,
         )
 
         with make_reader(url, spark=spark, num_epochs=None) as reader:
@@ -355,25 +356,7 @@ def measure_reader_throughput(spark, image_codec: str = "png") -> dict:
                 100.0 * (max(window_dts) - min(window_dts)) / min(window_dts), 1
             ),
             "window_reruns": window_reruns,
-            "rss_mb": (
-                round(after["rss_bytes"] / 2**20, 1) if after else None
-            ),
-            "rss_iter_mb": (
-                round((after["rss_bytes"] - after["jvm_rss_bytes"]) / 2**20, 1)
-                if after
-                else None
-            ),
-            "rss_jvm_mb": (
-                round(after["jvm_rss_bytes"] / 2**20, 1) if after else None
-            ),
-            "rss_main_mb": (
-                round(after["root_rss_bytes"] / 2**20, 1) if after else None
-            ),
-            "cpu_pct": (
-                round(cpu_percent(before, after, dt), 1)
-                if before and after
-                else None
-            ),
+            **window_summary(before, after, dt),
         }
     finally:
         shutil.rmtree(os.path.dirname(url), ignore_errors=True)
@@ -426,55 +409,16 @@ def main() -> None:
     # flagged ±20-36% swings on queries whose code never changed.
     # Median is reported alongside min (r3 ADVICE): min is the
     # continuity metric vs r3, median shows what a typical run costs.
-    # Materializations are freed before EVERY timed run:
-    # release_persisted() frees every persist and local checkpoint the
-    # package made (near_dup_pairs' shingle sets, kcore's round
-    # tables), and clearCache() drops any other cached plan. Without it
-    # runs 2..N would get a warm cache, so min-of-N would report the
-    # zero-scan rerun rather than the operator's real single-pass
-    # cost, and checkpoint blocks of earlier queries would stay
-    # resident through later ones.
+    # profile.profile_query owns the protocol: before every run it frees
+    # the package's materializations, clears the cache and forces a JVM
+    # GC (after ~138 queries, collecting earlier debris inside the timed
+    # runs read bitext at 8.98s vs 3.7s fresh), all outside the timed
+    # region, and it counts the jobs, the stages that ran and their
+    # tasks under a per-run job group. Walls swing 2-10x inside this
+    # box's stall windows while those counts stay fixed, so max >> min
+    # with unchanged counts reads as noise, a count change as a plan
+    # change.
     n_runs = int(os.environ.get("SPARK_GRAFT_BENCH_RUNS", "3"))
-    # With ~95 queries in ONE JVM session, garbage from earlier queries
-    # (broadcast blocks, codegen classes, shuffle state) piles up and
-    # its collection lands INSIDE later measurements — the same query
-    # measured 0.97s in a fresh session and 7.6s late in a full bench
-    # run. A forced JVM GC between queries moves that cost out of the
-    # timed window (it also lets Spark's ContextCleaner actually
-    # release dropped broadcasts, which is GC-triggered). Disable with
-    # SPARK_GRAFT_BENCH_GC=0 to measure the accumulation itself.
-    # r11 follow-up: GC between QUERIES was not enough — bitext's r11
-    # bench row read 8.98s vs 3.7s fresh because checkpoint/broadcast
-    # debris from 138 prior queries was collected INSIDE its timed
-    # runs (the first run's own garbage then lands in runs 2-3). GC
-    # now runs before EVERY timed run; the pause sits outside the
-    # timed window, so min-of-N measures the plan, not the session.
-    gc_between = os.environ.get("SPARK_GRAFT_BENCH_GC", "1") != "0"
-
-    # r17 (additions-only): per-query structural fingerprint via the
-    # status tracker — jobs/stages/tasks submitted by the run that
-    # produced the min wall, plus the max wall. Scheduler-stall windows
-    # swing walls 2-10x on this box while structural counts stay fixed,
-    # so a stalled artifact is self-diagnosing: max >> min with
-    # unchanged counts = noise; a count change = a plan change. Job
-    # groups are set OUTSIDE the timed region and counting happens
-    # after the timer stops — the timed protocol is byte-identical.
-    def _job_group_counts(group: str) -> list[int]:
-        st = spark.sparkContext.statusTracker()
-        jobs = st.getJobIdsForGroup(group)
-        n_stages = n_tasks = 0
-        for jid in jobs:
-            ji = st.getJobInfo(jid)
-            if ji is None:
-                continue
-            for sid in ji.stageIds:
-                si = st.getStageInfo(sid)
-                if si is None:
-                    continue
-                n_stages += 1
-                n_tasks += si.numTasks
-        return [len(jobs), n_stages, n_tasks]
-
     timings: dict[str, float] = {}
     medians: dict[str, float] = {}
     maxes: dict[str, float] = {}
@@ -483,32 +427,17 @@ def main() -> None:
     # survive it (its name stays out of the timing maps and the total)
     errors: dict[str, str] = {}
     for name in names:
-        runs = []
-        run_counts = []
         try:
-            for r in range(n_runs):
-                release_persisted()
-                spark.catalog.clearCache()
-                if gc_between:
-                    spark.sparkContext._jvm.System.gc()
-                group = f"bench_{name}_{r}"
-                spark.sparkContext.setJobGroup(group, name)
-                t0 = time.perf_counter()
-                df = QUERIES[name](spark, sf_dir)
-                df.count()
-                runs.append(time.perf_counter() - t0)
-                try:
-                    run_counts.append(_job_group_counts(group))
-                except Exception:  # noqa: BLE001 - diagnostics must never kill the bench
-                    run_counts.append([0, 0, 0])
+            prof = profile_query(spark, QUERIES[name], sf_dir, n_runs)
         except Exception as e:  # noqa: BLE001 - one query must never kill the bench
             traceback.print_exc()
             errors[name] = f"{type(e).__name__}: {e}"[:300]
             continue
-        timings[name] = round(min(runs), 3)
-        medians[name] = round(sorted(runs)[len(runs) // 2], 3)
-        maxes[name] = round(max(runs), 3)
-        structure[name] = run_counts[min(range(n_runs), key=lambda i: runs[i])]
+        runs = sorted(prof["walls"])
+        timings[name] = round(runs[0], 3)
+        medians[name] = round(runs[len(runs) // 2], 3)
+        maxes[name] = round(runs[-1], 3)
+        structure[name] = [prof["jobs"], prof["stages"], prof["tasks"]]
 
     total = round(sum(timings.values()), 3)
     # Key ORDER is deliberate: prose protocol strings FIRST, numbers
@@ -519,7 +448,7 @@ def main() -> None:
         json.dumps(
             {
                 "reader_protocol": f"{N_WARMUP_READS} warmup + {N_MEASURED_READS} measured row reads, hello_world-shaped dataset (BASELINE.md protocol, longer measurement window). reader_samples_per_sec = best of 5 windows with BOTH collectors (CPython gc + JVM System.gc) drained before each window so due collections land outside the timed region; reader_window_sps lists every window's rate and reader_spread_pct = (slowest-fastest)/fastest — the r8 +-25%% swing diagnosed as mid-window GC, now measured per run; a window slower than 2x the median is a stall, not a decode rate, and is rerun in place (<=3 reruns, count in reader_window_reruns; r11's spread_pct=184 was one such window). reader_samples_per_sec decodes REAL PNG byte streams via the pure-python codec (r3+ protocol; the BASELINE.md comparison row); reader_samples_per_sec_raw0 reads the np.save RAW0 container r1/r2 measured, for cross-round trend continuity. reader_rss_mb / reader_cpu_pct: process-tree (python + driver JVM + pool workers) RSS after / CPU%% over the measured window via procfs — the reference benchmark's psutil memory_info/cpu columns (BASELINE.md rows 2-3/5-6). reader_rss_main_mb is the benchmark process alone — the like-for-like column against the reference's 217 MB single-process psutil figure; reader_rss_iter_mb additionally includes Spark's resident pyspark.daemon workers (tree minus java), and reader_rss_jvm_mb is the local[32] driver JVM, a fixed harness cost",
-                "query_protocol": f"one untimed warmup run per query at sf0.001 (JIT/codegen), then {n_runs} timed runs at target sf with session.release_persisted() (every persist and local checkpoint the package made), spark.catalog.clearCache() AND a forced JVM GC before each run (r12: GC only between queries left prior-session debris collecting inside checkpoint-heavy queries' timed runs — bitext read 8.98s in r11 vs 3.7s fresh); 'queries' is min-of-{n_runs} (continuity with r3), 'queries_median' the median, 'queries_max' the max. r1/r2 were single-run — cross-round comparison to them overstates speedups. r17 adds 'queries_structure' {{name: [jobs, stages, tasks]}} counted via the status tracker under a per-run job group on the min-wall run, OUTSIDE the timed region (timing protocol unchanged): walls swing 2-10x inside this box's stall windows while structural counts stay fixed, so max>>min with unchanged counts reads as machine noise, a count change as a plan change",
+                "query_protocol": f"one untimed warmup run per query at sf0.001 (JIT/codegen), then {n_runs} timed runs at target sf through petastorm_spark.profile.profile_query, with session.release_persisted() (every persist and local checkpoint the package made), spark.catalog.clearCache() AND a forced JVM GC before each run (r12: GC only between queries left prior-session debris collecting inside checkpoint-heavy queries' timed runs — bitext read 8.98s in r11 vs 3.7s fresh); 'queries' is min-of-{n_runs} (continuity with r3), 'queries_median' the median, 'queries_max' the max. r1/r2 were single-run — cross-round comparison to them overstates speedups. 'queries_structure' {{name: [jobs, stages, tasks]}} of the min-wall run, counted under a per-run job group OUTSIDE the timed region: each stage id once, SKIPPED stages (an earlier job's shuffle that AQE's later jobs list again) left out, so stages and tasks are what ran (an earlier counter added every stage id each job listed, which over-counted AQE queries: dedup_keep_best read 75 stages at sf0.01 where 31 ran); walls swing 2-10x inside this box's stall windows while structural counts stay fixed, so max>>min with unchanged counts reads as machine noise, a count change as a plan change",
                 "queries_structure": structure,
                 "query_errors": errors,
                 "queries_max": maxes,

@@ -259,6 +259,12 @@ def _domain(x, as_float: bool):
     return _float_key(x) if as_float else x
 
 
+def passes_nan(c: Cond) -> bool:
+    """Does a NaN value pass the float condition ``c``? (NaN equals NaN
+    and sorts above every other value.)"""
+    return c.as_float and bool(OPS[c.op].test(_NAN_KEY, _domain(c.value, True)))
+
+
 # Spark numeric column types, with the cast Spark applies to a string
 # literal compared with them
 _NUMERIC = {"byte": int, "short": int, "integer": int, "long": int,

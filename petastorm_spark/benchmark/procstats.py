@@ -114,3 +114,20 @@ def cpu_percent(before: dict | None, after: dict | None, wall_seconds: float) ->
     if before is None or after is None or wall_seconds <= 0:
         return None
     return 100.0 * (after["cpu_seconds"] - before["cpu_seconds"]) / wall_seconds
+
+
+def window_summary(before: dict | None, after: dict | None, wall_seconds: float) -> dict:
+    """The columns a reader benchmark reports for one measured window,
+    from the tree samples taken before and after it: RSS after the window
+    (``rss_mb``), split into the tree minus java (``rss_iter_mb``), the
+    driver JVM (``rss_jvm_mb``) and the measuring process alone
+    (``rss_main_mb``), and CPU%% over the window (``cpu_pct``). A field is
+    None when procfs is unavailable."""
+    out = dict.fromkeys(("rss_mb", "rss_iter_mb", "rss_jvm_mb", "rss_main_mb"))
+    if after is not None:
+        rss, jvm = after["rss_bytes"], after["jvm_rss_bytes"]
+        for key, n in zip(out, (rss, rss - jvm, jvm, after["root_rss_bytes"])):
+            out[key] = round(n / 2**20, 1)
+    cpu = cpu_percent(before, after, wall_seconds)
+    out["cpu_pct"] = None if cpu is None else round(cpu, 1)
+    return out

@@ -14,7 +14,7 @@ from __future__ import annotations
 import time
 from dataclasses import dataclass
 
-from petastorm_spark.benchmark.procstats import cpu_percent, process_tree_sample
+from petastorm_spark.benchmark.procstats import process_tree_sample, window_summary
 from petastorm_spark.reader import make_batch_reader, make_reader
 
 
@@ -76,27 +76,5 @@ def reader_throughput(
         warmup_cycles=warmup_cycles,
         measure_cycles=measure_cycles,
         batched=read_method == "batch",
-        rss_mb=(
-            round(after["rss_bytes"] / 2**20, 1) if after is not None else None
-        ),
-        cpu_pct=(
-            round(cpu_percent(before, after, dt), 1)
-            if before is not None and after is not None
-            else None
-        ),
-        rss_iter_mb=(
-            round((after["rss_bytes"] - after["jvm_rss_bytes"]) / 2**20, 1)
-            if after is not None
-            else None
-        ),
-        rss_jvm_mb=(
-            round(after["jvm_rss_bytes"] / 2**20, 1)
-            if after is not None
-            else None
-        ),
-        rss_main_mb=(
-            round(after["root_rss_bytes"] / 2**20, 1)
-            if after is not None
-            else None
-        ),
+        **window_summary(before, after, dt),
     )

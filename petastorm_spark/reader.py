@@ -84,6 +84,7 @@ from petastorm_spark._piece_worker import (
     load_table,
     parse_filters,
     partition_values,
+    passes_nan,
     rg_may_match,
 )
 from petastorm_spark.etl.dataset_metadata import load_dataset_metadata
@@ -236,12 +237,20 @@ def _require_same_schema(urls: list[str], structs: list) -> None:
 def _dnf_to_column(clauses) -> Column:
     """The parsed filter as a Spark Column for the plan tier (and
     Catalyst pushdown), built from the op table the iteration tier's row
-    mask and row-group pruning use."""
+    mask and row-group pruning use.
+
+    A condition that NaN passes is OR-ed with ``isnan``, which keeps it
+    out of Parquet pushdown: Spark prunes row groups from min/max
+    statistics, and writers such as pyarrow leave NaN out of those, so
+    ``f > 4.0`` alone drops the NaN rows of a group whose max reads 3.0."""
+
+    def cond(c) -> Column:
+        col = F.col(c.column)
+        test = OPS[c.op].test(col, c.value)
+        return F.isnan(col) | test if passes_nan(c) else test
+
     return reduce(operator.or_, [
-        reduce(operator.and_, [
-            OPS[c.op].test(F.col(c.column), c.value) for c in clause
-        ], F.lit(True))
-        for clause in clauses
+        reduce(operator.and_, map(cond, clause), F.lit(True)) for clause in clauses
     ])
 
 
@@ -993,9 +1002,10 @@ class Reader:
                     window.append(pool.submit(run, *p))
                 yield from self._emit(pdf)
         finally:
-            for fut in window:
-                fut.cancel()
-            wait(window)
+            # a cancelled piece is never "done" to wait() until a pool
+            # worker dequeues it, and close() drops queued pieces without
+            # one: wait only for the pieces already running
+            wait([fut for fut in window if not fut.cancel()])
 
     def __iter__(self):
         self.last_row_consumed = False

@@ -109,6 +109,38 @@ def test_unknown_op_fails_at_construction_without_plan_tier(
         make_batch_reader("s3a://bucket/a", spark=spark, filters=[("id", "~", 5)])
 
 
+@pytest.fixture(scope="module")
+def pyarrow_nan_ds(tmp_path_factory):
+    """Two row groups written by pyarrow, which leaves NaN out of the
+    float statistics: ``f`` = [1.0, NaN, 3.0] (max 3.0) and
+    [5.0, NaN, 5.0] (min = max = 5.0)."""
+    import pyarrow as pa
+
+    path = tmp_path_factory.mktemp("pyarrownan") / "part-0.parquet"
+    table = pa.table({"id": list(range(6)), "f": [1.0, math.nan, 3.0, 5.0, math.nan, 5.0]})
+    pq.write_table(table, path, row_group_size=3)
+    return str(path.parent)
+
+
+@pytest.mark.parametrize(
+    "flt, want",
+    [
+        (("f", ">", 4.0), [1, 3, 4, 5]),
+        (("f", ">=", 6.0), [1, 4]),
+        (("f", "!=", 5.0), [0, 1, 2, 4]),
+        (("f", "not in", [5.0]), [0, 1, 2, 4]),
+        (("f", "=", math.nan), [1, 4]),
+    ],
+    ids=[">", ">=", "!=", "not in", "= NaN"],
+)
+def test_plan_tier_keeps_nan_rows_of_nan_free_statistics(spark, pyarrow_nan_ds, flt, want):
+    """Spark's Parquet pushdown pruned a row group from its NaN-free
+    min/max, so ``reader.dataframe`` lost the NaN rows that pass the
+    condition; the streamed rows were right."""
+    with make_batch_reader(pyarrow_nan_ds, spark=spark, filters=[flt]) as r:
+        assert _plan_ids(r) == _streamed_ids(r) == want
+
+
 # ---------------------------------------------------------------------------
 # parity: random filters over int, float (NaN and null) and string columns
 # ---------------------------------------------------------------------------

@@ -287,6 +287,31 @@ def test_thread_pool_lives_as_long_as_the_reader(spark, tmp_path):
     assert not any(t.is_alive() for t in threads)
 
 
+def test_close_under_a_suspended_iteration_does_not_hang(spark, tmp_path):
+    """bench.py's reader protocol: ``it = iter(reader); next(it)``, then
+    the reader closes while ``it`` is suspended. close() cancels the
+    queued pieces, and ``it``'s cleanup then waited for them forever."""
+    import threading
+    import time
+
+    from petastorm_spark.transform import TransformSpec
+
+    url = str(tmp_path / "thrds")
+    _write_simple(spark, url, n=30, parts=3)
+    slow = TransformSpec(lambda pdf: time.sleep(0.5) or pdf)
+    r = make_reader(
+        url, spark=spark, reader_pool_type="thread", workers_count=2,
+        num_epochs=None, transform_spec=slow,
+    )
+    it = iter(r)
+    next(it)  # two pieces running, two queued
+    r.close()
+    closer = threading.Thread(target=it.close, daemon=True)
+    closer.start()
+    closer.join(timeout=30)
+    assert not closer.is_alive()
+
+
 def test_process_pool_names_an_unpicklable_predicate(spark, tmp_path):
     """A predicate cloudpickle cannot serialize fails on the process
     pool at the first iteration, with a TypeError naming it."""

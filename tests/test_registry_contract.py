@@ -142,6 +142,34 @@ def test_materialization_goes_through_session_only():
     assert not hits, "materialize outside session.py:\n" + "\n".join(hits)
 
 
+def test_job_groups_and_stage_counts_go_through_profile_only():
+    """Query profiling has one owner, ``petastorm_spark/profile.py``: one
+    timed-run protocol and one stage counter. A job group or a status
+    tracker read anywhere else in the package, ``bench.py`` or ``tools/``
+    is a second copy, free to drift from it (a copy that added up every
+    listed stage id counted AQE's skipped stages as run). ``perfbench/``
+    keeps the benchmark's own copy."""
+    import os
+    import re
+
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    owner = os.path.join(root, "petastorm_spark", "profile.py")
+    raw = re.compile(r"statusTracker\(|setJobGroup\(")
+    paths = [os.path.join(root, "bench.py")]
+    for top in ("tools", "petastorm_spark"):
+        for d, _, files in os.walk(os.path.join(root, top)):
+            paths += [os.path.join(d, f) for f in sorted(files) if f.endswith(".py")]
+    hits = []
+    for path in paths:
+        if path == owner:
+            continue
+        with open(path) as f:
+            for i, line in enumerate(f, 1):
+                if raw.search(line):
+                    hits.append(f"{os.path.relpath(path, root)}:{i}: {line.strip()}")
+    assert not hits, "profiling outside petastorm_spark/profile.py:\n" + "\n".join(hits)
+
+
 def test_filter_ops_are_evaluated_only_by_their_owner():
     """The reader's filter ops are named once, in the op table of
     ``_piece_worker.py``, which the Spark plan filter, the row mask,

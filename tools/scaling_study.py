@@ -19,6 +19,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F  # noqa: E402
 
+from petastorm_spark.profile import profile_query  # noqa: E402
 from petastorm_spark.queries import QUERIES  # noqa: E402
 from petastorm_spark.session import get_spark  # noqa: E402
 
@@ -394,25 +395,14 @@ def main() -> None:
         QUERIES[name](spark, "/root/testdata/sf0.001").count()
 
     def timed(name: str, d: str) -> tuple[float, int]:
-        best = float("inf")
-        n = 0
-        for _rep in range(2):  # min-of-2 suppresses GC/page-cache noise
-            # operators that persist intermediates (near_dup_pairs)
-            # must not hand run 2 a warm cache
-            spark.catalog.clearCache()
-            t0 = time.perf_counter()
-            n = QUERIES[name](spark, d).count()
-            best = min(best, time.perf_counter() - t0)
-        return best, n
+        # min-of-2 suppresses GC/page-cache noise
+        prof = profile_query(spark, QUERIES[name], d, runs=2)
+        return min(prof["walls"]), prof["rows"]
 
     results: dict[str, list[float]] = {}
     counts: dict[str, list[int]] = {}
     organic: dict[str, tuple[float, int]] = {}
     for name in run_queries:
-        # same rationale as bench.py: collect earlier queries' garbage
-        # OUTSIDE the timed window (and let ContextCleaner release
-        # dropped broadcasts), or late queries absorb it
-        spark.sparkContext._jvm.System.gc()
         row: list[float] = []
         nrow: list[int] = []
         for _, d in dirs:
