@@ -89,9 +89,10 @@ def profile_columns(
 
 def violation_expr(chk: tuple):
     """The shared check-kind -> violation-predicate mapping behind
-    :func:`check_constraints`, :func:`observed_constraints`, and
-    streaming.feed.constraint_check_stream (one ladder, three
-    consumers — the null semantics live HERE). Returns a boolean
+    :func:`fused_violation_counts` (so :func:`check_constraints` and
+    streaming.feed.constraint_check_stream) and
+    :func:`observed_constraints` — one ladder, the null semantics live
+    HERE. Returns a boolean
     Column that is true for a violating row; NULL violates every kind
     except its absence from ``unique`` (which is not expressible as a
     per-row predicate and is handled by its callers)."""
@@ -107,6 +108,30 @@ def violation_expr(chk: tuple):
     if kind == "regex":
         return F.col(col).isNull() | ~F.col(col).rlike(chk[2])
     raise ValueError(f"unknown check kind {kind!r}")
+
+
+def fused_violation_counts(df: DataFrame, checks: Sequence[tuple]) -> DataFrame:
+    """(check, column, n_violations) for the per-row-predicate checks,
+    one row each: every check's violation count folds into ONE
+    aggregate over ``df`` (one scan, one stateful operator on a
+    stream), exploded to long form after it. Shared by
+    :func:`check_constraints` and
+    streaming.feed.constraint_check_stream."""
+    aggs = [
+        F.count(F.when(violation_expr(chk), 1)).alias(f"_v_{i}")
+        for i, chk in enumerate(checks)
+    ]
+    rows = F.array(
+        *[
+            F.struct(
+                F.lit(chk[0]).alias("check"),
+                F.lit(chk[1]).alias("column"),
+                F.col(f"_v_{i}").alias("n_violations"),
+            )
+            for i, chk in enumerate(checks)
+        ]
+    )
+    return df.agg(*aggs).select(F.explode(rows).alias("_c")).select("_c.*")
 
 
 def check_constraints(
@@ -127,35 +152,9 @@ def check_constraints(
     key-grouped count."""
     if not checks:
         raise ValueError("checks must not be empty")
-    spark = df.sparkSession
-    aggs, names = [], []
-    uniques = []
-    for i, chk in enumerate(checks):
-        kind, col = chk[0], chk[1]
-        if kind == "unique":
-            uniques.append((i, col))
-            continue
-        aggs.append(
-            F.count(F.when(violation_expr(chk), 1)).alias(f"_v_{i}")
-        )
-        names.append((i, kind, col))
-    parts = []
-    if aggs:
-        one = df.agg(*aggs)
-        rows = F.array(
-            *[
-                F.struct(
-                    F.lit(f"{kind}").alias("check"),
-                    F.lit(col).alias("column"),
-                    F.col(f"_v_{i}").alias("n_violations"),
-                )
-                for i, kind, col in names
-            ]
-        )
-        parts.append(
-            one.select(F.explode(rows).alias("_c")).select("_c.*")
-        )
-    for i, col in uniques:
+    fused = [chk for chk in checks if chk[0] != "unique"]
+    parts = [fused_violation_counts(df, fused)] if fused else []
+    for col in [chk[1] for chk in checks if chk[0] == "unique"]:
         dup = (
             df.where(F.col(col).isNotNull())
             .groupBy(col)

@@ -170,9 +170,8 @@ def cm_sketch(
 
 
 def _cm_pairs(key_col: str, w: int, d: int):
-    """The d (r, bucket) probe pairs for one key, as an array column
-    (shared by the batch sketch, the stream sketch, and cm_estimate's
-    probe side)."""
+    """The d (r, bucket) pairs for one key, as an array column, hashed
+    as cm_estimate's probes are."""
     return F.array(
         *[
             F.struct(

@@ -1,15 +1,21 @@
-"""Order-dependent per-key folds: exponentially-weighted moving
-average over event-time-ordered values.
+"""Order-dependent per-key folds, and the one helper that runs them.
 
-An EWMA is a sequential fold (e_i = a*v_i + (1-a)*e_{i-1}) — something
-built-in SQL aggregates cannot express — so it is the canonical shape
-for Spark's custom-stateful surface:
+``fold_by_key`` owns the per-key stateful plumbing for every fold in
+the package: it gathers a key's rows into one pandas frame, sorts it
+once by the fold's order columns, calls the fold's ``step`` and
+prepends the key column typed from the frame's schema. On a streaming
+frame it is the package's only pandas-with-state grouped map (one
+frame per key per micro-batch, however many Arrow chunks carried it;
+state in the state store); on a batch frame it runs ``applyInPandas``
+with no prior state. A streaming twin and its batch operator that
+share a step are the SAME fold by construction, so an ``availableNow``
+run over a static directory reproduces the batch result.
 
-  - batch: ``ewma_by_key`` via ``applyInPandas`` (vectorized closed
-    form per group, no per-row python loop);
-  - streaming: ``running_ewma_stream`` (streaming/feed.py) via
-    ``applyInPandasWithState`` with the SAME fold, state = (count,
-    ewma, last_ts) per key in the state store.
+The EWMA (e_i = a*v_i + (1-a)*e_{i-1}) is the canonical fold — a
+sequential update no built-in SQL aggregate expresses:
+``ewma_by_key`` runs it over a batch frame, and
+``streaming.feed.running_ewma_stream`` runs the same call over a
+stream, with state = (count, ewma, last_ts) per key.
 
 Order contract (ties): values fold in (ts, value) order — a total
 order up to interchangeable duplicates, so the fold result is
@@ -18,6 +24,8 @@ list(value ORDER BY ts, value)) reproduces it bit-for-bit.
 """
 
 from __future__ import annotations
+
+from typing import Callable
 
 import numpy as np
 import pandas as pd
@@ -34,6 +42,62 @@ def ts_as_int(v) -> int:
     if isinstance(v, np.datetime64):
         return int(v.astype("datetime64[us]").astype(np.int64))
     return int(v)
+
+
+def fold_by_key(
+    df: DataFrame,
+    key_col: str,
+    order_cols: list[str],
+    step: Callable,
+    out_schema: str,
+    state_schema: str,
+    output_mode: str = "update",
+) -> DataFrame:
+    """Run ``step(state_or_None, batch) -> (new_state_or_None, out)``
+    once per key over ``df`` grouped by ``key_col``.
+
+    ``batch`` holds all of the key's rows in the micro-batch (the whole
+    group on a batch frame), sorted once by ``order_cols``; it may be
+    empty. ``state`` is the key's stored state tuple, or None when
+    there is none (always None on a batch frame); a non-None returned
+    state replaces it. ``out`` is a pandas frame with the columns of
+    ``out_schema`` in order; the key column is prepended, typed from
+    ``df``'s schema. ``state_schema`` and ``output_mode`` only apply to
+    streaming frames."""
+    key_type = df.schema[key_col].dataType.simpleString()
+    schema = f"{key_col} {key_type}, {out_schema}"
+    columns = df.columns
+
+    def run(key, batch, state):
+        if order_cols:
+            batch = batch.sort_values(order_cols)
+        new_state, out = step(state, batch)
+        out.insert(0, key_col, key[0])
+        return new_state, out
+
+    grouped = df.groupBy(key_col)
+    if not df.isStreaming:
+        return grouped.applyInPandas(
+            lambda key, pdf: run(key, pdf, None)[1], schema
+        )
+
+    from pyspark.sql.streaming.state import GroupStateTimeout
+
+    def fold(key, pdfs, state):
+        chunks = list(pdfs)  # pd.concat raises on an empty iterator
+        batch = (
+            pd.concat(chunks, ignore_index=True)
+            if chunks
+            else pd.DataFrame(columns=columns)
+        )
+        new_state, out = run(key, batch, state.get if state.exists else None)
+        if new_state is not None:
+            state.update(new_state)
+        yield out
+
+    return grouped.applyInPandasWithState(
+        fold, schema, state_schema, output_mode, GroupStateTimeout.NoTimeout
+    )
 
 
 def ewma_update(
@@ -67,26 +131,30 @@ def ewma_by_key(
     value_col: str = "value",
     alpha: float = 0.3,
 ) -> DataFrame:
-    """Batch per-key EWMA in (ts, value) order: key, n_events, ewma,
-    last_ts. Scale: one hash shuffle on the key; the fold itself is a
-    vectorized Arrow-batched pandas function per group."""
-    out_schema = (
-        f"{key_col} bigint, n_events bigint, ewma double, last_ts bigint"
-    )
+    """Per-key EWMA in (ts, value) order: key, n_events, ewma, last_ts.
+    On a streaming frame the fold carries (count, ewma, last_ts) across
+    micro-batches and emits each key's updated row (update mode).
+    Scale: one hash shuffle on the key; the fold itself is a vectorized
+    Arrow-batched pandas function per group."""
 
-    def fold(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values([ts_col, value_col])
-        return pd.DataFrame(
-            {
-                key_col: [pdf[key_col].iloc[0]],
-                "n_events": [len(pdf)],
-                "ewma": [ewma_update(pdf[value_col].to_numpy(), alpha, None)],
-                "last_ts": [ts_as_int(pdf[ts_col].iloc[-1])],
-            }
+    def step(state, batch):
+        cnt, ewma, last = (0, None, None) if state is None else state
+        if len(batch):
+            ewma = ewma_update(batch[value_col].to_numpy(), alpha, ewma)
+            cnt += len(batch)
+            last = ts_as_int(batch[ts_col].iloc[-1])
+        out = pd.DataFrame(
+            {"n_events": [cnt], "ewma": [ewma], "last_ts": [last]}
         )
+        return (cnt, ewma, last), out
 
-    return df.select(key_col, ts_col, value_col).groupBy(key_col).applyInPandas(
-        fold, out_schema
+    return fold_by_key(
+        df.select(key_col, ts_col, value_col),
+        key_col,
+        [ts_col, value_col],
+        step,
+        "n_events bigint, ewma double, last_ts bigint",
+        "cnt bigint, ewma double, last_ts bigint",
     )
 
 

@@ -9,6 +9,8 @@ broken plan at 100 TB.
 
 from __future__ import annotations
 
+import re
+
 from pyspark.sql import DataFrame
 
 
@@ -25,8 +27,6 @@ def has_pushed_filters(df: DataFrame) -> bool:
 
 def read_schema_columns(df: DataFrame) -> list[str]:
     """Columns actually read from parquet (projection pruning check)."""
-    import re
-
     plan = formatted_plan(df)
     cols: list[str] = []
     for m in re.finditer(r"ReadSchema: struct<([^>]*)>", plan):
@@ -34,14 +34,39 @@ def read_schema_columns(df: DataFrame) -> list[str]:
     return sorted(set(cols))
 
 
+def _operators(df: DataFrame) -> dict[int, str]:
+    """Operator id -> its detail section in ``df``'s formatted plan.
+    The tree above the details repeats an operator once per path that
+    reaches it (a cached relation under every scan of it), and the
+    details may repeat a section, so everything that counts operators
+    reads this map, one entry per id."""
+    ops: dict[int, str] = {}
+    for section in formatted_plan(df).split("\n\n"):
+        m = re.match(r"\((\d+)\) ", section)
+        if m:
+            ops.setdefault(int(m.group(1)), section)
+    return ops
+
+
 def count_broadcast_joins(df: DataFrame) -> int:
-    return formatted_plan(df).count("BroadcastHashJoin")
+    return sum(
+        re.match(r"\(\d+\) BroadcastHashJoin\b", sec) is not None
+        for sec in _operators(df).values()
+    )
 
 
-def count_shuffles(df: DataFrame) -> int:
-    return formatted_plan(df).count("Exchange hashpartitioning") + formatted_plan(
-        df
-    ).count("Exchange rangepartitioning")
+def exchanges(df: DataFrame) -> list[str]:
+    """The partitioning of each shuffle ``Exchange`` operator in
+    ``df``'s plan, in operator-id order: ``hashpartitioning``,
+    ``rangepartitioning``, ``SinglePartition``, ... Spark prints
+    ``Exchange (n)`` in the tree and the partitioning under the
+    operator's ``Arguments:``; broadcast exchanges are not listed."""
+    out = []
+    for _, sec in sorted(_operators(df).items()):
+        if re.match(r"\(\d+\) Exchange\n", sec):
+            m = re.search(r"^Arguments: (\w+)", sec, re.M)
+            out.append(m.group(1) if m else "")
+    return out
 
 
 def codegen_stage_count(df: DataFrame) -> int:
@@ -51,6 +76,4 @@ def codegen_stage_count(df: DataFrame) -> int:
     df.collect()  # count() would plan a separate query; collect
     # finalizes THIS df's adaptive plan
     executed = df._jdf.queryExecution().executedPlan().toString()
-    import re
-
     return len(set(re.findall(r"\*\((\d+)\)", executed)))

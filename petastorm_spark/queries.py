@@ -1695,8 +1695,9 @@ def events_ewma(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-user EWMA of event values in (ts, value) order — an
     order-dependent fold no built-in aggregate expresses, so the
     pandas-UDF path (applyInPandas, vectorized closed-form fold) is the
-    right tool; its streaming twin is applyInPandasWithState
-    (streaming/feed.py:running_ewma_stream) with the same fold. Scale:
+    right tool; its streaming twin
+    (streaming/feed.py:running_ewma_stream) runs the same fold through
+    operators/stateful.fold_by_key. Scale:
     one key shuffle, Arrow-batched groups."""
     from petastorm_spark.operators.stateful import ewma_by_key
     from petastorm_spark.session import events_ts_us
@@ -1735,9 +1736,9 @@ def events_ewma_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     left-to-right float64 iteration as DuckDB's list_reduce, so parity
     is bit-exact, and no Arrow exchange: one key shuffle, then an
     in-JVM lambda over per-key arrays (bounded by events-per-key).
-    Prefer this when per-key histories fit an array column; the
-    applyInPandas/applyInPandasWithState pair in operators/stateful.py
-    covers unbounded streams and multi-column state."""
+    Prefer this when per-key histories fit an array column;
+    operators/stateful.fold_by_key's pandas folds cover unbounded
+    streams and multi-column state."""
     from petastorm_spark.session import events_ts_us
 
     ev = _t(spark, sf_dir, "events")

@@ -15,6 +15,12 @@ dataset directory as a continuous training feed).
     the streaming twin of ``operators.dedup.exact_dedup`` for a
     continuously-ingested corpus.
 
+Per-key order-dependent folds (EWMA, rolling z-score, funnel, KMV,
+next-event examples, transition pairs) are a ``step`` function run by
+``operators.stateful.fold_by_key``, which owns the state-store
+plumbing; a twin whose batch operator also runs on a stream calls
+that operator.
+
 Scale: state lives in the streaming state store, partitioned by key;
 watermarks bound state size.
 """
@@ -171,16 +177,16 @@ def running_ewma_stream(
     value_col: str = "value",
     alpha: float = 0.3,
 ) -> DataFrame:
-    """Custom stateful streaming operator (applyInPandasWithState):
-    per-key running EWMA of ``value_col`` in (ts, value) order — an
+    """Per-key running EWMA of ``value_col`` in (ts, value) order — an
     order-dependent fold no built-in streaming aggregate expresses.
 
-    State per key: (count, ewma, last_ts) in the state store, hash-
-    partitioned by key; each micro-batch folds its Arrow batches into
-    the state with the same closed-form update as the batch twin
-    (operators/stateful.py), so `availableNow` over a static directory
-    reproduces ``ewma_by_key`` exactly. Emits one updated row per key
-    per micro-batch (outputMode update).
+    The same ``ewma_by_key`` call as the batch twin
+    (operators/stateful.py): on a stream, ``fold_by_key`` keeps
+    (count, ewma, last_ts) per key in the state store, hash-partitioned
+    by key, and folds each micro-batch with the same closed-form
+    update, so `availableNow` over a static directory reproduces
+    ``ewma_by_key`` exactly. Emits one updated row per key per
+    micro-batch (outputMode update).
 
     Event time is normalized through the same ``_event_time`` shim the
     other streaming ops use BEFORE the fold, so ``last_ts`` is always
@@ -188,47 +194,11 @@ def running_ewma_stream(
     bigint-ns, TIMESTAMP_NTZ, or TIMESTAMP) — matching the batch
     twin's ``events_ts_us`` pre-normalization.
     """
-    import pandas as pd
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
+    from petastorm_spark.operators.stateful import ewma_by_key
 
-    from petastorm_spark.operators.stateful import ewma_update, ts_as_int
-
-    out_schema = (
-        f"{key_col} bigint, n_events bigint, ewma double, last_ts bigint"
-    )
-    state_schema = "cnt bigint, ewma double, last_ts bigint"
-
-    def fold(key, pdfs, state: GroupState):
-        cnt, ewma, last = state.get if state.exists else (0, None, None)
-        for pdf in pdfs:
-            pdf = pdf.sort_values([ts_col, value_col])
-            vals = pdf[value_col].to_numpy()
-            if len(vals):
-                ewma = ewma_update(vals, alpha, ewma)
-                cnt += len(vals)
-                last = ts_as_int(pdf[ts_col].iloc[-1])
-        state.update((cnt, ewma, last))
-        yield pd.DataFrame(
-            {
-                key_col: [key[0]],
-                "n_events": [cnt],
-                "ewma": [ewma],
-                "last_ts": [last],
-            }
-        )
-
-    return (
-        events.select(
-            key_col, _event_time(events, ts_col, None).alias(ts_col), value_col
-        )
-        .groupBy(key_col)
-        .applyInPandasWithState(
-            fold,
-            outputStructType=out_schema,
-            stateStructType=state_schema,
-            outputMode="update",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
+    ts = _event_time(events, ts_col, None).alias(ts_col)
+    return ewma_by_key(
+        events.select(key_col, ts, value_col), key_col, ts_col, value_col, alpha
     )
 
 
@@ -252,20 +222,11 @@ def contamination_stream(
     shingles arrive in one micro-batch, so rows stabilize
     immediately); the batch ``decontaminate`` remains the drop path,
     this stream is the alerting path."""
-    from petastorm_spark.operators.dedup import exploded_shingles
+    from petastorm_spark.operators.dedup import contamination_overlap
 
-    ev = F.broadcast(
-        exploded_shingles(eval_df, text_col, id_col, shingle_n)
-        .select("sh")
-        .distinct()
-    )
-    tr_sh = exploded_shingles(train_stream, text_col, id_col, shingle_n)
-    return (
-        tr_sh.join(ev, "sh")
-        .groupBy(id_col)
-        .agg(F.count(F.lit(1)).alias("n_overlap"))
-        .where(F.col("n_overlap") >= min_overlap)
-    )
+    return contamination_overlap(
+        train_stream, eval_df, text_col, id_col, shingle_n, broadcast_eval=True
+    ).where(F.col("n_overlap") >= min_overlap)
 
 
 def hll_registers_stream(
@@ -313,69 +274,37 @@ def rolling_zscore_stream(
     """
     import numpy as np
     import pandas as pd
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-    from petastorm_spark.operators.stateful import ts_as_int
+    from petastorm_spark.operators.stateful import fold_by_key
 
-    out_schema = (
-        f"{key_col} bigint, {id_col} bigint, {value_col} double, zscore double"
-    )
-    state_schema = "hist array<double>"
-
-    def fold(key, pdfs, state: GroupState):
-        (hist,) = state.get if state.exists else ([],)
-        hist = list(hist)
+    def step(state, batch):
+        hist = [] if state is None else list(state[0])
         out_ids, out_vals, out_z = [], [], []
-        # concatenate BEFORE sorting: a group larger than one Arrow
-        # chunk arrives as several pdfs, and per-chunk sorts would fold
-        # later-chunk events with earlier timestamps out of order.
-        # pd.concat raises on an empty iterator (timeout-only call).
-        chunks = list(pdfs)
-        batch = (
-            pd.concat(chunks, ignore_index=True) if chunks else pd.DataFrame()
-        )
-        if len(batch):
-            batch = batch.assign(
-                _tsi=batch[ts_col].map(ts_as_int)
-            ).sort_values(["_tsi", id_col])
-            for eid, val in zip(batch[id_col], batch[value_col]):
-                if len(hist) >= 2:
-                    arr = np.asarray(hist, dtype=np.float64)
-                    sd = arr.std(ddof=1)
-                    if sd > 0:
-                        z = (float(val) - arr.mean()) / sd
-                        if abs(z) > threshold:
-                            out_ids.append(int(eid))
-                            out_vals.append(float(val))
-                            out_z.append(np.floor(z * 10000) / 10000)
-                hist.append(float(val))
-                if len(hist) > window:
-                    hist.pop(0)
-        state.update((hist,))
-        yield pd.DataFrame(
-            {
-                key_col: [key[0]] * len(out_ids),
-                id_col: out_ids,
-                value_col: out_vals,
-                "zscore": out_z,
-            }
-        )
+        for eid, val in zip(batch[id_col], batch[value_col]):
+            if len(hist) >= 2:
+                arr = np.asarray(hist, dtype=np.float64)
+                sd = arr.std(ddof=1)
+                if sd > 0:
+                    z = (float(val) - arr.mean()) / sd
+                    if abs(z) > threshold:
+                        out_ids.append(int(eid))
+                        out_vals.append(float(val))
+                        out_z.append(np.floor(z * 10000) / 10000)
+            hist.append(float(val))
+            if len(hist) > window:
+                hist.pop(0)
+        out = pd.DataFrame({id_col: out_ids, value_col: out_vals, "zscore": out_z})
+        return (hist,), out
 
-    return (
-        events.select(
-            key_col,
-            _event_time(events, ts_col, None).alias(ts_col),
-            id_col,
-            value_col,
-        )
-        .groupBy(key_col)
-        .applyInPandasWithState(
-            fold,
-            outputStructType=out_schema,
-            stateStructType=state_schema,
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
+    ts = _event_time(events, ts_col, None).alias(ts_col)
+    return fold_by_key(
+        events.select(key_col, ts, id_col, value_col),
+        key_col,
+        [ts_col, id_col],
+        step,
+        f"{id_col} bigint, {value_col} double, zscore double",
+        "hist array<double>",
+        output_mode="append",
     )
 
 
@@ -459,62 +388,38 @@ def funnel_stream(
     order (the streaming trade — a late event cannot retroactively
     rebind an earlier step)."""
     import pandas as pd
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-    from petastorm_spark.operators.stateful import ts_as_int
+    from petastorm_spark.operators.stateful import fold_by_key, ts_as_int
 
     n = len(steps)
     if n == 0:
         raise ValueError("steps must be non-empty")
-    out_schema = (
-        f"{key_col} bigint, funnel_depth bigint, "
-        + ", ".join(f"t_step{i} bigint" for i in range(1, n + 1))
-    )
-    state_schema = "d int, " + ", ".join(
-        f"t{i} bigint" for i in range(1, n + 1)
-    )
 
-    def fold(key, pdfs, state: GroupState):
-        st = list(state.get) if state.exists else [0] + [None] * n
-        # one sort over the whole micro-batch — per-chunk sorting folds
-        # multi-chunk groups out of event-time order. pd.concat raises
-        # on an empty iterator (timeout-only call).
-        chunks = list(pdfs)
-        batch = (
-            pd.concat(chunks, ignore_index=True) if chunks else pd.DataFrame()
-        )
-        if len(batch):
-            batch = batch.assign(
-                _tsi=batch[ts_col].map(ts_as_int)
-            ).sort_values(["_tsi", type_col])
-            for tsi, ev in zip(batch["_tsi"], batch[type_col]):
-                d = st[0]
-                if d >= n or ev != steps[d]:
-                    continue
-                prev = -1 if d == 0 else (st[d] if st[d] is not None else -1)
-                if tsi > prev:
-                    st[0] = d + 1
-                    st[d + 1] = int(tsi)
-        state.update(tuple(st))
-        row = {key_col: [key[0]], "funnel_depth": [st[0]]}
+    def step(state, batch):
+        st = [0] + [None] * n if state is None else list(state)
+        for t, ev in zip(batch[ts_col], batch[type_col]):
+            d = st[0]
+            if d >= n or ev != steps[d]:
+                continue
+            tsi = ts_as_int(t)
+            prev = -1 if d == 0 else (st[d] if st[d] is not None else -1)
+            if tsi > prev:
+                st[0] = d + 1
+                st[d + 1] = tsi
+        out = {"funnel_depth": [st[0]]}
         for i in range(1, n + 1):
-            row[f"t_step{i}"] = [st[i]]
-        yield pd.DataFrame(row)
+            out[f"t_step{i}"] = [st[i]]
+        return tuple(st), pd.DataFrame(out)
 
-    return (
-        events.select(
-            key_col,
-            _event_time(events, ts_col, None).alias(ts_col),
-            type_col,
-        )
-        .groupBy(key_col)
-        .applyInPandasWithState(
-            fold,
-            outputStructType=out_schema,
-            stateStructType=state_schema,
-            outputMode="update",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
+    ts = _event_time(events, ts_col, None).alias(ts_col)
+    return fold_by_key(
+        events.select(key_col, ts, type_col),
+        key_col,
+        [ts_col, type_col],
+        step,
+        "funnel_depth bigint, "
+        + ", ".join(f"t_step{i} bigint" for i in range(1, n + 1)),
+        "d int, " + ", ".join(f"t{i} bigint" for i in range(1, n + 1)),
     )
 
 
@@ -564,16 +469,9 @@ def cm_sketch_stream(
     snapshot with ``operators.sketch.cm_estimate``; merge snapshots by
     summing per (r, bucket). availableNow over a static dir reproduces
     the batch ``cm_sketch`` exactly (pinned by test)."""
-    from petastorm_spark.operators.sketch import _cm_pairs
+    from petastorm_spark.operators.sketch import cm_sketch
 
-    if w < 2 or d < 1:
-        raise ValueError(f"w >= 2 and d >= 1 required, got {w=} {d=}")
-    return (
-        events.select(F.explode(_cm_pairs(key_col, w, d)).alias("_p"))
-        .select(F.col("_p.r").alias("r"), F.col("_p.bucket").alias("bucket"))
-        .groupBy("r", "bucket")
-        .agg(F.count(F.lit(1)).alias("c"))
-    )
+    return cm_sketch(events, key_col, w, d)
 
 
 def attribution_stream(
@@ -654,31 +552,21 @@ def kmv_sketch_stream(
     :func:`operators.sketch.kmv_overlap` works unchanged on it.
     """
     import pandas as pd
-    from pyspark.sql.streaming.state import GroupStateTimeout
 
     from petastorm_spark.operators.dedup import hash60
+    from petastorm_spark.operators.stateful import fold_by_key
 
-    gtype = events.schema[group_col].dataType.simpleString()
-    out_schema = f"{group_col} {gtype}, sketch array<bigint>"
-    state_schema = "sk array<bigint>"
-
-    def update(key, pdfs, state):
-        merged = set(state.get[0]) if state.exists else set()
-        for pdf in pdfs:
-            merged.update(int(h) for h in pdf["_h"])
+    def step(state, batch):
+        merged = set() if state is None else set(state[0])
+        merged.update(int(h) for h in batch["_h"])
         sk = sorted(merged)[:k]
-        state.update((sk,))
-        yield pd.DataFrame({group_col: [key[0]], "sketch": [sk]})
+        return (sk,), pd.DataFrame({"sketch": [sk]})
 
     hashed = events.select(
         F.col(group_col), hash60(F.col(elem_col).cast("string")).alias("_h")
     )
-    return hashed.groupBy(group_col).applyInPandasWithState(
-        update,
-        out_schema,
-        state_schema,
-        "update",
-        GroupStateTimeout.NoTimeout,
+    return fold_by_key(
+        hashed, group_col, [], step, "sketch array<bigint>", "sk array<bigint>"
     )
 
 
@@ -701,34 +589,12 @@ def next_event_stream(
     the feed is one availableNow batch, tested).
     """
     import pandas as pd
-    from pyspark.sql.streaming.state import GroupStateTimeout
 
-    from petastorm_spark.operators.stateful import ts_as_int
+    from petastorm_spark.operators.stateful import fold_by_key
 
-    utype = events.schema[user_col].dataType.simpleString()
-    out_schema = (
-        f"{user_col} {utype}, window_idx int, "
-        "context array<string>, label string"
-    )
-    state_schema = "n int, buf array<string>"
-
-    def update(key, pdfs, state):
-        if state.exists:
-            n, buf = state.get
-            buf = list(buf)
-        else:
-            n, buf = 0, []
+    def step(state, batch):
+        n, buf = (0, []) if state is None else (state[0], list(state[1]))
         rows = {"window_idx": [], "context": [], "label": []}
-        # pd.concat raises on an empty iterator; a timeout-only
-        # invocation delivers zero chunks and must no-op, not kill the
-        # streaming query
-        chunks = list(pdfs)
-        batch = (
-            pd.concat(chunks, ignore_index=True)
-            if chunks
-            else pd.DataFrame(columns=[user_col, ts_col, id_col, type_col])
-        )
-        batch = batch.sort_values([ts_col, id_col])
         for e in batch[type_col]:
             if len(buf) == context_len:
                 rows["window_idx"].append(n - context_len)
@@ -738,14 +604,15 @@ def next_event_stream(
             if len(buf) > context_len:
                 buf.pop(0)
             n += 1
-        state.update((n, buf))
-        out = pd.DataFrame(rows)
-        out[user_col] = key[0]
-        yield out[[user_col, "window_idx", "context", "label"]]
+        return (n, buf), pd.DataFrame(rows)
 
-    ordered = events.select(user_col, ts_col, id_col, type_col)
-    return ordered.groupBy(user_col).applyInPandasWithState(
-        update, out_schema, state_schema, "update", GroupStateTimeout.NoTimeout
+    return fold_by_key(
+        events.select(user_col, ts_col, id_col, type_col),
+        user_col,
+        [ts_col, id_col],
+        step,
+        "window_idx int, context array<string>, label string",
+        "n int, buf array<string>",
     )
 
 
@@ -776,46 +643,31 @@ def transition_pairs_stream(
     batch lead() pair set exactly (pinned by test against the
     event_transition_matrix counts)."""
     import pandas as pd
-    from pyspark.sql.streaming.state import GroupStateTimeout
 
-    utype = events.schema[user_col].dataType.simpleString()
-    out_schema = f"{user_col} {utype}, prev_type string, next_type string"
-    # two-field state so 'no events folded yet' is distinguishable from
-    # 'last event_type was NULL' (r15 ADVICE): the batch twin's lead()
-    # emits a (NULL, next) pair after a NULL-type event and only
-    # filters NULL NEXT_type — a single nullable 'last' field conflated
-    # the two and silently dropped that pair
-    state_schema = "last string, has_last boolean"
+    from petastorm_spark.operators.stateful import fold_by_key
 
-    def update(key, pdfs, state):
-        if state.exists:
-            last, has_last = state.get
-        else:
-            last, has_last = None, False
+    def step(state, batch):
+        # two-field state so 'no events folded yet' is distinguishable
+        # from 'last event_type was NULL': the batch twin's lead() emits
+        # a (NULL, next) pair after a NULL-type event and only filters
+        # NULL next_type
+        last, has_last = (None, False) if state is None else state
         rows = {"prev_type": [], "next_type": []}
-        chunks = list(pdfs)
-        batch = (
-            pd.concat(chunks, ignore_index=True)
-            if chunks
-            else pd.DataFrame(columns=[user_col, ts_col, id_col, type_col])
-        )
-        batch = batch.sort_values([ts_col, id_col])
         for e in batch[type_col]:
             e = None if pd.isna(e) else e
-            # batch twin filters NULL next_type only; prev may be NULL
             if has_last and e is not None:
                 rows["prev_type"].append(last)
                 rows["next_type"].append(e)
             last, has_last = e, True
-        if has_last:
-            state.update((last, True))
-        out = pd.DataFrame(rows)
-        out[user_col] = key[0]
-        yield out[[user_col, "prev_type", "next_type"]]
+        return ((last, True) if has_last else None), pd.DataFrame(rows)
 
-    ordered = events.select(user_col, ts_col, id_col, type_col)
-    return ordered.groupBy(user_col).applyInPandasWithState(
-        update, out_schema, state_schema, "update", GroupStateTimeout.NoTimeout
+    return fold_by_key(
+        events.select(user_col, ts_col, id_col, type_col),
+        user_col,
+        [ts_col, id_col],
+        step,
+        "prev_type string, next_type string",
+        "last string, has_last boolean",
     )
 
 
@@ -904,6 +756,9 @@ def incremental_near_dup_stream(
             ),
             ["band", "bh"],
         )
+        # self-match guard, as in the batch op: an id probed against an
+        # index that already contains it would otherwise emit (id, id, 1.0)
+        .where(F.col("new_id") != F.col("old_id"))
         .join(old, "old_id")
         .withColumn("_est", agree / F.lit(num_hashes))
         .where(F.col("_est") >= min_est)
@@ -1221,34 +1076,14 @@ def constraint_check_stream(
     and the long-form explode after it is stateless. The ``unique``
     kind needs a key-grouped count (a second stateful operator) and
     stays a batch/nightly gate; asking for it here raises."""
-    from petastorm_spark.operators.profiling import violation_expr
+    from petastorm_spark.operators.profiling import fused_violation_counts
 
-    aggs, names = [], []
-    for i, chk in enumerate(checks):
-        kind, col = chk[0], chk[1]
-        if kind == "unique":
-            raise ValueError(
-                "unique needs a key-grouped count (second stateful "
-                "operator) — run it through the batch "
-                "check_constraints gate"
-            )
-        aggs.append(
-            F.count(F.when(violation_expr(chk), 1)).alias(f"_v_{i}")
+    if any(chk[0] == "unique" for chk in checks):
+        raise ValueError(
+            "unique needs a key-grouped count (second stateful "
+            "operator) — run it through the batch "
+            "check_constraints gate"
         )
-        names.append((i, kind, col))
-    one = stream.agg(*aggs)
-    rows = F.array(
-        *[
-            F.struct(
-                F.lit(kind).alias("check"),
-                F.lit(col).alias("column"),
-                F.col(f"_v_{i}").alias("n_violations"),
-            )
-            for i, kind, col in names
-        ]
-    )
-    return (
-        one.select(F.explode(rows).alias("_c"))
-        .select("_c.*")
-        .withColumn("passed", F.col("n_violations") == 0)
+    return fused_violation_counts(stream, checks).withColumn(
+        "passed", F.col("n_violations") == 0
     )

@@ -231,14 +231,15 @@ def test_global_rank_has_no_single_task_window(spark, sf_dir):
     NO corpus-scale single-partition window exists — the only Window
     node runs over the tiny per-partition offset table, and the data
     path is range exchange + local sort + broadcast join."""
-    from petastorm_spark.plans.checks import formatted_plan
+    from petastorm_spark.plans.checks import exchanges, formatted_plan
 
-    plan = formatted_plan(QUERIES["histogram_order_prices"](spark, sf_dir))
+    df = QUERIES["histogram_order_prices"](spark, sf_dir)
+    plan = formatted_plan(df)
     assert "rangepartitioning" in plan, plan
     assert "BroadcastHashJoin" in plan or "BroadcastExchange" in plan
-    # the offsets cumsum is the ONLY SinglePartition exchange and it
-    # feeds a Window over partition-count-sized input, not the data
-    assert plan.count("Exchange SinglePartition") <= 2, plan
+    # the SinglePartition exchanges gather partition-count-sized inputs
+    # (the offsets cumsum Window and a global total), never the data
+    assert exchanges(df).count("SinglePartition") <= 2, exchanges(df)
 
 
 def test_dsir_broadcasts_ratio_table(spark, sf_dir):
@@ -469,3 +470,21 @@ def test_events_ohlc_single_exchange_no_window(spark, sf_dir):
     ep = df._jdf.queryExecution().executedPlan().toString()
     assert "EvalPython" not in ep
     assert "Join" not in ep
+
+
+def test_exchanges_lists_each_shuffle_once(spark, sf_dir):
+    """A plain groupBy has one hash exchange. A cached frame scanned
+    twice prints its plan, exchange included, under each scan in the
+    tree; it is still one exchange."""
+    from petastorm_spark.plans.checks import exchanges, formatted_plan
+    from petastorm_spark.session import materialize, release_persisted
+
+    ev = spark.read.parquet(f"{sf_dir}/events.parquet")
+    assert exchanges(ev.groupBy("user_id").count()) == ["hashpartitioning"]
+    cached = materialize(ev.repartition(3, "user_id"))
+    try:
+        twice = cached.union(cached)
+        assert formatted_plan(twice).count("Exchange") > 1
+        assert exchanges(twice) == ["hashpartitioning"]
+    finally:
+        release_persisted()

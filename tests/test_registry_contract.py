@@ -227,3 +227,38 @@ def test_no_session_wide_partition_overwrite_mode():
                     line = text.count("\n", 0, m.start()) + 1
                     hits.append(f"{os.path.relpath(path, pkg)}:{line}")
     assert not hits, "partitionOverwriteMode set through spark.conf:\n" + "\n".join(hits)
+
+
+def test_stateful_streaming_goes_through_fold_by_key_only():
+    """Per-key stateful folds have one owner,
+    ``operators.stateful.fold_by_key``: it gathers a key's Arrow chunks,
+    sorts them once, reads and writes the state and types the key
+    column. A state-store grouped map called anywhere else is a second
+    copy of that plumbing (the copies sorted each chunk on its own and
+    declared every key ``bigint``)."""
+    import ast
+    import os
+    import re
+
+    pkg = os.path.join(
+        os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+        "petastorm_spark",
+    )
+    owner_path = os.path.join(pkg, "operators", "stateful.py")
+    raw = re.compile(r"applyInPandasWithState|transformWithStateInPandas")
+    hits = []
+    for root, _, files in os.walk(pkg):
+        for name in sorted(files):
+            path = os.path.join(root, name)
+            if not name.endswith(".py"):
+                continue
+            with open(path) as f:
+                text = f.read()
+            owned = set()
+            for n in ast.parse(text).body if path == owner_path else []:
+                if isinstance(n, ast.FunctionDef) and n.name == "fold_by_key":
+                    owned = set(range(n.lineno, n.end_lineno + 1))
+            for i, line in enumerate(text.splitlines(), 1):
+                if raw.search(line) and i not in owned:
+                    hits.append(f"{os.path.relpath(path, pkg)}:{i}: {line.strip()}")
+    assert not hits, "stateful grouped maps outside fold_by_key:\n" + "\n".join(hits)
