@@ -475,7 +475,6 @@ def incremental_near_dup(
     shingle_n: int = 3,
     min_est: float = 0.5,
     n_shards: int = 256,
-    prune_shards: bool = True,
 ) -> DataFrame:
     """Near-dup matches of a NEW document batch against an existing
     LSH index: (new_id, old_id, est_jaccard), where ``est_jaccard`` is
@@ -491,13 +490,12 @@ def incremental_near_dup(
 
     Scale: work is BATCH-sized, never corpus-sized. The new batch is
     signed and banded (one pass over the batch), then equi-joined to
-    the index on (band, bh). With ``prune_shards`` (default) the
-    batch's distinct ``bh_shard`` values — at most ``n_shards`` ints —
-    are pushed into the bucket scan as an ``isin`` filter, so a
-    parquet index written by :func:`lsh_index_write` reads only the
-    probed shards' directories (the same collected-probe pruning the
-    IVF index uses; for small batches that is a small fraction of the
-    corpus buckets). Candidate multiplicity is bounded by ``bands``,
+    the index on (band, bh). The batch's distinct ``bh_shard`` values
+    — at most ``n_shards`` ints — are pushed into the bucket scan as
+    an ``isin`` filter, so a parquet index written by
+    :func:`lsh_index_write` reads only the probed shards' directories
+    (the same collected-probe pruning the IVF index uses; for small
+    batches that is a small fraction of the corpus buckets). Candidate multiplicity is bounded by ``bands``,
     and the estimate is two id-keyed joins against the signature
     tables — no text is touched."""
     new_buckets, new_sigs = lsh_index_build(
@@ -511,15 +509,13 @@ def incremental_near_dup(
     # (batch-sized, but the tokenize pass is the expensive part of the
     # probe). Both caches back the lazy result.
     new_sigs = materialize(new_sigs)
-    if prune_shards:
-        # the shard collect below materializes this batch-sized cache,
-        # so the candidate join does not re-sign the batch
-        new_buckets = materialize(new_buckets)
-        shards = sorted(
-            r.bh_shard
-            for r in new_buckets.select("bh_shard").distinct().collect()
-        )
-        index_buckets = index_buckets.where(F.col("bh_shard").isin(shards))
+    # the shard collect below materializes this batch-sized cache, so
+    # the candidate join does not re-sign the batch
+    new_buckets = materialize(new_buckets)
+    shards = sorted(
+        r.bh_shard for r in new_buckets.select("bh_shard").distinct().collect()
+    )
+    index_buckets = index_buckets.where(F.col("bh_shard").isin(shards))
     cand = (
         new_buckets.select(F.col(id_col).alias("new_id"), "band", "bh")
         .join(

@@ -311,7 +311,6 @@ def embedding_near_dup_pairs(
     extra_planes: int = 12,
     corpus_size_hint: int | None = None,
     target_bucket: int = 64,
-    _keys_only: bool = False,
 ) -> DataFrame:
     """Embedding-cosine near-duplicate PAIRS: random-hyperplane LSH
     bucketing (each vector lands in exactly one sign-pattern bucket) and
@@ -333,7 +332,8 @@ def embedding_near_dup_pairs(
        target is far below the top-k searcher's 1024) instead of
        N/2^8, under which the candidate-verify volume is quadratic in
        the corpus (measured: 94.5x candidates for 10x data at 8 fixed
-       planes, tools/measure_key_volume.py). Each extra plane costs
+       planes; SCALING_OUT key-volume table, whose measuring script
+       is in git history). Each extra plane costs
        ~theta/pi near-miss recall per the standard LSH trade; exact
        copies are unaffected (they agree on every plane).
     2. *Hot-bucket refinement* — bucket sizes are counted with a window
@@ -418,8 +418,6 @@ def embedding_near_dup_pairs(
         "_sub",
         F.when(F.col("_n") > hot_threshold, F.col("_refine")).otherwise(F.lit(-1)),
     )
-    if _keys_only:
-        return marked.select(F.col(id_col), "bucket", "_sub")
     a = marked.select(
         F.col(id_col).alias("id_a"), F.col(vec_col).alias("va"), "bucket", "_sub"
     )
@@ -830,7 +828,6 @@ def knn_graph(
     n_cells: int | None = None,
     n_probe: int = 2,
     centroids: DataFrame | None = None,
-    score_kernel: str = "fold",
     hierarchical: bool = False,
     l1_probe: int = 4,
     l1_rounds: int = 4,
@@ -872,16 +869,10 @@ def knn_graph(
     SQL-oracle parity (and any caller pinning exact edges) is
     reproducible without ML.
 
-    ``score_kernel``: "fold" (default) scores candidates with the
-    Catalyst HOF fold — sequential summation, bit-identical to the
-    SQL oracles. "numpy" scores each Arrow batch of joined candidate
-    pairs with one einsum — the production kernel for the graph's
-    all-pairs volume (the fold interprets its lambda per element,
-    ~1.4 us/score; the batch kernel is two orders faster), pairwise
-    summation so the last float bit can differ from the fold — tested
-    rank-identical on realistic gaps, not hash-pinned. Both kernels
-    rank a zero-norm (degenerate) vector LAST instead of dividing by
-    zero (ANSI) or letting NaN sort first.
+    Candidates are scored with the Catalyst HOF fold
+    (:func:`_safe_cosine`): sequential summation, bit-identical to the
+    SQL oracles, and a zero-norm (degenerate) vector ranks LAST
+    instead of dividing by zero (ANSI) or letting NaN sort first.
 
     Probe + home-cell assignment is ONE Arrow/BLAS pass while the
     quantizer fits the local-matrix bound (the _probe_cells_numpy
@@ -971,52 +962,9 @@ def knn_graph(
     joined = probes.join(cand, "cell").where(
         F.col("neighbor_id") != F.col("query_id")
     )
-    if score_kernel == "numpy":
-        import pandas as pd
-
-        id_t = corpus.schema[id_col].dataType.simpleString()
-        out_schema = (
-            f"query_id {id_t}, neighbor_id {id_t}, cos_sim double"
-        )
-
-        def score(batches):
-            for pdf in batches:
-                if len(pdf) == 0:
-                    yield pd.DataFrame(
-                        {
-                            "query_id": pdf["query_id"],
-                            "neighbor_id": pdf["neighbor_id"],
-                            "cos_sim": [],
-                        }
-                    )
-                    continue
-                Q = np.stack(pdf["q_vec"].to_numpy()).astype(np.float64)
-                C = np.stack(pdf["c_vec"].to_numpy()).astype(np.float64)
-                num = np.einsum("ij,ij->i", Q, C)
-                qn = np.sqrt(np.einsum("ij,ij->i", Q, Q))
-                cn = np.sqrt(np.einsum("ij,ij->i", C, C))
-                with np.errstate(divide="ignore", invalid="ignore"):
-                    cos = num / (qn * cn)
-                # degenerate (zero-norm) never wins — the
-                # _probe_cells_numpy convention
-                cos = np.where(np.isnan(cos), -np.inf, cos)
-                yield pd.DataFrame(
-                    {
-                        "query_id": pdf["query_id"],
-                        "neighbor_id": pdf["neighbor_id"],
-                        "cos_sim": cos,
-                    }
-                )
-
-        scored = joined.select(
-            "query_id", "q_vec", "neighbor_id", "c_vec"
-        ).mapInPandas(score, out_schema)
-    elif score_kernel == "fold":
-        scored = joined.withColumn(
-            "cos_sim", _safe_cosine(F.col("q_vec"), F.col("c_vec"))
-        )
-    else:
-        raise ValueError(f"unknown score_kernel {score_kernel!r}")
+    scored = joined.withColumn(
+        "cos_sim", _safe_cosine(F.col("q_vec"), F.col("c_vec"))
+    )
     return topk_per_query(scored, k)
 
 
@@ -1059,9 +1007,9 @@ def knn_graph_write(
     an append rewrites only the affected partitions.
 
     Edges are scored with the oracle-exact Catalyst fold
-    (:func:`_safe_cosine`), identical to ``knn_graph(...,
-    score_kernel="fold")`` — a write-then-read round trip reproduces
-    the in-memory graph row for row."""
+    (:func:`_safe_cosine`), the same kernel :func:`knn_graph` uses — a
+    write-then-read round trip reproduces the in-memory graph row for
+    row."""
     cent = _knn_quantizer(corpus, id_col, vec_col, n_cells, centroids)
     crows = cent.select("cell", "cent_vec").collect()
     if not hierarchical and not 0 < len(crows) <= _MAX_LOCAL_CELLS:
@@ -1519,96 +1467,6 @@ def _kmeans_assign_expr(cents: dict[int, list[int]]) -> Column:
     return F.array_min(F.array(*structs))
 
 
-def _kmeans_np_model(cents: dict[int, list[int]]):
-    import numpy as np
-
-    cells_sorted = sorted(cents)
-    C = np.array([cents[c] for c in cells_sorted], dtype=np.int64)
-    return C, np.array(cells_sorted, dtype=np.int64)
-
-
-def _kmeans_sqdist(V, C):
-    """Exact int64 squared distances via the matmul decomposition
-    ||v-c||^2 = v.v - 2 v@c + c.c — O(batch x k) memory instead of the
-    batch x k x dims difference tensor (which is ~2.6 GB per 10k-row
-    Arrow batch at a realistic k=256, dims=64 coarse quantizer). All
-    three terms are int64 integer arithmetic, so the result is the
-    SAME exact integer the elementwise form and the Catalyst fold
-    compute."""
-    import numpy as np
-
-    vv = np.einsum("ij,ij->i", V, V)
-    cc = np.einsum("ij,ij->i", C, C)
-    return vv[:, None] - 2 * (V @ C.T) + cc[None, :]
-
-
-def _kmeans_assign_numpy(pts: DataFrame, cents: dict[int, list[int]]) -> DataFrame:
-    """The production assignment kernel: per Arrow batch one int64
-    numpy pass — (V - C)^2 summed over dims is the SAME exact integer
-    the Catalyst fold computes, and argmin's first-minimum over
-    cell-ascending rows is the same lowest-cell tie-break, so the two
-    kernels are bit-identical (unlike the float cosine kernels, which
-    only agree outside last-bit ties). Emits (_id, cell, dist)."""
-    import numpy as np
-    import pandas as pd
-
-    C, cell_ids = _kmeans_np_model(cents)
-    id_t = pts.schema["_id"].dataType.simpleString()
-
-    def run(batches):
-        for pdf in batches:
-            if len(pdf) == 0:
-                yield pd.DataFrame({"_id": pdf["_id"], "cell": [], "dist": []})
-                continue
-            V = np.stack(pdf["_xq"].to_numpy()).astype(np.int64)
-            D = _kmeans_sqdist(V, C)
-            idx = D.argmin(axis=1)
-            yield pd.DataFrame(
-                {
-                    "_id": pdf["_id"],
-                    "cell": cell_ids[idx].astype(np.int32),
-                    "dist": D[np.arange(len(idx)), idx],
-                }
-            )
-
-    return pts.mapInPandas(run, f"_id {id_t}, cell int, dist long")
-
-
-def _kmeans_stats_numpy(pts: DataFrame, cents: dict[int, list[int]]) -> DataFrame:
-    """Per-batch PARTIAL sufficient statistics for the Lloyd update:
-    scatter-add each batch's vectors onto their argmin cells and emit
-    k x dims (cell, d, s, n) rows — the exchange carries k*dims rows
-    per Arrow batch instead of one per vector. Exact int64 partials;
-    the global DECIMAL(38,0) re-sum keeps any corpus size exact."""
-    import numpy as np
-    import pandas as pd
-
-    C, cell_ids = _kmeans_np_model(cents)
-    k, dims = C.shape
-
-    def run(batches):
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            V = np.stack(pdf["_xq"].to_numpy()).astype(np.int64)
-            D = _kmeans_sqdist(V, C)
-            idx = D.argmin(axis=1)
-            S = np.zeros((k, dims), dtype=np.int64)
-            np.add.at(S, idx, V)
-            n = np.bincount(idx, minlength=k)
-            live = n > 0
-            yield pd.DataFrame(
-                {
-                    "_cell": np.repeat(cell_ids[live], dims),
-                    "_d": np.tile(np.arange(dims), int(live.sum())),
-                    "_s": S[live].ravel(),
-                    "_n": np.repeat(n[live], dims),
-                }
-            )
-
-    return pts.mapInPandas(run, "_cell int, _d int, _s long, _n long")
-
-
 def kmeans_fit(
     corpus: DataFrame,
     id_col: str = "vec_id",
@@ -1617,7 +1475,6 @@ def kmeans_fit(
     dims: int = 8,
     rounds: int = 2,
     micro: int = 10**6,
-    kernel: str = "fold",
 ) -> dict[int, list[int]]:
     """The Lloyd driver loop behind :func:`kmeans_lloyd`, exposed so
     the fitted integer centroids themselves are a first-class model
@@ -1639,30 +1496,19 @@ def kmeans_fit(
         i: [int(x) for x in r["_xq"]] for i, r in enumerate(seed_rows)
     }
     for _ in range(rounds):
-        if kernel == "numpy":
-            stats = (
-                _kmeans_stats_numpy(pts, cents)
-                .groupBy("_cell", "_d")
-                .agg(
-                    F.sum(F.col("_s").cast("decimal(38,0)")).alias("_s"),
-                    F.sum("_n").alias("_n"),
-                )
-                .collect()
+        assigned = pts.withColumn("_a", _kmeans_assign_expr(cents))
+        stats = (
+            assigned.select(
+                F.col("_a.cell").alias("_cell"),
+                F.posexplode("_xq").alias("_d", "_x"),
             )
-        else:
-            assigned = pts.withColumn("_a", _kmeans_assign_expr(cents))
-            stats = (
-                assigned.select(
-                    F.col("_a.cell").alias("_cell"),
-                    F.posexplode("_xq").alias("_d", "_x"),
-                )
-                .groupBy("_cell", "_d")
-                .agg(
-                    F.sum(F.col("_x").cast("decimal(38,0)")).alias("_s"),
-                    F.count(F.lit(1)).alias("_n"),
-                )
-                .collect()
+            .groupBy("_cell", "_d")
+            .agg(
+                F.sum(F.col("_x").cast("decimal(38,0)")).alias("_s"),
+                F.count(F.lit(1)).alias("_n"),
             )
+            .collect()
+        )
         nxt: dict[int, list[int]] = {}
         for r in stats:
             vec = nxt.setdefault(int(r["_cell"]), [0] * dims)
@@ -1683,7 +1529,6 @@ def kmeans_lloyd(
     rounds: int = 2,
     micro: int = 10**6,
     output: str = "report",
-    kernel: str = "fold",
 ) -> DataFrame:
     """ENGINE-EXACT distributed Lloyd's k-means over the leading
     ``dims`` embedding coordinates — the clustering primitive under
@@ -1716,23 +1561,18 @@ def kmeans_lloyd(
     cent_csv the integer centroid coordinates (the full state, so the
     oracle check pins assignments AND centroids). ``output="assign"``:
     (id_col, cell, dist_q) per vector for downstream consumers
-    (:func:`queries_llm.cluster_balanced_sample`)."""
+    (:func:`queries_llm.cluster_balanced_sample`). Any other
+    ``output`` raises ValueError."""
+    if output not in ("report", "assign"):
+        raise ValueError(
+            f"kmeans_lloyd: output must be 'report' or 'assign', got {output!r}"
+        )
     pts = corpus.select(
         F.col(id_col).alias("_id"),
         _kmeans_quantize_expr(vec_col, dims, micro).alias("_xq"),
     )
-    cents = kmeans_fit(
-        corpus, id_col, vec_col, k, dims, rounds, micro, kernel=kernel
-    )
-    if kernel == "numpy":
-        final = _kmeans_assign_numpy(pts, cents).select(
-            "_id",
-            F.struct(
-                F.col("dist").alias("dist"), F.col("cell").alias("cell")
-            ).alias("_a"),
-        )
-    else:
-        final = pts.withColumn("_a", _kmeans_assign_expr(cents))
+    cents = kmeans_fit(corpus, id_col, vec_col, k, dims, rounds, micro)
+    final = pts.withColumn("_a", _kmeans_assign_expr(cents))
     if output == "assign":
         return final.select(
             F.col("_id").alias(id_col),
@@ -1994,7 +1834,6 @@ def semantic_dedup(
     threshold: float = 0.95,
     centroids: DataFrame | None = None,
     n_probe: int = 1,
-    _keys_only: bool = False,
 ) -> DataFrame:
     """Cluster-scoped semantic dedup (the SemDeDup recipe, Abbas et
     al. 2023): bucket the corpus by nearest coarse centroid, score
@@ -2077,12 +1916,6 @@ def semantic_dedup(
             assigned = corpus.select(id_col, vec_col).join(probed, id_col)
     else:
         _, assigned = ivf_build(corpus, id_col, vec_col, n_cells, centroids)
-    if _keys_only:
-        # (id, cell) join keys only — the SCALING_OUT key-volume study
-        # measures candidate-pair counts from the identical assignment
-        if n_probe > 1:
-            return assigned.select(F.col(id_col), F.explode("_cells").alias("cell"))
-        return assigned.select(F.col(id_col), "cell")
     unit = (
         assigned.withColumn("_nrm", norm(F.col(vec_col)))
         .withColumn(

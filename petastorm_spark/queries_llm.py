@@ -7454,9 +7454,7 @@ def embedding_intrinsic_dim(spark: SparkSession, sf_dir: str) -> DataFrame:
     from petastorm_spark.operators.similarity import knn_graph
 
     emb = _t_wide(spark, sf_dir, "embeddings")
-    edges = knn_graph(
-        emb, k=2, n_cells=16, n_probe=2, score_kernel="fold"
-    )
+    edges = knn_graph(emb, k=2, n_cells=16, n_probe=2)
     piv = edges.groupBy("query_id").agg(
         F.round(
             F.lit(1.0) - F.max(F.when(F.col("rank") == 1, F.col("cos_sim"))),

@@ -10,8 +10,8 @@ with Spark doing the heavy lifting):
   1. **Plan tier (distributed)** — the dataset is a Spark DataFrame;
      projection (schema view), filters, and any heavy transform run as
      a Catalyst plan with parquet pushdown. Only a JVM-only ``Column``
-     filter (or a dataframe-based reader, or an explicit local cache
-     request for a remote store) forces a one-time Spark-side
+     filter (or a URL the JVM reaches but pyarrow cannot, or an explicit
+     local cache request for a remote store) forces a one-time Spark-side
      materialization; everything else streams.
   2. **Iteration tier (streaming, constant memory)** — the source
      parquet files are iterated **one row group at a time** through a
@@ -74,7 +74,7 @@ import pandas as pd
 import pyarrow.fs as pafs
 import pyarrow.parquet as pq
 from pyspark import cloudpickle
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import Column, SparkSession
 from pyspark.sql import functions as F
 
 from petastorm_spark._piece_worker import (
@@ -435,10 +435,9 @@ class Reader:
 
     def __init__(
         self,
-        dataset_url: str | None = None,
+        dataset_url: str | list[str],
         *,
         spark: SparkSession | None = None,
-        dataframe: DataFrame | None = None,
         schema_fields: list | None = None,
         predicate: PredicateBase | None = None,
         transform_spec: TransformSpec | None = None,
@@ -490,13 +489,10 @@ class Reader:
             raise ValueError(f"unsupported cache_type {cache_type!r}")
         if cache_type == "local-disk" and cache_dir is None:
             cache_dir = cache_location
-        if (dataset_url is None) == (dataframe is None):
-            raise ValueError("exactly one of dataset_url / dataframe is required")
         # Multi-URL datasets (reference petastorm/reader.py:51-57,209):
         # a list of file/dir URLs sharing one scheme reads as ONE
         # dataset — piece lists merge, sharding spans all of them.
         # One URL is a list of one.
-        urls: list[str] | None = None
         if isinstance(dataset_url, (list, tuple)):
             if not dataset_url:
                 raise ValueError("dataset url list must be non-empty")
@@ -509,7 +505,7 @@ class Reader:
                     "all dataset URLs must share one scheme, got "
                     f"{sorted(schemes)}"
                 )
-        elif dataset_url is not None:
+        else:
             urls = [dataset_url]
         if (cur_shard is None) != (shard_count is None):
             raise ValueError("cur_shard and shard_count must be set together")
@@ -518,7 +514,7 @@ class Reader:
                 f"cur_shard must be in [0, {shard_count}), got {cur_shard}"
             )
 
-        self._spark = spark or (dataframe.sparkSession if dataframe is not None else get_spark())
+        self._spark = spark or get_spark()
         from petastorm_spark.session import ensure_session_confs
 
         ensure_session_confs(self._spark)
@@ -553,19 +549,16 @@ class Reader:
         # pyarrow (filesystem, root) per URL, None where pyarrow cannot
         # reach the scheme: the footer fallback and the direct iteration
         # tier use it
-        fs_pairs = [_resolve_fs(u) for u in urls] if urls is not None else None
-        stored = struct = self._sidecar_counts = None
-        if dataframe is not None:
-            df = dataframe
-        else:
-            df, struct = self._open(urls, fs_pairs)
-            if len(urls) == 1:
-                # the sidecar and the petastorm-compat metadata describe
-                # ONE dataset root: a merged multi-URL dataset never has
-                # them (plain-store path)
-                stored, self._sidecar_counts = load_dataset_metadata(
-                    self._spark, urls[0]
-                )
+        fs_pairs = [_resolve_fs(u) for u in urls]
+        stored = self._sidecar_counts = None
+        df, struct = self._open(urls, fs_pairs)
+        if len(urls) == 1:
+            # the sidecar and the petastorm-compat metadata describe ONE
+            # dataset root: a merged multi-URL dataset never has them
+            # (plain-store path)
+            stored, self._sidecar_counts = load_dataset_metadata(
+                self._spark, urls[0]
+            )
 
         full_schema = stored or Unischema.from_spark_schema(
             df.schema if df is not None else struct
@@ -638,8 +631,8 @@ class Reader:
         # plan and the direct iteration path.
         selected_files: set[str] | None = None
         if rowgroup_selector is not None:
-            if urls is None or len(urls) > 1:
-                raise ValueError("rowgroup_selector requires a dataset_url reader")
+            if len(urls) > 1:
+                raise ValueError("rowgroup_selector requires a single dataset_url")
             selected_files = {
                 _strip_scheme(f)
                 for f in rowgroup_selector.select_files(self._spark, urls[0])
@@ -681,8 +674,7 @@ class Reader:
         self._fs: pafs.FileSystem = pafs.LocalFileSystem()
         self._direct_root: str | None = None
         if (
-            fs_pairs is not None
-            and all(p is not None for p in fs_pairs)
+            all(p is not None for p in fs_pairs)
             and col_filter is None
             and (cache_dir is None or isinstance(fs_pairs[0][0], pafs.LocalFileSystem))
         ):
@@ -711,18 +703,11 @@ class Reader:
             # descriptor — semanticHash() changes across JVM restarts
             # (verified empirically), which would defeat cross-run
             # reuse and grow the cache unboundedly. Descriptor: source
-            # url + projected columns + filter text; dataframe-based
-            # readers fall back to semanticHash (session-lifetime reuse
-            # only, documented).
+            # url + projected columns + filter text.
             import hashlib
 
-            if urls is not None:
-                desc = "|".join(
-                    ["|".join(urls), ",".join(sorted(need)), str(filters)]
-                )
-                key = hashlib.sha256(desc.encode()).hexdigest()[:12]
-            else:
-                key = f"sess{plan.semanticHash() & 0xFFFFFFFF:08x}"
+            desc = "|".join(["|".join(urls), ",".join(sorted(need)), str(filters)])
+            key = hashlib.sha256(desc.encode()).hexdigest()[:12]
             managed = os.path.join(cache_dir, f"_ps_materialized_{key}")
             local = pafs.LocalFileSystem()
             existing = (
@@ -748,7 +733,7 @@ class Reader:
                 _enforce_cache_limit(cache_dir, cache_size_limit, keep=managed)
             self._files = existing
         else:
-            if urls is not None and col_filter is not None:
+            if col_filter is not None:
                 # Residual JVM-only Column filter over a URL-addressed
                 # store: a silent driver-local tempdir write would not
                 # survive cluster mode (executors write where only the
@@ -762,8 +747,9 @@ class Reader:
                     "explicit cache_dir on a durable filesystem to "
                     "materialize the filtered scan."
                 )
-            # dataframe-based reader: an arbitrary Spark plan has no
-            # source files to stream, so a materialization is inherent.
+            # the JVM reaches this URL but pyarrow cannot, so the
+            # direct tier has no files to stream: materialize the plan
+            # once into a reader-owned tempdir.
             self._owned_cache = tempfile.mkdtemp(prefix="pstorm_cache_")
             plan.write.mode("overwrite").parquet(self._owned_cache)
             self._files = _list_parquet_files_fs(
@@ -771,7 +757,7 @@ class Reader:
             )
         if not self._files:
             raise ValueError(
-                f"no parquet files found for {urls or 'dataframe'}"
+                f"no parquet files found for {urls}"
             )
 
         # ---- piece list (one per row group) --------------------------------
@@ -1058,7 +1044,7 @@ class Reader:
         self.close()
 
 
-def make_reader(dataset_url: str | None = None, **kwargs) -> Reader:
+def make_reader(dataset_url: str, **kwargs) -> Reader:
     """Row-oriented reader over a (petastorm-style or plain) parquet
     dataset: yields one namedtuple per row with tensor fields decoded.
     Single URL only (reference parity, petastorm/reader.py:60)."""
@@ -1070,7 +1056,7 @@ def make_reader(dataset_url: str | None = None, **kwargs) -> Reader:
     return Reader(dataset_url, batched=False, **kwargs)
 
 
-def make_batch_reader(dataset_url_or_urls=None, **kwargs) -> Reader:
+def make_batch_reader(dataset_url_or_urls, **kwargs) -> Reader:
     """Columnar reader: yields one namedtuple of column vectors per row
     group (post filter/transform). Accepts one parquet URL or a list of
     same-scheme URLs merged as a single dataset (reference

@@ -262,3 +262,44 @@ def test_stateful_streaming_goes_through_fold_by_key_only():
                 if raw.search(line) and i not in owned:
                     hits.append(f"{os.path.relpath(path, pkg)}:{i}: {line.strip()}")
     assert not hits, "stateful grouped maps outside fold_by_key:\n" + "\n".join(hits)
+
+
+def test_public_functions_take_no_underscore_parameters():
+    """An underscore-prefixed parameter on a public function is a switch
+    the signature hides from its callers, so nothing in the package
+    exercises it and nothing keeps it from drifting. Each public
+    function or method of a public class takes public parameters only."""
+    import ast
+    import os
+
+    pkg = os.path.join(
+        os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+        "petastorm_spark",
+    )
+
+    def public(name):
+        return not name.startswith("_") or (
+            name.startswith("__") and name.endswith("__")
+        )
+
+    hits = []
+
+    def visit(body, rel):
+        for n in body:
+            if isinstance(n, ast.ClassDef) and not n.name.startswith("_"):
+                visit(n.body, rel)
+            elif isinstance(n, (ast.FunctionDef, ast.AsyncFunctionDef)) and public(
+                n.name
+            ):
+                a = n.args
+                for arg in a.posonlyargs + a.args + a.kwonlyargs:
+                    if arg.arg.startswith("_"):
+                        hits.append(f"{rel}:{n.lineno}: {n.name}({arg.arg})")
+
+    for root, _, files in os.walk(pkg):
+        for name in sorted(files):
+            if name.endswith(".py"):
+                path = os.path.join(root, name)
+                with open(path) as f:
+                    visit(ast.parse(f.read()).body, os.path.relpath(path, pkg))
+    assert not hits, "underscore parameters on public functions:\n" + "\n".join(hits)

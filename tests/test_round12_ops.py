@@ -291,24 +291,6 @@ def test_embedding_outliers_flags_injected_corruption(spark, corpus):
     assert got[999]["worst_ratio_bp"] > 35000  # z=3.5 -> ~51891 bp floor
 
 
-def test_knn_graph_numpy_kernel_matches_fold(spark, corpus):
-    """The production numpy score kernel must reproduce the fold
-    kernel's graph row for row (ranks and 4-decimal cosines) — the
-    pairwise-vs-sequential float gap never crosses a ranking or
-    rounding boundary on realistic data."""
-    from petastorm_spark.operators.similarity import knn_graph
-
-    canon = lambda df: sorted(  # noqa: E731
-        (r["query_id"], r["rank"], r["neighbor_id"], r["cos_sim"])
-        for r in df.collect()
-    )
-    fold = canon(knn_graph(corpus, k=3, n_cells=8, n_probe=2))
-    fast = canon(
-        knn_graph(corpus, k=3, n_cells=8, n_probe=2, score_kernel="numpy")
-    )
-    assert fold == fast and len(fold) > 0
-
-
 def test_fingerprint_dup_stream_matches_brute_force(spark, tmp_path_factory):
     """availableNow over a static batch of REAL audio fingerprints must
     emit exactly the brute-force pair set at hamming <= 3 (pigeonhole +
@@ -365,8 +347,8 @@ def test_fingerprint_dup_stream_matches_brute_force(spark, tmp_path_factory):
 
 
 def test_knn_graph_zero_norm_vector_never_wins(spark):
-    """A zero-norm (degenerate) vector must rank LAST on BOTH score
-    kernels — not crash ANSI division and not NaN-sort to rank 1."""
+    """A zero-norm (degenerate) vector must rank LAST — not crash ANSI
+    division and not NaN-sort to rank 1."""
     from petastorm_spark.operators.similarity import knn_graph
 
     vecs = [[1.0, 0.0], [0.9, 0.1], [0.8, 0.2], [0.0, 0.0]]
@@ -375,12 +357,9 @@ def test_knn_graph_zero_norm_vector_never_wins(spark):
         {"vec_id": [1, 2, 3, 4], "embedding": vecs},
         "vec_id bigint, embedding array<double>",
     )
-    for kern in ("fold", "numpy"):
-        g = knn_graph(
-            df, k=2, n_cells=2, n_probe=2, score_kernel=kern
-        ).collect()
-        top1 = {r["query_id"]: r["neighbor_id"] for r in g if r["rank"] == 1}
-        assert all(n != 4 for n in top1.values()), (kern, top1)
+    g = knn_graph(df, k=2, n_cells=2, n_probe=2).collect()
+    top1 = {r["query_id"]: r["neighbor_id"] for r in g if r["rank"] == 1}
+    assert top1 and all(n != 4 for n in top1.values()), top1
 
 
 def test_fingerprint_dup_stream_rejects_lossy_banding(spark):

@@ -1063,35 +1063,14 @@ def test_file_layout_report_counts_and_recommendation(spark, tmp_path):
     assert all(r["recommended_files"] is None for r in per_file)
 
 
-def test_kmeans_numpy_kernel_bit_identical_to_fold(spark, clustered):
-    """The production numpy kernel (int64 scatter/argmin) must be
-    BIT-identical to the Catalyst fold — integer distances make the
-    argmin and the centroid updates exact in both, including the
-    lowest-cell tie-break (pinned with duplicate seed vectors that
-    tie every point)."""
+def test_kmeans_lloyd_tie_break_assigns_lowest_cell(spark):
+    """Exact distance ties go to the LOWEST cell. Both seeds sit at
+    (0, 0), so with no update round every point ties between cells 0
+    and 1 and is assigned cell 0 at its exact integer distance; one
+    Lloyd round then leaves cell 1 empty, so the fitted model drops it
+    and keeps cell 0 at the round-half-up mean."""
     from petastorm_spark.operators.similarity import kmeans_fit, kmeans_lloyd
 
-    assert kmeans_fit(clustered, k=5, dims=16, kernel="numpy") == kmeans_fit(
-        clustered, k=5, dims=16, kernel="fold"
-    )
-    a = sorted(
-        map(
-            tuple,
-            kmeans_lloyd(
-                clustered, k=5, dims=16, output="assign", kernel="numpy"
-            ).collect(),
-        )
-    )
-    b = sorted(
-        map(
-            tuple,
-            kmeans_lloyd(
-                clustered, k=5, dims=16, output="assign", kernel="fold"
-            ).collect(),
-        )
-    )
-    assert a == b
-    # tie-break parity: identical duplicate seeds force exact ties
     tie = arrow_local_df(
         spark,
         {
@@ -1100,9 +1079,29 @@ def test_kmeans_numpy_kernel_bit_identical_to_fold(spark, clustered):
         },
         "vec_id bigint, embedding array<double>",
     )
-    ra = sorted(map(tuple, kmeans_lloyd(tie, k=2, dims=2, kernel="numpy").collect()))
-    rb = sorted(map(tuple, kmeans_lloyd(tie, k=2, dims=2, kernel="fold").collect()))
-    assert ra == rb
+    got = sorted(
+        map(
+            tuple,
+            kmeans_lloyd(tie, k=2, dims=2, rounds=0, output="assign").collect(),
+        )
+    )
+    assert got == [
+        (0, 0, 0),
+        (1, 0, 0),
+        (2, 0, 2 * 9_000_000**2),
+        (3, 0, 2 * 9_100_000**2),
+    ]
+    # S = 18.1e6 over N = 4 per dim: floor((2S + N) / 2N) = 4525000
+    assert kmeans_fit(tie, k=2, dims=2, rounds=1) == {0: [4_525_000, 4_525_000]}
+
+
+def test_kmeans_lloyd_rejects_unknown_output(spark, clustered):
+    """Only "report" and "assign" are outputs: a misspelt value raises
+    instead of silently returning the report."""
+    from petastorm_spark.operators.similarity import kmeans_lloyd
+
+    with pytest.raises(ValueError, match="'report' or 'assign'"):
+        kmeans_lloyd(clustered, k=5, dims=16, output="assignment")
 
 
 def test_l_diversity_flags_homogeneous_classes(spark):
