@@ -63,7 +63,53 @@ def _last_green_round() -> dict[str, int]:
 # Refresh this list each round; stale names cost nothing — once the
 # round's CORRECTNESS file is committed the staleness sort would have
 # rotated them forward anyway.
-CHANGED_THIS_ROUND: list[str] = []
+CHANGED_THIS_ROUND: list[str] = [
+    # similarity plans that now score through the one guarded cosine
+    # and the one shortlist-rescore tail
+    "ann_cosine_topk",
+    "ann_cosine_lsh",
+    "ann_cosine_ivf",
+    "ann_cosine_ivf_auto",
+    "ann_cosine_multiprobe",
+    "ann_cosine_sq8",
+    "ann_cosine_pq",
+    "ann_cosine_ivfpq",
+    "ann_cosine_prefix",
+    "ann_cosine_prefix_indexed",
+    "ann_recall_ivf",
+    "ann_recall_lsh",
+    "ann_recall_pq",
+    "ann_recall_ivfpq",
+    "ann_recall_prefix",
+    "ann_mrr_prefix",
+    "ann_rbo_prefix",
+    "knn_graph_ivf",
+    "knn_graph_communities",
+    "knn_graph_incremental",
+    "knn_graph_hier",
+    "dedup_semantic",
+    "dedup_semantic_probe2",
+    "dedup_semantic_incremental",
+    "hard_negatives_labeled",
+    "embedding_label_drift",
+    "dedup_embedding_pairs",
+    "knn_classify",
+    "hybrid_search_rrf",
+    "embedding_intrinsic_dim",
+    # index, k-means, stateful-fold and reader-filter plans changed
+    # since the last driver correctness artifact
+    "kmeans_embeddings",
+    "cluster_balanced_sample",
+    "incremental_near_dup",
+    "incremental_dedup_tombstoned",
+    "dedup_incremental",
+    "events_ewma",
+    "events_ewma_agg",
+    "cm_user_event_counts",
+    "decontaminate_overlap",
+    "constraint_check_orders",
+    "q19_disjunctive_pushdown",
+]
 
 
 def _ordered(mapping: dict) -> dict:

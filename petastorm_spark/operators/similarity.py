@@ -62,7 +62,21 @@ def norm(a) -> Column:
 
 
 def cosine(a, b) -> Column:
-    return dot(a, b) / (norm(a) * norm(b))
+    """Cosine similarity of two array columns, in double. A zero-norm
+    side scores ``-inf``: it sorts last in every top-k and never
+    crosses a similarity threshold ("degenerate never wins", the
+    :func:`_probe_cells_numpy` and SQL-oracle convention). ANSI Spark
+    would raise DIVIDE_BY_ZERO on 0/0 and non-ANSI NaN would sort
+    FIRST under desc(); ``try_divide`` turns the degenerate case into
+    NULL and the coalesce pins it to -inf. try_divide evaluates
+    numerator and denominator ONCE each (a CASE WHEN guard re-evaluates
+    the two norm folds in the predicate — measured +60% on the
+    knn_graph fold kernel); for non-degenerate rows the double is
+    bit-identical to ``dot / (norm * norm)``."""
+    return F.coalesce(
+        F.try_divide(dot(a, b), norm(a) * norm(b)),
+        F.lit(float("-inf")),
+    )
 
 
 # A NOTE ON "JUST UNROLL THE DOT PRODUCT": an unrolled 64-term
@@ -123,6 +137,38 @@ def topk_per_query(
             "query_id", "neighbor_id", "rank", out_cos.alias("cos_sim")
         )
     )
+
+
+def _rescore(
+    approx: DataFrame,
+    vectors: DataFrame,
+    qv: DataFrame,
+    id_col: str,
+    vec_col: str,
+    k: int,
+    rescore_factor: int,
+) -> DataFrame:
+    """The exact tail shared by every approximate top-k family (SQ8,
+    PQ, IVF-PQ, prefix): keep each query's ``k * rescore_factor`` best
+    rows of the scored ``approx`` frame (query_id, neighbor_id,
+    cos_sim), join their full-precision ``vectors`` by id and the
+    query side ``qv`` (query_id, q_vec) — broadcast-hinted or not, as
+    the caller built it — and rank the shortlist by the exact
+    :func:`cosine`. The filter-then-verify split: a family's candidate
+    generator decides recall, this tail alone decides the output
+    scores and order."""
+    shortlist = topk_per_query(approx, k * rescore_factor).select(
+        "query_id", "neighbor_id"
+    )
+    cv = vectors.select(
+        F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("_cv")
+    )
+    rescored = (
+        shortlist.join(cv, "neighbor_id")
+        .join(qv, "query_id")
+        .withColumn("cos_sim", cosine(F.col("q_vec"), F.col("_cv")))
+    )
+    return topk_per_query(rescored, k)
 
 
 def cosine_topk(
@@ -870,7 +916,7 @@ def knn_graph(
     reproducible without ML.
 
     Candidates are scored with the Catalyst HOF fold
-    (:func:`_safe_cosine`): sequential summation, bit-identical to the
+    (:func:`cosine`): sequential summation, bit-identical to the
     SQL oracles, and a zero-norm (degenerate) vector ranks LAST
     instead of dividing by zero (ANSI) or letting NaN sort first.
 
@@ -930,11 +976,10 @@ def knn_graph(
     else:
         # quantizer outgrew the local matrix: broadcast-join ranking,
         # the ivf_query probe shape (degenerate cosine never wins)
-        safe_cos = _safe_cosine(F.col(vec_col), F.col("cent_vec"))
         ranked = (
             corpus.select(F.col(id_col), F.col(vec_col))
             .crossJoin(F.broadcast(cent))
-            .withColumn("_cos", safe_cos)
+            .withColumn("_cos", cosine(F.col(vec_col), F.col("cent_vec")))
             .withColumn(
                 "_r",
                 F.row_number().over(
@@ -962,26 +1007,8 @@ def knn_graph(
     joined = probes.join(cand, "cell").where(
         F.col("neighbor_id") != F.col("query_id")
     )
-    scored = joined.withColumn(
-        "cos_sim", _safe_cosine(F.col("q_vec"), F.col("c_vec"))
-    )
+    scored = joined.withColumn("cos_sim", cosine(F.col("q_vec"), F.col("c_vec")))
     return topk_per_query(scored, k)
-
-
-def _safe_cosine(a, b) -> Column:
-    """:func:`cosine` with a zero-norm guard: ANSI Spark raises
-    DIVIDE_BY_ZERO on 0/0 and non-ANSI NaN would sort FIRST under
-    desc() — ``try_divide`` turns the degenerate case into NULL and
-    the coalesce pins it to -inf ("degenerate never wins", the
-    _probe_cells_numpy convention). try_divide evaluates numerator and
-    denominator ONCE each (a CASE WHEN guard re-evaluates the two
-    norm folds in the predicate — measured +60% on the knn_graph
-    fold kernel); for non-degenerate rows the double is bit-identical
-    to :func:`cosine`."""
-    return F.coalesce(
-        F.try_divide(dot(a, b), norm(a) * norm(b)),
-        F.lit(float("-inf")),
-    )
 
 
 def knn_graph_write(
@@ -1007,7 +1034,7 @@ def knn_graph_write(
     an append rewrites only the affected partitions.
 
     Edges are scored with the oracle-exact Catalyst fold
-    (:func:`_safe_cosine`), the same kernel :func:`knn_graph` uses — a
+    (:func:`cosine`), the same kernel :func:`knn_graph` uses — a
     write-then-read round trip reproduces the in-memory graph row for
     row."""
     cent = _knn_quantizer(corpus, id_col, vec_col, n_cells, centroids)
@@ -1101,7 +1128,7 @@ def _knn_edges_from_probed(
     scored = (
         probes.join(cand, "cell")
         .where(F.col("neighbor_id") != F.col("query_id"))
-        .withColumn("cos_sim", _safe_cosine(F.col("q_vec"), F.col("c_vec")))
+        .withColumn("cos_sim", cosine(F.col("q_vec"), F.col("c_vec")))
     )
     # store FULL precision so incremental merges rank exactly; reads
     # round to the knn_graph output convention
@@ -1224,9 +1251,7 @@ def knn_graph_append(
         bscored = (
             bprobes.join(cand, "cell")
             .where(F.col("neighbor_id") != F.col("query_id"))
-            .withColumn(
-                "cos_sim", _safe_cosine(F.col("q_vec"), F.col("c_vec"))
-            )
+            .withColumn("cos_sim", cosine(F.col("q_vec"), F.col("c_vec")))
         )
         batch_edges = topk_per_query(bscored, k, round_to=None).join(
             F.broadcast(
@@ -1264,9 +1289,7 @@ def knn_graph_append(
         )
         pair_scores = (
             affected.join(F.broadcast(new_cand), "cell")
-            .withColumn(
-                "cos_sim", _safe_cosine(F.col("q_vec"), F.col("c_vec"))
-            )
+            .withColumn("cos_sim", cosine(F.col("q_vec"), F.col("c_vec")))
             .select("query_id", "neighbor_id", "cos_sim", "qcell")
             # u probing b's home via TWO of its cells still scores once
             .dropDuplicates(["query_id", "neighbor_id"])
@@ -1916,18 +1939,8 @@ def semantic_dedup(
             assigned = corpus.select(id_col, vec_col).join(probed, id_col)
     else:
         _, assigned = ivf_build(corpus, id_col, vec_col, n_cells, centroids)
-    unit = (
-        assigned.withColumn("_nrm", norm(F.col(vec_col)))
-        .withColumn(
-            "_u",
-            F.when(
-                F.col("_nrm") > 0,
-                F.transform(
-                    F.col(vec_col), lambda x: x.cast("double") / F.col("_nrm")
-                ),
-            ).otherwise(F.transform(F.col(vec_col), lambda x: x.cast("double"))),
-        )
-        .select(F.col(id_col), "_cells" if n_probe > 1 else "cell", "_u")
+    unit = normalize_embeddings(assigned, id_col, vec_col, out_col="_u").select(
+        F.col(id_col), "_cells" if n_probe > 1 else "cell", "_u"
     )
     # the pair join consumes `unit` on BOTH sides, and the assignment
     # runs through mapInPandas — a Python stage Spark cannot dedupe
@@ -2014,18 +2027,9 @@ def cosine_topk_sq8(
         .where(F.col("neighbor_id") != F.col("query_id"))
         .withColumn("cos_sim", cosine(F.col("q_vec"), F.col("_qi")))
     )
-    shortlist = topk_per_query(approx, k * rescore_factor).select(
-        "query_id", "neighbor_id"
+    return _rescore(
+        approx, corpus, F.broadcast(qs), id_col, vec_col, k, rescore_factor
     )
-    cv = corpus.select(
-        F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("_cv")
-    )
-    rescored = (
-        shortlist.join(cv, "neighbor_id")
-        .join(F.broadcast(qs), "query_id")
-        .withColumn("cos_sim", cosine(F.col("q_vec"), F.col("_cv")))
-    )
-    return topk_per_query(rescored, k)
 
 
 def pq_codebooks(
@@ -2285,7 +2289,7 @@ def _pq_adc_tables(
     id_col: str,
     vec_col: str,
 ) -> DataFrame:
-    """(query_id, _tbl, _qv): each query's ADC lookup table — the
+    """(query_id, _tbl, q_vec): each query's ADC lookup table — the
     m x k_codes squared subvector distances of Jegou et al. 2011,
     flattened row-major (j * k_codes + code) — built in ONE
     mapInPandas pass over the queries DataFrame. Nothing query-sized
@@ -2298,7 +2302,7 @@ def _pq_adc_tables(
 
     m, k_codes, dsub = codebooks.shape
     id_t = queries.schema[id_col].dataType.simpleString()
-    out_schema = f"query_id {id_t}, _tbl array<double>, _qv array<double>"
+    out_schema = f"query_id {id_t}, _tbl array<double>, q_vec array<double>"
 
     def build(batches):
         for pdf in batches:
@@ -2309,7 +2313,7 @@ def _pq_adc_tables(
                 tables.append([float(x) for x in t.ravel()])
                 qvecs.append([float(x) for x in v])
             yield pd.DataFrame(
-                {"query_id": pdf[id_col], "_tbl": tables, "_qv": qvecs}
+                {"query_id": pdf[id_col], "_tbl": tables, "q_vec": qvecs}
             )
 
     return queries.select(id_col, vec_col).mapInPandas(build, out_schema)
@@ -2352,21 +2356,10 @@ def pq_query(
             _adc_score("_tbl", code_col, m, k_codes),
         )
     )
-    shortlist = topk_per_query(approx, k * rescore_factor).select(
-        "query_id", "neighbor_id"
-    )
-    cv = vectors.select(
-        F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("_cv")
-    )
-    qv_side = qdf.select("query_id", "_qv")
+    qv = qdf.select("query_id", "q_vec")
     if broadcast_queries:
-        qv_side = F.broadcast(qv_side)
-    rescored = (
-        shortlist.join(cv, "neighbor_id")
-        .join(qv_side, "query_id")
-        .withColumn("cos_sim", cosine(F.col("_qv"), F.col("_cv")))
-    )
-    return topk_per_query(rescored, k)
+        qv = F.broadcast(qv)
+    return _rescore(approx, vectors, qv, id_col, vec_col, k, rescore_factor)
 
 
 def cosine_topk_ivfpq(
@@ -2534,7 +2527,7 @@ def _ivfpq_adc_tables(
     id_col: str,
     vec_col: str,
 ) -> DataFrame:
-    """(query_id, cell, _tbl, _qv): one row per (query, probed cell)
+    """(query_id, cell, _tbl): one row per (query, probed cell)
     with the ADC table of the query's RESIDUAL against that cell's
     centroid — built in ONE mapInPandas pass over the probed frame
     from :func:`_probe_cells_numpy`. No driver collect: the query side
@@ -2547,13 +2540,11 @@ def _ivfpq_adc_tables(
     m, k_codes, dsub = codebooks.shape
     id_t = probed.schema[id_col].dataType.simpleString()
     cell_t = probed.schema["_cells"].dataType.elementType.simpleString()
-    out_schema = (
-        f"query_id {id_t}, cell {cell_t}, _tbl array<double>, _qv array<double>"
-    )
+    out_schema = f"query_id {id_t}, cell {cell_t}, _tbl array<double>"
 
     def build(batches):
         for pdf in batches:
-            qids, cells, tables, qvecs = [], [], [], []
+            qids, cells, tables = [], [], []
             for qid, v, cs in zip(pdf[id_col], pdf[vec_col], pdf["_cells"]):
                 qv = np.asarray(list(v), dtype=np.float64)
                 for cell in cs:
@@ -2562,10 +2553,7 @@ def _ivfpq_adc_tables(
                     qids.append(qid)
                     cells.append(cell)
                     tables.append([float(x) for x in t.ravel()])
-                    qvecs.append([float(x) for x in qv])
-            yield pd.DataFrame(
-                {"query_id": qids, "cell": cells, "_tbl": tables, "_qv": qvecs}
-            )
+            yield pd.DataFrame({"query_id": qids, "cell": cells, "_tbl": tables})
 
     return probed.mapInPandas(build, out_schema)
 
@@ -2674,24 +2662,13 @@ def ivfpq_query(
             _adc_score("_tbl", "pq_codes", m, k_codes),
         )
     )
-    shortlist = topk_per_query(approx, k * rescore_factor).select(
-        "query_id", "neighbor_id"
-    )
-    cv = vectors.select(
-        F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("_cv")
-    )
-    qv_side = queries.select(
+    qv = queries.select(
         F.col(id_col).alias("query_id"),
-        F.transform(F.col(vec_col), lambda x: x.cast("double")).alias("_qv"),
+        F.transform(F.col(vec_col), lambda x: x.cast("double")).alias("q_vec"),
     )
     if broadcast_queries:
-        qv_side = F.broadcast(qv_side)
-    rescored = (
-        shortlist.join(cv, "neighbor_id")
-        .join(qv_side, "query_id")
-        .withColumn("cos_sim", cosine(F.col("_qv"), F.col("_cv")))
-    )
-    return topk_per_query(rescored, k)
+        qv = F.broadcast(qv)
+    return _rescore(approx, vectors, qv, id_col, vec_col, k, rescore_factor)
 
 
 def project_embeddings(
@@ -2915,18 +2892,8 @@ def incremental_semantic_dedup(
         )
 
     def unit(df, out_id, u_name):
-        return (
-            df.withColumn("_nrm", norm(F.col(vec_col)))
-            .withColumn(
-                u_name,
-                F.when(
-                    F.col("_nrm") > 0,
-                    F.transform(
-                        F.col(vec_col), lambda x: x.cast("double") / F.col("_nrm")
-                    ),
-                ).otherwise(F.transform(F.col(vec_col), lambda x: x.cast("double"))),
-            )
-            .select(F.col(id_col).alias(out_id), "cell", u_name)
+        return normalize_embeddings(df, id_col, vec_col, out_col=u_name).select(
+            F.col(id_col).alias(out_id), "cell", u_name
         )
 
     new_side = unit(
@@ -2943,15 +2910,10 @@ def incremental_semantic_dedup(
         idx = idx.where(F.col("cell").isin(cells))
     old_side = unit(idx, "old_id", "_uo")
 
-    cos = F.aggregate(
-        F.zip_with(F.col("_un"), F.col("_uo"), lambda a, b: a * b),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
     return (
         new_side.join(old_side, "cell")
         .where(F.col("new_id") != F.col("old_id"))
-        .withColumn("_cos", cos)
+        .withColumn("_cos", dot(F.col("_un"), F.col("_uo")))
         .where(F.col("_cos") >= threshold)
         .select("new_id", "old_id", F.round("_cos", 4).alias("cos"))
     )
@@ -2983,33 +2945,14 @@ def cosine_topk_prefix(
     full vectors for k*factor rows per query via an id equi-join.
     Quality depends on the embedding being matryoshka-trained; on
     arbitrary embeddings this degrades toward random truncation (the
-    recall report quantifies it)."""
-    qs = queries.select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).alias("q_vec"),
-        F.slice(F.col(vec_col), 1, prefix_dim).alias("_qp"),
+    recall report quantifies it). This is :func:`prefix_query` over a
+    prefix computed in the scan."""
+    prefix = corpus.select(
+        F.col(id_col), F.slice(F.col(vec_col), 1, prefix_dim).alias("prefix")
     )
-    approx = (
-        corpus.select(
-            F.col(id_col).alias("neighbor_id"),
-            F.slice(F.col(vec_col), 1, prefix_dim).alias("_cp"),
-        )
-        .crossJoin(F.broadcast(qs.select("query_id", "_qp")))
-        .where(F.col("neighbor_id") != F.col("query_id"))
-        .withColumn("cos_sim", cosine(F.col("_qp"), F.col("_cp")))
+    return prefix_query(
+        prefix, corpus, queries, id_col, vec_col, k, rescore_factor, prefix_dim
     )
-    shortlist = topk_per_query(approx, k * rescore_factor).select(
-        "query_id", "neighbor_id"
-    )
-    cv = corpus.select(
-        F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("_cv")
-    )
-    rescored = (
-        shortlist.join(cv, "neighbor_id")
-        .join(F.broadcast(qs.select("query_id", "q_vec")), "query_id")
-        .withColumn("cos_sim", cosine(F.col("q_vec"), F.col("_cv")))
-    )
-    return topk_per_query(rescored, k)
 
 
 def _covariance_cells(
@@ -3516,18 +3459,8 @@ def prefix_query(
         .where(F.col("neighbor_id") != F.col("query_id"))
         .withColumn("cos_sim", cosine(F.col("_qp"), F.col("prefix")))
     )
-    shortlist = topk_per_query(approx, k * rescore_factor).select(
-        "query_id", "neighbor_id"
-    )
-    cv = vectors.select(
-        F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("_cv")
-    )
-    rescored = (
-        shortlist.join(cv, "neighbor_id")
-        .join(F.broadcast(qs.select("query_id", "q_vec")), "query_id")
-        .withColumn("cos_sim", cosine(F.col("q_vec"), F.col("_cv")))
-    )
-    return topk_per_query(rescored, k)
+    qv = F.broadcast(qs.select("query_id", "q_vec"))
+    return _rescore(approx, vectors, qv, id_col, vec_col, k, rescore_factor)
 
 
 def probe_cells_hierarchical(

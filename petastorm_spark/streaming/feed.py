@@ -971,10 +971,7 @@ def knn_edges_stream(
     cell-partitioned parquet, so each micro-batch scans only the
     probed cells' files; ties break (cos DESC, neighbor ASC), the
     engine-exact convention."""
-    from petastorm_spark.operators.similarity import (
-        _probe_cells_numpy,
-        _safe_cosine,
-    )
+    from petastorm_spark.operators.similarity import _probe_cells_numpy, cosine
 
     crows = centroids.select("cell", "cent_vec").collect()
     probed = _probe_cells_numpy(
@@ -993,9 +990,7 @@ def knn_edges_stream(
     scored = (
         probes.join(cand, "cell")
         .where(F.col("neighbor_id") != F.col("query_id"))
-        .withColumn(
-            "cos_sim", _safe_cosine(F.col("q_vec"), F.col("c_vec"))
-        )
+        .withColumn("cos_sim", cosine(F.col("q_vec"), F.col("c_vec")))
     )
     ranked = scored.groupBy("query_id").agg(
         F.slice(

@@ -452,6 +452,158 @@ def test_probe_cells_zero_norm_handling(spark):
         _probe_cells_numpy(corpus, bad, "vec_id", "embedding", 1).collect()
 
 
+# One zero vector, given the HIGHEST id: the default quantizers take
+# the lowest-id vectors as centroids and codebooks, and a zero-norm
+# centroid is refused by design (test above).
+_ZERO_ID = 23
+_ZERO_QUERIES = (0, 5, _ZERO_ID)
+
+
+@pytest.fixture(scope="module")
+def zero_vector_corpus(spark):
+    from petastorm_spark.session import arrow_local_df
+
+    vecs = np.random.default_rng(11).standard_normal((_ZERO_ID + 1, 8)).tolist()
+    vecs[_ZERO_ID] = [0.0] * 8
+    return arrow_local_df(
+        spark,
+        {
+            "vec_id": list(range(_ZERO_ID + 1)),
+            "embedding": vecs,
+            "label": [i % 3 for i in range(_ZERO_ID + 1)],
+        },
+        "vec_id bigint, embedding array<double>, label int",
+    )
+
+
+def _zero_vector_search(name, df, q):
+    from petastorm_spark.operators import similarity as S
+
+    if name == "cosine_topk":
+        return S.cosine_topk(df, q, k=3)
+    if name == "cosine_topk_lsh":
+        return S.cosine_topk_lsh(df, q, dim=8, k=3, n_planes=1)
+    if name == "cosine_topk_multiprobe":
+        return S.cosine_topk_multiprobe(df, q, dim=8, k=3, n_planes=2)
+    if name == "cosine_topk_ivf":
+        return S.cosine_topk_ivf(df, q, k=3, n_cells=4)
+    if name == "cosine_topk_sq8":
+        return S.cosine_topk_sq8(df, q, k=3)
+    if name == "cosine_topk_pq":
+        return S.cosine_topk_pq(df, q, k=3, dim=8, m=4, k_codes=4)
+    if name == "cosine_topk_ivfpq":
+        return S.cosine_topk_ivfpq(df, q, k=3, dim=8, n_cells=4, m=4, k_codes=4)
+    if name == "cosine_topk_prefix":
+        return S.cosine_topk_prefix(df, q, k=3, prefix_dim=4)
+    if name == "ivf_query":
+        return S.ivf_query(*S.ivf_build(df, n_cells=4), q, k=3)
+    if name == "pq_query":
+        books = S.pq_codebooks(df, dim=8, m=4, k_codes=4)
+        return S.pq_query(books, S.pq_encode(df, books), df, q, k=3)
+    if name == "ivfpq_query":
+        cent, books, coded = S.ivfpq_build(df, dim=8, n_cells=4, m=4, k_codes=4)
+        return S.ivfpq_query(cent, books, coded, df, q, k=3)
+    if name == "prefix_query":
+        prefix = df.select("vec_id", F.slice("embedding", 1, 4).alias("prefix"))
+        return S.prefix_query(prefix, df, q, k=3, prefix_dim=4)
+    if name == "hard_negative_mining":
+        return S.hard_negative_mining(df, q, k=3)
+    assert name == "embedding_near_dup_pairs"
+    return S.embedding_near_dup_pairs(df, dim=8, threshold=0.3, n_planes=1)
+
+
+@pytest.mark.parametrize(
+    "name",
+    [
+        "cosine_topk",
+        "cosine_topk_lsh",
+        "cosine_topk_multiprobe",
+        "cosine_topk_ivf",
+        "cosine_topk_sq8",
+        "cosine_topk_pq",
+        "cosine_topk_ivfpq",
+        "cosine_topk_prefix",
+        "ivf_query",
+        "pq_query",
+        "ivfpq_query",
+        "prefix_query",
+        "hard_negative_mining",
+        "embedding_near_dup_pairs",
+    ],
+)
+def test_zero_vector_never_wins_any_search(spark, zero_vector_corpus, name):
+    """A zero-norm vector in the corpus and among the queries: under
+    ANSI every search path runs (the unguarded cosine raised
+    DIVIDE_BY_ZERO), the zero vector is never a non-zero query's
+    nearest neighbor, and every row a zero query gets scores -inf."""
+    assert spark.conf.get("spark.sql.ansi.enabled") == "true"
+    df = zero_vector_corpus
+    q = df.where(F.col("vec_id").isin(*_ZERO_QUERIES))
+    rows = _zero_vector_search(name, df, q).collect()
+    assert rows
+    if name == "embedding_near_dup_pairs":
+        assert all(_ZERO_ID not in (r["id_a"], r["id_b"]) for r in rows)
+        return
+    top1 = {r["query_id"]: r["neighbor_id"] for r in rows if r["rank"] == 1}
+    assert {0, 5} <= set(top1) and _ZERO_ID not in {top1[0], top1[5]}
+    assert all(
+        r["cos_sim"] == float("-inf") for r in rows if r["query_id"] == _ZERO_ID
+    )
+    if name == "cosine_topk":
+        nz = df.where(F.col("vec_id") != _ZERO_ID)
+        clean = _zero_vector_search(name, nz, q.where(F.col("vec_id") != _ZERO_ID))
+        assert sorted(r for r in rows if r["query_id"] != _ZERO_ID) == sorted(
+            clean.collect()
+        )
+
+
+def test_ivf_build_catalyst_fallback_assigns_zero_vector_like_numpy(
+    spark, zero_vector_corpus, monkeypatch
+):
+    """Past the local-matrix bound ivf_build assigns cells with a
+    broadcast join and a max(struct(cos, -cell)) argmax. A zero-norm
+    vector scores -inf against every cell there, so it lands in the
+    lowest cell, as on the numpy path."""
+    from petastorm_spark.operators import similarity as S
+
+    df = zero_vector_corpus.select("vec_id", "embedding")
+    crows = df.where(F.col("vec_id") < 4).select(
+        F.col("vec_id").alias("cell"), F.col("embedding").alias("cent_vec")
+    ).collect()
+    numpy_cells = {
+        r["vec_id"]: r["_cells"][0]
+        for r in S._probe_cells_numpy(df, crows, "vec_id", "embedding", 1).collect()
+    }
+    monkeypatch.setattr(S, "_MAX_LOCAL_CELLS", 0)
+    _, assigned = S.ivf_build(df, n_cells=4)
+    fallback_cells = {r["vec_id"]: r["cell"] for r in assigned.collect()}
+    assert numpy_cells[_ZERO_ID] == 0
+    assert fallback_cells == numpy_cells
+
+
+def test_null_text_embedding_searches_end_to_end(spark):
+    """feature_hash_embed maps NULL text to the all-zero vector; the
+    "embed, then search" chain must rank that document last rather
+    than fail the whole search."""
+    from petastorm_spark.operators.similarity import cosine_topk
+    from petastorm_spark.operators.text import feature_hash_embed
+    from petastorm_spark.session import arrow_local_df
+
+    docs = arrow_local_df(
+        spark,
+        {
+            "doc_id": [1, 2, 3, 4],
+            "text": ["red apple pie", "red apple tart", "blue sky", None],
+        },
+        "doc_id bigint, text string",
+    )
+    emb = feature_hash_embed(docs, "text", "doc_id", dim=16)
+    rows = cosine_topk(emb, emb, id_col="doc_id", k=3).collect()
+    top1 = {r["query_id"]: r["neighbor_id"] for r in rows if r["rank"] == 1}
+    assert top1[1] == 2 and top1[2] == 1 and top1[3] != 4
+    assert [r["cos_sim"] for r in rows if r["query_id"] == 4] == [float("-inf")] * 3
+
+
 def test_semantic_dedup_registers_releasable_cache(spark):
     """ADVICE r9: semantic_dedup persisted its unit-vector table and
     never unpersisted — the cache is now registered for
