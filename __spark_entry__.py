@@ -64,6 +64,17 @@ def _last_green_round() -> dict[str, int]:
 # round's CORRECTNESS file is committed the staleness sort would have
 # rotated them forward anyway.
 CHANGED_THIS_ROUND: list[str] = [
+    # media queries whose kernels and blob generators now run as
+    # per-row Arrow Python UDFs in place of mapInPandas batch loops
+    "image_dhash_pairs",
+    "audio_dup_pairs",
+    "video_dup_pairs",
+    "audio_meta_stats",
+    "image_meta_stats",
+    "image_resize_pipeline",
+    "video_frame_sample",
+    "video_shot_boundaries",
+    "audio_silence_spans",
     # similarity plans that now score through the one guarded cosine
     # and the one shortlist-rescore tail
     "ann_cosine_topk",

@@ -11,7 +11,7 @@ own pure-python codecs — no PIL/ffmpeg needed.
 """
 
 import numpy as np
-import pandas as pd
+from pyspark.sql import functions as F
 
 from petastorm_spark.functions.pure_png import png_encode
 from petastorm_spark.operators.audio import (
@@ -23,6 +23,7 @@ from petastorm_spark.operators.multimodal import (
     encode_fake_image,
     image_dup_pairs,
     resize_images,
+    row_udf,
     with_image_meta,
 )
 from petastorm_spark.session import get_spark
@@ -39,8 +40,13 @@ def main() -> None:
     # every image the same pixel-to-pixel deltas and perceptual hashes
     # collide corpus-wide. Every 50th doc also gets a near-duplicate
     # twin (id + 100000) with a one-sample perturbation, so the dup
-    # counts below are meaningful.
-    def media(batches):
+    # counts below are meaningful. One per-row UDF builds all three
+    # blobs of an id.
+    twins = ids.where(F.col("doc_id") % 50 == 0).select(
+        (F.col("doc_id") + 100_000).alias("doc_id")
+    )
+
+    def media(did):
         import hashlib
 
         def md5_grid(d, tag, n_chunks):
@@ -50,34 +56,26 @@ def main() -> None:
             )
             return np.frombuffer(raw, dtype=np.uint8).astype(np.int64)
 
-        for pdf in batches:
-            rows = []
-            for did in pdf["doc_id"]:
-                d = int(did)
-                twins = [(d, False)] + ([(d + 100_000, True)] if d % 50 == 0 else [])
-                for out_id, perturb in twins:
-                    px = md5_grid(d, "i", 3)[:48]
-                    au = md5_grid(d, "a", 61)
-                    fr = md5_grid(d, "v", 16)[:244]
-                    if perturb:
-                        px, au, fr = px.copy(), au.copy(), fr.copy()
-                        px[0] = (px[0] + 13) % 251
-                        au[0] = (au[0] + 50) % 256
-                        fr[0] = (fr[0] + 50) % 256
-                    rows.append(
-                        (
-                            out_id,
-                            png_encode(px.reshape(6, 8).astype(np.uint8)),
-                            encode_wav(au.astype(np.int16), 16000),
-                            encode_fake_image(fr.reshape(61, 2, 2).astype(np.uint8)),
-                        )
-                    )
-            yield pd.DataFrame(
-                rows, columns=["doc_id", "image", "audio", "video"]
-            )
+        d = did % 100_000
+        px = md5_grid(d, "i", 3)[:48]
+        au = md5_grid(d, "a", 61)
+        fr = md5_grid(d, "v", 16)[:244]
+        if did >= 100_000:
+            px, au, fr = px.copy(), au.copy(), fr.copy()
+            px[0] = (px[0] + 13) % 251
+            au[0] = (au[0] + 50) % 256
+            fr[0] = (fr[0] + 50) % 256
+        return (
+            png_encode(px.reshape(6, 8).astype(np.uint8)),
+            encode_wav(au.astype(np.int16), 16000),
+            encode_fake_image(fr.reshape(61, 2, 2).astype(np.uint8)),
+        )
 
-    df = ids.mapInPandas(
-        media, "doc_id bigint, image binary, audio binary, video binary"
+    blobs = row_udf(media, "image binary, audio binary, video binary")
+    df = (
+        ids.unionByName(twins)
+        .select("doc_id", blobs("doc_id").alias("m"))
+        .select("doc_id", "m.*")
     )
 
     # 2. typed metadata without decoding into rows

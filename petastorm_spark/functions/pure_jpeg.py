@@ -211,6 +211,8 @@ def jpeg_decode(data: bytes) -> np.ndarray:
             comps = []
             for c in range(nc):
                 cid, hv, tq = seg[6 + 3 * c : 9 + 3 * c]
+                if not (1 <= hv >> 4 <= 4 and 1 <= hv & 0x0F <= 4):
+                    raise ValueError("corrupt JPEG: sampling factor outside 1..4")
                 comps.append({"id": cid, "h": hv >> 4, "v": hv & 0x0F, "tq": tq})
             frame = {"h": h, "w": w, "comps": comps}
         elif m in (0xC2, 0xC3, 0xC5, 0xC6, 0xC7, 0xC9, 0xCA, 0xCB, 0xCD, 0xCE, 0xCF):
@@ -236,8 +238,13 @@ def jpeg_decode(data: bytes) -> np.ndarray:
             scan = []
             for c in range(ns):
                 cs, tables = seg[1 + 2 * c : 3 + 2 * c]
-                comp = next(x for x in frame["comps"] if x["id"] == cs)
-                scan.append((comp, huff[(0, tables >> 4)], huff[(1, tables & 0x0F)]))
+                comp = next((x for x in frame["comps"] if x["id"] == cs), None)
+                dc, ac = huff.get((0, tables >> 4)), huff.get((1, tables & 0x0F))
+                if comp is None or comp["tq"] not in qt or dc is None or ac is None:
+                    raise ValueError(
+                        "corrupt JPEG: scan names an undefined component or table"
+                    )
+                scan.append((comp, dc, ac))
             segments, i = _split_entropy(data, i)
             _decode_scan(frame, scan, qt, segments, restart_interval)
         # else: APPn / COM / DNL etc. — skipped

@@ -1,28 +1,28 @@
 """Audio columns: PCM WAV as an opaque binary column with typed
-metadata, processed by Arrow-batched pandas functions — the audio leg
-of the multimodal family (images/video live in operators/multimodal.py,
-same design: real pure-python decode for the formats the engine itself
-produces, mapInPandas pure maps, no shuffle anywhere).
+metadata, processed by per-row Python kernels — the audio leg of the
+multimodal family (images/video live in operators/multimodal.py, same
+design: real pure-python decode for the formats the engine itself
+produces, per-row pure maps through ``multimodal.row_udf``, no shuffle
+anywhere).
 
 WAV (RIFF PCM) decode is REAL and dependency-free: the container is a
 fixed header plus chunks, parsed with numpy/struct — no audio library
 needed. Integer PCM at 8/16/32 bits and float32, mono or multichannel.
 Compressed codecs (mp3/ogg/flac) raise NotImplementedError — the
 libraries are absent from this container; the Spark-side plumbing
-(schemas, batch shapes, partition behavior) is identical and tested.
+(schemas, UDF plans, partition behavior) is identical and tested.
 
-Scale: every operator is a mapInPandas pure map — Arrow batch
-streaming, memory bounded by spark.sql.execution.arrow.maxRecordsPerBatch,
-linear scale-out, zero exchanges.
+Scale: every operator is an Arrow-batched scalar Python UDF over the
+blob column alone — memory bounded by
+spark.sql.execution.arrow.maxRecordsPerBatch, linear scale-out, zero
+exchanges.
 """
 
 from __future__ import annotations
 
 import struct
-from collections.abc import Iterator
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql.types import (
     ArrayType,
@@ -34,9 +34,13 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from petastorm_spark.operators.multimodal import (
+    UNDECODABLE,
+    _fingerprint_pairs,
+    row_udf,
+)
+
 _PCM_DTYPES = {8: np.uint8, 16: np.int16, 32: np.int32}
-
-
 def encode_wav(samples: np.ndarray, sample_rate: int) -> bytes:
     """Minimal spec-compliant PCM WAV writer (the audio twin of
     multimodal.encode_fake_image, except the container is the real
@@ -63,7 +67,9 @@ def decode_wav_ex(raw: bytes) -> tuple[np.ndarray, int, int, int]:
     PCM, 3 = IEEE float); ``bits`` the container bit depth — what an
     exactness-sensitive consumer needs to undo the normalization
     (integer PCM divides by 1 << (bits-1), a dyadic scale, so
-    multiplying back recovers the original integers exactly)."""
+    multiplying back recovers the original integers exactly). A
+    malformed stream (truncated, bad chunk sizes) raises ValueError, a
+    format this parser does not read NotImplementedError."""
     if raw[:4] != b"RIFF" or raw[8:12] != b"WAVE":
         raise NotImplementedError(
             "not a RIFF/WAVE byte stream; compressed audio codecs need "
@@ -75,6 +81,8 @@ def decode_wav_ex(raw: bytes) -> tuple[np.ndarray, int, int, int]:
         (size,) = struct.unpack("<I", raw[pos + 4 : pos + 8])
         body = raw[pos + 8 : pos + 8 + size]
         if cid == b"fmt ":
+            if len(body) < 16:
+                raise ValueError("WAV fmt chunk shorter than 16 bytes")
             fmt = struct.unpack("<HHIIHH", body[:16])
         elif cid == b"data":
             data = body
@@ -82,6 +90,8 @@ def decode_wav_ex(raw: bytes) -> tuple[np.ndarray, int, int, int]:
     if fmt is None or data is None:
         raise ValueError("WAV missing fmt/data chunk")
     audio_format, n_ch, rate, _br, _ba, bits = fmt
+    if n_ch == 0 or rate == 0:
+        raise ValueError("WAV fmt chunk declares 0 channels or 0 Hz")
     if audio_format == 3 and bits == 32:  # IEEE float
         arr = np.frombuffer(data, dtype="<f4").astype(np.float64)
     elif audio_format == 1 and bits in _PCM_DTYPES:
@@ -120,78 +130,42 @@ def with_audio_meta(
 ) -> DataFrame:
     """Attach typed audio metadata (frames/channels/rate/duration)
     parsed from the binary column; undecodable blobs get byte_len +
-    format='opaque' instead of failing the batch."""
-    out_schema = StructType(
-        df.schema.fields + [StructField(out_col, AUDIO_META_SCHEMA, True)]
-    )
+    format='opaque' instead of failing the job."""
 
-    def extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            metas = []
-            for raw in pdf[binary_col]:
-                raw = bytes(raw)
-                try:
-                    arr, rate = decode_wav(raw)
-                    metas.append(
-                        {
-                            "byte_len": len(raw),
-                            "n_frames": int(arr.shape[0]),
-                            "channels": int(arr.shape[1]),
-                            "sample_rate": int(rate),
-                            "duration_s": float(arr.shape[0]) / rate,
-                            "format": "wav_pcm",
-                        }
-                    )
-                except (NotImplementedError, ValueError, struct.error):
-                    metas.append(
-                        {
-                            "byte_len": len(raw),
-                            "n_frames": None,
-                            "channels": None,
-                            "sample_rate": None,
-                            "duration_s": None,
-                            "format": "opaque",
-                        }
-                    )
-            pdf[out_col] = metas
-            yield pdf
+    def meta(raw: bytes) -> tuple:
+        try:
+            arr, rate = decode_wav(raw)
+        except UNDECODABLE:
+            return len(raw), None, None, None, None, "opaque"
+        n, ch = arr.shape
+        return len(raw), n, ch, rate, n / rate, "wav_pcm"
 
-    return df.mapInPandas(extract, schema=out_schema)
+    return df.withColumn(out_col, row_udf(meta, AUDIO_META_SCHEMA)(binary_col))
 
 
 def resample_audio(
     df: DataFrame, binary_col: str, out_col: str, target_rate: int
 ) -> DataFrame:
     """Linear-interpolation resample to ``target_rate``, re-encoded as
-    16-bit PCM WAV bytes — the decode -> transform -> re-encode kernel
-    shape (twin of multimodal.resize_images). Not a polyphase filter;
-    swap the kernel for scipy/soxr where available, the Spark plumbing
-    is unchanged."""
-    out_schema = StructType(
-        df.schema.fields + [StructField(out_col, df.schema[binary_col].dataType, True)]
-    )
+    16-bit PCM WAV bytes (NULL for undecodable bytes) — the decode ->
+    transform -> re-encode kernel shape (twin of
+    multimodal.resize_images). Not a polyphase filter; swap the kernel
+    for scipy/soxr where available, the Spark plumbing is unchanged."""
 
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            outs = []
-            for raw in pdf[binary_col]:
-                try:
-                    arr, rate = decode_wav(bytes(raw))
-                    n_out = max(1, int(round(arr.shape[0] * target_rate / rate)))
-                    t_in = np.arange(arr.shape[0], dtype=np.float64)
-                    t_out = np.linspace(0, arr.shape[0] - 1, n_out)
-                    res = np.stack(
-                        [np.interp(t_out, t_in, arr[:, c]) for c in range(arr.shape[1])],
-                        axis=1,
-                    )
-                    pcm = np.clip(res * 32767.0, -32768, 32767).astype(np.int16)
-                    outs.append(encode_wav(pcm, target_rate))
-                except (NotImplementedError, ValueError, struct.error):
-                    outs.append(None)
-            pdf[out_col] = outs
-            yield pdf
+    def resample(raw: bytes) -> bytes:
+        arr, rate = decode_wav(raw)
+        n_out = max(1, int(round(arr.shape[0] * target_rate / rate)))
+        t_in = np.arange(arr.shape[0], dtype=np.float64)
+        t_out = np.linspace(0, arr.shape[0] - 1, n_out)
+        res = np.stack(
+            [np.interp(t_out, t_in, arr[:, c]) for c in range(arr.shape[1])],
+            axis=1,
+        )
+        pcm = np.clip(res * 32767.0, -32768, 32767).astype(np.int16)
+        return encode_wav(pcm, target_rate)
 
-    return df.mapInPandas(kernel, schema=out_schema)
+    udf = row_udf(resample, df.schema[binary_col].dataType, UNDECODABLE)
+    return df.withColumn(out_col, udf(binary_col))
 
 
 def audio_energy_features(
@@ -202,33 +176,20 @@ def audio_energy_features(
 ) -> DataFrame:
     """Per-window RMS energy features (the classic VAD/quality
     front-end): frames of ``frame_ms`` milliseconds, channel-averaged,
-    one float per window. The feature-extraction kernel shape of the
-    audio family (twin of multimodal.embed_images)."""
-    out_schema = StructType(
-        df.schema.fields + [StructField(out_col, ArrayType(DoubleType()), True)]
-    )
+    one float per window (NULL for undecodable bytes). The
+    feature-extraction kernel shape of the audio family (twin of
+    multimodal.embed_images)."""
 
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            outs = []
-            for raw in pdf[binary_col]:
-                try:
-                    arr, rate = decode_wav(bytes(raw))
-                    mono = arr.mean(axis=1)
-                    win = max(1, int(rate * frame_ms / 1000))
-                    n_win = len(mono) // win
-                    if n_win == 0:
-                        outs.append([])
-                        continue
-                    frames = mono[: n_win * win].reshape(n_win, win)
-                    rms = np.sqrt((frames**2).mean(axis=1))
-                    outs.append([float(x) for x in rms])
-                except (NotImplementedError, ValueError, struct.error):
-                    outs.append(None)
-            pdf[out_col] = outs
-            yield pdf
+    def energy(raw: bytes) -> np.ndarray:
+        arr, rate = decode_wav(raw)
+        mono = arr.mean(axis=1)
+        win = max(1, int(rate * frame_ms / 1000))
+        n_win = len(mono) // win
+        frames = mono[: n_win * win].reshape(n_win, win)
+        return np.sqrt((frames**2).mean(axis=1))
 
-    return df.mapInPandas(kernel, schema=out_schema)
+    udf = row_udf(energy, ArrayType(DoubleType()), UNDECODABLE)
+    return df.withColumn(out_col, udf(binary_col))
 
 
 N_ENV = 61  # 60 adjacent comparisons -> the 60-bit fingerprint contract
@@ -258,30 +219,18 @@ def audio_fingerprint60(arr: np.ndarray) -> int:
     return out
 
 
+def _audio_fp_from_bytes(raw: bytes) -> int:
+    arr, _ = decode_wav(raw)
+    return audio_fingerprint60(arr)
+
+
 def audio_fingerprints(
     df: DataFrame, binary_col: str, out_col: str = "afp"
 ) -> DataFrame:
     """Attach the 60-bit audio fingerprint of every decodable WAV blob
-    (NULL for opaque bytes). mapInPandas pure map."""
-    from pyspark.sql.types import LongType, StructField, StructType
-
-    out_schema = StructType(
-        df.schema.fields + [StructField(out_col, LongType(), True)]
-    )
-
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            hs = []
-            for raw in pdf[binary_col]:
-                try:
-                    arr, _ = decode_wav(bytes(raw))
-                    hs.append(audio_fingerprint60(arr))
-                except (NotImplementedError, ValueError, struct.error):
-                    hs.append(None)
-            pdf[out_col] = pd.array(hs, dtype="Int64")
-            yield pdf
-
-    return df.mapInPandas(kernel, schema=out_schema)
+    (NULL for undecodable bytes). Per-row pure map."""
+    udf = row_udf(_audio_fp_from_bytes, LongType(), UNDECODABLE)
+    return df.withColumn(out_col, udf(binary_col))
 
 
 def audio_dup_pairs(
@@ -297,28 +246,10 @@ def audio_dup_pairs(
     dHash — near-dup dedup composes identically across all three
     modalities because each reduces to a 60-bit fingerprint.
     Output: (id_a, id_b, hamming)."""
-    from pyspark.sql import functions as F
-
-    from petastorm_spark.operators.dedup import simhash_pair_candidates
-    from petastorm_spark.operators.multimodal import fingerprint60_table
-
-    def fp(raw: bytes) -> int:
-        arr, _ = decode_wav(raw)
-        return audio_fingerprint60(arr)
-
-    # (id, simhash) only — the blob is decoded in Python but never
-    # shipped back out of the Arrow stage (see fingerprint60_table)
-    sig = fingerprint60_table(
-        df, binary_col, id_col, fp,
-        errors=(NotImplementedError, ValueError, struct.error),
-    ).where(F.col("simhash").isNotNull())
-    cand = simhash_pair_candidates(
-        sig, id_col, bits=60, bands=bands,
-        max_hamming=max_hamming, hot_threshold=hot_threshold,
-        prefilter_hamming=max_hamming,
+    return _fingerprint_pairs(
+        df, binary_col, id_col, _audio_fp_from_bytes,
+        max_hamming, bands, hot_threshold,
     )
-    hamming = F.bit_count(F.col("sig_a").bitwiseXOR(F.col("sig_b")))
-    return cand.select("id_a", "id_b", hamming.cast("int").alias("hamming"))
 
 
 def silence_spans(
@@ -349,64 +280,41 @@ def silence_spans(
     corrupted thresholds for non-16-bit expectations; documented as
     a behavior change in README round-12 status).
 
-    Scale: one mapInPandas pure map (decode -> block abs-sums ->
+    Scale: one per-row pure map (decode -> block abs-sums ->
     run-length), n rows in / n rows out; a real VAD swaps in for the
     block statistic and keeps the plumbing."""
-    import pandas as pd
 
-    id_t = df.schema[id_col].dataType.simpleString()  # native id type
-    out_schema = (
-        f"{id_col} {id_t}, n_windows bigint, n_silent bigint, "
-        "longest_silence bigint"
-    )
-
-    def kernel(batches):
-        for pdf in batches:
-            ids, nw, ns, run = [], [], [], []
-            for did, raw in zip(pdf[id_col], pdf[binary_col]):
-                samples, _rate, audio_format, bits = decode_wav_ex(bytes(raw))
-                if audio_format != 1:
-                    if assume_bits is None:
-                        raise NotImplementedError(
-                            "silence_spans needs integer PCM: IEEE-float "
-                            "WAV samples have no exact integer recovery, "
-                            "and a silent mis-scale would corrupt the "
-                            "threshold; pass assume_bits=16 (or the bit "
-                            "depth your threshold is scaled for) to opt "
-                            "in to quantization"
-                        )
-                    bits = assume_bits
-                if samples.ndim == 1:
-                    samples = samples[:, None]
-                # decode_wav_ex normalizes integer PCM by the dyadic
-                # 1 << (bits-1), so multiplying back recovers the
-                # original integer samples EXACTLY (8-bit: the signed
-                # x-128 value; no rounding drift at any depth).
-                # Float input (assume_bits set) quantizes here — the
-                # caller chose the scale.
-                samples = np.round(samples * float(1 << (bits - 1)))
-                n = (samples.shape[0] // window) * window
-                blocks = (
-                    np.abs(samples[:n].astype(np.int64))
-                    .reshape(n // window, window, samples.shape[1])
-                    .sum(axis=(1, 2))
+    def spans(raw: bytes) -> tuple:
+        samples, _rate, audio_format, bits = decode_wav_ex(raw)
+        if audio_format != 1:
+            if assume_bits is None:
+                raise NotImplementedError(
+                    "silence_spans needs integer PCM: IEEE-float "
+                    "WAV samples have no exact integer recovery, "
+                    "and a silent mis-scale would corrupt the "
+                    "threshold; pass assume_bits=16 (or the bit "
+                    "depth your threshold is scaled for) to opt "
+                    "in to quantization"
                 )
-                silent = blocks < threshold
-                best = cur = 0
-                for s in silent:
-                    cur = cur + 1 if s else 0
-                    best = max(best, cur)
-                ids.append(did)
-                nw.append(len(blocks))
-                ns.append(int(silent.sum()))
-                run.append(best)
-            yield pd.DataFrame(
-                {
-                    id_col: ids,
-                    "n_windows": nw,
-                    "n_silent": ns,
-                    "longest_silence": run,
-                }
-            )
+            bits = assume_bits
+        # decode_wav_ex normalizes integer PCM by the dyadic
+        # 1 << (bits-1), so multiplying back recovers the original
+        # integer samples EXACTLY (8-bit: the signed x-128 value; no
+        # rounding drift at any depth). Float input (assume_bits set)
+        # quantizes here — the caller chose the scale.
+        samples = np.round(samples * float(1 << (bits - 1)))
+        n = (samples.shape[0] // window) * window
+        blocks = (
+            np.abs(samples[:n].astype(np.int64))
+            .reshape(n // window, window, samples.shape[1])
+            .sum(axis=(1, 2))
+        )
+        silent = blocks < threshold
+        best = cur = 0
+        for s in silent:
+            cur = cur + 1 if s else 0
+            best = max(best, cur)
+        return len(blocks), int(silent.sum()), best
 
-    return df.mapInPandas(kernel, out_schema)
+    udf = row_udf(spans, "n_windows bigint, n_silent bigint, longest_silence bigint")
+    return df.select(id_col, udf(binary_col).alias("_out")).select(id_col, "_out.*")

@@ -755,7 +755,7 @@ def simhash_pair_candidates(
     # AFTER the shuffle on the hot branch only. Carrying it made the two
     # union branches' exchanges differ (the planner pruned it from the
     # cold side), so the whole upstream fingerprint pipeline — tokenize
-    # + vote agg for text, a decode mapInPandas for image/audio/video —
+    # + vote agg for text, a decode Python UDF for image/audio/video —
     # executed once PER BRANCH; with identical projections both branches
     # share ONE exchange (ReusedExchange) and the pipeline runs once,
     # and the hot branch's shuffle is 8 bytes/row narrower.
@@ -778,14 +778,14 @@ def simhash_pair_candidates(
     # `marked` feeds FOUR subtree references (cold a/b, hot a/b), and
     # the signature pipeline above it is the expensive part of every
     # caller — tokenize + 60-vote agg for text SimHash, a decode
-    # mapInPandas for the image/audio/video fingerprints. All four
+    # Python UDF for the image/audio/video fingerprints. All four
     # references share the ONE hashpartitioning(band, val) exchange
     # the window creates — the hot join's (band, val, sub, subval)
     # keys are satisfied by subset clustering
     # (requireAllClusterKeysForCoPartition=false, see session.py) —
     # PROVIDED no side is planned as a broadcast build (a
     # BroadcastExchange subtree is not the shuffle exchange, so reuse
-    # can never apply; measured r16: 16 parquet scans / 16
+    # can never apply; measured r16: 16 parquet scans / 16 decode
     # MapInPandas in the audio_dup_pairs plan, 8x the fingerprint
     # work). _pair_join therefore pins the self-joins to
     # shuffle_hash, the embedding_near_dup_pairs pattern; an r16 A/B

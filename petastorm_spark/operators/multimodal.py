@@ -1,32 +1,38 @@
 """Multimodal columns: image/audio/video as opaque binary columns with
-typed metadata, processed by Arrow-batched pandas functions.
+typed metadata, processed by per-row Python kernels.
 
 Image decode is real for the formats the engine itself produces: RAW0
 deterministic containers AND spec-compliant PNG byte streams (via
 functions.pure_png, or PIL when present) — so a column written by
 codecs.CompressedImageCodec('.png') round-trips through every kernel
 here. jpeg without PIL raises NotImplementedError. Everything
-Spark-side — schemas, mapInPandas batch shapes, partition behavior —
-is real and tested.
+Spark-side — schemas, UDF plans, partition behavior — is real and
+tested.
 
-Scale: mapInPandas streams Arrow batches; per-batch Python overhead is
-amortized, memory is bounded by the batch size
-(spark.sql.execution.arrow.maxRecordsPerBatch), and the operator is a
-pure map — no shuffle, linear scale-out.
+Scale: every kernel is a plain function of one blob, run through
+:func:`row_udf` — an Arrow-batched scalar Python UDF that receives
+only the column it reads and returns only its result (the other
+columns of the row never leave the engine). Per-batch Python overhead
+is amortized, memory is bounded by the batch size
+(spark.sql.execution.arrow.maxRecordsPerBatch), and every operator is
+a pure map — no shuffle, linear scale-out.
 """
 
 from __future__ import annotations
 
+import functools
 import io
-from collections.abc import Iterator
+import struct
+import tokenize
+import zlib
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
     ArrayType,
     BinaryType,
+    FloatType,
     IntegerType,
     LongType,
     StringType,
@@ -38,6 +44,30 @@ from petastorm_spark.codecs import _npy_decode
 
 RAW_MAGIC = b"RAW0"
 
+# what a decoder raises for bytes it cannot decode: NotImplementedError
+# for a format it does not read, ValueError for a malformed stream; the
+# operators that map undecodable input to NULL catch exactly these
+UNDECODABLE = (NotImplementedError, ValueError)
+
+
+def row_udf(fn, return_type, errors: tuple = ()):
+    """``fn`` as an Arrow-batched per-row Python UDF: call the result on
+    the input columns, ``df.withColumn(out, row_udf(fn, T)(col))``. A
+    call that raises one of ``errors`` yields NULL; anything else fails
+    the task. The UDF is marked nondeterministic so Catalyst never
+    copies the call into a filter it pushes below the projection (with
+    a deterministic UDF, ``where(out IS NOT NULL)`` planned a second
+    ArrowEvalPython and decoded every blob twice)."""
+
+    @functools.wraps(fn)
+    def call(*args):
+        try:
+            return fn(*args)
+        except errors:
+            return None
+
+    return F.udf(call, return_type, useArrow=True).asNondeterministic()
+
 
 def encode_fake_image(arr: np.ndarray) -> bytes:
     """Deterministic stand-in for png/jpeg encoding (RAW0 container)."""
@@ -47,12 +77,24 @@ def encode_fake_image(arr: np.ndarray) -> bytes:
 
 
 PNG_SIG = b"\x89PNG\r\n\x1a\n"
+_MALFORMED = (struct.error, zlib.error, tokenize.TokenError, IndexError)
 
 
 def decode_image_bytes(raw: bytes) -> tuple[np.ndarray, str]:
     """Decode one image blob -> (array, format). RAW0 containers, real
     PNG byte streams, and real baseline JPEG byte streams all decode
-    via the pure-python codecs (PIL is preferred when present)."""
+    via the pure-python codecs (PIL is preferred when present). An
+    unrecognized stream raises NotImplementedError and a malformed one
+    (truncated, corrupted) ValueError: the errors the container parsers
+    raise on such bytes (struct, zlib, numpy's .npy header tokenizer,
+    reads past the end of a truncated JPEG) are translated here."""
+    try:
+        return _decode_image(raw)
+    except _MALFORMED as e:
+        raise ValueError(f"malformed image byte stream: {e}") from e
+
+
+def _decode_image(raw: bytes) -> tuple[np.ndarray, str]:
     if raw[:4] == RAW_MAGIC:
         return _npy_decode(memoryview(raw)[4:]), "raw0"
     try:
@@ -90,30 +132,21 @@ IMAGE_META_SCHEMA = StructType(
 
 
 def with_image_meta(df: DataFrame, binary_col: str, out_col: str = "image_meta") -> DataFrame:
-    """Attach typed metadata extracted from the binary column via a
-    mapInPandas stage (byte length always; shape when decodable)."""
-    out_schema = StructType(df.schema.fields + [StructField(out_col, IMAGE_META_SCHEMA, True)])
+    """Attach typed metadata extracted from the binary column (byte
+    length always; shape when decodable). An undecodable blob gets
+    byte_len + format='opaque' instead of failing the job."""
 
-    def extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            metas = []
-            for raw in pdf[binary_col]:
-                raw = bytes(raw)
-                try:
-                    arr, fmt = decode_image_bytes(raw)
-                    h = int(arr.shape[0]) if arr.ndim >= 1 else None
-                    w = int(arr.shape[1]) if arr.ndim >= 2 else None
-                    c = int(arr.shape[2]) if arr.ndim >= 3 else 1
-                    metas.append((len(raw), h, w, c, fmt))
-                except NotImplementedError:
-                    metas.append((len(raw), None, None, None, "opaque"))
-            pdf[out_col] = [
-                {"byte_len": m[0], "height": m[1], "width": m[2], "channels": m[3], "format": m[4]}
-                for m in metas
-            ]
-            yield pdf
+    def meta(raw: bytes) -> tuple:
+        try:
+            arr, fmt = decode_image_bytes(raw)
+        except UNDECODABLE:
+            return len(raw), None, None, None, "opaque"
+        h = int(arr.shape[0]) if arr.ndim >= 1 else None
+        w = int(arr.shape[1]) if arr.ndim >= 2 else None
+        c = int(arr.shape[2]) if arr.ndim >= 3 else 1
+        return len(raw), h, w, c, fmt
 
-    return df.mapInPandas(extract, schema=out_schema)
+    return df.withColumn(out_col, row_udf(meta, IMAGE_META_SCHEMA)(binary_col))
 
 
 def resize_images(
@@ -123,45 +156,32 @@ def resize_images(
     re-encode kernel pattern (petastorm TransformSpec over image
     codecs). Output stays in the input's container: PNG in → PNG out
     (pure-python encoder), RAW0 in → RAW0 out."""
-    out_schema = StructType(df.schema.fields + [StructField(out_col, BinaryType(), True)])
     th, tw = target_hw
 
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for raw in pdf[binary_col]:
-                arr, fmt = decode_image_bytes(bytes(raw))
-                ys = (np.arange(th) * arr.shape[0] // th).astype(int)
-                xs = (np.arange(tw) * arr.shape[1] // tw).astype(int)
-                resized = arr[np.ix_(ys, xs)]
-                if fmt == "png":
-                    from petastorm_spark.functions.pure_png import png_encode
+    def resize(raw: bytes) -> bytes:
+        arr, fmt = decode_image_bytes(raw)
+        ys = (np.arange(th) * arr.shape[0] // th).astype(int)
+        xs = (np.arange(tw) * arr.shape[1] // tw).astype(int)
+        resized = arr[np.ix_(ys, xs)]
+        if fmt == "png":
+            from petastorm_spark.functions.pure_png import png_encode
 
-                    out.append(png_encode(np.ascontiguousarray(resized)))
-                else:
-                    out.append(encode_fake_image(resized))
-            pdf[out_col] = out
-            yield pdf
+            return png_encode(np.ascontiguousarray(resized))
+        return encode_fake_image(resized)
 
-    return df.mapInPandas(kernel, schema=out_schema)
+    return df.withColumn(out_col, row_udf(resize, BinaryType())(binary_col))
 
 
 def frame_sample_video(
     df: DataFrame, binary_col: str, out_col: str, every_nth: int
 ) -> DataFrame:
     """Frame sampling for RAW0 'videos' (T,H,W[,C] arrays): keep every
-    n-th frame. Same mapInPandas plumbing a real ffmpeg kernel uses."""
-    out_schema = StructType(df.schema.fields + [StructField(out_col, BinaryType(), True)])
+    n-th frame. Same per-row plumbing a real ffmpeg kernel uses."""
 
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            pdf[out_col] = [
-                encode_fake_image(decode_image_bytes(bytes(raw))[0][::every_nth])
-                for raw in pdf[binary_col]
-            ]
-            yield pdf
+    def sample(raw: bytes) -> bytes:
+        return encode_fake_image(decode_image_bytes(raw)[0][::every_nth])
 
-    return df.mapInPandas(kernel, schema=out_schema)
+    return df.withColumn(out_col, row_udf(sample, BinaryType())(binary_col))
 
 
 def embed_images(
@@ -169,33 +189,19 @@ def embed_images(
 ) -> DataFrame:
     """Deterministic fake feature extractor: channel-mean + histogram
     features from the decoded array (stands in for a CNN/CLIP encoder;
-    same signature, same Arrow batch shape)."""
-    out_schema = StructType(
-        df.schema.fields + [StructField(out_col, ArrayType(FloatTypeCompat()), True)]
+    same signature, same per-row UDF shape)."""
+
+    def embed(raw: bytes) -> np.ndarray:
+        arr = decode_image_bytes(raw)[0].astype(np.float64)
+        hist, _ = np.histogram(arr, bins=dim - 1, range=(0, 255))
+        total = hist.sum() or 1
+        return np.concatenate([[arr.mean() / 255.0], hist / total]).astype(
+            np.float32
+        )
+
+    return df.withColumn(
+        out_col, row_udf(embed, ArrayType(FloatType()))(binary_col)
     )
-
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            feats = []
-            for raw in pdf[binary_col]:
-                arr = decode_image_bytes(bytes(raw))[0].astype(np.float64)
-                hist, _ = np.histogram(arr, bins=dim - 1, range=(0, 255))
-                total = hist.sum() or 1
-                feats.append(
-                    np.concatenate([[arr.mean() / 255.0], hist / total]).astype(
-                        np.float32
-                    )
-                )
-            pdf[out_col] = feats
-            yield pdf
-
-    return df.mapInPandas(kernel, schema=out_schema)
-
-
-def FloatTypeCompat():
-    from pyspark.sql.types import FloatType
-
-    return FloatType()
 
 
 DHASH_W, DHASH_H = 11, 6  # (11-1)*6 = 60 bits, matching the simhash
@@ -222,71 +228,50 @@ def dhash60(arr: np.ndarray) -> int:
     return out
 
 
+def _dhash60_from_bytes(raw: bytes) -> int:
+    arr, _ = decode_image_bytes(raw)
+    return dhash60(arr)
+
+
 def image_dhash(
     df: DataFrame, binary_col: str, out_col: str = "dhash"
 ) -> DataFrame:
     """Attach the 60-bit perceptual dHash of every decodable image
-    blob (NULL for opaque bytes). mapInPandas pure map — no shuffle."""
-    out_schema = StructType(
-        df.schema.fields + [StructField(out_col, LongType(), True)]
-    )
-
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            hs = []
-            for raw in pdf[binary_col]:
-                try:
-                    arr, _ = decode_image_bytes(bytes(raw))
-                    hs.append(dhash60(arr))
-                except (NotImplementedError, ValueError):
-                    hs.append(None)
-            pdf[out_col] = pd.array(hs, dtype="Int64")
-            yield pdf
-
-    return df.mapInPandas(kernel, schema=out_schema)
+    blob (NULL for undecodable bytes). Per-row pure map — no shuffle."""
+    udf = row_udf(_dhash60_from_bytes, LongType(), UNDECODABLE)
+    return df.withColumn(out_col, udf(binary_col))
 
 
-def fingerprint60_table(
+def _fingerprint_pairs(
     df: DataFrame,
     binary_col: str,
     id_col: str,
-    fp_from_bytes,
-    errors: tuple = (NotImplementedError, ValueError),
+    fp,
+    max_hamming: int,
+    bands: int,
+    hot_threshold: int,
 ) -> DataFrame:
-    """(id, simhash) 60-bit fingerprint table from a binary column:
-    ships ONLY (id, blob) into the Python decode stage and ONLY
-    (id, simhash) back out. The attach-style operators (image_dhash,
-    audio_fingerprints) echo every input column — including the blob —
-    back across the Arrow boundary, which the dup-pair callers drop
-    one Project later; at corpus scale that return trip re-serializes
-    every payload byte for nothing (guide §4: pass only the columns
-    the function needs — in both directions). ``fp_from_bytes`` maps
-    raw bytes -> int fingerprint or None; ``errors`` are the decode
-    exceptions mapped to NULL."""
+    """(id_a, id_b, hamming) near-dup pairs over the 60-bit fingerprint
+    ``fp`` maps each blob to (``fp`` returns an int or None; an
+    undecodable blob has none): the (id, simhash) table, then the SAME
+    two-level pigeonhole banded self-join the text SimHash path uses
+    (dedup.simhash_pair_candidates — exact for hamming <= max_hamming,
+    never quadratic in a hot bucket) and its bit_count verify. Only the
+    blob enters the Python UDF and only the fingerprint comes back."""
+    from petastorm_spark.operators.dedup import simhash_pair_candidates
+
     if id_col == "simhash":
-        raise ValueError("id_col may not be the output column name 'simhash'")
-    out_schema = StructType(
-        [df.schema[id_col], StructField("simhash", LongType(), True)]
+        raise ValueError("id_col may not be the fingerprint column name 'simhash'")
+    sig = df.select(
+        id_col, row_udf(fp, LongType(), UNDECODABLE)(binary_col).alias("simhash")
+    ).where(F.col("simhash").isNotNull())
+    cand = simhash_pair_candidates(
+        sig, id_col, bits=60, bands=bands,
+        max_hamming=max_hamming, hot_threshold=hot_threshold,
+        prefilter_hamming=max_hamming,
     )
-
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            hs = []
-            for raw in pdf[binary_col]:
-                try:
-                    hs.append(fp_from_bytes(bytes(raw)))
-                except errors:
-                    hs.append(None)
-            yield pd.DataFrame(
-                {id_col: pdf[id_col], "simhash": pd.array(hs, dtype="Int64")}
-            )
-
-    return df.select(id_col, binary_col).mapInPandas(kernel, schema=out_schema)
-
-
-def _dhash60_from_bytes(raw: bytes) -> int:
-    arr, _ = decode_image_bytes(raw)
-    return dhash60(arr)
+    hamming = F.bit_count(F.col("sig_a").bitwiseXOR(F.col("sig_b")))
+    return cand.select("id_a", "id_b", hamming.cast("int").alias("hamming"))
 
 
 def image_dup_pairs(
@@ -297,26 +282,14 @@ def image_dup_pairs(
     bands: int = 4,
     hot_threshold: int = 1000,
 ) -> DataFrame:
-    """Image near-dup pairs: perceptual dHash + the SAME two-level
-    pigeonhole banded self-join the text SimHash path uses
-    (dedup.simhash_pair_candidates — exact for hamming <= max_hamming,
-    never quadratic in a hot bucket). Multimodal dedup composes from
-    the text machinery because both reduce to 60-bit fingerprints.
+    """Image near-dup pairs: perceptual dHash + the text-SimHash banded
+    self-join. Multimodal dedup composes from the text machinery
+    because both reduce to 60-bit fingerprints.
     Output: (id_a, id_b, hamming)."""
-    from pyspark.sql import functions as F2
-
-    from petastorm_spark.operators.dedup import simhash_pair_candidates
-
-    sig = fingerprint60_table(
-        df, binary_col, id_col, _dhash60_from_bytes
-    ).where(F2.col("simhash").isNotNull())
-    cand = simhash_pair_candidates(
-        sig, id_col, bits=60, bands=bands,
-        max_hamming=max_hamming, hot_threshold=hot_threshold,
-        prefilter_hamming=max_hamming,
+    return _fingerprint_pairs(
+        df, binary_col, id_col, _dhash60_from_bytes,
+        max_hamming, bands, hot_threshold,
     )
-    hamming = F2.bit_count(F2.col("sig_a").bitwiseXOR(F2.col("sig_b")))
-    return cand.select("id_a", "id_b", hamming.cast("int").alias("hamming"))
 
 
 def video_fingerprint60(arr: np.ndarray) -> int:
@@ -342,6 +315,11 @@ def video_fingerprint60(arr: np.ndarray) -> int:
     return out
 
 
+def _video_fp_from_bytes(raw: bytes) -> int | None:
+    arr, _ = decode_image_bytes(raw)
+    return video_fingerprint60(arr) if arr.ndim >= 3 else None
+
+
 def video_dup_pairs(
     df: DataFrame,
     binary_col: str,
@@ -354,24 +332,10 @@ def video_dup_pairs(
     pigeonhole banded self-join as text/image/audio — all four
     modalities reduce to 60-bit fingerprints and share the machinery.
     Output: (id_a, id_b, hamming)."""
-    from pyspark.sql import functions as F2
-
-    from petastorm_spark.operators.dedup import simhash_pair_candidates
-
-    def fp(raw: bytes):
-        arr, _ = decode_image_bytes(raw)
-        return video_fingerprint60(arr) if arr.ndim >= 3 else None
-
-    sig = fingerprint60_table(df, binary_col, id_col, fp).where(
-        F2.col("simhash").isNotNull()
+    return _fingerprint_pairs(
+        df, binary_col, id_col, _video_fp_from_bytes,
+        max_hamming, bands, hot_threshold,
     )
-    cand = simhash_pair_candidates(
-        sig, id_col, bits=60, bands=bands,
-        max_hamming=max_hamming, hot_threshold=hot_threshold,
-        prefilter_hamming=max_hamming,
-    )
-    hamming = F2.bit_count(F2.col("sig_a").bitwiseXOR(F2.col("sig_b")))
-    return cand.select("id_a", "id_b", hamming.cast("int").alias("hamming"))
 
 
 def shot_boundaries(
@@ -390,33 +354,19 @@ def shot_boundaries(
     ascending into a comma string (scalar columns only — the registry
     contract).
 
-    Scale: one mapInPandas pure map (decode -> per-frame sum -> diff),
+    Scale: one per-row pure map (decode -> per-frame sum -> diff),
     n rows in / n rows out; the real-ffmpeg swap-in keeps this exact
     plumbing and replaces only the decode."""
-    import pandas as pd
 
-    id_t = df.schema[id_col].dataType.simpleString()  # native id type
-    out_schema = (
-        f"{id_col} {id_t}, n_frames bigint, n_cuts bigint, cuts_csv string"
-    )
+    def cuts(raw: bytes) -> tuple:
+        arr, _ = decode_image_bytes(raw)
+        sums = arr.reshape(arr.shape[0], -1).astype(np.int64).sum(axis=1)
+        at = [
+            t
+            for t in range(1, len(sums))
+            if abs(int(sums[t]) - int(sums[t - 1])) >= threshold
+        ]
+        return len(sums), len(at), ",".join(map(str, at))
 
-    def kernel(batches):
-        for pdf in batches:
-            ids, nf, nc, csv = [], [], [], []
-            for did, raw in zip(pdf[id_col], pdf[binary_col]):
-                arr, _ = decode_image_bytes(bytes(raw))
-                sums = arr.reshape(arr.shape[0], -1).astype(np.int64).sum(axis=1)
-                cuts = [
-                    int(t)
-                    for t in range(1, len(sums))
-                    if abs(int(sums[t]) - int(sums[t - 1])) >= threshold
-                ]
-                ids.append(did)
-                nf.append(len(sums))
-                nc.append(len(cuts))
-                csv.append(",".join(str(t) for t in cuts))
-            yield pd.DataFrame(
-                {id_col: ids, "n_frames": nf, "n_cuts": nc, "cuts_csv": csv}
-            )
-
-    return df.mapInPandas(kernel, out_schema)
+    udf = row_udf(cuts, "n_frames bigint, n_cuts bigint, cuts_csv string")
+    return df.select(id_col, udf(binary_col).alias("_out")).select(id_col, "_out.*")

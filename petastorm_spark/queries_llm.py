@@ -266,8 +266,6 @@ def image_dhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     decode + hash + banding pipeline end to end. Scale: pure map to
     60-bit fingerprints, then the pigeonhole-banded join — never
     quadratic, identical shape to dedup_simhash_pairs."""
-    import pandas as pd
-
     from petastorm_spark.operators.multimodal import (
         encode_fake_image,
         image_dup_pairs,
@@ -278,18 +276,14 @@ def image_dhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         ids.select((F.col("doc_id") + _MM_SHIFT).alias("doc_id"))
     )
 
-    def gen(batches):
-        for pdf in batches:
-            imgs = []
-            for did in pdf["doc_id"]:
-                d = int(did) % _MM_SHIFT
-                p = _md5_values(d, "", 5).ravel()[:66].reshape(6, 11)
-                if did >= _MM_SHIFT and d % 5 == 0:
-                    p[0, 0] = (p[0, 0] + 13) % 251
-                imgs.append(encode_fake_image(p.astype("uint8")))
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], "image": imgs})
+    def image(did: int) -> bytes:
+        d = did % _MM_SHIFT
+        p = _md5_values(d, "", 5).ravel()[:66].reshape(6, 11)
+        if did >= _MM_SHIFT and d % 5 == 0:
+            p[0, 0] = (p[0, 0] + 13) % 251
+        return encode_fake_image(p.astype("uint8"))
 
-    imgs = both.mapInPandas(gen, "doc_id bigint, image binary")
+    imgs = _blob_column(both, "image", image)
     return image_dup_pairs(imgs, "image", "doc_id", max_hamming=3, bands=4)
 
 
@@ -352,7 +346,7 @@ def _spread_ids(df: DataFrame) -> DataFrame:
     """Round-robin the metadata-sized id table across the cluster
     before a compute-bound Python synthesis/decode map. The documents
     table reads as a SINGLE scan split at bench SF (one small parquet
-    file), so without this every downstream mapInPandas kernel of the
+    file), so without this every downstream Python kernel of the
     multimodal queries ran as one task on one core. The exchange moves
     only ids (8 B/row — §8 decide-with-small-rows; §2.6 idle
     capacity); the partition count is defaultParallelism, i.e. the
@@ -365,6 +359,34 @@ def _spread_ids(df: DataFrame) -> DataFrame:
     silence spans) LOSE 0.2-0.5 s to the extra exchange + stage at
     bench SF, so those keep the scan's own parallelism."""
     return df.repartition(df.sparkSession.sparkContext.defaultParallelism)
+
+
+def _blob_column(ids: DataFrame, out_col: str, make) -> DataFrame:
+    """(doc_id, out_col): the synthetic blob ``make(doc_id)`` of every
+    id, built by one per-row Python UDF that receives only the id."""
+    from petastorm_spark.operators.multimodal import row_udf
+
+    blob = row_udf(make, "binary")("doc_id").alias(out_col)
+    return ids.select("doc_id", blob)
+
+
+def _md5_video(d: int) -> bytes:
+    """RAW0 (T, 2, 2) video of doc ``d``: T = 13 + d % 7 frames, frame
+    t's pixels the first 4 md5 bytes of f"{d}_v{t}" — the fixture the
+    frame-sample and shot-boundary oracles re-derive in SQL."""
+    import hashlib
+
+    from petastorm_spark.operators.multimodal import encode_fake_image
+
+    frames = np.stack(
+        [
+            np.frombuffer(
+                hashlib.md5(f"{d}_v{t}".encode()).digest()[:4], dtype=np.uint8
+            ).reshape(2, 2)
+            for t in range(13 + d % 7)
+        ]
+    )
+    return encode_fake_image(frames)
 
 
 def _md5_values(doc_key: int, tag: str, n_chunks: int):
@@ -398,8 +420,6 @@ def audio_dup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     and banding all check hash-exact. Scale: pure map to 60-bit
     fingerprints + banded join, identical shape to the text/image
     legs."""
-    import pandas as pd
-
     from petastorm_spark.operators.audio import (
         audio_dup_pairs as _pairs,
         encode_wav,
@@ -410,18 +430,14 @@ def audio_dup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         ids.select((F.col("doc_id") + _MM_SHIFT).alias("doc_id"))
     )
 
-    def gen(batches):
-        for pdf in batches:
-            blobs = []
-            for did in pdf["doc_id"]:
-                d = int(did) % _MM_SHIFT
-                s = _md5_values(d, "w", 61).ravel()
-                if did >= _MM_SHIFT and d % 5 == 0:
-                    s[0] = (s[0] + 50) % 256
-                blobs.append(encode_wav(s.astype("int16"), 16000))
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], "audio": blobs})
+    def clip(did: int) -> bytes:
+        d = did % _MM_SHIFT
+        s = _md5_values(d, "w", 61).ravel()
+        if did >= _MM_SHIFT and d % 5 == 0:
+            s[0] = (s[0] + 50) % 256
+        return encode_wav(s.astype("int16"), 16000)
 
-    wavs = _spread_ids(both).mapInPandas(gen, "doc_id bigint, audio binary")
+    wavs = _blob_column(_spread_ids(both), "audio", clip)
     return _pairs(wavs, "audio", "doc_id", max_hamming=3, bands=4)
 
 
@@ -436,8 +452,6 @@ def video_dup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     block resample the identity and the 16-pixel frame mean exactly
     dyadic, so the oracle compares integer frame sums. Scale: pure
     map + banded join, never quadratic."""
-    import pandas as pd
-
     from petastorm_spark.operators.multimodal import (
         encode_fake_image,
         video_dup_pairs as _pairs,
@@ -448,18 +462,14 @@ def video_dup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         ids.select((F.col("doc_id") + _MM_SHIFT).alias("doc_id"))
     )
 
-    def gen(batches):
-        for pdf in batches:
-            blobs = []
-            for did in pdf["doc_id"]:
-                d = int(did) % _MM_SHIFT
-                p = _md5_values(d, "f", 61).reshape(61, 4, 4)
-                if did >= _MM_SHIFT and d % 5 == 0:
-                    p[0, 0, 0] = (p[0, 0, 0] + 50) % 256
-                blobs.append(encode_fake_image(p.astype("uint8")))
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], "video": blobs})
+    def video(did: int) -> bytes:
+        d = did % _MM_SHIFT
+        p = _md5_values(d, "f", 61).reshape(61, 4, 4)
+        if did >= _MM_SHIFT and d % 5 == 0:
+            p[0, 0, 0] = (p[0, 0, 0] + 50) % 256
+        return encode_fake_image(p.astype("uint8"))
 
-    vids = _spread_ids(both).mapInPandas(gen, "doc_id bigint, video binary")
+    vids = _blob_column(_spread_ids(both), "video", video)
     return _pairs(vids, "video", "doc_id", max_hamming=3, bands=4)
 
 
@@ -487,28 +497,19 @@ def audio_meta_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     with_audio_meta's chunk-walking parser, then aggregate per
     (channels, rate). The oracle re-derives frames/channels/rate in
     closed form, so the container writer+parser pair is what's being
-    checked. Scale: mapInPandas pure map + one partial-agg groupBy
+    checked. Scale: per-row Python UDF maps + one partial-agg groupBy
     over a 4-row key space."""
-    import numpy as np
-    import pandas as pd
-
     from petastorm_spark.operators.audio import encode_wav, with_audio_meta
 
     ids = _t(spark, sf_dir, "documents").select("doc_id")
 
-    def gen(batches):
-        for pdf in batches:
-            blobs = []
-            for did in pdf["doc_id"]:
-                d = int(did)
-                n = 160 + (d % 41) * 16
-                ch = 1 + (d % 2)
-                rate = 8000 if d % 3 == 0 else 16000
-                s = np.full((n, ch), d % 128, dtype=np.int16)
-                blobs.append(encode_wav(s, rate))
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], "audio": blobs})
+    def clip(d: int) -> bytes:
+        n = 160 + (d % 41) * 16
+        ch = 1 + (d % 2)
+        rate = 8000 if d % 3 == 0 else 16000
+        return encode_wav(np.full((n, ch), d % 128, dtype=np.int16), rate)
 
-    wavs = ids.mapInPandas(gen, "doc_id bigint, audio binary")
+    wavs = _blob_column(ids, "audio", clip)
     m = with_audio_meta(wavs, "audio").select("audio_meta.*")
     return (
         m.groupBy(
@@ -548,26 +549,17 @@ def image_meta_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     form — the encode->decode pair is the system under test (the
     RAW0 path is covered by the dup-pair queries). The fmt column
     pins that the PNG signature route, not RAW0, decoded the blobs.
-    Scale: mapInPandas pure maps + a 35-key partial-agg groupBy."""
-    import numpy as np
-    import pandas as pd
-
+    Scale: per-row Python UDF maps + a 35-key partial-agg groupBy."""
     from petastorm_spark.functions.pure_png import png_encode
     from petastorm_spark.operators.multimodal import with_image_meta
 
     ids = _t(spark, sf_dir, "documents").select("doc_id")
 
-    def gen(batches):
-        for pdf in batches:
-            blobs = []
-            for did in pdf["doc_id"]:
-                d = int(did)
-                h, w = 8 + d % 5, 8 + d % 7
-                img = np.full((h, w), d % 251, dtype=np.uint8)
-                blobs.append(png_encode(img))
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], "image": blobs})
+    def image(d: int) -> bytes:
+        h, w = 8 + d % 5, 8 + d % 7
+        return png_encode(np.full((h, w), d % 251, dtype=np.uint8))
 
-    imgs = ids.mapInPandas(gen, "doc_id bigint, image binary")
+    imgs = _blob_column(ids, "image", image)
     m = with_image_meta(imgs, "image").select("image_meta.*")
     return (
         m.groupBy(
@@ -610,42 +602,25 @@ def image_resize_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle re-derives the nearest-neighbor source index
     (i*H//4, j*W//4) and the md5 byte at that position in closed
     form — two full pure-python PNG round trips per row are what the
-    hash checks. Scale: two mapInPandas pure maps, no shuffle until
-    the final per-doc row."""
-    import numpy as np
-    import pandas as pd
-
+    hash checks. Scale: per-row Python UDF maps, no shuffle until the
+    final per-doc row."""
     from petastorm_spark.functions.pure_png import png_decode, png_encode
-    from petastorm_spark.operators.multimodal import resize_images
+    from petastorm_spark.operators.multimodal import resize_images, row_udf
 
     ids = _t(spark, sf_dir, "documents").select("doc_id")
 
-    def gen(batches):
-        for pdf in batches:
-            blobs = []
-            for did in pdf["doc_id"]:
-                d = int(did)
-                h, w = 6 + d % 3, 12 + d % 5
-                img = _md5_values(d, "r", 8).ravel()[: h * w].reshape(h, w)
-                blobs.append(png_encode(img.astype("uint8")))
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], "image": blobs})
+    def image(d: int) -> bytes:
+        h, w = 6 + d % 3, 12 + d % 5
+        img = _md5_values(d, "r", 8).ravel()[: h * w].reshape(h, w)
+        return png_encode(img.astype("uint8"))
 
-    imgs = ids.mapInPandas(gen, "doc_id bigint, image binary")
-    small = resize_images(imgs, "image", "small", (4, 4))
+    small = resize_images(_blob_column(ids, "image", image), "image", "small", (4, 4))
 
-    def summed(batches):
-        for pdf in batches:
-            sums = [
-                int(png_decode(bytes(raw)).astype(np.int64).sum())
-                for raw in pdf["small"]
-            ]
-            yield pd.DataFrame(
-                {"doc_id": pdf["doc_id"], "resized_sum": sums}
-            )
+    def pixel_sum(raw: bytes) -> int:
+        return int(png_decode(raw).astype(np.int64).sum())
 
-    return small.mapInPandas(
-        summed, "doc_id bigint, resized_sum bigint"
-    ).orderBy("doc_id")
+    resized_sum = row_udf(pixel_sum, "bigint")("small").alias("resized_sum")
+    return small.select("doc_id", resized_sum).orderBy("doc_id")
 
 
 @register(
@@ -675,55 +650,27 @@ def video_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     (every 3rd frame) and a decode stage counts and sums the kept
     frames. The oracle enumerates t in 0,3,6,... < T in SQL — the
     ffmpeg-shaped sampling kernel's stride arithmetic is what's
-    checked. Scale: two mapInPandas pure maps."""
-    import numpy as np
-    import pandas as pd
-
+    checked. Scale: per-row Python UDF maps."""
     from petastorm_spark.operators.multimodal import (
         decode_image_bytes,
-        encode_fake_image,
         frame_sample_video,
+        row_udf,
     )
 
     ids = _t(spark, sf_dir, "documents").select("doc_id")
-
-    def gen(batches):
-        import hashlib
-
-        for pdf in batches:
-            blobs = []
-            for did in pdf["doc_id"]:
-                d = int(did)
-                T = 13 + d % 7
-                frames = np.stack(
-                    [
-                        np.frombuffer(
-                            hashlib.md5(f"{d}_v{t}".encode()).digest()[:4],
-                            dtype=np.uint8,
-                        ).reshape(2, 2)
-                        for t in range(T)
-                    ]
-                )
-                blobs.append(encode_fake_image(frames))
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], "video": blobs})
-
-    vids = ids.mapInPandas(gen, "doc_id bigint, video binary")
+    vids = _blob_column(ids, "video", _md5_video)
     sampled = frame_sample_video(vids, "video", "kept", every_nth=3)
 
-    def reduced(batches):
-        for pdf in batches:
-            n, s = [], []
-            for raw in pdf["kept"]:
-                arr, _ = decode_image_bytes(bytes(raw))
-                n.append(int(arr.shape[0]))
-                s.append(int(arr.astype(np.int64).sum()))
-            yield pd.DataFrame(
-                {"doc_id": pdf["doc_id"], "n_kept": n, "frame_sum": s}
-            )
+    def kept(raw: bytes) -> tuple:
+        arr, _ = decode_image_bytes(raw)
+        return arr.shape[0], int(arr.astype(np.int64).sum())
 
-    return sampled.mapInPandas(
-        reduced, "doc_id bigint, n_kept bigint, frame_sum bigint"
-    ).orderBy("doc_id")
+    udf = row_udf(kept, "n_kept bigint, frame_sum bigint")
+    return (
+        sampled.select("doc_id", udf("kept").alias("k"))
+        .select("doc_id", "k.*")
+        .orderBy("doc_id")
+    )
 
 
 @register(
@@ -7170,37 +7117,11 @@ def video_shot_boundaries(spark: SparkSession, sf_dir: str) -> DataFrame:
     through the SAD cut detector at threshold 300 — per-frame INTEGER
     pixel sums, so the cut set is integer-exact and the oracle is a
     lag() window over the same md5 byte sums. Output (doc_id,
-    n_frames, n_cuts, cuts_csv). Scale: one mapInPandas pure map."""
-    import hashlib
-
-    import pandas as pd
-
-    from petastorm_spark.operators.multimodal import (
-        encode_fake_image,
-        shot_boundaries,
-    )
+    n_frames, n_cuts, cuts_csv). Scale: one per-row Python UDF map."""
+    from petastorm_spark.operators.multimodal import shot_boundaries
 
     ids = _t(spark, sf_dir, "documents").select("doc_id")
-
-    def gen(batches):
-        for pdf in batches:
-            blobs = []
-            for did in pdf["doc_id"]:
-                d = int(did)
-                T = 13 + d % 7
-                frames = np.stack(
-                    [
-                        np.frombuffer(
-                            hashlib.md5(f"{d}_v{t}".encode()).digest()[:4],
-                            dtype=np.uint8,
-                        ).reshape(2, 2)
-                        for t in range(T)
-                    ]
-                )
-                blobs.append(encode_fake_image(frames))
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], "video": blobs})
-
-    vids = ids.mapInPandas(gen, "doc_id bigint, video binary")
+    vids = _blob_column(ids, "video", _md5_video)
     return shot_boundaries(vids, "video", "doc_id", threshold=300)
 
 
@@ -7240,35 +7161,28 @@ def audio_silence_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     abs-sum is exactly 16*|b-60| and 'silent' (< 160) is an integer
     comparison — pass through the silence_spans run-length kernel.
     The oracle recomputes blocks from the same md5 bytes and finds the
-    longest run with gaps-and-islands. Scale: one mapInPandas map."""
+    longest run with gaps-and-islands. Scale: per-row Python UDF
+    maps."""
     import hashlib
-
-    import pandas as pd
 
     from petastorm_spark.operators.audio import encode_wav, silence_spans
 
     ids = _t(spark, sf_dir, "documents").select("doc_id")
 
-    def gen(batches):
-        for pdf in batches:
-            blobs = []
-            for did in pdf["doc_id"]:
-                d = int(did)
-                nw = 8 + d % 5
-                s = np.concatenate(
-                    [
-                        np.full(
-                            16,
-                            hashlib.md5(f"{d}_w{w}".encode()).digest()[0] - 60,
-                            dtype=np.int16,
-                        )
-                        for w in range(nw)
-                    ]
+    def clip(d: int) -> bytes:
+        s = np.concatenate(
+            [
+                np.full(
+                    16,
+                    hashlib.md5(f"{d}_w{w}".encode()).digest()[0] - 60,
+                    dtype=np.int16,
                 )
-                blobs.append(encode_wav(s.reshape(-1, 1), 16000))
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], "audio": blobs})
+                for w in range(8 + d % 5)
+            ]
+        )
+        return encode_wav(s.reshape(-1, 1), 16000)
 
-    wavs = ids.mapInPandas(gen, "doc_id bigint, audio binary")
+    wavs = _blob_column(ids, "audio", clip)
     return silence_spans(wavs, "audio", "doc_id", window=16, threshold=160)
 
 

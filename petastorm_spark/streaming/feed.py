@@ -869,7 +869,7 @@ def fingerprint_dup_stream(
     stream of 60-bit fingerprints (audio RMS-envelope, video
     frame-mean, image dHash, text SimHash — every modality reduces to
     the same signature shape, and the fingerprint kernels are
-    mapInPandas pure maps that run unchanged on a streaming frame)
+    per-row Python UDFs that run unchanged on a streaming frame)
     probed online against the static signature table of the existing
     corpus. Emits (new_id, old_id, hamming), EXACTLY the pairs at
     hamming <= ``max_hamming``: with ``max_hamming < bands`` the

@@ -1310,18 +1310,17 @@ def test_ivf_append_visible_to_queries_and_pruned(spark, sf_dir, tmp_path):
     assert all(r["query_id"] == pid for r in rows)
 
 
-def test_fingerprint60_table_rejects_reserved_id_col(spark):
-    """``simhash`` is the output fingerprint column: an id column of
-    that name would give the kernel's output two of it."""
+def test_image_dup_pairs_rejects_reserved_id_col(spark):
+    """``simhash`` is the fingerprint column the pair search builds:
+    an id column of that name would give the signature table two of
+    it."""
     import pytest
 
-    from petastorm_spark.operators.multimodal import fingerprint60_table
+    from petastorm_spark.operators.multimodal import image_dup_pairs
 
     df = spark.createDataFrame([(1, b"x")], "simhash bigint, blob binary")
     with pytest.raises(ValueError, match="simhash"):
-        fingerprint60_table(df, "blob", "simhash", len)
-    ok = spark.createDataFrame([(1, b"xyz")], "doc_id bigint, blob binary")
-    assert fingerprint60_table(ok, "blob", "doc_id", len).collect()[0].simhash == 3
+        image_dup_pairs(df, "blob", "simhash")
 
 
 def test_image_dup_pairs_perceptual(spark):

@@ -77,15 +77,20 @@ def test_each_run_frees_the_materializations_of_the_last(spark):
         session.release_persisted()
 
 
-def test_profile_tool_prints_one_json_line_and_writes_the_plan(
-    spark, tmp_path, capsys, monkeypatch
-):
+def _profile_tool(spark, monkeypatch):
     spec = importlib.util.spec_from_file_location(
         "profile_tool", os.path.join(ROOT, "tools", "profile_queries.py")
     )
     tool = importlib.util.module_from_spec(spec)
     spec.loader.exec_module(tool)
     monkeypatch.setattr(tool, "get_spark", lambda *a, **k: spark)
+    return tool
+
+
+def test_profile_tool_prints_one_json_line_and_writes_the_plan(
+    spark, tmp_path, capsys, monkeypatch
+):
+    tool = _profile_tool(spark, monkeypatch)
     tool.main(["--sf", "0.001", "--runs", "1", "--plans", str(tmp_path), "q3_shipping_priority"])
     (line,) = capsys.readouterr().out.splitlines()
     row = json.loads(line)
@@ -95,3 +100,21 @@ def test_profile_tool_prints_one_json_line_and_writes_the_plan(
     assert len(row["walls"]) == 1 and row["rows"] == 10
     plan = (tmp_path / "q3_shipping_priority_sf0.001.txt").read_text()
     assert plan.startswith("== Physical Plan ==") and "isFinalPlan=true" in plan
+
+
+def test_profile_tool_warms_up_at_each_scale_factor(spark, capsys, monkeypatch):
+    """The untimed warm-up runs on the profiled dataset itself, so a
+    per-dataset cache a query builds on first use is built before the
+    timed run at every scale factor: per scale factor one warm-up, one
+    timed run and one plan run, all on that scale factor's data."""
+    tool = _profile_tool(spark, monkeypatch)
+    seen = []
+
+    def query(spark_, sf_dir):
+        seen.append(os.path.basename(sf_dir))
+        return spark_.range(3)
+
+    monkeypatch.setattr(tool, "QUERIES", {"q": query})
+    tool.main(["--sf", "0.001,0.01", "--runs", "1", "q"])
+    assert len(capsys.readouterr().out.splitlines()) == 2
+    assert seen == ["sf0.001"] * 3 + ["sf0.01"] * 3

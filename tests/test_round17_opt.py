@@ -141,50 +141,46 @@ def test_dataframe_debugging_off_by_default(spark):
     assert is_debugging_enabled() == (want.lower() == "true")
 
 
-def _final_plan_sections(df) -> tuple[str, str]:
-    """(final, full) formatted plan AFTER executing the frame — the
-    cross-branch ReusedExchange only exists in the final adaptive plan."""
-    df.collect()
-    full = df._sc._jvm.PythonSQLUtils.explainString(
-        df._jdf.queryExecution(), "formatted"
-    )
-    return full.split("Initial Plan")[0], full
-
-
-def _map_in_pandas_outputs(full: str) -> list[str]:
-    """The output column list of every ``MapInPandas`` detail block of a
-    formatted plan. Fails, with the plan, when the plan has no such
-    block or one whose layout the parse does not recognise."""
+def _python_udf_calls(df) -> dict[int, str]:
+    """Operator id -> the UDF call (``name(args)``) of every
+    ``ArrowEvalPython`` operator in the FINAL adaptive plan of ``df``,
+    read after running the frame: the cross-branch ReusedExchange only
+    exists in the final plan, and the details of the initial plan
+    (one copy of the subtree per union branch) follow its tree."""
     import re
 
-    headers = re.findall(r"^\(\d+\) MapInPandas$", full, re.MULTILINE)
-    outs = re.findall(
-        r"^\(\d+\) MapInPandas\nInput.*\nArguments: kernel\([^)]*\)#\d+, \[([^\]]*)\]",
-        full,
-        re.MULTILINE,
-    )
-    if not headers or len(outs) != len(headers):
-        pytest.fail(
-            f"found {len(headers)} MapInPandas detail blocks, parsed "
-            f"{len(outs)}; the formatted plan layout changed:\n{full}"
-        )
-    return outs
+    from petastorm_spark.plans.checks import _operators, formatted_plan
+
+    df.collect()
+    tree = formatted_plan(df).split("== Initial Plan ==")[0]
+    final_ids = {int(i) for i in re.findall(r"ArrowEvalPython \((\d+)\)", tree)}
+    calls = {}
+    for op_id, section in _operators(df).items():
+        if op_id in final_ids:
+            m = re.search(r"^Arguments: \[(\w+\([^)]*\))", section, re.M)
+            if m is None:
+                pytest.fail(f"no UDF call in the ArrowEvalPython details:\n{section}")
+            calls[op_id] = m.group(1)
+    return calls
 
 
 def test_multimodal_dup_pairs_decode_runs_once(spark):
     """The banded self-join's cold and hot union branches must share
     ONE bucket exchange (identical projections — `rest` is derived
-    post-shuffle on the hot branch), so the upstream decode mapInPandas
-    executes exactly once, not once per branch; and the decode stage
-    ships only (id, simhash) back across the Arrow boundary, never the
-    blob. Data populates BOTH branches (a 3-copy bucket over
-    hot_threshold=2, plus a 2-copy cold bucket)."""
+    post-shuffle on the hot branch), so the upstream decode UDF
+    executes exactly once, not once per branch; and the blob is the
+    decode UDF's only argument (the id stays in the engine). Data
+    populates BOTH branches (a 3-copy bucket over hot_threshold=2,
+    plus a 2-copy cold bucket)."""
+    import re
+
     import numpy as np
 
     from petastorm_spark.operators.multimodal import (
         encode_fake_image,
         image_dup_pairs,
     )
+    from petastorm_spark.plans.checks import _operators
     from petastorm_spark.session import arrow_local_df
 
     grad_up = np.tile(np.arange(11, dtype=np.uint8) * 20, (6, 1))
@@ -198,24 +194,22 @@ def test_multimodal_dup_pairs_decode_runs_once(spark):
     out = image_dup_pairs(
         df, "image", "doc_id", max_hamming=3, bands=4, hot_threshold=2
     )
-    final, full = _final_plan_sections(out)
-    assert final.count("MapInPandas") == 1, (
-        "decode pipeline executed more than once — the union branches "
-        "no longer share the bucket exchange:\n" + full
+    calls = _python_udf_calls(out)
+    assert len(calls) == 1, (
+        "decode UDF executed more than once — the union branches no "
+        f"longer share the bucket exchange: {calls}"
     )
-    assert final.count("ReusedExchange") >= 3, (
+    (call,) = calls.values()
+    assert re.fullmatch(r"\w+\(image#\d+\)", call), (
+        f"the fingerprint UDF takes more than the blob: {call}"
+    )
+    reused = [
+        s for s in _operators(out).values()
+        if re.match(r"\(\d+\) ReusedExchange\b", s)
+    ]
+    assert len(reused) >= 3, (
         "expected cold-b, hot-a and hot-b to reuse the one bucket "
-        "exchange:\n" + full
-    )
-    # the decode stage's output schema must not carry the blob back out:
-    # every MapInPandas detail block emits exactly [id, simhash]
-    outs = _map_in_pandas_outputs(full)
-    assert all(
-        "simhash#" in o and "image#" not in o and o.count(",") == 1
-        for o in outs
-    ), (
-        "fingerprint MapInPandas ships more than (id, simhash) back "
-        "across the Arrow boundary:\n" + full
+        f"exchange, found {len(reused)} ReusedExchange"
     )
     rows = {(r.id_a, r.id_b) for r in out.collect()}
     assert rows == {(0, 1), (0, 2), (1, 2), (3, 4)}

@@ -4,8 +4,9 @@ factor.
 
     python tools/profile_queries.py [--sf SF[,SF...]] [--runs N] [--plans DIR] QUERY...
 
-Each query runs once untimed at sf0.001 (JIT and codegen warmup), then
-``--runs`` timed runs per scale factor through
+At each scale factor a query runs once untimed (JIT and codegen warmup,
+and the per-dataset index caches some queries build on first use, so
+the timed runs find them built), then ``--runs`` timed runs through
 ``petastorm_spark.profile.profile_query``, bench.py's protocol. One JSON
 line per query and scale factor:
 
@@ -93,11 +94,11 @@ def main(argv: list[str] | None = None) -> None:
         os.makedirs(args.plans, exist_ok=True)
     spark = get_spark("profile")
     for name in args.queries:
-        try:
-            QUERIES[name](spark, f"{TESTDATA}/sf0.001").count()
-        except Exception:  # noqa: BLE001 - the timed runs report the error
-            pass
         for sf in args.sf.split(","):
+            try:
+                QUERIES[name](spark, f"{TESTDATA}/sf{sf}").count()
+            except Exception:  # noqa: BLE001 - the timed runs report the error
+                pass
             row = {"query": name, "sf": float(sf)}
             try:
                 row.update(profile(spark, name, sf, args.runs, args.plans))
